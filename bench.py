@@ -6,7 +6,9 @@ Prints ONE JSON line:
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver-side collect cost). Streaming/model queries execute their own
-actions and are timed around their terminal operation.
+actions and are timed around their terminal operation. Each
+bench_full row also carries ``codegen_compiles``: the Janino compiles
+of the sample whose time it reports.
 
 Usage:
     python bench.py                 # all queries
@@ -149,19 +151,17 @@ def main() -> int:
         prep_meta["layout"] = "multi-file rewrite under tmp"
         prep_meta["n_files"] = 32
 
-    # VERDICT r14 #2: the LDA fit memo's DISK layer (nlp_model.py)
-    # persisted across bench runs, so a steady-state bench never timed
-    # the CV+LDA fit (n01 read a model fitted in a PREVIOUS run). Wipe
-    # both memo layers before EVERY timed sample of n01 — per-sample,
-    # not just per-suite, because the min-of-N retry would otherwise
-    # re-measure against the memo the first sample warmed and report
-    # the warm number (observed: cold fit 20.2 s in sample 1, retry
-    # 0.66 s, min reported 0.66 s). n01's row now IS the cold fit;
-    # n02/n03/p03 share the in-process fit n01's last sample left —
-    # intra-run reuse inside one timed suite, not cross-run caching.
+    # VERDICT r14 #2: reset the in-process LDA fit memo before EVERY
+    # timed sample of n01, because the min-of-N retry would otherwise
+    # re-measure against the memo the first sample warmed and report the
+    # warm number (observed: cold fit 20.2 s in sample 1, retry 0.66 s,
+    # min reported 0.66 s). n01's row IS the cold fit; n02/n03/p03 share
+    # the in-process fit n01's last sample left — intra-run reuse inside
+    # one timed suite. No fit outlives the process, so a run never
+    # starts against a previous run's model.
     from nlp_data_pipeline_spark.operators.nlp_model import reset_fit_cache
+    from nlp_data_pipeline_spark.session import codegen_compiles
 
-    reset_fit_cache()  # never start a suite against a previous run's disk model
     PRE_MEASURE = {"n01_lda_topics": reset_fit_cache}
 
     # Warm one-time machinery so per-query numbers measure compute, not
@@ -195,10 +195,14 @@ def main() -> int:
     def _measure(fn, pre=None):
         if pre is not None:
             pre()  # untimed: resets state the sample must re-compute
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         df = fn(spark, sf_dir)
         _force(df)
-        return round(time.time() - t0, 3), df
+        t = round(time.time() - t0, 3)
+        # classes the sample had to (re)compile: a working set that
+        # outgrows the codegen cache shows here, not only as wall time
+        return t, df, codegen_compiles(spark) - c0
 
     def _plan_fingerprint(df) -> dict:
         """Stable physical-plan identity: expr/plan ids and temp paths
@@ -315,17 +319,22 @@ def main() -> int:
             continue
         try:
             pre = PRE_MEASURE.get(name)
-            t, df = _measure(fn, pre)
+            t, df, compiles = _measure(fn, pre)
             if t > RETRY_THRESHOLD_S:
-                t2, df = _measure(fn, pre)
-                t = min(t, t2)
+                t2, df, c2 = _measure(fn, pre)
+                t, compiles = min((t, compiles), (t2, c2))
                 if t > HEAVY_THRESHOLD_S:
-                    t3, df = _measure(fn, pre)
-                    t = min(t, t3)
+                    t3, df, c3 = _measure(fn, pre)
+                    t, compiles = min((t, compiles), (t3, c3))
             timings[name] = t
             fp = _plan_fingerprint(df)
             stability[name] = _plan_stable(name, fp)
-            full[name] = {"sec": t, "plan_stable": stability[name], **fp}
+            full[name] = {
+                "sec": t,
+                "codegen_compiles": compiles,  # of the sample reported in sec
+                "plan_stable": stability[name],
+                **fp,
+            }
         except Exception as ex:  # keep benching; report the failure
             failures[name] = f"{type(ex).__name__}: {ex}"
         sys.stderr.write(f"[bench] {name}: {timings.get(name, 'FAIL')}\n")

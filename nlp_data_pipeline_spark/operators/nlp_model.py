@@ -32,59 +32,37 @@ materialization on the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nlp_data_pipeline_spark.config import DEFAULT_CONFIG
 from nlp_data_pipeline_spark.functions.text import clean_text, tokenize_joined
 from nlp_data_pipeline_spark.sources.catalog import load_table
-from nlp_data_pipeline_spark.scratch import scratch_path
 
 
-# Fit memo, two layers: in-process dict (n01/n02/n03/p03 within one
-# session) and on-disk MLlib model save/load (separate driver processes
-# re-running the suite). The disk key includes a code version so model
-# format changes invalidate cleanly. LDA(seed=42) + deterministic input
-# partitioning makes the fit reproducible, so caching is semantics-free.
+# In-process fit memo: n01/n02/n03/p03 share one fit within a session.
+# LDA(seed=42) + deterministic input partitioning makes the fit
+# reproducible, so the memo is semantics-free. Nothing is kept on disk:
+# a new process pays the fit again.
 _MODEL_CACHE: dict[tuple[str, int], tuple] = {}
-_CACHE_VERSION = "v1"
-
-
-def _disk_cache_dir(sf_dir: str, k_req: int) -> str:
-    import hashlib
-    import tempfile
-
-    key = hashlib.md5(f"{_CACHE_VERSION}|{sf_dir}|{k_req}".encode()).hexdigest()[:12]
-    return scratch_path(f"nlp_lda_cache_{key}")
 
 
 def reset_fit_cache() -> None:
-    """Drop BOTH memo layers (in-process and on-disk) so the next
-    ``_fit_corpus_model`` call pays the full CV+LDA fit.
+    """Drop the in-process memo so the next ``_fit_corpus_model`` call
+    pays the full CV+LDA fit.
 
-    Bench-facing (VERDICT r14 #2): persisted intermediates keyed on the
-    test data must never survive into a timed bench run, and the
-    bench's min-of-N retry must not erase the fit by re-measuring
-    against a memo the first sample warmed. bench.py calls this before
-    every timed sample of n01, so n01's reported number IS the cold
-    fit; n02/n03/p03 then share the in-process fit n01's last sample
-    left behind — intra-run reuse inside one suite, not cross-run
-    caching."""
-    import glob
-    import shutil
-
+    Bench-facing (VERDICT r14 #2): the bench's min-of-N retry must not
+    erase the fit by re-measuring against a memo the first sample
+    warmed. bench.py calls this before every timed sample of n01, so
+    n01's reported number IS the cold fit; n02/n03/p03 then share the
+    fit n01's last sample left behind — intra-run reuse inside one
+    suite, not cross-run caching."""
     for _cv, _lda, featured in _MODEL_CACHE.values():
         try:
             featured.unpersist()
         except Exception:
             pass  # session may already be gone; cache entry dies anyway
     _MODEL_CACHE.clear()
-    from nlp_data_pipeline_spark.scratch import scratch_root
-
-    for p in glob.glob(os.path.join(scratch_root(), "nlp_lda_cache_*")):
-        shutil.rmtree(p, ignore_errors=True)
 
 
 def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
@@ -97,7 +75,6 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
     key = (sf_dir, k_req)
     if key in _MODEL_CACHE:
         return _MODEL_CACHE[key]
-    disk = _disk_cache_dir(sf_dir, k_req)
 
     d = load_table(spark, sf_dir, "documents")
     # the documents table arrives as a single parquet file → 1 partition;
@@ -122,17 +99,6 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
         minDF=cfg.min_df,
         maxDF=cfg.max_df * 1.0,
     )
-    from pyspark.ml.clustering import LocalLDAModel
-    from pyspark.ml.feature import CountVectorizerModel
-
-    if os.path.isdir(os.path.join(disk, "_done")):
-        cv_model = CountVectorizerModel.load(os.path.join(disk, "cv"))
-        lda_model = LocalLDAModel.load(os.path.join(disk, "lda"))
-        featured = cv_model.transform(tokened).select("doc_id", "features").cache()
-        featured.count()
-        _MODEL_CACHE[key] = (cv_model, lda_model, featured)
-        return _MODEL_CACHE[key]
-
     # cache BEFORE the iterative fit: LDA makes ~maxIter passes and an
     # uncached lineage re-runs the whole tokenize+vectorize pipeline per
     # pass (measured 276s → 3s at sf0.01 with the cache)
@@ -143,12 +109,6 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
     k = min(k_req, n_docs)
     lda = LDA(k=k, maxIter=cfg.lda_max_iter, seed=cfg.lda_seed, optimizer="online")
     lda_model = lda.fit(featured)
-    try:
-        cv_model.write().overwrite().save(os.path.join(disk, "cv"))
-        lda_model.write().overwrite().save(os.path.join(disk, "lda"))
-        os.makedirs(os.path.join(disk, "_done"), exist_ok=True)
-    except Exception:
-        pass  # cache is best-effort; never fail the query over it
     _MODEL_CACHE[key] = (cv_model, lda_model, featured)
     return _MODEL_CACHE[key]
 
@@ -158,24 +118,18 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
 # --------------------------------------------------------------------------
 def n01_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv_model, lda_model, _ = _fit_corpus_model(spark, sf_dir)
-    vocab = cv_model.vocabulary
-    vocab_df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(vocab)], ["term_idx", "term"]
-    )
+    # term lookup through a literal array: a local-list DataFrame would
+    # run as a Python RDD (Python worker tasks) plus a broadcast join
+    vocab = F.array(*map(F.lit, cv_model.vocabulary))
     topics = lda_model.describeTopics(10).select(
         "topic", F.posexplode(F.arrays_zip("termIndices", "termWeights")).alias("pos", "tw")
     )
-    topics = topics.select(
+    return topics.select(
         "topic",
         (F.col("pos") + 1).alias("term_rank"),
-        F.col("tw.termIndices").alias("term_idx"),
+        F.element_at(vocab, F.col("tw.termIndices") + 1).alias("term"),
         F.round(F.col("tw.termWeights"), 6).alias("weight"),
-    )
-    return (
-        topics.join(F.broadcast(vocab_df), "term_idx")
-        .select("topic", "term_rank", "term", "weight")
-        .orderBy("topic", "term_rank")
-    )
+    ).orderBy("topic", "term_rank")
 
 
 # --------------------------------------------------------------------------

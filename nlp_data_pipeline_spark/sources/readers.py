@@ -104,10 +104,16 @@ def _extract_pdf_fallback(content: bytes) -> str | None:
     for m in _STREAM_RE.finditer(content):
         sdict, body = m.group(1), m.group(2)
         if b"FlateDecode" in sdict:
+            # inflate up to the end of the deflate stream: the EOL before
+            # `endstream` lands in unused_data. Trailing CR/LF cannot be
+            # stripped, as compressed data may itself end in 0x0a/0x0d.
+            inflater = zlib.decompressobj()
             try:
-                body = zlib.decompress(body.rstrip(b"\r\n"))
+                body = inflater.decompress(body)
             except zlib.error:
                 continue
+            if not inflater.eof:
+                continue  # truncated stream
         shown: list[str] = []
         for tj in _TJ_RE.finditer(body):
             shown.append(_unescape_pdf_string(tj.group(1)[1:-1]))

@@ -117,6 +117,33 @@ def test_pdf_real_decode_plain_and_flate(spark):
     assert "Compressed stream text" in out["flate.pdf"]
 
 
+def test_pdf_flate_stream_ending_in_eol_byte():
+    """A compressed stream whose last byte is 0x0a or 0x0d (2 in 256
+    valid files) must still inflate: only the EOL before `endstream`
+    is framing, not every trailing CR/LF byte. A truncated stream still
+    degrades to NULL."""
+    import zlib
+
+    from nlp_data_pipeline_spark.sources.readers import _extract_pdf_fallback
+
+    def stream(text):
+        return zlib.compress(f"BT /F1 12 Tf 72 720 Td ({text}) Tj ET".encode("latin-1"))
+
+    # 'a' is odd, so the adler32 low byte (the stream's last) walks all
+    # 256 values as the padding grows
+    text = next(
+        t for t in (f"Ends in EOL {'a' * n}" for n in range(512)) if stream(t)[-1] in b"\r\n"
+    )
+    assert _extract_pdf_fallback(_minimal_pdf(text, compress=True)) == text + "\n"
+
+    body = stream("Truncated")[:-6]
+    truncated = (
+        b"%PDF-1.4\n1 0 obj\n<< /Length " + str(len(body)).encode()
+        + b" /Filter /FlateDecode >>\nstream\n" + body + b"\nendstream\nendobj\n%%EOF\n"
+    )
+    assert _extract_pdf_fallback(truncated) is None
+
+
 def test_pdf_escape_and_tj_array_decoding():
     """Unit-level: \\-escapes, octal bytes, and TJ array strings."""
     from nlp_data_pipeline_spark.sources.readers import _extract_pdf_fallback

@@ -29,9 +29,9 @@ import sys
 KNOWN_FP_DRIFT = {
     "d06_neardup_clusters": "label-propagation iteration count in lineage",
     "d12_leakage_safe_split": "embeds d06",
-    "n01_lda_topics": "LDA disk-cache state",
-    "n02_doc_tags": "LDA disk-cache state",
-    "n03_topic_metrics": "LDA disk-cache state",
+    "n01_lda_topics": "LDA memo state (warm vs cold fit)",
+    "n02_doc_tags": "LDA memo state (warm vs cold fit)",
+    "n03_topic_metrics": "LDA memo state (warm vs cold fit)",
     "q30_bucketed_colocated_join": "one-time bucketed-table build",
     "q37_observed_metrics": "observation ids",
     "a02_hll_sketch_rollup": "localCheckpoint ids in lineage",
