@@ -7,8 +7,9 @@ Prints ONE JSON line:
 Each query is forced end-to-end with the noop sink (full computation,
 no driver-side collect cost). Streaming/model queries execute their own
 actions and are timed around their terminal operation. Each
-bench_full row also carries ``codegen_compiles``: the Janino compiles
-of the sample whose time it reports.
+bench_full row also carries ``codegen_compiles`` and ``spark_jobs``: the
+Janino compiles and the Spark jobs (status-tracker count under a job
+group) of the sample whose time it reports.
 
 Usage:
     python bench.py                 # all queries
@@ -18,6 +19,7 @@ Usage:
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
 import re
@@ -160,7 +162,7 @@ def main() -> int:
     # one timed suite. No fit outlives the process, so a run never
     # starts against a previous run's model.
     from nlp_data_pipeline_spark.operators.nlp_model import reset_fit_cache
-    from nlp_data_pipeline_spark.session import codegen_compiles
+    from nlp_data_pipeline_spark.session import codegen_compiles, group_jobs, job_group
 
     PRE_MEASURE = {"n01_lda_topics": reset_fit_cache}
 
@@ -192,17 +194,22 @@ def main() -> int:
     # 2x-vs-baseline margin measured rather than noise-bounded.
     HEAVY_THRESHOLD_S = 3.0
 
+    samples = itertools.count()
+
     def _measure(fn, pre=None):
         if pre is not None:
             pre()  # untimed: resets state the sample must re-compute
+        group = f"bench#{next(samples)}"
         c0 = codegen_compiles(spark)
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        _force(df)
-        t = round(time.time() - t0, 3)
+        with job_group(spark, group):
+            t0 = time.time()
+            df = fn(spark, sf_dir)
+            _force(df)
+            t = round(time.time() - t0, 3)
         # classes the sample had to (re)compile: a working set that
         # outgrows the codegen cache shows here, not only as wall time
-        return t, df, codegen_compiles(spark) - c0
+        compiles = codegen_compiles(spark) - c0
+        return t, df, (compiles, group_jobs(spark, group))
 
     def _plan_fingerprint(df) -> dict:
         """Stable physical-plan identity: expr/plan ids and temp paths
@@ -319,19 +326,21 @@ def main() -> int:
             continue
         try:
             pre = PRE_MEASURE.get(name)
-            t, df, compiles = _measure(fn, pre)
+            t, df, counts = _measure(fn, pre)
             if t > RETRY_THRESHOLD_S:
                 t2, df, c2 = _measure(fn, pre)
-                t, compiles = min((t, compiles), (t2, c2))
+                t, counts = min((t, counts), (t2, c2))
                 if t > HEAVY_THRESHOLD_S:
                     t3, df, c3 = _measure(fn, pre)
-                    t, compiles = min((t, compiles), (t3, c3))
+                    t, counts = min((t, counts), (t3, c3))
             timings[name] = t
             fp = _plan_fingerprint(df)
             stability[name] = _plan_stable(name, fp)
             full[name] = {
                 "sec": t,
-                "codegen_compiles": compiles,  # of the sample reported in sec
+                # of the sample reported in sec
+                "codegen_compiles": counts[0],
+                "spark_jobs": counts[1],
                 "plan_stable": stability[name],
                 **fp,
             }

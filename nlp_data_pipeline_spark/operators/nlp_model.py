@@ -40,10 +40,14 @@ from nlp_data_pipeline_spark.functions.text import clean_text, tokenize_joined
 from nlp_data_pipeline_spark.sources.catalog import load_table
 
 
-# In-process fit memo: n01/n02/n03/p03 share one fit within a session.
-# LDA(seed=42) + deterministic input partitioning makes the fit
-# reproducible, so the memo is semantics-free. Nothing is kept on disk:
-# a new process pays the fit again.
+# In-process fit memo: n01/n02/n03/p03 share one fit within a session,
+# so their answers agree with each other. The fit itself is NOT
+# reproducible: LDA's seed is fixed, yet two fits of the same input can
+# return different topics (n03 topic_diversity 0.50 and 0.54 at
+# sf0.001), most likely because CountVectorizer orders terms of equal
+# count differently from fit to fit. A new fit (a new process, or after
+# reset_fit_cache) may therefore answer differently. Nothing is kept on
+# disk: a new process pays the fit again.
 _MODEL_CACHE: dict[tuple[str, int], tuple] = {}
 
 
@@ -117,6 +121,11 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
 # n01: topic → top-10 terms (get_topic_terms parity, :173-184).
 # --------------------------------------------------------------------------
 def n01_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _topic_terms(spark, sf_dir).orderBy("topic", "term_rank")
+
+
+def _topic_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """n01's rows, unsorted."""
     cv_model, lda_model, _ = _fit_corpus_model(spark, sf_dir)
     # term lookup through a literal array: a local-list DataFrame would
     # run as a Python RDD (Python worker tasks) plus a broadcast join
@@ -129,7 +138,7 @@ def n01_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).alias("term_rank"),
         F.element_at(vocab, F.col("tw.termIndices") + 1).alias("term"),
         F.round(F.col("tw.termWeights"), 6).alias("weight"),
-    ).orderBy("topic", "term_rank")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -196,15 +205,19 @@ def n02_doc_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n03: topic-model evaluation (evaluate_topics parity, :263-286).
 # --------------------------------------------------------------------------
 def n03_topic_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    topics = n01_lda_topics(spark, sf_dir)  # top-10 terms per topic
+    topics = _topic_terms(spark, sf_dir)  # top-10 terms per topic
+    # distinct counts as collect_set sizes: two countDistinct over
+    # different columns plan an Expand whose column order follows the
+    # columns' exprId hashes, so each call could generate (and compile)
+    # new code for the same query. The input is unsorted: collect_set
+    # keeps a Sort below it, which would cost a range-partitioning job.
+    n_topics = F.size(F.collect_set("topic")).cast("long")
     return topics.agg(
-        F.countDistinct("topic").alias("n_topics"),
-        F.round(F.countDistinct("term").cast("double") / F.count(F.lit(1)), 6).alias(
+        n_topics.alias("n_topics"),
+        F.round(F.size(F.collect_set("term")) / F.count(F.lit(1)), 6).alias(
             "topic_diversity"
         ),
-        F.round(
-            F.count(F.lit(1)).cast("double") / F.countDistinct("topic"), 6
-        ).alias("avg_topic_size"),
+        F.round(F.count(F.lit(1)) / n_topics, 6).alias("avg_topic_size"),
     )
 
 

@@ -12,11 +12,15 @@ Reference semantics (/root/reference/nlp_data_tagging.py:86-130):
 
 The reference fits a *separate* sklearn vectorizer per document inside
 a Python loop. Distributed re-expression: explode all sentences of all
-documents, compute tf / df / idf grouped **per document** so every
-document's model is fit independently — one pass, shuffle keyed on
-(doc_id[, term]), no per-document driver loop. This is the shape that
-survives 100 TB: all per-document state lives in the shuffle, never on
-the driver.
+documents, compute tf / df / idf **per document** so every document's
+model is fit independently — no per-document driver loop. Every
+relation is keyed by doc_id, so the whole summary needs ONE exchange,
+hashpartitioning(doc_id), right after the sentence split: each later
+aggregate and window (sentence count, tf, term totals and df, the
+vocabulary cap, sentence scores, top-k, the final collect) is keyed by
+doc_id plus more columns and reuses that partitioning — no join, no
+checkpoint. This is the shape that survives 100 TB: all per-document
+state lives in one shuffle, never on the driver.
 
 Deliberate deviation (documented): sklearn's TfidfVectorizer uses its
 built-in 318-word english stop list and token_pattern \\w\\w+ with
@@ -45,21 +49,15 @@ def summary_general_path(
     ``docs`` must have (doc_id, ctext). Returns (doc_id, general_summary)
     containing only documents that take the general (non-early-exit) path.
     """
-    sent = docs.select(
-        "doc_id", F.posexplode(sentences("ctext")).alias("sent_pos", "sentence")
-    )
-    # per-doc sentence count via unbounded window — one shuffle on doc_id,
-    # no second scan of the corpus (vs groupBy + self-join)
+    by_doc = Window.partitionBy("doc_id")
+    by_term = Window.partitionBy("doc_id", "term")
     sent = (
-        sent.withColumn(
-            "n_sentences", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+        docs.select(
+            "doc_id", F.posexplode(sentences("ctext")).alias("sent_pos", "sentence")
         )
+        # the one exchange: hashpartitioning(doc_id)
+        .withColumn("n_sentences", F.count(F.lit(1)).over(by_doc))
         .filter(F.col("n_sentences") > num_sentences)
-        # fan-out: consumed by the term explosion AND the zero-score
-        # backfill join — materialize once (Spark re-runs the corpus
-        # sentence-split per consumer otherwise; ReusedExchange never
-        # fires here, measured)
-        .localCheckpoint()
     )
 
     # isin -> INSET hash probe; array_contains was an O(118) scan/token
@@ -67,32 +65,27 @@ def summary_general_path(
         F.regexp_extract_all(F.lower("sentence"), F.lit(r"\w\w+"), 0),
         lambda t: ~t.isin(*STOP_WORDS_SORTED),
     )
-    tok = sent.select(
-        "doc_id", "sent_pos", "n_sentences", F.explode(terms).alias("term")
+    # explode_outer keeps a sentence without terms as one row whose
+    # term is null: it scores 0 (sklearn's row of zeros) with no
+    # backfill join
+    tf = (
+        sent.select(
+            "doc_id", "sent_pos", "n_sentences", "sentence",
+            F.explode_outer(terms).alias("term"),
+        )
+        .groupBy("doc_id", "sent_pos", "n_sentences", "sentence", "term")
+        .agg(F.count("term").alias("tf"))
+        # per-document term totals and df (rows are distinct
+        # (doc, sent, term), so df is a row count)
+        .withColumn("total_tf", F.sum("tf").over(by_term))
+        .withColumn("df", F.count("term").over(by_term))
+        # per-document vocabulary cap (sklearn max_features rule:
+        # frequency desc, term asc); null terms sort last
+        .withColumn(
+            "vrank",
+            F.dense_rank().over(by_doc.orderBy(F.desc("total_tf"), F.asc("term"))),
+        )
     )
-
-    # Single upstream aggregation tf0; EVERY later relation (vocab cap,
-    # capped tf, per-doc df) derives from it. Materialized once: the
-    # branches do NOT share the shuffle subplan automatically
-    # (ReusedExchange requires byte-identical exchanges and never fires
-    # across these differently-keyed consumers — measured), so without
-    # the checkpoint each branch re-runs the explode+count.
-    tf0 = tok.groupBy("doc_id", "sent_pos", "n_sentences", "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint()
-
-    # per-document vocabulary cap: top `vocab_size` terms by total count
-    # (sklearn max_features rule: frequency desc, term asc)
-    term_tot = tf0.groupBy("doc_id", "term").agg(F.sum("tf").alias("total_tf"))
-    wv = Window.partitionBy("doc_id").orderBy(F.desc("total_tf"), F.asc("term"))
-    vocab = term_tot.withColumn("vrank", F.row_number().over(wv)).filter(
-        F.col("vrank") <= vocab_size
-    ).select("doc_id", "term")
-
-    tf = tf0.join(vocab, ["doc_id", "term"], "left_semi")
-    # per-document df derives from tf (rows are distinct (doc, sent, term))
-    df_ = tf.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("df"))
-    scored = tf.join(df_, ["doc_id", "term"])
     idf = (
         F.log(
             (F.lit(1.0) + F.col("n_sentences").cast("double"))
@@ -100,23 +93,25 @@ def summary_general_path(
         )
         + F.lit(1.0)
     )
-    scored = scored.withColumn("tfidf", F.col("tf").cast("double") * idf)
+    # out-of-vocabulary and null terms get a null tfidf, which sum skips
+    in_vocab = F.col("term").isNotNull() & (F.col("vrank") <= vocab_size)
+    tf = tf.withColumn("tfidf", F.when(in_vocab, F.col("tf").cast("double") * idf))
 
     # sentence score = sum of L2-normalized row  (:99 — row sums of the
-    # normalized matrix) = sum(tfidf) / sqrt(sum(tfidf^2))
-    sent_scores = scored.groupBy("doc_id", "sent_pos", "n_sentences").agg(
-        (F.sum("tfidf") / F.sqrt(F.sum(F.col("tfidf") * F.col("tfidf")))).alias("score")
-    )
-    # sentences with no in-vocab terms score 0 (sklearn row of zeros)
-    all_sent = sent.select("doc_id", "sent_pos", "sentence", "n_sentences")
-    sent_scores = all_sent.join(sent_scores, ["doc_id", "sent_pos", "n_sentences"], "left").fillna(
-        {"score": 0.0}
+    # normalized matrix) = sum(tfidf) / sqrt(sum(tfidf^2)); 0 when the
+    # sentence has no in-vocab term
+    sent_scores = tf.groupBy("doc_id", "sent_pos", "sentence").agg(
+        F.coalesce(
+            F.sum("tfidf") / F.sqrt(F.sum(F.col("tfidf") * F.col("tfidf"))), F.lit(0.0)
+        ).alias("score")
     )
 
     # top-k by score; numpy argsort is stable ascending, so `[-k:]` keeps
     # the *last* occurrence among ties — i.e. ties prefer the LATER
-    # sentence position (:102). Emulate: desc score, desc sent_pos.
-    wk = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.desc("sent_pos"))
+    # sentence position (:102). Emulate: desc score, desc sent_pos. The
+    # score is rounded to 9 places so that an exact tie stays a tie: the
+    # sums' order, and with it the last bits (~1e-15), varies by plan.
+    wk = by_doc.orderBy(F.desc(F.round("score", 9)), F.desc("sent_pos"))
     picked = sent_scores.withColumn("k_rank", F.row_number().over(wk)).filter(
         F.col("k_rank") <= num_sentences
     )

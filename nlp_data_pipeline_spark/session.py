@@ -15,6 +15,7 @@ the real target — a many-executor cluster scanning ~100 TB of parquet:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import warnings
 
@@ -120,3 +121,23 @@ def codegen_compiles(spark: SparkSession) -> int:
     the classes it had to (re)compile."""
     jvm = spark.sparkContext._jvm
     return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@contextlib.contextmanager
+def job_group(spark: SparkSession, group: str):
+    """Label every Spark job the block launches with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def group_jobs(spark: SparkSession, group: str) -> int:
+    """Spark jobs run so far under job group ``group``, counted by the
+    status tracker once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # noqa: SLF001
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -38,7 +38,6 @@ KNOWN_FP_DRIFT = {
     "d05_shingle_jaccard_topk": "localCheckpoint ids in lineage",
     "p04_curation_pipeline": "localCheckpoint ids in lineage (embeds t22)",
     "s12_bm25_topk": "localCheckpoint ids in lineage",
-    "t05_document_summary": "localCheckpoint ids in lineage",
     "t22_boilerplate_prune": "localCheckpoint ids in lineage",
     "t31_dsir_importance": "localCheckpoint ids in lineage",
     "d09_minhash_calibration": "localCheckpoint ids in lineage",
