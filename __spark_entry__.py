@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 Queries and oracles are co-located with their operator modules in
 ``nlp_data_pipeline_spark/operators/*``; this file only aggregates.
@@ -32,88 +32,14 @@ _MODULES = [
 ]
 
 
-# The driver caps its per-round CORRECTNESS check at the FIRST 50
-# dict entries, so ordering decides what gets (re-)verified. Rank by
-# verification need so the 50-query window always covers the queries
-# that most need a driver row:
-#   0. never green — no (rows+schema+hash) pass in ANY recorded
-#      CORRECTNESS_r*.json (covers both never-checked and red/err rows;
-#      red queries rotate back in until they earn a green row)
-#   1. green at least once — least-recently-checked round first, so
-#      regressions in once-green queries eventually resurface.
-# Ties keep module/dict order (keeps n01 before n02/n03/p03, sharing
-# the warm LDA fit within a driver run).
-# A sanctioned rows-only row (err == "no_oracle" with spark_rows > 0 —
-# the n01–n03 LDA queries, SURVEY §5.2-2) counts as "checked that
-# round": it is the strongest row those queries can ever earn, so
-# treating it as never-green would pin them to the window's head
-# forever and permanently consume 3 of the 50 rotation slots.
-def _verification_rank() -> dict:
-    """name -> (has_green: bool, last_checked_round: int)."""
-    import glob
-    import json
-    import os
-    import re
-
-    rank: dict = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except Exception:
-            continue  # unreadable round file: ignore
-        for name, row in rows.items():
-            green = isinstance(row, dict) and (
-                (
-                    bool(row.get("rows_match"))
-                    and bool(row.get("schema_match"))
-                    and bool(row.get("hash_match"))
-                    and not row.get("err")
-                )
-                or (
-                    row.get("err") == "no_oracle"
-                    and (row.get("spark_rows") or 0) > 0
-                )
-            )
-            prev_green, prev_rnd = rank.get(name, (False, 0))
-            rank[name] = (prev_green or green, max(prev_rnd, rnd))
-    return rank
-
-
 def _collect(attr: str) -> dict:
+    """Merge every module's ``attr`` dict, in module order then dict order."""
     import importlib
-
-    from nlp_data_pipeline_spark import staging
 
     out: dict = {}
     for modname in _MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ImportError:
-            continue  # module not built yet
-        out.update(getattr(mod, attr, {}))
-        # Staged declarations (see staging.py): merged lazily per call so
-        # declaration state tracks the committed CORRECTNESS_r*.json
-        # round markers, not whatever existed at first import.
-        staged = getattr(mod, "STAGED_" + attr, {})
-        for rnd in sorted(staged):
-            if staging.staged_ops_live(rnd):
-                out.update(staged[rnd])
-    rank = _verification_rank()
-    names = list(out)
-    # (needs-verification first, then oldest last-check, then dict order)
-    order = sorted(
-        range(len(names)),
-        key=lambda i: (
-            rank.get(names[i], (False, 0))[0],  # False (never green) first
-            rank.get(names[i], (False, 0))[1],  # least-recently-checked
-            i,
-        ),
-    )
-    return {names[i]: out[names[i]] for i in order}
+        out.update(getattr(importlib.import_module(modname), attr))
+    return out
 
 
 def entry(spark: SparkSession) -> DataFrame:

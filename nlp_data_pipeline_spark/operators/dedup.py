@@ -1152,11 +1152,8 @@ def d33_capped_split_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# d13: cross-source contamination matrix — STAGED FOR ROUND-7
-# DECLARATION (oracle-parity-tested in test_round6_ops.py::
-# test_d13_matches_duckdb_oracle; held out of QUERIES because the
-# driver's 50-entry window is at capacity — COVERAGE.md "Staged for
-# round 7").
+# d13: cross-source contamination matrix (oracle-parity-tested in
+# test_round6_ops.py::test_d13_matches_duckdb_oracle).
 #
 # The corpus-curation diagnostic that DECIDES dedup strategy: for each
 # pair of sources, how many distinct shingles they share and the
@@ -1265,51 +1262,9 @@ ORDER BY s.src_a, s.src_b
 )
 
 
-QUERIES = {
-    "d01_exact_dedup": d01_exact_dedup,
-    "d02_minhash_signatures": d02_minhash_signatures,
-    "d03_lsh_candidate_pairs": d03_lsh_candidate_pairs,
-    "d04_simhash": d04_simhash,
-    "d05_shingle_jaccard_topk": d05_shingle_jaccard_topk,
-    "d06_neardup_clusters": d06_neardup_clusters,
-    "d07_dedup_materialize": d07_dedup_materialize,
-    "d08_incremental_dedup": d08_incremental_dedup,
-    "d09_minhash_calibration": d09_minhash_calibration,
-    "d10_benchmark_decontamination": d10_benchmark_decontamination,
-    "d11_span_dedup_plan": d11_span_dedup_plan,
-    "d12_leakage_safe_split": d12_leakage_safe_split,
-    # round-10 declaration: the capped d03 remedy (never-green → heads
-    # the round-10 driver window)
-    "d18_capped_lsh_components": d18_capped_lsh_components,
-    # round-12 declaration: the cap-invariance theorem on a consumer —
-    # capped d12 vs the uncapped-closure oracle (VERDICT r11 #4)
-    "d33_capped_split_parity": d33_capped_split_parity,
-}
-
-ORACLES = {
-    "d18_capped_lsh_components": D18_SQL,
-    # D12_SQL verbatim: the oracle recomputes the FULL closure; a hash
-    # match against the capped build IS the invariance proof
-    "d33_capped_split_parity": D12_SQL,
-    "d12_leakage_safe_split": D12_SQL,
-    "d11_span_dedup_plan": D11_SQL,
-    "d09_minhash_calibration": D09_SQL,
-    "d10_benchmark_decontamination": D10_SQL,
-    "d08_incremental_dedup": D08_SQL,
-    "d06_neardup_clusters": D06_SQL,
-    "d01_exact_dedup": D01_SQL,
-    "d02_minhash_signatures": D02_SQL,
-    "d03_lsh_candidate_pairs": D03_SQL,
-    "d04_simhash": D04_SQL,
-    "d05_shingle_jaccard_topk": D05_SQL,
-    "d07_dedup_materialize": D07_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# d14: dedup yield histogram — STAGED FOR ROUND-8 DECLARATION (gated
-# on staged_ops_live(7); oracle-parity-tested in test_round6_ops.py::
-# test_d14_matches_duckdb_oracle now).
+# d14: dedup yield histogram (oracle-parity-tested in
+# test_round6_ops.py::test_d14_matches_duckdb_oracle).
 #
 # The planning number a dedup run is sized by: the near-dup
 # CLUSTER-SIZE distribution. n_clusters × (size − 1) docs are
@@ -1355,8 +1310,7 @@ ORDER BY cluster_size""",
 
 
 # --------------------------------------------------------------------------
-# d15: blocked edit-distance near-dup pairs — STAGED FOR ROUND-8
-# DECLARATION (gated on staged_ops_live(7); oracle-parity-tested in
+# d15: blocked edit-distance near-dup pairs (oracle-parity-tested in
 # test_round7_ops.py::test_d15_matches_duckdb_oracle).
 #
 # The record-linkage dedup modality the shingle/MinHash family misses:
@@ -1457,8 +1411,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# d16: content-defined chunking (FastCDC shape) — STAGED FOR ROUND-9
-# DECLARATION (gated on staged_ops_live(8); oracle-parity-tested in
+# d16: content-defined chunking (FastCDC shape) (oracle-parity-tested in
 # test_round7_ops.py::test_d16_matches_duckdb_oracle).
 #
 # The chunk-granularity dedup primitive d11's fixed spans can't give:
@@ -1587,8 +1540,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# d17: asymmetric CONTAINMENT near-dup pairs — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# d17: asymmetric CONTAINMENT near-dup pairs (oracle-parity-tested in
 # test_round7_ops.py::test_d17_matches_duckdb_oracle).
 #
 # The dedup signal symmetric Jaccard (d05) is structurally blind to:
@@ -1652,8 +1604,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# d19: shingle-size sensitivity curve — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# d19: shingle-size sensitivity curve (oracle-parity-tested in
 # test_round7_ops.py::test_d19_matches_duckdb_oracle).
 #
 # The dedup counterpart of s20's IVF operating curve: the shingle
@@ -1754,11 +1705,8 @@ ORDER BY i.k
 )
 
 
-# Staged while the declaring round's window was at capacity; auto-
-# declared the round after by __spark_entry__._collect (lazy gate).
 # --------------------------------------------------------------------------
-# d20: Bloom-gated decontamination — STAGED FOR ROUND-12 DECLARATION
-# (gated on staged_ops_live(11)). d10 decontaminates by BROADCASTING
+# d20: Bloom-gated decontamination. d10 decontaminates by BROADCASTING
 # the exact benchmark shingle set; at 100 TB that set is GBs and the
 # broadcast becomes the bottleneck. The production tier (the Dolma/
 # CCNet shape) broadcasts a KB-sized BLOOM FILTER of the benchmark
@@ -1919,8 +1867,7 @@ FROM per_doc
 
 
 # --------------------------------------------------------------------------
-# d21: split-contamination audit — STAGED FOR ROUND-12 DECLARATION
-# (gated on staged_ops_live(11)). The acceptance test for d12's
+# d21: split-contamination audit. The acceptance test for d12's
 # leakage-safe split, and the quantified argument for WHY cluster-
 # atomic assignment matters: count the LSH near-dup candidate pairs
 # (d03's relation) that land across split boundaries under two
@@ -2067,8 +2014,7 @@ ORDER BY strategy, split_a, split_b
 
 
 # --------------------------------------------------------------------------
-# d22: LSH banding operating curve — STAGED FOR ROUND-12 DECLARATION
-# (gated on staged_ops_live(11)). The tuning knob d03 fixes at 4×2,
+# d22: LSH banding operating curve. The tuning knob d03 fixes at 4×2,
 # measured: with H=8 minhashes, the banding choices (1 band × 8
 # rows, 2×4, 4×2) trade candidate volume against missed true
 # near-dups (P[candidate] = 1-(1-j^r)^b). NOTE the truth frame:
@@ -2260,8 +2206,7 @@ ORDER BY c.n_bands
 
 
 # --------------------------------------------------------------------------
-# d23: best-copy dedup policy — STAGED FOR ROUND-13 DECLARATION
-# (gated on staged_ops_live(12)). d07 materializes dedup with the
+# d23: best-copy dedup policy. d07 materializes dedup with the
 # FIRST-copy policy (keep min doc_id — reproducible but arbitrary);
 # production curation keeps the BEST copy of each near-dup cluster,
 # and the standard heuristic is the longest variant (truncated /
@@ -2349,8 +2294,7 @@ ORDER BY cluster_id
 
 
 # --------------------------------------------------------------------------
-# d24: connected components via alternating stars — STAGED FOR
-# ROUND-13 DECLARATION (gated on staged_ops_live(12)). d06 finds
+# d24: connected components via alternating stars. d06 finds
 # near-dup clusters by min-label FLOODING, whose round count grows
 # with the component DIAMETER — fine for compact dup clusters, wrong
 # for the chain-shaped components web-scale near-dup graphs grow
@@ -2464,8 +2408,7 @@ D24_SQL = D06_SQL
 
 
 # --------------------------------------------------------------------------
-# d25: lexical × semantic near-dup overlap — STAGED FOR ROUND-13
-# DECLARATION (gated on staged_ops_live(12)). The question that
+# d25: lexical × semantic near-dup overlap. The question that
 # decides whether a pipeline needs BOTH dedup tiers: how much do
 # d03's lexical (minhash/LSH shingle) candidates and s06's semantic
 # (SimHash-bucketed embedding-cosine ≥ τ) pairs agree? semantic_only
@@ -2615,8 +2558,7 @@ D25_SQL = _d25_sql()
 
 
 # --------------------------------------------------------------------------
-# d26: LSH recall/precision vs EXACT ground truth — STAGED FOR
-# ROUND-14 DECLARATION (gated on staged_ops_live(13)). d22 sweeps
+# d26: LSH recall/precision vs EXACT ground truth. d22 sweeps
 # band configs but measures truth only WITHIN the candidate set; the
 # question a curation pipeline actually signs off on is the other
 # direction: of all truly-near-duplicate pairs in the corpus, how
@@ -2738,8 +2680,7 @@ FROM counts
 
 
 # --------------------------------------------------------------------------
-# d27: b-bit (b=1) MinHash — STAGED FOR ROUND-15 DECLARATION (gated
-# on staged_ops_live(14)). Li & König's b-bit minwise hashing: keep
+# d27: b-bit (b=1) MinHash. Li & König's b-bit minwise hashing: keep
 # only the LOWEST BIT of each minhash instead of the full value,
 # shrinking signature storage 32× (here: 8 md5 prefixes → one byte),
 # at the cost of random 1-bit collisions — corrected by the unbiased
@@ -2854,8 +2795,7 @@ ORDER BY doc_a, doc_b
 
 
 # --------------------------------------------------------------------------
-# d28: edit-distance verification tier — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). The d-series verifies
+# d28: edit-distance verification tier. The d-series verifies
 # candidates with set measures (Jaccard d05, containment d17,
 # signature agreement d27); the measure those all miss is ORDER:
 # two documents sharing every shingle in different arrangements are
@@ -2943,8 +2883,7 @@ ORDER BY p.doc_a, p.doc_b
 
 
 # --------------------------------------------------------------------------
-# d29: near-dup cluster purity — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). d13 asks "do sources share content"
+# d29: near-dup cluster purity. d13 asks "do sources share content"
 # at the shingle level; this asks it at the CLUSTER level: for each
 # d06 near-dup cluster, how many sources contribute members and what
 # fraction belongs to the majority source. A corpus whose clusters
@@ -3009,8 +2948,7 @@ ORDER BY cluster_id
 
 
 # --------------------------------------------------------------------------
-# d30: LSH index MERGE proof — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). The property that makes
+# d30: LSH index MERGE proof. The property that makes
 # incremental near-dup indexing viable at 100 TB: MinHash band keys
 # are PER-DOCUMENT functions (seeded md5 over the doc's own
 # shingles), so an index built over shard A unioned with one built
@@ -3075,8 +3013,7 @@ D30_SQL = D03_SQL + " ORDER BY doc_a, doc_b"
 
 
 # --------------------------------------------------------------------------
-# d31: shingle document-frequency distribution — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). _D05_MAX_DF = 256 is
+# d31: shingle document-frequency distribution. _D05_MAX_DF = 256 is
 # the load-bearing constant of the whole capped-postings family
 # (d05/d13/d15/d17/d19/d26): it bounds the quadratic term of every
 # pair self-join. This is the table that JUSTIFIES the number: the
@@ -3137,8 +3074,7 @@ ORDER BY df_bucket
 
 
 # --------------------------------------------------------------------------
-# d32: incremental dedup delta — STAGED FOR ROUND-17 DECLARATION
-# (gated on staged_ops_live(16)). d30 proves the LSH index's merge
+# d32: incremental dedup delta. d30 proves the LSH index's merge
 # ALGEBRA; this is its operational payoff: a NEW shard arrives (delta
 # = odd doc_ids) and must be classified against the EXISTING corpus
 # (base = even doc_ids) without re-deduping the base — the steady-
@@ -3407,72 +3343,76 @@ ORDER BY source
 )
 
 
-STAGED_QUERIES = {
-    6: {"d13_source_overlap_matrix": d13_source_overlap_matrix},
-    7: {
-        "d14_cluster_size_histogram": d14_cluster_size_histogram,
-        "d15_fuzzy_prefix_pairs": d15_fuzzy_prefix_pairs,
-    },
-    8: {"d16_cdc_chunks": d16_cdc_chunks},
-    9: {
-        "d17_containment_pairs": d17_containment_pairs,
-        "d19_shingle_k_curve": d19_shingle_k_curve,
-    },
-    # pulled forward from gate 16 (VERDICT r09 #3): the production
-    # incremental-ingest path should not wait ~7 rounds for a driver
-    # row; v18 (API-surface) moved back in trade
-    10: {"d32_incremental_dedup_delta": d32_incremental_dedup_delta},
-    11: {
-        "d20_bloom_decontamination": d20_bloom_decontamination,
-        "d21_split_contamination_audit": d21_split_contamination_audit,
-        "d22_lsh_band_curve": d22_lsh_band_curve,
-    },
-    12: {
-        "d23_best_copy_dedup": d23_best_copy_dedup,
-        "d24_cc_alternating_stars": d24_cc_alternating_stars,
-        "d25_lexical_semantic_overlap": d25_lexical_semantic_overlap,
-    },
-    13: {"d26_lsh_recall_eval": d26_lsh_recall_eval},
-    14: {
-        "d27_bbit_minhash": d27_bbit_minhash,
-        "d28_edit_distance_verify": d28_edit_distance_verify,
-    },
-    15: {
-        "d29_cluster_purity": d29_cluster_purity,
-        "d30_lsh_index_merge": d30_lsh_index_merge,
-    },
-    16: {"d31_shingle_df_histogram": d31_shingle_df_histogram},
+QUERIES = {
+    "d01_exact_dedup": d01_exact_dedup,
+    "d02_minhash_signatures": d02_minhash_signatures,
+    "d03_lsh_candidate_pairs": d03_lsh_candidate_pairs,
+    "d04_simhash": d04_simhash,
+    "d05_shingle_jaccard_topk": d05_shingle_jaccard_topk,
+    "d06_neardup_clusters": d06_neardup_clusters,
+    "d07_dedup_materialize": d07_dedup_materialize,
+    "d08_incremental_dedup": d08_incremental_dedup,
+    "d09_minhash_calibration": d09_minhash_calibration,
+    "d10_benchmark_decontamination": d10_benchmark_decontamination,
+    "d11_span_dedup_plan": d11_span_dedup_plan,
+    "d12_leakage_safe_split": d12_leakage_safe_split,
+    "d18_capped_lsh_components": d18_capped_lsh_components,
+    "d33_capped_split_parity": d33_capped_split_parity,
+    "d13_source_overlap_matrix": d13_source_overlap_matrix,
+    "d14_cluster_size_histogram": d14_cluster_size_histogram,
+    "d15_fuzzy_prefix_pairs": d15_fuzzy_prefix_pairs,
+    "d16_cdc_chunks": d16_cdc_chunks,
+    "d17_containment_pairs": d17_containment_pairs,
+    "d19_shingle_k_curve": d19_shingle_k_curve,
+    "d32_incremental_dedup_delta": d32_incremental_dedup_delta,
+    "d20_bloom_decontamination": d20_bloom_decontamination,
+    "d21_split_contamination_audit": d21_split_contamination_audit,
+    "d22_lsh_band_curve": d22_lsh_band_curve,
+    "d23_best_copy_dedup": d23_best_copy_dedup,
+    "d24_cc_alternating_stars": d24_cc_alternating_stars,
+    "d25_lexical_semantic_overlap": d25_lexical_semantic_overlap,
+    "d26_lsh_recall_eval": d26_lsh_recall_eval,
+    "d27_bbit_minhash": d27_bbit_minhash,
+    "d28_edit_distance_verify": d28_edit_distance_verify,
+    "d29_cluster_purity": d29_cluster_purity,
+    "d30_lsh_index_merge": d30_lsh_index_merge,
+    "d31_shingle_df_histogram": d31_shingle_df_histogram,
 }
-STAGED_ORACLES = {
-    6: {"d13_source_overlap_matrix": D13_SQL},
-    7: {
-        "d14_cluster_size_histogram": D14_SQL,
-        "d15_fuzzy_prefix_pairs": D15_SQL,
-    },
-    8: {"d16_cdc_chunks": D16_SQL},
-    9: {
-        "d17_containment_pairs": D17_SQL,
-        "d19_shingle_k_curve": D19_SQL,
-    },
-    10: {"d32_incremental_dedup_delta": D32_SQL},
-    11: {
-        "d20_bloom_decontamination": D20_SQL,
-        "d21_split_contamination_audit": D21_SQL,
-        "d22_lsh_band_curve": D22_SQL,
-    },
-    12: {
-        "d23_best_copy_dedup": D23_SQL,
-        "d24_cc_alternating_stars": D24_SQL,
-        "d25_lexical_semantic_overlap": D25_SQL,
-    },
-    13: {"d26_lsh_recall_eval": D26_SQL},
-    14: {
-        "d27_bbit_minhash": D27_SQL,
-        "d28_edit_distance_verify": D28_SQL,
-    },
-    15: {
-        "d29_cluster_purity": D29_SQL,
-        "d30_lsh_index_merge": D30_SQL,
-    },
-    16: {"d31_shingle_df_histogram": D31_SQL},
+
+ORACLES = {
+    "d01_exact_dedup": D01_SQL,
+    "d02_minhash_signatures": D02_SQL,
+    "d03_lsh_candidate_pairs": D03_SQL,
+    "d04_simhash": D04_SQL,
+    "d05_shingle_jaccard_topk": D05_SQL,
+    "d06_neardup_clusters": D06_SQL,
+    "d07_dedup_materialize": D07_SQL,
+    "d08_incremental_dedup": D08_SQL,
+    "d09_minhash_calibration": D09_SQL,
+    "d10_benchmark_decontamination": D10_SQL,
+    "d11_span_dedup_plan": D11_SQL,
+    "d12_leakage_safe_split": D12_SQL,
+    "d18_capped_lsh_components": D18_SQL,
+    # D12_SQL verbatim: the oracle recomputes the FULL closure; a hash
+    # match against the capped build IS the invariance proof
+    "d33_capped_split_parity": D12_SQL,
+    "d13_source_overlap_matrix": D13_SQL,
+    "d14_cluster_size_histogram": D14_SQL,
+    "d15_fuzzy_prefix_pairs": D15_SQL,
+    "d16_cdc_chunks": D16_SQL,
+    "d17_containment_pairs": D17_SQL,
+    "d19_shingle_k_curve": D19_SQL,
+    "d32_incremental_dedup_delta": D32_SQL,
+    "d20_bloom_decontamination": D20_SQL,
+    "d21_split_contamination_audit": D21_SQL,
+    "d22_lsh_band_curve": D22_SQL,
+    "d23_best_copy_dedup": D23_SQL,
+    "d24_cc_alternating_stars": D24_SQL,
+    "d25_lexical_semantic_overlap": D25_SQL,
+    "d26_lsh_recall_eval": D26_SQL,
+    "d27_bbit_minhash": D27_SQL,
+    "d28_edit_distance_verify": D28_SQL,
+    "d29_cluster_purity": D29_SQL,
+    "d30_lsh_index_merge": D30_SQL,
+    "d31_shingle_df_histogram": D31_SQL,
 }

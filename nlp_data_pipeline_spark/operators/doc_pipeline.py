@@ -55,7 +55,6 @@ def _tmp_stage(name: str) -> str:
     return path
 
 
-
 # --------------------------------------------------------------------------
 # p01: per-document pipeline records (reference :410-418, minus tags).
 # filename ≅ "doc_<id>.txt" (the driver corpus has no file names).
@@ -1002,11 +1001,9 @@ ORDER BY filename
 
 
 # --------------------------------------------------------------------------
-# a03: sketch set algebra — HLL INTERSECTION via inclusion-exclusion —
-# STAGED FOR ROUND-7 DECLARATION (oracle-parity-tested in
-# test_round6_ops.py::test_a03_matches_duckdb_oracle; held out of
-# QUERIES because the driver's 50-entry window is at capacity —
-# COVERAGE.md "Staged for round 7").
+# a03: sketch set algebra — HLL INTERSECTION via inclusion-exclusion
+# (oracle-parity-tested in
+# test_round6_ops.py::test_a03_matches_duckdb_oracle).
 #
 # HLL sketches union natively (a02) but NOT intersect; the standard
 # answer is inclusion-exclusion over union estimates:
@@ -1097,10 +1094,8 @@ ORDER BY i.type_a, i.type_b
 
 
 # --------------------------------------------------------------------------
-# r12: native XML ingestion — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_r12_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# r12: native XML ingestion (oracle-parity-tested in
+# test_round6_ops.py::test_r12_matches_duckdb_oracle).
 #
 # Spark 4 ships the spark-xml connector in-core (SPARK-44265): rowTag
 # streaming parse, schema projection, the same DataSourceV2 pushdown
@@ -1155,52 +1150,9 @@ ORDER BY lang
 """
 
 
-QUERIES = {
-    "p01_document_records": p01_document_records,
-    "p02_export_projection": p02_export_projection,
-    "p03_records_with_tags": p03_records_with_tags,
-    "p04_curation_pipeline": p04_curation_pipeline,
-    "r01_csv_roundtrip": r01_csv_roundtrip,
-    "r02_corrupt_json_ingest": r02_corrupt_json_ingest,
-    "r03_orc_roundtrip": r03_orc_roundtrip,
-    "r04_schema_evolution": r04_schema_evolution,
-    "r05_cdc_upsert_merge": r05_cdc_upsert_merge,
-    "r06_json_roundtrip": r06_json_roundtrip,
-    "r07_partition_overwrite": r07_partition_overwrite,
-    "r08_python_datasource": r08_python_datasource,
-    "r09_python_datasink": r09_python_datasink,
-    "r10_pdf_extract": r10_pdf_extract,
-    "r11_gzip_jsonl_roundtrip": r11_gzip_jsonl_roundtrip,
-    "a01_approx_stats": a01_approx_stats,
-    "a02_hll_sketch_rollup": a02_hll_sketch_rollup,
-}
-
-ORACLES = {
-    "p04_curation_pipeline": P04_SQL,
-    "r11_gzip_jsonl_roundtrip": R11_SQL,
-    "r10_pdf_extract": R10_SQL,
-    "r08_python_datasource": R08_SQL,
-    "r09_python_datasink": R09_SQL,
-    "r07_partition_overwrite": R07_SQL,
-    "r06_json_roundtrip": R06_SQL,
-    "r03_orc_roundtrip": R03_SQL,
-    "r04_schema_evolution": R04_SQL,
-    "r05_cdc_upsert_merge": R05_SQL,
-    "p01_document_records": P01_SQL,
-    "p02_export_projection": P02_SQL,
-    "p03_records_with_tags": P03_SQL,
-    "r01_csv_roundtrip": R01_SQL,
-    "r02_corrupt_json_ingest": R02_SQL,
-    "a01_approx_stats": A01_SQL,
-    "a02_hll_sketch_rollup": A02_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# r13: training-shard materialization — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_r13_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity — COVERAGE.md "Staged for round 7").
+# r13: training-shard materialization (oracle-parity-tested in
+# test_round6_ops.py::test_r13_matches_duckdb_oracle).
 #
 # The LAST step of the training-data pipeline: take p04's kept
 # documents, assign t35's deterministic shard, physically WRITE the
@@ -1267,10 +1219,8 @@ ORDER BY shard
 
 
 # --------------------------------------------------------------------------
-# r14: metadata-column file lineage — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_r14_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity — COVERAGE.md "Staged for round 7").
+# r14: metadata-column file lineage (oracle-parity-tested in
+# test_round6_ops.py::test_r14_matches_duckdb_oracle).
 #
 # Spark's hidden `_metadata` struct (SPARK-37273): every file-source
 # row carries file_path/file_size/row_index without any data-side
@@ -1328,10 +1278,8 @@ FROM groups
 
 
 # --------------------------------------------------------------------------
-# p05: corpus snapshot diff — STAGED FOR ROUND-8 DECLARATION (gated on
-# staged_ops_live(7); oracle-parity-tested in test_round6_ops.py::
-# test_p05_matches_duckdb_oracle now, so the later declaration is
-# automatic).
+# p05: corpus snapshot diff (oracle-parity-tested in
+# test_round6_ops.py::test_p05_matches_duckdb_oracle).
 #
 # Dataset-versioning diff: given two corpus snapshots, classify every
 # document as unchanged / changed (same id, different content hash) /
@@ -1407,9 +1355,9 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r15: custom STREAMING source via the Python Data Source API — STAGED
-# FOR ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_r15_matches_duckdb_oracle).
+# r15: custom STREAMING source via the Python Data Source API
+# (oracle-parity-tested in
+# test_round7_ops.py::test_r15_matches_duckdb_oracle).
 #
 # r08 covers the batch half of the API; this is the streaming half
 # (DataSourceStreamReader): the `docfeed` source serves the documents
@@ -1484,9 +1432,9 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r16: custom STREAMING sink via the Python Data Source API — STAGED
-# FOR ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_r16_matches_duckdb_oracle).
+# r16: custom STREAMING sink via the Python Data Source API
+# (oracle-parity-tested in
+# test_round7_ops.py::test_r16_matches_duckdb_oracle).
 #
 # The last cell of the Python-DataSource 2×2 matrix (batch read r08,
 # batch write r09, stream read r15, stream write THIS): the docfeed
@@ -1555,9 +1503,8 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r17: recursive file discovery + glob filtering — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
-# test_round7_ops.py::test_r17_matches_duckdb_oracle).
+# r17: recursive file discovery + glob filtering (oracle-parity-tested
+# in test_round7_ops.py::test_r17_matches_duckdb_oracle).
 #
 # Real corpora arrive as messy directory TREES (crawl dumps nested by
 # date/domain, mixed with sidecar files). This covers the discovery
@@ -1619,8 +1566,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r18: corrupt-FILE-resilient ingestion — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# r18: corrupt-FILE-resilient ingestion (oracle-parity-tested in
 # test_round7_ops.py::test_r18_matches_duckdb_oracle).
 #
 # r02 handles corrupt RECORDS inside a parseable file; this covers the
@@ -1673,8 +1619,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# p06: declarative dataflow-graph pipeline — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# p06: declarative dataflow-graph pipeline (oracle-parity-tested in
 # test_round7_ops.py::test_p06_matches_duckdb_oracle).
 #
 # The Declarative-Pipelines PATTERN without the Spark-Connect
@@ -1786,12 +1731,8 @@ ORDER BY source
 """
 
 
-# Staged during round 6 (window at capacity); auto-declared from round 7.
-# Staged while the declaring round's window was at capacity; auto-
-# declared the round after by __spark_entry__._collect (lazy gate).
 # --------------------------------------------------------------------------
-# a06: KMV (k-minimum-values) distinct sketch — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10)). Completes the sketch
+# a06: KMV (k-minimum-values) distinct sketch. Completes the sketch
 # family (a01 HLL++/KLL, a02 HLL rollup, a03 HLL algebra, a04 approx
 # top-k, a05 Bloom) with the ORDER-STATISTICS estimator — and unlike
 # HLL, whose bit layout is JVM-internal (a01–a03 had to declare
@@ -1891,9 +1832,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# a07: deterministic hash-reservoir sample — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16); moved back from gate 11
-# in the n05 pull-forward trade, VERDICT r10 #2). Every eval/labeling/
+# a07: deterministic hash-reservoir sample. Every eval/labeling/
 # inspection loop needs a fixed-size uniform sample per stratum. The
 # textbook reservoir algorithm is a SEQUENTIAL scan with mutable
 # state — unimplementable as a distributed operator without giving up
@@ -1954,8 +1893,7 @@ ORDER BY source, sample_rank
 
 
 # --------------------------------------------------------------------------
-# r19: multiline quoted-CSV ingestion — STAGED FOR ROUND-13
-# DECLARATION (gated on staged_ops_live(12)). r01 roundtrips
+# r19: multiline quoted-CSV ingestion. r01 roundtrips
 # newline-free CSV; real exports carry fields with EMBEDDED newlines,
 # commas, and quotes, and those require the reader's `multiLine` mode
 # (each record may span physical lines, so files are no longer
@@ -2027,8 +1965,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# p07: dataset card — STAGED FOR ROUND-13 DECLARATION (gated on
-# staged_ops_live(12)). The per-source manifest every published
+# p07: dataset card. The per-source manifest every published
 # corpus ships (datasheet/dataset-card practice): sizes, token and
 # char mass, exact-duplicate load, and language spread — one row per
 # source, all exact counts, the table a consumer reads BEFORE
@@ -2096,8 +2033,7 @@ P07_SQL = _p07_sql()
 
 
 # --------------------------------------------------------------------------
-# a08: KMV sketch MERGE — STAGED FOR ROUND-13 DECLARATION (gated on
-# staged_ops_live(12)). a06 builds one KMV sketch per source; this
+# a08: KMV sketch MERGE. a06 builds one KMV sketch per source; this
 # declares the property that makes KMV deployable at 100 TB: the
 # union rule "merge per-part sketches, keep the k smallest" is EXACT
 # — min-K(∪ sets) = min-K(∪ per-part min-Ks). The Spark side
@@ -2199,8 +2135,7 @@ A08_SQL = _a08_sql()
 
 
 # --------------------------------------------------------------------------
-# a09: KMV INTERSECTION estimate — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). a06 sizes each source's distinct-
+# a09: KMV INTERSECTION estimate. a06 sizes each source's distinct-
 # bigram vocabulary and a08 proves union-mergeability; this closes the
 # set-algebra: pairwise |A∩B| from the same sketches. Rule: merge the
 # two k-min sketches, keep the k smallest of the union; ρ = how many
@@ -2381,8 +2316,7 @@ A09_SQL = _a09_sql()
 
 
 # --------------------------------------------------------------------------
-# a10: KMV accuracy-vs-K operating curve — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). a06 fixes K=64; the
+# a10: KMV accuracy-vs-K operating curve. a06 fixes K=64; the
 # capacity-planning question is the CURVE: a KMV sketch costs K longs
 # per partition per group, so the K the pipeline deploys should be
 # the smallest one whose error is acceptable. One ranked relation
@@ -2494,8 +2428,7 @@ A10_SQL = _a10_sql()
 
 
 # --------------------------------------------------------------------------
-# a11: Bloom-filter FPR operating curve — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). a05 deploys Spark's
+# a11: Bloom-filter FPR operating curve. a05 deploys Spark's
 # built-in Bloom semijoin at one size; the sizing decision it hides
 # is THE Bloom question: bits-per-key vs false-positive rate. This op
 # measures it from first principles with a portable two-hash Bloom
@@ -2634,8 +2567,7 @@ A11_SQL = _a11_sql()
 
 
 # --------------------------------------------------------------------------
-# p09: TOKEN-mass curation waterfall — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). p08 counts DOCUMENTS
+# p09: TOKEN-mass curation waterfall. p08 counts DOCUMENTS
 # per drop stage; the number a training plan actually budgets is
 # TOKENS, and the two disagree wildly when a stage drops megadocs
 # (one boilerplate-heavy doc can outweigh a thousand short dups).
@@ -2699,8 +2631,7 @@ P09_SQL = _p09_sql()
 
 
 # --------------------------------------------------------------------------
-# a13: deterministic sampling-error curve — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). a07 fixes the sample
+# a13: deterministic sampling-error curve. a07 fixes the sample
 # size; the sizing question is the CURVE: how fast does the
 # hash-sample's estimate of a corpus statistic (mean tokens per doc)
 # approach the population value as K grows? One md5-ranked relation
@@ -2807,8 +2738,7 @@ A13_SQL = _a13_sql()
 
 
 # --------------------------------------------------------------------------
-# r23: custom record-separator ingestion — STAGED FOR ROUND-16
-# DECLARATION (gated on staged_ops_live(15)). Concatenated-document
+# r23: custom record-separator ingestion. Concatenated-document
 # exports can't use '\n' as the record boundary (documents contain
 # newlines); the convention is a control character — here ASCII 0x1E
 # (record separator) — and Spark's text reader takes it via the
@@ -2867,8 +2797,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# a12: sketch cross-validation (HLL vs KMV vs exact) — STAGED FOR
-# ROUND-16 DECLARATION (gated on staged_ops_live(15)). The suite
+# a12: sketch cross-validation (HLL vs KMV vs exact). The suite
 # carries two distinct-count sketches with opposite trade-offs:
 # engine-native HLL++ (a01-a03 — fastest, but its state is
 # JVM-internal so only tolerance booleans can be declared) and the
@@ -2978,8 +2907,7 @@ A12_SQL = _a12_sql()
 
 
 # --------------------------------------------------------------------------
-# r20: parquet schema-evolution merge — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). Long-lived datasets
+# r20: parquet schema-evolution merge. Long-lived datasets
 # evolve: a column added mid-corpus means the lake holds files with
 # BOTH schemas, and the reader must widen rather than fail. Staged
 # here: generation 1 writes (doc_id, source) for even doc_ids,
@@ -3032,8 +2960,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# r21: record-level malformed-CSV audit (PERMISSIVE mode) — STAGED
-# FOR ROUND-15 DECLARATION (gated on staged_ops_live(14)). r18 covers
+# r21: record-level malformed-CSV audit (PERMISSIVE mode). r18 covers
 # FILE-level corruption (ignoreCorruptFiles); the other resilience
 # tier is RECORD-level: a feed where some rows fail the schema must
 # load the good rows and QUARANTINE the bad ones, not abort (FAILFAST)
@@ -3106,8 +3033,7 @@ FROM documents WHERE doc_id < {_R21_N_DOCS}
 
 
 # --------------------------------------------------------------------------
-# p08: curation waterfall — STAGED FOR ROUND-15 DECLARATION (gated on
-# staged_ops_live(14)). p04 verdicts every document with its FIRST
+# p08: curation waterfall. p04 verdicts every document with its FIRST
 # failing filter (exact_dup → too_short → repetitive → boilerplate →
 # kept); this is the report a curation run publishes from those
 # verdicts: per pipeline stage, how many documents that stage dropped
@@ -3170,8 +3096,7 @@ P08_SQL = _p08_sql()
 
 
 # --------------------------------------------------------------------------
-# r22: whole-file text ingestion — STAGED FOR ROUND-15 DECLARATION
-# (gated on staged_ops_live(14)). Document corpora often land as ONE
+# r22: whole-file text ingestion. Document corpora often land as ONE
 # FILE PER DOCUMENT (crawl dumps, OCR outputs, per-article exports);
 # line-oriented spark.read.text would shred every document at \n.
 # The `wholetext` option reads each file as a single row, and the
@@ -3231,94 +3156,94 @@ ORDER BY doc_id
 """
 
 
-STAGED_QUERIES = {
-    6: {
-        "r12_xml_roundtrip": r12_xml_roundtrip,
-        "r13_training_shards_sink": r13_training_shards_sink,
-        "r14_file_lineage": r14_file_lineage,
-        "a03_hll_intersection": a03_hll_intersection,
-    },
-    7: {"p05_snapshot_diff": p05_snapshot_diff},
-    8: {
-        "r15_python_stream_source": r15_python_stream_source,
-        "r16_python_stream_sink": r16_python_stream_sink,
-    },
-    9: {
-        "r17_recursive_glob_ingest": r17_recursive_glob_ingest,
-        "r18_corrupt_file_ingest": r18_corrupt_file_ingest,
-        "p06_dataflow_pipeline": p06_dataflow_pipeline,
-    },
-    10: {"a06_kmv_distinct_sketch": a06_kmv_distinct_sketch},
-    12: {
-        "r19_multiline_csv_ingest": r19_multiline_csv_ingest,
-        "p07_dataset_card": p07_dataset_card,
-        "a08_kmv_sketch_merge": a08_kmv_sketch_merge,
-    },
-    13: {
-        "a09_kmv_intersection": a09_kmv_intersection,
-        "a10_kmv_k_curve": a10_kmv_k_curve,
-        "r20_schema_evolution_merge": r20_schema_evolution_merge,
-    },
-    14: {
-        "r21_permissive_csv_audit": r21_permissive_csv_audit,
-        "r22_wholetext_ingest": r22_wholetext_ingest,
-        "p08_curation_waterfall": p08_curation_waterfall,
-        "a11_bloom_fpr_curve": a11_bloom_fpr_curve,
-    },
-    15: {
-        "a12_sketch_crosscheck": a12_sketch_crosscheck,
-        "r23_linesep_ingest": r23_linesep_ingest,
-    },
-    16: {
-        "a13_sample_error_curve": a13_sample_error_curve,
-        "p09_token_waterfall": p09_token_waterfall,
-        # moved back from gate 11 in the n05 pull-forward trade (VERDICT
-        # r10 #2): min-K-by-hash machinery already driver-evidenced by
-        # a06's green KMV row, so the sampling demo can wait
-        "a07_reservoir_sample": a07_reservoir_sample,
-    },
+QUERIES = {
+    "p01_document_records": p01_document_records,
+    "p02_export_projection": p02_export_projection,
+    "p03_records_with_tags": p03_records_with_tags,
+    "p04_curation_pipeline": p04_curation_pipeline,
+    "r01_csv_roundtrip": r01_csv_roundtrip,
+    "r02_corrupt_json_ingest": r02_corrupt_json_ingest,
+    "r03_orc_roundtrip": r03_orc_roundtrip,
+    "r04_schema_evolution": r04_schema_evolution,
+    "r05_cdc_upsert_merge": r05_cdc_upsert_merge,
+    "r06_json_roundtrip": r06_json_roundtrip,
+    "r07_partition_overwrite": r07_partition_overwrite,
+    "r08_python_datasource": r08_python_datasource,
+    "r09_python_datasink": r09_python_datasink,
+    "r10_pdf_extract": r10_pdf_extract,
+    "r11_gzip_jsonl_roundtrip": r11_gzip_jsonl_roundtrip,
+    "a01_approx_stats": a01_approx_stats,
+    "a02_hll_sketch_rollup": a02_hll_sketch_rollup,
+    "r12_xml_roundtrip": r12_xml_roundtrip,
+    "r13_training_shards_sink": r13_training_shards_sink,
+    "r14_file_lineage": r14_file_lineage,
+    "a03_hll_intersection": a03_hll_intersection,
+    "p05_snapshot_diff": p05_snapshot_diff,
+    "r15_python_stream_source": r15_python_stream_source,
+    "r16_python_stream_sink": r16_python_stream_sink,
+    "r17_recursive_glob_ingest": r17_recursive_glob_ingest,
+    "r18_corrupt_file_ingest": r18_corrupt_file_ingest,
+    "p06_dataflow_pipeline": p06_dataflow_pipeline,
+    "a06_kmv_distinct_sketch": a06_kmv_distinct_sketch,
+    "r19_multiline_csv_ingest": r19_multiline_csv_ingest,
+    "p07_dataset_card": p07_dataset_card,
+    "a08_kmv_sketch_merge": a08_kmv_sketch_merge,
+    "a09_kmv_intersection": a09_kmv_intersection,
+    "a10_kmv_k_curve": a10_kmv_k_curve,
+    "r20_schema_evolution_merge": r20_schema_evolution_merge,
+    "r21_permissive_csv_audit": r21_permissive_csv_audit,
+    "r22_wholetext_ingest": r22_wholetext_ingest,
+    "p08_curation_waterfall": p08_curation_waterfall,
+    "a11_bloom_fpr_curve": a11_bloom_fpr_curve,
+    "a12_sketch_crosscheck": a12_sketch_crosscheck,
+    "r23_linesep_ingest": r23_linesep_ingest,
+    "a13_sample_error_curve": a13_sample_error_curve,
+    "p09_token_waterfall": p09_token_waterfall,
+    "a07_reservoir_sample": a07_reservoir_sample,
 }
-STAGED_ORACLES = {
-    6: {
-        "r12_xml_roundtrip": R12_SQL,
-        "r13_training_shards_sink": R13_SQL,
-        "r14_file_lineage": R14_SQL,
-        "a03_hll_intersection": A03_SQL,
-    },
-    7: {"p05_snapshot_diff": P05_SQL},
-    8: {
-        "r15_python_stream_source": R15_SQL,
-        "r16_python_stream_sink": R16_SQL,
-    },
-    9: {
-        "r17_recursive_glob_ingest": R17_SQL,
-        "r18_corrupt_file_ingest": R18_SQL,
-        "p06_dataflow_pipeline": P06_SQL,
-    },
-    10: {"a06_kmv_distinct_sketch": A06_SQL},
-    12: {
-        "r19_multiline_csv_ingest": R19_SQL,
-        "p07_dataset_card": P07_SQL,
-        "a08_kmv_sketch_merge": A08_SQL,
-    },
-    13: {
-        "a09_kmv_intersection": A09_SQL,
-        "a10_kmv_k_curve": A10_SQL,
-        "r20_schema_evolution_merge": R20_SQL,
-    },
-    14: {
-        "r21_permissive_csv_audit": R21_SQL,
-        "r22_wholetext_ingest": R22_SQL,
-        "p08_curation_waterfall": P08_SQL,
-        "a11_bloom_fpr_curve": A11_SQL,
-    },
-    15: {
-        "a12_sketch_crosscheck": A12_SQL,
-        "r23_linesep_ingest": R23_SQL,
-    },
-    16: {
-        "a13_sample_error_curve": A13_SQL,
-        "p09_token_waterfall": P09_SQL,
-        "a07_reservoir_sample": A07_SQL,
-    },
+
+ORACLES = {
+    "p01_document_records": P01_SQL,
+    "p02_export_projection": P02_SQL,
+    "p03_records_with_tags": P03_SQL,
+    "p04_curation_pipeline": P04_SQL,
+    "r01_csv_roundtrip": R01_SQL,
+    "r02_corrupt_json_ingest": R02_SQL,
+    "r03_orc_roundtrip": R03_SQL,
+    "r04_schema_evolution": R04_SQL,
+    "r05_cdc_upsert_merge": R05_SQL,
+    "r06_json_roundtrip": R06_SQL,
+    "r07_partition_overwrite": R07_SQL,
+    "r08_python_datasource": R08_SQL,
+    "r09_python_datasink": R09_SQL,
+    "r10_pdf_extract": R10_SQL,
+    "r11_gzip_jsonl_roundtrip": R11_SQL,
+    "a01_approx_stats": A01_SQL,
+    "a02_hll_sketch_rollup": A02_SQL,
+    "r12_xml_roundtrip": R12_SQL,
+    "r13_training_shards_sink": R13_SQL,
+    "r14_file_lineage": R14_SQL,
+    "a03_hll_intersection": A03_SQL,
+    "p05_snapshot_diff": P05_SQL,
+    "r15_python_stream_source": R15_SQL,
+    "r16_python_stream_sink": R16_SQL,
+    "r17_recursive_glob_ingest": R17_SQL,
+    "r18_corrupt_file_ingest": R18_SQL,
+    "p06_dataflow_pipeline": P06_SQL,
+    "a06_kmv_distinct_sketch": A06_SQL,
+    "r19_multiline_csv_ingest": R19_SQL,
+    "p07_dataset_card": P07_SQL,
+    "a08_kmv_sketch_merge": A08_SQL,
+    "a09_kmv_intersection": A09_SQL,
+    "a10_kmv_k_curve": A10_SQL,
+    "r20_schema_evolution_merge": R20_SQL,
+    "r21_permissive_csv_audit": R21_SQL,
+    "r22_wholetext_ingest": R22_SQL,
+    "p08_curation_waterfall": P08_SQL,
+    "a11_bloom_fpr_curve": A11_SQL,
+    "a12_sketch_crosscheck": A12_SQL,
+    "r23_linesep_ingest": R23_SQL,
+    "a13_sample_error_curve": A13_SQL,
+    "p09_token_waterfall": P09_SQL,
+    "a07_reservoir_sample": A07_SQL,
 }

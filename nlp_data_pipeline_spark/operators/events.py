@@ -1097,10 +1097,8 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# e18: dropDuplicatesWithinWatermark — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_e18_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity — COVERAGE.md "Staged for round 7").
+# e18: dropDuplicatesWithinWatermark (oracle-parity-tested in
+# test_round6_ops.py::test_e18_matches_duckdb_oracle).
 #
 # The Spark 3.5 dedup API e09 does NOT cover: duplicate keys WITHOUT
 # event-time in the key — state holds one entry per key and is evicted
@@ -1154,10 +1152,8 @@ ORDER BY user_id, event_type
 
 
 # --------------------------------------------------------------------------
-# e19: state-store reader — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_e19_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# e19: state-store reader (oracle-parity-tested in
+# test_round6_ops.py::test_e19_matches_duckdb_oracle).
 #
 # Spark's State Data Source (`spark.read.format("statestore")`,
 # SPARK-45511): batch-read the persisted state of a running/stopped
@@ -1218,51 +1214,9 @@ ORDER BY event_type
 """
 
 
-QUERIES = {
-    "e01_tumbling_hourly": e01_tumbling_hourly,
-    "e02_session_windows": e02_session_windows,
-    "e03_first_event_per_user_type": e03_first_event_per_user_type,
-    "e04_streaming_tumbling": e04_streaming_tumbling,
-    "e05_sliding_windows": e05_sliding_windows,
-    "e06_stream_static_join": e06_stream_static_join,
-    "e07_partitioned_day_scan": e07_partitioned_day_scan,
-    "e08_streaming_append_finalized": e08_streaming_append_finalized,
-    "e09_streaming_dedup": e09_streaming_dedup,
-    "e10_stateful_user_counters": e10_stateful_user_counters,
-    "e11_foreachbatch_sink": e11_foreachbatch_sink,
-    "e12_stream_stream_join": e12_stream_stream_join,
-    "e13_stateful_type_counts": e13_stateful_type_counts,
-    "e14_streaming_session_finalized": e14_streaming_session_finalized,
-    "e15_dynamic_partition_pruning": e15_dynamic_partition_pruning,
-    "e16_stream_stream_left_outer": e16_stream_stream_left_outer,
-    "e17_streaming_cdc_upsert": e17_streaming_cdc_upsert,
-}
-
-ORACLES = {
-    "e14_streaming_session_finalized": E14_SQL,
-    "e15_dynamic_partition_pruning": E15_SQL,
-    "e16_stream_stream_left_outer": E16_SQL,
-    "e17_streaming_cdc_upsert": E17_SQL,
-    "e13_stateful_type_counts": E13_SQL,
-    "e11_foreachbatch_sink": E11_SQL,
-    "e12_stream_stream_join": E12_SQL,
-    "e09_streaming_dedup": E09_SQL,
-    "e10_stateful_user_counters": E10_SQL,
-    "e05_sliding_windows": E05_SQL,
-    "e01_tumbling_hourly": E01_SQL,
-    "e02_session_windows": E02_SQL,
-    "e03_first_event_per_user_type": E03_SQL,
-    "e04_streaming_tumbling": E04_SQL,
-    "e06_stream_static_join": E06_SQL,
-    "e07_partitioned_day_scan": E07_SQL,
-    "e08_streaming_append_finalized": E08_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# e20: STREAMING quantile monitoring — STAGED FOR ROUND-8 DECLARATION
-# (gated on staged_ops_live(7); oracle-parity-tested in
-# test_round6_ops.py::test_e20_matches_duckdb_oracle now).
+# e20: STREAMING quantile monitoring (oracle-parity-tested in
+# test_round6_ops.py::test_e20_matches_duckdb_oracle).
 #
 # Production streams monitor value DISTRIBUTIONS, not just counts:
 # per-type approximate percentiles maintained by the stream
@@ -1341,14 +1295,10 @@ ORDER BY event_type
 """
 
 
-# Staged while the declaring round's window was at capacity; auto-
-# declared the round after (keyed by staging round) by
-# __spark_entry__._collect, which evaluates staging.staged_ops_live
-# lazily per queries()/oracle_sql() call (not at import).
 # --------------------------------------------------------------------------
 # e21: streaming admission control (maxFilesPerTrigger × AvailableNow)
-# — STAGED FOR ROUND-10 DECLARATION (gated on staged_ops_live(9);
-# oracle-parity-tested in test_round7_ops.py::test_e21_matches_duckdb_oracle).
+# (oracle-parity-tested in
+# test_round7_ops.py::test_e21_matches_duckdb_oracle).
 #
 # The backpressure knob every production file/queue stream runs with:
 # maxFilesPerTrigger bounds each micro-batch's intake, and
@@ -1436,8 +1386,7 @@ FROM events
 
 
 # --------------------------------------------------------------------------
-# e22: row-level ForeachWriter sink — STAGED FOR ROUND-10 DECLARATION
-# (gated on staged_ops_live(9); oracle-parity-tested in
+# e22: row-level ForeachWriter sink (oracle-parity-tested in
 # test_round7_ops.py::test_e22_matches_duckdb_oracle).
 #
 # The third and last streaming-sink API beside foreachBatch (e11) and
@@ -1537,9 +1486,9 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# a04: approx_top_k heavy-hitters sketch (SPARK-49662, Spark 4.1) —
-# STAGED FOR ROUND-9 DECLARATION (gated on staged_ops_live(8);
-# oracle-parity-tested in test_round7_ops.py::test_a04_matches_duckdb_oracle).
+# a04: approx_top_k heavy-hitters sketch (SPARK-49662, Spark 4.1)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_a04_matches_duckdb_oracle).
 #
 # The native heavy-hitters aggregate beside t17's hand-rolled
 # count-min sketch: one pass, mergeable state, no exact groupBy of the
@@ -1590,8 +1539,7 @@ LIMIT 3
 
 
 # --------------------------------------------------------------------------
-# e23: sequenced conversion funnel — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). The classic product-analytics query
+# e23: sequenced conversion funnel. The classic product-analytics query
 # the e-series still lacked: per user, the ORDER-RESPECTING funnel
 # signup → view → click → purchase, where stage k counts only if it
 # happens at-or-after the user's stage-(k-1) time (a purchase before
@@ -1694,8 +1642,7 @@ ORDER BY stage
 
 
 # --------------------------------------------------------------------------
-# e24: watermark-horizon late-data accounting — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). Choosing a watermark is
+# e24: watermark-horizon late-data accounting. Choosing a watermark is
 # a measurement problem: every streaming query in this suite (e02,
 # e05, e18...) takes a lateness horizon as given, but the horizon
 # should come from THIS table — replay the stream in arrival order
@@ -1777,9 +1724,8 @@ ORDER BY horizon_s
 
 
 # --------------------------------------------------------------------------
-# e25: event-type transition matrix — STAGED FOR ROUND-15 DECLARATION
-# (gated on staged_ops_live(14)). The first-order Markov model of user
-# behavior: for every consecutive event pair within a user's
+# e25: event-type transition matrix. The first-order Markov model of
+# user behavior: for every consecutive event pair within a user's
 # timeline, count (from_type → to_type) and row-normalize into the
 # transition probability — the matrix behind next-action prediction,
 # anomaly scoring (improbable transitions), and funnel design (e23
@@ -1842,8 +1788,7 @@ ORDER BY from_type, to_type
 
 
 # --------------------------------------------------------------------------
-# e26: hour-of-day seasonality profile — STAGED FOR ROUND-16
-# DECLARATION (gated on staged_ops_live(15)). Capacity planning and
+# e26: hour-of-day seasonality profile. Capacity planning and
 # anomaly baselines start from the diurnal profile: per event type,
 # the event mass by hour of day and each hour's share of the type's
 # total. hour() on a session-tz timestamp is engine-identical for
@@ -1897,8 +1842,7 @@ ORDER BY event_type, hour_of_day
 
 
 # --------------------------------------------------------------------------
-# e27: error-burst detector — STAGED FOR ROUND-16 DECLARATION (gated
-# on staged_ops_live(15)). The ops-alerting primitive: per tumbling
+# e27: error-burst detector. The ops-alerting primitive: per tumbling
 # hour, the error rate vs the corpus-wide mean, flagging hours whose
 # rate exceeds 2× the baseline. The flag is evaluated as the INTEGER
 # cross-multiplication n_err·total_events > 2·total_err·n_events —
@@ -1964,8 +1908,7 @@ ORDER BY hour_start
 
 
 # --------------------------------------------------------------------------
-# e28: inter-arrival gap histogram — STAGED FOR ROUND-17 DECLARATION
-# (gated on staged_ops_live(16)). The sessionization gap (q53/e03's
+# e28: inter-arrival gap histogram. The sessionization gap (q53/e03's
 # parameter) and the watermark horizon (e24) should both be READ off
 # this table, not guessed: per-user consecutive event gaps in exact
 # integer microseconds, histogrammed in power-of-two buckets
@@ -2038,8 +1981,7 @@ ORDER BY gap_bucket
 
 
 # --------------------------------------------------------------------------
-# e29: behavioral entropy per user — STAGED FOR ROUND-17 DECLARATION
-# (gated on staged_ops_live(16)). The one-number behavioral-diversity
+# e29: behavioral entropy per user. The one-number behavioral-diversity
 # score: Shannon entropy of each user's event-type distribution —
 # near 0 = single-behavior (bot-like), near ln 5 = uniform across the
 # catalog. The float-discipline point this op exists to demonstrate:
@@ -2111,53 +2053,68 @@ ORDER BY user_id
 E29_SQL = _e29_sql()
 
 
-STAGED_QUERIES = {
-    6: {
-        "e18_dedup_within_watermark": e18_dedup_within_watermark,
-        "e19_statestore_read": e19_statestore_read,
-    },
-    7: {"e20_streaming_quantiles": e20_streaming_quantiles},
-    8: {"a04_approx_top_k": a04_approx_top_k},
-    9: {
-        "e21_admission_control": e21_admission_control,
-        "e22_foreach_row_sink": e22_foreach_row_sink,
-    },
-    13: {
-        "e23_conversion_funnel": e23_conversion_funnel,
-        "e24_late_data_accounting": e24_late_data_accounting,
-    },
-    14: {"e25_transition_matrix": e25_transition_matrix},
-    15: {
-        "e26_hourly_profile": e26_hourly_profile,
-        "e27_error_burst_detector": e27_error_burst_detector,
-    },
-    16: {
-        "e28_interarrival_histogram": e28_interarrival_histogram,
-        "e29_behavior_entropy": e29_behavior_entropy,
-    },
+QUERIES = {
+    "e01_tumbling_hourly": e01_tumbling_hourly,
+    "e02_session_windows": e02_session_windows,
+    "e03_first_event_per_user_type": e03_first_event_per_user_type,
+    "e04_streaming_tumbling": e04_streaming_tumbling,
+    "e05_sliding_windows": e05_sliding_windows,
+    "e06_stream_static_join": e06_stream_static_join,
+    "e07_partitioned_day_scan": e07_partitioned_day_scan,
+    "e08_streaming_append_finalized": e08_streaming_append_finalized,
+    "e09_streaming_dedup": e09_streaming_dedup,
+    "e10_stateful_user_counters": e10_stateful_user_counters,
+    "e11_foreachbatch_sink": e11_foreachbatch_sink,
+    "e12_stream_stream_join": e12_stream_stream_join,
+    "e13_stateful_type_counts": e13_stateful_type_counts,
+    "e14_streaming_session_finalized": e14_streaming_session_finalized,
+    "e15_dynamic_partition_pruning": e15_dynamic_partition_pruning,
+    "e16_stream_stream_left_outer": e16_stream_stream_left_outer,
+    "e17_streaming_cdc_upsert": e17_streaming_cdc_upsert,
+    "e18_dedup_within_watermark": e18_dedup_within_watermark,
+    "e19_statestore_read": e19_statestore_read,
+    "e20_streaming_quantiles": e20_streaming_quantiles,
+    "a04_approx_top_k": a04_approx_top_k,
+    "e21_admission_control": e21_admission_control,
+    "e22_foreach_row_sink": e22_foreach_row_sink,
+    "e23_conversion_funnel": e23_conversion_funnel,
+    "e24_late_data_accounting": e24_late_data_accounting,
+    "e25_transition_matrix": e25_transition_matrix,
+    "e26_hourly_profile": e26_hourly_profile,
+    "e27_error_burst_detector": e27_error_burst_detector,
+    "e28_interarrival_histogram": e28_interarrival_histogram,
+    "e29_behavior_entropy": e29_behavior_entropy,
 }
-STAGED_ORACLES = {
-    6: {
-        "e18_dedup_within_watermark": E18_SQL,
-        "e19_statestore_read": E19_SQL,
-    },
-    7: {"e20_streaming_quantiles": E20_SQL},
-    8: {"a04_approx_top_k": A04_SQL},
-    9: {
-        "e21_admission_control": E21_SQL,
-        "e22_foreach_row_sink": E22_SQL,
-    },
-    13: {
-        "e23_conversion_funnel": E23_SQL,
-        "e24_late_data_accounting": E24_SQL,
-    },
-    14: {"e25_transition_matrix": E25_SQL},
-    15: {
-        "e26_hourly_profile": E26_SQL,
-        "e27_error_burst_detector": E27_SQL,
-    },
-    16: {
-        "e28_interarrival_histogram": E28_SQL,
-        "e29_behavior_entropy": E29_SQL,
-    },
+
+ORACLES = {
+    "e01_tumbling_hourly": E01_SQL,
+    "e02_session_windows": E02_SQL,
+    "e03_first_event_per_user_type": E03_SQL,
+    "e04_streaming_tumbling": E04_SQL,
+    "e05_sliding_windows": E05_SQL,
+    "e06_stream_static_join": E06_SQL,
+    "e07_partitioned_day_scan": E07_SQL,
+    "e08_streaming_append_finalized": E08_SQL,
+    "e09_streaming_dedup": E09_SQL,
+    "e10_stateful_user_counters": E10_SQL,
+    "e11_foreachbatch_sink": E11_SQL,
+    "e12_stream_stream_join": E12_SQL,
+    "e13_stateful_type_counts": E13_SQL,
+    "e14_streaming_session_finalized": E14_SQL,
+    "e15_dynamic_partition_pruning": E15_SQL,
+    "e16_stream_stream_left_outer": E16_SQL,
+    "e17_streaming_cdc_upsert": E17_SQL,
+    "e18_dedup_within_watermark": E18_SQL,
+    "e19_statestore_read": E19_SQL,
+    "e20_streaming_quantiles": E20_SQL,
+    "a04_approx_top_k": A04_SQL,
+    "e21_admission_control": E21_SQL,
+    "e22_foreach_row_sink": E22_SQL,
+    "e23_conversion_funnel": E23_SQL,
+    "e24_late_data_accounting": E24_SQL,
+    "e25_transition_matrix": E25_SQL,
+    "e26_hourly_profile": E26_SQL,
+    "e27_error_burst_detector": E27_SQL,
+    "e28_interarrival_histogram": E28_SQL,
+    "e29_behavior_entropy": E29_SQL,
 }

@@ -417,10 +417,8 @@ ORDER BY filename
 
 
 # --------------------------------------------------------------------------
-# m08: perceptual-hash image dedup — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_m08_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# m08: perceptual-hash image dedup (oracle-parity-tested in
+# test_round6_ops.py::test_m08_matches_duckdb_oracle).
 #
 # The multimodal twin of MinHash text dedup: decode (real PNG path,
 # functions/png.py) → integer-only 64-bit average-hash → SimHash-style
@@ -550,34 +548,10 @@ ORDER BY file_a, file_b
 """
 
 
-QUERIES = {
-    "m01_binary_metadata": m01_binary_metadata,
-    "m02_decode_stub_pipeline": m02_decode_stub_pipeline,
-    "m03_feature_extract_stub": m03_feature_extract_stub,
-    "m04_arrow_byte_stats": m04_arrow_byte_stats,
-    "m05_frame_sample_expand": m05_frame_sample_expand,
-    "m06_audio_chunk_checksums": m06_audio_chunk_checksums,
-    "m07_png_pixel_stats": m07_png_pixel_stats,
-}
-
-ORACLES = {
-    "m07_png_pixel_stats": M07_SQL,
-    "m06_audio_chunk_checksums": M06_SQL,
-    "m05_frame_sample_expand": M05_SQL,
-    "m01_binary_metadata": M01_SQL,
-    "m02_decode_stub_pipeline": M02_SQL,
-    "m03_feature_extract_stub": M03_SQL,
-    "m04_arrow_byte_stats": M04_SQL,
-}
-
-
-# Staged during round 6 (window at capacity); auto-declared from round 7.
-# Staged during round 6; auto-declared from round 7 by
-# __spark_entry__._collect (lazy staged_ops_live gate).
 # --------------------------------------------------------------------------
-# m09: binary container-header parse in PURE JVM expressions — STAGED
-# FOR ROUND-10 DECLARATION (gated on staged_ops_live(9);
-# oracle-parity-tested in test_round7_ops.py::test_m09_matches_duckdb_oracle).
+# m09: binary container-header parse in PURE JVM expressions
+# (oracle-parity-tested in
+# test_round7_ops.py::test_m09_matches_duckdb_oracle).
 #
 # m07 decodes PNG in Python; this shows the cheaper tier: structured
 # FIELD EXTRACTION from a binary container without ever leaving
@@ -660,8 +634,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# m10: image patch grid — STAGED FOR ROUND-12 DECLARATION (gated on
-# staged_ops_live(11)). The ViT/DiT preprocessing shape on top of
+# m10: image patch grid. The ViT/DiT preprocessing shape on top of
 # m07's real PNG decode: each image is zero-padded to multiples of
 # P=4 and split into a P×P patch grid (the patchify every
 # vision-transformer training pipeline runs before embedding), one
@@ -759,8 +732,7 @@ ORDER BY filename, patch_row, patch_col
 
 
 # --------------------------------------------------------------------------
-# m11: PCM frame energy — STAGED FOR ROUND-13 DECLARATION (gated on
-# staged_ops_live(12)). m09 parses the WAV HEADER without leaving
+# m11: PCM frame energy. m09 parses the WAV HEADER without leaving
 # codegen; this goes one tier deeper: SIGNAL-level compute on the
 # sample payload, still entirely JVM-side. A 64-sample int16
 # little-endian PCM payload is synthesized per document
@@ -855,8 +827,7 @@ ORDER BY doc_id, frame_id
 
 
 # --------------------------------------------------------------------------
-# m12: WebDataset tar-shard index — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). Multimodal training corpora ship as
+# m12: WebDataset tar-shard index. Multimodal training corpora ship as
 # TAR shards (the WebDataset convention), and the first pipeline step
 # over a lake of shards is building the INDEX: per member, its name,
 # size, and the exact byte offsets that allow random access without
@@ -977,8 +948,7 @@ ORDER BY member_name
 
 
 # --------------------------------------------------------------------------
-# m15: ZIP shard index — STAGED FOR ROUND-17 DECLARATION (gated on
-# staged_ops_live(16)). The OTHER shard container beside m12's TAR:
+# m15: ZIP shard index. The OTHER shard container beside m12's TAR:
 # ZIP's strength for training data is the CENTRAL DIRECTORY — one
 # trailing structure listing every member with its local-header
 # offset, so random access needs only the directory, never a
@@ -1080,8 +1050,7 @@ ORDER BY member_name
 
 
 # --------------------------------------------------------------------------
-# m13: JPEG marker-walk header parse — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). m09 parses WAV's FIXED
+# m13: JPEG marker-walk header parse. m09 parses WAV's FIXED
 # little-endian layout; JPEG is the other archetype: BIG-endian
 # marker segments of VARIABLE length that must be WALKED (offset of
 # segment k+1 = offset_k + 2 + BE16 length_k) — the shape every
@@ -1179,8 +1148,7 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# m14: NumPy .npy container parse — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(14 + 1)). Tensor artifacts (embeddings,
+# m14: NumPy .npy container parse. Tensor artifacts (embeddings,
 # logits, features) ship between ML jobs as .npy — magic '\\x93NUMPY',
 # version, an LE16 header length, an ASCII dict ('descr',
 # 'fortran_order', 'shape') padded so data starts 64-aligned, then
@@ -1335,23 +1303,38 @@ ORDER BY doc_id
 """
 
 
-STAGED_QUERIES = {
-    6: {"m08_image_dedup_phash": m08_image_dedup_phash},
-    9: {"m09_wav_header_parse": m09_wav_header_parse},
-    11: {"m10_image_patch_grid": m10_image_patch_grid},
-    12: {"m11_pcm_frame_energy": m11_pcm_frame_energy},
-    13: {"m12_webdataset_tar_index": m12_webdataset_tar_index},
-    14: {"m13_jpeg_header_parse": m13_jpeg_header_parse},
-    15: {"m14_npy_header_parse": m14_npy_header_parse},
-    16: {"m15_zip_shard_index": m15_zip_shard_index},
+QUERIES = {
+    "m01_binary_metadata": m01_binary_metadata,
+    "m02_decode_stub_pipeline": m02_decode_stub_pipeline,
+    "m03_feature_extract_stub": m03_feature_extract_stub,
+    "m04_arrow_byte_stats": m04_arrow_byte_stats,
+    "m05_frame_sample_expand": m05_frame_sample_expand,
+    "m06_audio_chunk_checksums": m06_audio_chunk_checksums,
+    "m07_png_pixel_stats": m07_png_pixel_stats,
+    "m08_image_dedup_phash": m08_image_dedup_phash,
+    "m09_wav_header_parse": m09_wav_header_parse,
+    "m10_image_patch_grid": m10_image_patch_grid,
+    "m11_pcm_frame_energy": m11_pcm_frame_energy,
+    "m12_webdataset_tar_index": m12_webdataset_tar_index,
+    "m13_jpeg_header_parse": m13_jpeg_header_parse,
+    "m14_npy_header_parse": m14_npy_header_parse,
+    "m15_zip_shard_index": m15_zip_shard_index,
 }
-STAGED_ORACLES = {
-    6: {"m08_image_dedup_phash": M08_SQL},
-    9: {"m09_wav_header_parse": M09_SQL},
-    11: {"m10_image_patch_grid": M10_SQL},
-    12: {"m11_pcm_frame_energy": M11_SQL},
-    13: {"m12_webdataset_tar_index": M12_SQL},
-    14: {"m13_jpeg_header_parse": M13_SQL},
-    15: {"m14_npy_header_parse": M14_SQL},
-    16: {"m15_zip_shard_index": M15_SQL},
+
+ORACLES = {
+    "m01_binary_metadata": M01_SQL,
+    "m02_decode_stub_pipeline": M02_SQL,
+    "m03_feature_extract_stub": M03_SQL,
+    "m04_arrow_byte_stats": M04_SQL,
+    "m05_frame_sample_expand": M05_SQL,
+    "m06_audio_chunk_checksums": M06_SQL,
+    "m07_png_pixel_stats": M07_SQL,
+    "m08_image_dedup_phash": M08_SQL,
+    "m09_wav_header_parse": M09_SQL,
+    "m10_image_patch_grid": M10_SQL,
+    "m11_pcm_frame_energy": M11_SQL,
+    "m12_webdataset_tar_index": M12_SQL,
+    "m13_jpeg_header_parse": M13_SQL,
+    "m14_npy_header_parse": M14_SQL,
+    "m15_zip_shard_index": M15_SQL,
 }

@@ -282,11 +282,7 @@ SELECT vocab_rank, term, tf, df FROM (
 
 
 # --------------------------------------------------------------------------
-# n05: MLlib IDF model, oracle-exact — STAGED FOR ROUND-12
-# DECLARATION (gated on staged_ops_live(11); pulled forward from gate
-# 16 per VERDICT r10 #2 — ML-fit parity is the envelope's thinnest
-# driver evidence, so the first hash-green pyspark.ml FIT should not
-# wait six rounds; a07 took its gate-16 slot). n01–n03 are rows-only
+# n05: MLlib IDF model, oracle-exact. n01–n03 are rows-only
 # because LDA's fitted state is stochastic-iterative; IDF is the
 # MLlib fit whose state is CLOSED-FORM — idf_j = ln((m+1)/(df_j+1))
 # with m = fitted row count and df_j the term's document frequency —
@@ -383,8 +379,7 @@ ORDER BY vocab_rank
 
 
 # --------------------------------------------------------------------------
-# n06: MLlib StringIndexer multi-column fit, oracle-exact — STAGED FOR
-# ROUND-13 DECLARATION (gated on staged_ops_live(12)). The second
+# n06: MLlib StringIndexer multi-column fit, oracle-exact. The second
 # value-exact pyspark.ml FIT behind n05 (VERDICT r10 "What's missing"
 # #1: ML-fit parity is the envelope's thinnest driver evidence). The
 # fitted state is DETERMINISTIC under the default frequencyDesc order:
@@ -465,8 +460,7 @@ ORDER BY col_name, label_index
 
 
 # --------------------------------------------------------------------------
-# n07: MLlib MinMaxScaler fit, oracle-exact — STAGED FOR ROUND-13
-# DECLARATION (gated on staged_ops_live(12)). The third value-exact
+# n07: MLlib MinMaxScaler fit, oracle-exact. The third value-exact
 # pyspark.ml FIT: MinMaxScalerModel's originalMin/originalMax vectors
 # are pure per-dimension min/max SELECTIONS over the embedding corpus
 # — no arithmetic, so no summation-order float drift — and the
@@ -521,25 +515,18 @@ QUERIES = {
     "n02_doc_tags": n02_doc_tags,
     "n03_topic_metrics": n03_topic_metrics,
     "n04_count_vectorize": n04_count_vectorize,
+    "n05_idf_model": n05_idf_model,
+    "n06_string_indexer_model": n06_string_indexer_model,
+    "n07_minmax_scaler_model": n07_minmax_scaler_model,
 }
 
 # n01–n03 are model-dependent (MLlib LDA): rows-only driver checks by
 # design — see module docstring and README "verification story". n04 is
 # the deterministic oracle surface for the featurization layer; n05
-# (staged) extends it to a REAL MLlib fit with closed-form state.
-ORACLES: dict[str, str] = {"n04_count_vectorize": _n04_sql()}
-
-STAGED_QUERIES = {
-    11: {"n05_idf_model": n05_idf_model},
-    12: {
-        "n06_string_indexer_model": n06_string_indexer_model,
-        "n07_minmax_scaler_model": n07_minmax_scaler_model,
-    },
-}
-STAGED_ORACLES = {
-    11: {"n05_idf_model": _n05_sql()},
-    12: {
-        "n06_string_indexer_model": N06_SQL,
-        "n07_minmax_scaler_model": N07_SQL,
-    },
+# extends it to a REAL MLlib fit with closed-form state.
+ORACLES = {
+    "n04_count_vectorize": _n04_sql(),
+    "n05_idf_model": _n05_sql(),
+    "n06_string_indexer_model": N06_SQL,
+    "n07_minmax_scaler_model": N07_SQL,
 }

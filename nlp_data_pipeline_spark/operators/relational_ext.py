@@ -1297,10 +1297,8 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# q42: collation-aware grouping — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_q42_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# q42: collation-aware grouping (oracle-parity-tested in
+# test_round6_ops.py::test_q42_matches_duckdb_oracle).
 #
 # Spark 4 string collations (SPARK-46830): `COLLATE UTF8_LCASE` makes
 # equality/grouping/joins case-insensitive IN THE ENGINE — hash
@@ -1340,9 +1338,8 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# q43: explicit GROUPING SETS — STAGED FOR ROUND-8 DECLARATION (gated
-# on staged_ops_live(7); oracle-parity-tested in test_round7_ops.py::
-# test_q43_matches_duckdb_oracle).
+# q43: explicit GROUPING SETS (oracle-parity-tested in
+# test_round7_ops.py::test_q43_matches_duckdb_oracle).
 #
 # The DataFrame-API twin of v04's SQL GROUPING SETS: the
 # df.groupingSets() method (SPARK-45929, new in Spark 4) — previously
@@ -1384,69 +1381,8 @@ ORDER BY gid, o_orderpriority ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST
 """
 
 
-QUERIES = {
-    "q21_pivot_event_matrix": q21_pivot_event_matrix,
-    "q22_analytic_funcs": q22_analytic_funcs,
-    "q23_map_array_funcs": q23_map_array_funcs,
-    "q24_first_last_frames": q24_first_last_frames,
-    "q25_salted_hot_key_agg": q25_salted_hot_key_agg,
-    "q26_time_rollup_from_partials": q26_time_rollup_from_partials,
-    "q27_exact_percentiles": q27_exact_percentiles,
-    "u01_grouped_agg_udaf": u01_grouped_agg_udaf,
-    "q28_outer_join_coverage": q28_outer_join_coverage,
-    "q29_salted_skew_join": q29_salted_skew_join,
-    "q30_bucketed_colocated_join": q30_bucketed_colocated_join,
-    "q31_key_skew_profile": q31_key_skew_profile,
-    "u02_grouped_zscore": u02_grouped_zscore,
-    "u03_scalar_pandas_udf": u03_scalar_pandas_udf,
-    "u04_arrow_row_udf": u04_arrow_row_udf,
-    "q32_exists_order_audit": q32_exists_order_audit,
-    "q33_time_range_window": q33_time_range_window,
-    "q34_unpivot_event_matrix": q34_unpivot_event_matrix,
-    "q35_nullsafe_join": q35_nullsafe_join,
-    "q36_variant_props": q36_variant_props,
-    "q37_observed_metrics": q37_observed_metrics,
-    "q38_data_expectations": q38_data_expectations,
-    "q39_zorder_clustering": q39_zorder_clustering,
-    "q40_incremental_mv_maintenance": q40_incremental_mv_maintenance,
-    "q41_bloom_pruned_join": q41_bloom_pruned_join,
-}
-
-ORACLES = {
-    "q40_incremental_mv_maintenance": Q40_SQL,
-    "q41_bloom_pruned_join": Q41_SQL,
-    "q39_zorder_clustering": Q39_SQL,
-    "q38_data_expectations": Q38_SQL,
-    "q37_observed_metrics": Q37_SQL,
-    "q36_variant_props": Q36_SQL,
-    "q32_exists_order_audit": Q32_SQL,
-    "q33_time_range_window": Q33_SQL,
-    "q34_unpivot_event_matrix": Q34_SQL,
-    "q35_nullsafe_join": Q35_SQL,
-    "q28_outer_join_coverage": Q28_SQL,
-    "u01_grouped_agg_udaf": U01_SQL,
-    "q26_time_rollup_from_partials": Q26_SQL,
-    "q27_exact_percentiles": Q27_SQL,
-    "q21_pivot_event_matrix": Q21_SQL,
-    "q22_analytic_funcs": Q22_SQL,
-    "q23_map_array_funcs": Q23_SQL,
-    "q24_first_last_frames": Q24_SQL,
-    "q25_salted_hot_key_agg": Q25_SQL,
-    "q29_salted_skew_join": Q29_SQL,
-    "q30_bucketed_colocated_join": Q30_SQL,
-    "q31_key_skew_profile": Q31_SQL,
-    "u02_grouped_zscore": U02_SQL,
-    "u03_scalar_pandas_udf": U03_SQL,
-    "u04_arrow_row_udf": U04_SQL,
-}
-
-
-# Staged during round 6 (window at capacity); auto-declared from round 7.
-# Staged during round 6; auto-declared from round 7 by
-# __spark_entry__._collect (lazy staged_ops_live gate).
 # --------------------------------------------------------------------------
-# u06: cogrouped-pandas as-of attribution — STAGED FOR ROUND-9
-# DECLARATION (gated on staged_ops_live(8); oracle-parity-tested in
+# u06: cogrouped-pandas as-of attribution (oracle-parity-tested in
 # test_round7_ops.py::test_u06_matches_duckdb_oracle).
 #
 # The one applyInPandas surface the u-series lacked: TWO grouped
@@ -1540,8 +1476,7 @@ ORDER BY user_id
 
 
 # --------------------------------------------------------------------------
-# u07: mapInArrow batch kernel — STAGED FOR ROUND-9 DECLARATION (gated
-# on staged_ops_live(8); oracle-parity-tested in
+# u07: mapInArrow batch kernel (oracle-parity-tested in
 # test_round7_ops.py::test_u07_matches_duckdb_oracle).
 #
 # The lowest-level Python batch surface: raw pyarrow RecordBatches in
@@ -1596,9 +1531,9 @@ ORDER BY vec_id
 
 
 # --------------------------------------------------------------------------
-# q44: listagg / ordered string aggregation (SPARK-42746, Spark 4.1) —
-# STAGED FOR ROUND-9 DECLARATION (gated on staged_ops_live(8);
-# oracle-parity-tested in test_round7_ops.py::test_q44_matches_duckdb_oracle).
+# q44: listagg / ordered string aggregation (SPARK-42746, Spark 4.1)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_q44_matches_duckdb_oracle).
 #
 # The SQL:2023 `LISTAGG(expr, sep) WITHIN GROUP (ORDER BY ...)`
 # surface: per region, the ordered nation roster plus each region's
@@ -1662,9 +1597,9 @@ ORDER BY r_name
 
 
 # --------------------------------------------------------------------------
-# q45: DataFrame.transpose (SPARK-49128, Spark 4.0) — STAGED FOR
-# ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_q45_matches_duckdb_oracle).
+# q45: DataFrame.transpose (SPARK-49128, Spark 4.0)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_q45_matches_duckdb_oracle).
 #
 # The frame-flip API: a (priority × metric) summary table transposed
 # to (metric × priority) — the report orientation, computed engine-side
@@ -1735,9 +1670,9 @@ ORDER BY metric
 
 
 # --------------------------------------------------------------------------
-# q46: DataFrame.lateralJoin API (SPARK-46794, Spark 4.0) — STAGED FOR
-# ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_q46_matches_duckdb_oracle).
+# q46: DataFrame.lateralJoin API (SPARK-46794, Spark 4.0)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_q46_matches_duckdb_oracle).
 #
 # v06/v09 cover SQL LATERAL; this is the DataFrame-side spelling: the
 # right side references the CURRENT left row via Column.outer(), so
@@ -1787,9 +1722,8 @@ ORDER BY r_name, n_customers DESC, n_name
 
 
 # --------------------------------------------------------------------------
-# u08: iterator-of-series pandas UDF (SCALAR_ITER) — STAGED FOR
-# ROUND-10 DECLARATION (gated on staged_ops_live(9); oracle-parity-
-# tested in test_round7_ops.py::test_u08_matches_duckdb_oracle).
+# u08: iterator-of-series pandas UDF (SCALAR_ITER) (oracle-parity-tested
+# in test_round7_ops.py::test_u08_matches_duckdb_oracle).
 #
 # The evaluation mode built for batch model INFERENCE: the function
 # receives an ITERATOR of Arrow batches per worker, so expensive state
@@ -1838,8 +1772,7 @@ ORDER BY event_type
 
 
 # --------------------------------------------------------------------------
-# u09: pandas UDAF as a WINDOW function — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# u09: pandas UDAF as a WINDOW function (oracle-parity-tested in
 # test_round7_ops.py::test_u09_matches_duckdb_oracle).
 #
 # u01 runs the grouped-agg pandas UDF in groupBy; the same kernel also
@@ -1901,8 +1834,7 @@ ORDER BY o_custkey, o_orderkey
 
 
 # --------------------------------------------------------------------------
-# q47: time-series gap fill with forward fill — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# q47: time-series gap fill with forward fill (oracle-parity-tested in
 # test_round7_ops.py::test_q47_matches_duckdb_oracle).
 #
 # The resampling primitive the window suite lacked: per-user HOURLY
@@ -1976,9 +1908,8 @@ ORDER BY s.user_id, s.hour
 
 
 # --------------------------------------------------------------------------
-# q50: AQE runtime skew-join splitting — STAGED FOR ROUND-11 DECLARATION
-# (gated on staged_ops_live(10)). The THIRD skew-remedy tier alongside
-# q25 (salted aggregation) and q29 (manual salted join): no rewrite at
+# q50: AQE runtime skew-join splitting. The THIRD skew-remedy tier
+# alongside q25 (salted aggregation) and q29 (manual salted join): no rewrite at
 # all — declare the plain join and let AQE's OptimizeSkewedJoin split
 # the hot reducer partition into per-map-range pieces at runtime.
 #
@@ -2052,8 +1983,7 @@ ORDER BY g
 
 
 # --------------------------------------------------------------------------
-# q48: Z-order layout audit — STAGED FOR ROUND-11 DECLARATION (gated on
-# staged_ops_live(10)). The multi-dimensional data-layout lever at
+# q48: Z-order layout audit. The multi-dimensional data-layout lever at
 # 100 TB: writing files clustered by a Z-order (Morton) curve over two
 # filter dimensions gives BOTH dimensions tight per-file min/max ranges,
 # so parquet row-group / file skipping prunes on either predicate —
@@ -2173,8 +2103,7 @@ ORDER BY strategy
 
 
 # --------------------------------------------------------------------------
-# q49: binned interval-overlap join — STAGED FOR ROUND-11 DECLARATION
-# (gated on staged_ops_live(10)). Interval overlap is a theta-join
+# q49: binned interval-overlap join. Interval overlap is a theta-join
 # (a.start <= b.end AND b.start <= a.end) — naively a nested-loop
 # cartesian, the classic scale-killer. The distributed form: explode
 # each interval into the fixed-width time bins it covers, EQUI-join on
@@ -2265,8 +2194,7 @@ LIMIT {_Q49_TOP}
 
 
 # --------------------------------------------------------------------------
-# a05: Bloom-filter semi-join with exact false-positive accounting —
-# STAGED FOR ROUND-11 DECLARATION (gated on staged_ops_live(10)). The
+# a05: Bloom-filter semi-join with exact false-positive accounting. The
 # shuffle-reduction primitive behind runtime row-level filtering: build
 # a Bloom filter over the (small, filtered) build side's keys, pre-
 # filter the 100 TB probe side with it BEFORE the shuffle join, and pay
@@ -2426,8 +2354,7 @@ FROM stats, totals
 
 
 # --------------------------------------------------------------------------
-# q51: CBO statistics-driven join planning — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10)). The COST-BASED half of
+# q51: CBO statistics-driven join planning. The COST-BASED half of
 # the join-strategy story: q30 fixes strategy by LAYOUT (bucketing),
 # q41/a05 by runtime/Bloom filters, q50 by AQE runtime sizes — q51 by
 # CATALOG STATISTICS at compile time. A selective equality filter on a
@@ -2524,8 +2451,7 @@ ORDER BY o_custkey
 
 
 # --------------------------------------------------------------------------
-# q52: file-metadata layout audit — STAGED FOR ROUND-12 DECLARATION
-# (gated on staged_ops_live(11)). The `_metadata` hidden-column
+# q52: file-metadata layout audit. The `_metadata` hidden-column
 # surface (SPARK-37273), uncovered by any other op: after staging
 # documents partitioned by source (repartition("source") first, so
 # each source's rows land in exactly ONE task → one file per
@@ -2585,8 +2511,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# q53: batch sessionization — STAGED FOR ROUND-12 DECLARATION (gated
-# on staged_ops_live(11)). e02/e14 sessionize the live STREAM; the
+# q53: batch sessionization. e02/e14 sessionize the live STREAM; the
 # backfill job every analytics stack also runs is the same gap-based
 # sessionization over the event HISTORY in batch. Spark-first: the
 # built-in session_window() works on batch DataFrames too — the
@@ -2669,8 +2594,7 @@ ORDER BY user_id, session_start
 
 
 # --------------------------------------------------------------------------
-# q54: SCD type-2 dimension build — STAGED FOR ROUND-13 DECLARATION
-# (gated on staged_ops_live(12)). The warehouse pattern that turns an
+# q54: SCD type-2 dimension build. The warehouse pattern that turns an
 # update STREAM into a HISTORY table: r05/e17 keep only each key's
 # latest state (type-1); type-2 keeps every state with its validity
 # interval. Two window passes over the per-user event history:
@@ -2738,8 +2662,7 @@ ORDER BY user_id, version
 
 
 # --------------------------------------------------------------------------
-# q55: effectivity (as-of-interval) join — STAGED FOR ROUND-13
-# DECLARATION (gated on staged_ops_live(12)). The consumer side of
+# q55: effectivity (as-of-interval) join. The consumer side of
 # q54: join every fact event to the dimension version that was valid
 # AT ITS TIMESTAMP (ts ∈ [valid_from, valid_to), NULL-open current) —
 # the temporal join every warehouse runs against an SCD2 table. q19's
@@ -2828,8 +2751,7 @@ ORDER BY d.user_id, d.version
 
 
 # --------------------------------------------------------------------------
-# q56: small-file compaction — STAGED FOR ROUND-13 DECLARATION (gated
-# on staged_ops_live(12)). The table-maintenance job every long-lived
+# q56: small-file compaction. The table-maintenance job every long-lived
 # 100 TB lake runs on a schedule: streaming/micro-batch ingestion
 # fragments a table into files far below the scan-efficient size
 # (here a deliberate repartition(16) write of a 500-row table), and
@@ -2893,8 +2815,7 @@ ORDER BY phase
 
 
 # --------------------------------------------------------------------------
-# q57: running DISTINCT count over a window — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). COUNT(DISTINCT x) OVER
+# q57: running DISTINCT count over a window. COUNT(DISTINCT x) OVER
 # (... ORDER BY ...) is unsupported in Spark (and most engines) for a
 # running frame; the canonical workaround is declared here as an
 # operator: flag each row that is the FIRST occurrence of its
@@ -2986,8 +2907,7 @@ ORDER BY p.user_id
 
 
 # --------------------------------------------------------------------------
-# q58: NULL-skew outer join via null salting — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). The production skew
+# q58: NULL-skew outer join via null salting. The production skew
 # case q25/q29/q50 do NOT cover: an outer join whose fact-side key is
 # NULL for a large fraction of rows (unenriched events, optional FKs).
 # Hash partitioning sends EVERY null to one reducer — the worst skew
@@ -3060,8 +2980,7 @@ ORDER BY e.event_type
 
 
 # --------------------------------------------------------------------------
-# q59: relative-rank analytic battery — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). q22/q24/q33 cover
+# q59: relative-rank analytic battery. q22/q24/q33 cover
 # rank/lag/frames; the RELATIVE-rank family was the remaining
 # analytic-window gap: percent_rank() (= (rank−1)/(n−1)),
 # cume_dist() (= rows ≤ current / n), and ntile(4) (equal-height
@@ -3131,8 +3050,7 @@ ORDER BY segment, custkey
 
 
 # --------------------------------------------------------------------------
-# q61: retention cohort matrix — STAGED FOR ROUND-17 DECLARATION
-# (gated on staged_ops_live(16)). The product-analytics table next to
+# q61: retention cohort matrix. The product-analytics table next to
 # e23's funnel: users grouped by their FIRST-activity week (the
 # cohort), tracked by how many are active in each subsequent week
 # offset — the retention triangle. Week arithmetic stays in exact
@@ -3217,8 +3135,7 @@ ORDER BY a.cohort_week, a.week_offset
 
 
 # --------------------------------------------------------------------------
-# u10: grouped applyInArrow — STAGED FOR ROUND-16 DECLARATION (gated
-# on staged_ops_live(15)). Completes the Arrow surface matrix: u03/u08
+# u10: grouped applyInArrow. Completes the Arrow surface matrix: u03/u08
 # scalar pandas UDFs, u02 applyInPandas, u06 cogrouped pandas, u07
 # mapInArrow (scan shape) — this is the GROUPED map on raw pyarrow
 # (Spark 4 `groupBy().applyInArrow`): whole per-group RecordBatches
@@ -3281,8 +3198,7 @@ ORDER BY user_id
 
 
 # --------------------------------------------------------------------------
-# u11: nested-type Arrow UDF round trip — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). Every prior u-op moves
+# u11: nested-type Arrow UDF round trip. Every prior u-op moves
 # FLAT columns through the Arrow boundary; real feature pipelines
 # ship NESTED data (token lists, per-user event structs, model
 # feature bundles), and the failure modes live exactly in the nested
@@ -3357,8 +3273,7 @@ ORDER BY user_id
 
 
 # --------------------------------------------------------------------------
-# q60: time-weighted average (TWAP) — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). Irregularly-sampled series (prices,
+# q60: time-weighted average (TWAP). Irregularly-sampled series (prices,
 # gauges, sensor values) average by HOLDING TIME, not by row count:
 # each observation weighs by the interval until the next one. The
 # float-discipline trap here is the weighted sum — Σ value·duration
@@ -3428,93 +3343,112 @@ ORDER BY user_id
 """
 
 
-STAGED_QUERIES = {
-    6: {"q42_collated_group": q42_collated_group},
-    7: {"q43_grouping_sets": q43_grouping_sets},
-    8: {
-        "u06_cogrouped_attribution": u06_cogrouped_attribution,
-        "u07_map_in_arrow": u07_map_in_arrow,
-        "q44_listagg_rollup": q44_listagg_rollup,
-        "q45_transpose_metrics": q45_transpose_metrics,
-        "q46_lateral_join_api": q46_lateral_join_api,
-    },
-    9: {
-        "u08_scalar_iter_udf": u08_scalar_iter_udf,
-        "u09_pandas_window_udaf": u09_pandas_window_udaf,
-        "q47_gap_fill_forward": q47_gap_fill_forward,
-    },
-    10: {
-        "q48_zorder_layout": q48_zorder_layout,
-        "q49_interval_overlap_join": q49_interval_overlap_join,
-        "q50_aqe_skew_join": q50_aqe_skew_join,
-        "a05_bloom_semijoin": a05_bloom_semijoin,
-        "q51_cbo_stats_join": q51_cbo_stats_join,
-    },
-    11: {
-        "q52_file_metadata_audit": q52_file_metadata_audit,
-        "q53_sessionize_batch": q53_sessionize_batch,
-    },
-    12: {
-        "q54_scd2_dimension_build": q54_scd2_dimension_build,
-        "q55_effectivity_join": q55_effectivity_join,
-        "q56_small_file_compaction": q56_small_file_compaction,
-    },
-    13: {"q57_running_distinct": q57_running_distinct},
-    14: {
-        "q58_null_skew_outer_join": q58_null_skew_outer_join,
-        "q59_analytic_rank_battery": q59_analytic_rank_battery,
-    },
-    15: {
-        "q60_time_weighted_average": q60_time_weighted_average,
-        "u10_apply_in_arrow": u10_apply_in_arrow,
-    },
-    16: {
-        "q61_retention_cohorts": q61_retention_cohorts,
-        "u11_nested_arrow_udf": u11_nested_arrow_udf,
-    },
+QUERIES = {
+    "q21_pivot_event_matrix": q21_pivot_event_matrix,
+    "q22_analytic_funcs": q22_analytic_funcs,
+    "q23_map_array_funcs": q23_map_array_funcs,
+    "q24_first_last_frames": q24_first_last_frames,
+    "q25_salted_hot_key_agg": q25_salted_hot_key_agg,
+    "q26_time_rollup_from_partials": q26_time_rollup_from_partials,
+    "q27_exact_percentiles": q27_exact_percentiles,
+    "u01_grouped_agg_udaf": u01_grouped_agg_udaf,
+    "q28_outer_join_coverage": q28_outer_join_coverage,
+    "q29_salted_skew_join": q29_salted_skew_join,
+    "q30_bucketed_colocated_join": q30_bucketed_colocated_join,
+    "q31_key_skew_profile": q31_key_skew_profile,
+    "u02_grouped_zscore": u02_grouped_zscore,
+    "u03_scalar_pandas_udf": u03_scalar_pandas_udf,
+    "u04_arrow_row_udf": u04_arrow_row_udf,
+    "q32_exists_order_audit": q32_exists_order_audit,
+    "q33_time_range_window": q33_time_range_window,
+    "q34_unpivot_event_matrix": q34_unpivot_event_matrix,
+    "q35_nullsafe_join": q35_nullsafe_join,
+    "q36_variant_props": q36_variant_props,
+    "q37_observed_metrics": q37_observed_metrics,
+    "q38_data_expectations": q38_data_expectations,
+    "q39_zorder_clustering": q39_zorder_clustering,
+    "q40_incremental_mv_maintenance": q40_incremental_mv_maintenance,
+    "q41_bloom_pruned_join": q41_bloom_pruned_join,
+    "q42_collated_group": q42_collated_group,
+    "q43_grouping_sets": q43_grouping_sets,
+    "u06_cogrouped_attribution": u06_cogrouped_attribution,
+    "u07_map_in_arrow": u07_map_in_arrow,
+    "q44_listagg_rollup": q44_listagg_rollup,
+    "q45_transpose_metrics": q45_transpose_metrics,
+    "q46_lateral_join_api": q46_lateral_join_api,
+    "u08_scalar_iter_udf": u08_scalar_iter_udf,
+    "u09_pandas_window_udaf": u09_pandas_window_udaf,
+    "q47_gap_fill_forward": q47_gap_fill_forward,
+    "q48_zorder_layout": q48_zorder_layout,
+    "q49_interval_overlap_join": q49_interval_overlap_join,
+    "q50_aqe_skew_join": q50_aqe_skew_join,
+    "a05_bloom_semijoin": a05_bloom_semijoin,
+    "q51_cbo_stats_join": q51_cbo_stats_join,
+    "q52_file_metadata_audit": q52_file_metadata_audit,
+    "q53_sessionize_batch": q53_sessionize_batch,
+    "q54_scd2_dimension_build": q54_scd2_dimension_build,
+    "q55_effectivity_join": q55_effectivity_join,
+    "q56_small_file_compaction": q56_small_file_compaction,
+    "q57_running_distinct": q57_running_distinct,
+    "q58_null_skew_outer_join": q58_null_skew_outer_join,
+    "q59_analytic_rank_battery": q59_analytic_rank_battery,
+    "q60_time_weighted_average": q60_time_weighted_average,
+    "u10_apply_in_arrow": u10_apply_in_arrow,
+    "q61_retention_cohorts": q61_retention_cohorts,
+    "u11_nested_arrow_udf": u11_nested_arrow_udf,
 }
-STAGED_ORACLES = {
-    6: {"q42_collated_group": Q42_SQL},
-    7: {"q43_grouping_sets": Q43_SQL},
-    8: {
-        "u06_cogrouped_attribution": U06_SQL,
-        "u07_map_in_arrow": U07_SQL,
-        "q44_listagg_rollup": Q44_SQL,
-        "q45_transpose_metrics": Q45_SQL,
-        "q46_lateral_join_api": Q46_SQL,
-    },
-    9: {
-        "u08_scalar_iter_udf": U08_SQL,
-        "u09_pandas_window_udaf": U09_SQL,
-        "q47_gap_fill_forward": Q47_SQL,
-    },
-    10: {
-        "q48_zorder_layout": Q48_SQL,
-        "q49_interval_overlap_join": Q49_SQL,
-        "q50_aqe_skew_join": Q50_SQL,
-        "a05_bloom_semijoin": A05_SQL,
-        "q51_cbo_stats_join": Q51_SQL,
-    },
-    11: {
-        "q52_file_metadata_audit": Q52_SQL,
-        "q53_sessionize_batch": Q53_SQL,
-    },
-    12: {
-        "q54_scd2_dimension_build": Q54_SQL,
-        "q55_effectivity_join": Q55_SQL,
-        "q56_small_file_compaction": Q56_SQL,
-    },
-    13: {"q57_running_distinct": Q57_SQL},
-    14: {
-        "q58_null_skew_outer_join": Q58_SQL,
-        "q59_analytic_rank_battery": Q59_SQL,
-    },
-    15: {
-        "q60_time_weighted_average": Q60_SQL,
-        "u10_apply_in_arrow": U10_SQL,
-    },
-    16: {
-        "q61_retention_cohorts": Q61_SQL,
-        "u11_nested_arrow_udf": U11_SQL,
-    },
+
+ORACLES = {
+    "q21_pivot_event_matrix": Q21_SQL,
+    "q22_analytic_funcs": Q22_SQL,
+    "q23_map_array_funcs": Q23_SQL,
+    "q24_first_last_frames": Q24_SQL,
+    "q25_salted_hot_key_agg": Q25_SQL,
+    "q26_time_rollup_from_partials": Q26_SQL,
+    "q27_exact_percentiles": Q27_SQL,
+    "u01_grouped_agg_udaf": U01_SQL,
+    "q28_outer_join_coverage": Q28_SQL,
+    "q29_salted_skew_join": Q29_SQL,
+    "q30_bucketed_colocated_join": Q30_SQL,
+    "q31_key_skew_profile": Q31_SQL,
+    "u02_grouped_zscore": U02_SQL,
+    "u03_scalar_pandas_udf": U03_SQL,
+    "u04_arrow_row_udf": U04_SQL,
+    "q32_exists_order_audit": Q32_SQL,
+    "q33_time_range_window": Q33_SQL,
+    "q34_unpivot_event_matrix": Q34_SQL,
+    "q35_nullsafe_join": Q35_SQL,
+    "q36_variant_props": Q36_SQL,
+    "q37_observed_metrics": Q37_SQL,
+    "q38_data_expectations": Q38_SQL,
+    "q39_zorder_clustering": Q39_SQL,
+    "q40_incremental_mv_maintenance": Q40_SQL,
+    "q41_bloom_pruned_join": Q41_SQL,
+    "q42_collated_group": Q42_SQL,
+    "q43_grouping_sets": Q43_SQL,
+    "u06_cogrouped_attribution": U06_SQL,
+    "u07_map_in_arrow": U07_SQL,
+    "q44_listagg_rollup": Q44_SQL,
+    "q45_transpose_metrics": Q45_SQL,
+    "q46_lateral_join_api": Q46_SQL,
+    "u08_scalar_iter_udf": U08_SQL,
+    "u09_pandas_window_udaf": U09_SQL,
+    "q47_gap_fill_forward": Q47_SQL,
+    "q48_zorder_layout": Q48_SQL,
+    "q49_interval_overlap_join": Q49_SQL,
+    "q50_aqe_skew_join": Q50_SQL,
+    "a05_bloom_semijoin": A05_SQL,
+    "q51_cbo_stats_join": Q51_SQL,
+    "q52_file_metadata_audit": Q52_SQL,
+    "q53_sessionize_batch": Q53_SQL,
+    "q54_scd2_dimension_build": Q54_SQL,
+    "q55_effectivity_join": Q55_SQL,
+    "q56_small_file_compaction": Q56_SQL,
+    "q57_running_distinct": Q57_SQL,
+    "q58_null_skew_outer_join": Q58_SQL,
+    "q59_analytic_rank_battery": Q59_SQL,
+    "q60_time_weighted_average": Q60_SQL,
+    "u10_apply_in_arrow": U10_SQL,
+    "q61_retention_cohorts": Q61_SQL,
+    "u11_nested_arrow_udf": U11_SQL,
 }

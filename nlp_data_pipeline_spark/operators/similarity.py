@@ -1386,10 +1386,8 @@ S12_SQL = _s12_sql()
 
 
 # --------------------------------------------------------------------------
-# s13: RADIUS (range) search — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_s13_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# s13: RADIUS (range) search (oracle-parity-tested in
+# test_round6_ops.py::test_s13_matches_duckdb_oracle).
 #
 # The third retrieval modality beside top-k (s01/s07) and all-pairs
 # (s02): return EVERY corpus vector within a similarity radius of each
@@ -1446,10 +1444,8 @@ ORDER BY query_id, vec_id
 
 
 # --------------------------------------------------------------------------
-# s14: INT8 scalar-quantized search — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_s14_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity — COVERAGE.md "Staged for round 7").
+# s14: INT8 scalar-quantized search (oracle-parity-tested in
+# test_round6_ops.py::test_s14_matches_duckdb_oracle).
 #
 # The OTHER production ANN compression beside PQ (s10/s11): per-
 # dimension min/max scalar quantization to int8 codes — 4× bandwidth
@@ -1580,9 +1576,9 @@ ORDER BY query_id, nn_rank
 
 
 # --------------------------------------------------------------------------
-# s15: reciprocal-rank fusion of two retrieval rankings — STAGED FOR
-# ROUND-8 DECLARATION (gated on staged_ops_live(7); oracle-parity-
-# tested in test_round7_ops.py::test_s15_matches_duckdb_oracle).
+# s15: reciprocal-rank fusion of two retrieval rankings
+# (oracle-parity-tested in
+# test_round7_ops.py::test_s15_matches_duckdb_oracle).
 #
 # The hybrid-retrieval combinator every RAG / training-data retrieval
 # stack runs: rank candidates under MULTIPLE scorers and fuse with
@@ -1693,8 +1689,7 @@ ORDER BY query_id, fused_rank
 
 
 # --------------------------------------------------------------------------
-# s16: graph-based ANN (NSW shape) — STAGED FOR ROUND-8 DECLARATION
-# (gated on staged_ops_live(7); oracle-parity-tested in
+# s16: graph-based ANN (NSW shape) (oracle-parity-tested in
 # test_round7_ops.py::test_s16_matches_duckdb_oracle).
 #
 # The third ANN index family beside LSH (s03) and IVF (s04/s07): a
@@ -2346,10 +2341,11 @@ def _knn_graph_nnd(
     performs (round 15; was two eager checkpoint jobs). The rounds=0
     build already IS that union (g = sym(seed ∪ links), pinned), so it
     is returned as-is instead of re-deriving an equal set."""
+    n_rounds = NND_ROUNDS if rounds is None else rounds
     topm, g, links = _nnd_state(
-        spark, sf_dir, m, rounds=rounds, refine_packed=refine_packed, e=e
+        spark, sf_dir, m, rounds=n_rounds, refine_packed=refine_packed, e=e
     )
-    if (NND_ROUNDS if rounds is None else rounds) == 0:
+    if n_rounds == 0:
         return g
     return _undirected(topm.union(links))
 
@@ -2439,9 +2435,9 @@ ORDER BY query_id
 
 
 # --------------------------------------------------------------------------
-# s17: one Lloyd refinement step for IVF centroid training — STAGED FOR
-# ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-tested
-# in test_round7_ops.py::test_s17_matches_duckdb_oracle).
+# s17: one Lloyd refinement step for IVF centroid training
+# (oracle-parity-tested in
+# test_round7_ops.py::test_s17_matches_duckdb_oracle).
 #
 # s04/s07 assume a FIXED centroid set; real IVF indexes train theirs
 # with k-means. Declared surface: seed with the first K vectors (s04's
@@ -2578,8 +2574,7 @@ ORDER BY centroid_id
 
 
 # --------------------------------------------------------------------------
-# s18: MMR diversified retrieval — STAGED FOR ROUND-9 DECLARATION
-# (gated on staged_ops_live(8); oracle-parity-tested in
+# s18: MMR diversified retrieval (oracle-parity-tested in
 # test_round7_ops.py::test_s18_matches_duckdb_oracle).
 #
 # Maximal Marginal Relevance re-ranking: after s01-style top-N
@@ -2716,9 +2711,9 @@ ORDER BY query_id, pick
 
 
 # --------------------------------------------------------------------------
-# s19: PageRank centrality on the kNN similarity graph — STAGED FOR
-# ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_s19_matches_duckdb_oracle).
+# s19: PageRank centrality on the kNN similarity graph
+# (oracle-parity-tested in
+# test_round7_ops.py::test_s19_matches_duckdb_oracle).
 #
 # The iterative-graph-algorithm family (beside d06's label-propagation
 # components and s17's Lloyd steps): 3 power iterations of damped
@@ -2827,8 +2822,7 @@ ORDER BY p.vec_id
 
 
 # --------------------------------------------------------------------------
-# s20: IVF operating curve (recall@k vs nprobe) — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# s20: IVF operating curve (recall@k vs nprobe) (oracle-parity-tested in
 # test_round7_ops.py::test_s20_matches_duckdb_oracle).
 #
 # The tuning surface behind every IVF deployment decision: s07 runs
@@ -2989,8 +2983,7 @@ ORDER BY f.nprobe
 
 
 # --------------------------------------------------------------------------
-# s23: graph-ANN beam-width operating curve — STAGED FOR ROUND-12
-# DECLARATION (gated on staged_ops_live(11)). Completes the
+# s23: graph-ANN beam-width operating curve. Completes the
 # operating-curve family (s20 IVF nprobe, d19 shingle-k, t46 quality
 # threshold) for the graph index: the SAME NN-descent graph searched
 # at three beam widths, reporting whether each clears its graded
@@ -3122,8 +3115,7 @@ ORDER BY ef
 
 
 # --------------------------------------------------------------------------
-# s24: topical source mix — STAGED FOR ROUND-12 DECLARATION (gated on
-# staged_ops_live(11)). The metadata⋈embedding join every production
+# s24: topical source mix. The metadata⋈embedding join every production
 # pipeline runs and no other op here demonstrates: documents.doc_id =
 # embeddings.vec_id (the driver tables align 1:1 at small SF; at
 # sf0.1 embeddings cover a 2000-doc prefix — an inner join scopes the
@@ -3194,8 +3186,7 @@ S24_SQL = _s24_sql()
 
 
 # --------------------------------------------------------------------------
-# s21: hard-negative mining — STAGED FOR ROUND-11 DECLARATION (gated on
-# staged_ops_live(10)). The contrastive-training data op: for each
+# s21: hard-negative mining. The contrastive-training data op: for each
 # query vector, the top-k most-similar vectors whose LABEL differs —
 # the "hard negatives" that make embedding/reranker training work
 # (easy random negatives teach nothing; same-label hits are
@@ -3274,8 +3265,7 @@ FROM ranked WHERE neg_rank <= {NEG_TOP_K}
 
 
 # --------------------------------------------------------------------------
-# s22: label-centroid similarity matrix — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10)). The domain-similarity
+# s22: label-centroid similarity matrix. The domain-similarity
 # map behind data-selection methods (DoReMi/DSIR pick mixture weights
 # from how close domains sit in embedding space): one centroid per
 # label group, then the full pairwise cosine matrix of centroids.
@@ -3363,8 +3353,7 @@ ORDER BY label_a, label_b
 
 
 # --------------------------------------------------------------------------
-# s25: mutual-kNN pairs — STAGED FOR ROUND-12 DECLARATION (gated on
-# staged_ops_live(11)). The reciprocal-neighbor filter near-dup
+# s25: mutual-kNN pairs. The reciprocal-neighbor filter near-dup
 # curation runs AFTER candidate generation: a pair survives only if
 # each vector ranks inside the other's top-M cosine list. One-sided
 # kNN membership is asymmetric (a hub vector appears in thousands of
@@ -3435,8 +3424,7 @@ ORDER BY vec_a, vec_b
 
 
 # --------------------------------------------------------------------------
-# s27: IVF+PQ search — STAGED FOR ROUND-13 DECLARATION (gated on
-# staged_ops_live(12)). The composition production ANN indexes
+# s27: IVF+PQ search. The composition production ANN indexes
 # actually ship (FAISS IVFPQ): s07 bounds WHICH vectors are scored
 # (only the NPROBE probed clusters) and s11 bounds WHAT scoring
 # costs (M table lookups against 8-byte codes instead of a 64-double
@@ -3707,8 +3695,7 @@ ORDER BY query_id, nn_rank
 
 
 # --------------------------------------------------------------------------
-# s26: label-retrieval eval — STAGED FOR ROUND-13 DECLARATION (gated
-# on staged_ops_live(12)). The eval harness every retrieval/embedding
+# s26: label-retrieval eval. The eval harness every retrieval/embedding
 # deployment runs and no other op here declares: treat each query
 # vector's LABEL as its relevance judgment and score the top-K cosine
 # ranking — hits@1/5/10 and the first relevant rank per query (the
@@ -3800,40 +3787,8 @@ ORDER BY query_id
 """
 
 
-QUERIES = {
-    "s01_cosine_topk": s01_cosine_topk,
-    "s02_top_similar_pairs": s02_top_similar_pairs,
-    "s03_lsh_buckets": s03_lsh_buckets,
-    "s04_ivf_assign": s04_ivf_assign,
-    "s05_embedding_label_stats": s05_embedding_label_stats,
-    "s06_embedding_neardup_pairs": s06_embedding_neardup_pairs,
-    "s07_ivf_probe_search": s07_ivf_probe_search,
-    "s08_ann_recall": s08_ann_recall,
-    "s09_semantic_dedup": s09_semantic_dedup,
-    "s10_pq_encode": s10_pq_encode,
-    "s11_pq_adc_search": s11_pq_adc_search,
-    "s12_bm25_topk": s12_bm25_topk,
-}
-
-ORACLES = {
-    "s12_bm25_topk": S12_SQL,
-    "s11_pq_adc_search": S11_SQL,
-    "s10_pq_encode": S10_SQL,
-    "s09_semantic_dedup": S09_SQL,
-    "s08_ann_recall": S08_SQL,
-    "s07_ivf_probe_search": S07_SQL,
-    "s05_embedding_label_stats": S05_SQL,
-    "s01_cosine_topk": S01_SQL,
-    "s02_top_similar_pairs": S02_SQL,
-    "s03_lsh_buckets": S03_SQL,
-    "s04_ivf_assign": S04_SQL,
-    "s06_embedding_neardup_pairs": S06_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# s28: binary (1-bit) quantized search with exact re-score — STAGED
-# FOR ROUND-14 DECLARATION (gated on staged_ops_live(13)). Completes
+# s28: binary (1-bit) quantized search with exact re-score. Completes
 # the quantization ladder s14 (int8 SQ) → s10/s11 (8-byte PQ) → here
 # 8 BYTES TOTAL per vector: the sign bit of each of the 64 dims,
 # packed into two 32-bit words. Distance = Hamming via XOR+popcount —
@@ -3956,8 +3911,7 @@ ORDER BY s.query_id, s.nn_rank
 
 
 # --------------------------------------------------------------------------
-# s29: binary-vs-float recall — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). s28 buys a 32× scan-cost reduction
+# s29: binary-vs-float recall. s28 buys a 32× scan-cost reduction
 # by keeping only sign bits; this op declares what that costs in
 # QUALITY: per query, how many of the exact float top-5 (s01) survive
 # into the 1-bit Hamming top-10 (s28) — the recall@10 curve point
@@ -4018,8 +3972,7 @@ ORDER BY b.query_id
 
 
 # --------------------------------------------------------------------------
-# s30: quantization-ladder error budget — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). The suite deploys three
+# s30: quantization-ladder error budget. The suite deploys three
 # compression tiers — SQ8 (s14, 1 byte/dim), PQ (s10/s11), and 1-bit
 # sign codes (s28) — and each declares recall in isolation; this op
 # is the unified ERROR table an index designer reads: on the SAME
@@ -4143,8 +4096,7 @@ ORDER BY query_id, nn_rank
 
 
 # --------------------------------------------------------------------------
-# s31: IVF list-balance audit — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). IVF probe cost is per-LIST, so an
+# s31: IVF list-balance audit. IVF probe cost is per-LIST, so an
 # imbalanced assignment silently breaks the nprobe math: a hot list
 # holding 10× its share makes every probe touching it 10× the
 # budget, and s20's operating curve is computed assuming near-equal
@@ -4205,8 +4157,7 @@ ORDER BY centroid_id
 
 
 # --------------------------------------------------------------------------
-# s32: binary re-rank window sweep — STAGED FOR ROUND-17 DECLARATION
-# (gated on staged_ops_live(16)). s29 scores ONE re-rank window
+# s32: binary re-rank window sweep. s29 scores ONE re-rank window
 # (Hamming top-10); the deployment decision is the CURVE: how much
 # exact-top-5 recall does each candidate-window size buy? One ranked
 # Hamming relation serves every window (the a10/d22 nested-prefix
@@ -4322,8 +4273,7 @@ S32_SQL = _s32_sql()
 
 
 # --------------------------------------------------------------------------
-# s33: mutual-kNN via the NN-descent build + recall/precision row —
-# STAGED FOR ROUND-17 DECLARATION (gated on staged_ops_live(16)).
+# s33: mutual-kNN via the NN-descent build + recall/precision row.
 # The r08 verdict's one perf-weak: s25 declares mutual-kNN pairs off
 # the EXACT _knn_directed build (O(n²) FLOPs — kept deliberately,
 # because s25's oracle pins the relation edge-for-edge in SQL). This
@@ -4423,83 +4373,74 @@ WHERE k1.src < k1.dst
 """
 
 
-# Staged during round 6 (window at capacity); auto-declared from round 7
-# by __spark_entry__._collect, which evaluates staging.staged_ops_live
-# lazily per queries()/oracle_sql() call (not at import).
-STAGED_QUERIES = {
-    6: {
-        "s13_radius_search": s13_radius_search,
-        "s14_int8_quantized_search": s14_int8_quantized_search,
-    },
-    7: {
-        "s15_rrf_fusion": s15_rrf_fusion,
-        "s16_graph_ann_recall": s16_graph_ann_recall,
-    },
-    8: {
-        "s17_kmeans_refine": s17_kmeans_refine,
-        "s18_mmr_rerank": s18_mmr_rerank,
-        "s19_pagerank": s19_pagerank,
-    },
-    9: {"s20_ivf_operating_curve": s20_ivf_operating_curve},
-    10: {
-        "s21_hard_negative_mining": s21_hard_negative_mining,
-        "s22_label_centroid_similarity": s22_label_centroid_similarity,
-        # pulled forward from gate 16 (VERDICT r09 #3): the declared
-        # retirement of s25's quadratic-FLOPs weak should not wait ~7
-        # rounds for a driver row; v18 (API-surface) moved back in trade
-        "s33_mutual_knn_nnd_recall": s33_mutual_knn_nnd_recall,
-    },
-    11: {
-        "s23_beam_width_curve": s23_beam_width_curve,
-        "s24_topical_source_mix": s24_topical_source_mix,
-        "s25_mutual_knn_pairs": s25_mutual_knn_pairs,
-    },
-    12: {
-        "s26_label_retrieval_eval": s26_label_retrieval_eval,
-        "s27_ivfpq_search": s27_ivfpq_search,
-    },
-    13: {
-        "s28_binary_hamming_search": s28_binary_hamming_search,
-        "s29_binary_recall_eval": s29_binary_recall_eval,
-    },
-    14: {"s30_quantization_error_budget": s30_quantization_error_budget},
-    15: {"s31_ivf_list_balance": s31_ivf_list_balance},
-    16: {"s32_rerank_window_curve": s32_rerank_window_curve},
+QUERIES = {
+    "s01_cosine_topk": s01_cosine_topk,
+    "s02_top_similar_pairs": s02_top_similar_pairs,
+    "s03_lsh_buckets": s03_lsh_buckets,
+    "s04_ivf_assign": s04_ivf_assign,
+    "s05_embedding_label_stats": s05_embedding_label_stats,
+    "s06_embedding_neardup_pairs": s06_embedding_neardup_pairs,
+    "s07_ivf_probe_search": s07_ivf_probe_search,
+    "s08_ann_recall": s08_ann_recall,
+    "s09_semantic_dedup": s09_semantic_dedup,
+    "s10_pq_encode": s10_pq_encode,
+    "s11_pq_adc_search": s11_pq_adc_search,
+    "s12_bm25_topk": s12_bm25_topk,
+    "s13_radius_search": s13_radius_search,
+    "s14_int8_quantized_search": s14_int8_quantized_search,
+    "s15_rrf_fusion": s15_rrf_fusion,
+    "s16_graph_ann_recall": s16_graph_ann_recall,
+    "s17_kmeans_refine": s17_kmeans_refine,
+    "s18_mmr_rerank": s18_mmr_rerank,
+    "s19_pagerank": s19_pagerank,
+    "s20_ivf_operating_curve": s20_ivf_operating_curve,
+    "s21_hard_negative_mining": s21_hard_negative_mining,
+    "s22_label_centroid_similarity": s22_label_centroid_similarity,
+    "s33_mutual_knn_nnd_recall": s33_mutual_knn_nnd_recall,
+    "s23_beam_width_curve": s23_beam_width_curve,
+    "s24_topical_source_mix": s24_topical_source_mix,
+    "s25_mutual_knn_pairs": s25_mutual_knn_pairs,
+    "s26_label_retrieval_eval": s26_label_retrieval_eval,
+    "s27_ivfpq_search": s27_ivfpq_search,
+    "s28_binary_hamming_search": s28_binary_hamming_search,
+    "s29_binary_recall_eval": s29_binary_recall_eval,
+    "s30_quantization_error_budget": s30_quantization_error_budget,
+    "s31_ivf_list_balance": s31_ivf_list_balance,
+    "s32_rerank_window_curve": s32_rerank_window_curve,
 }
-STAGED_ORACLES = {
-    6: {
-        "s13_radius_search": S13_SQL,
-        "s14_int8_quantized_search": S14_SQL,
-    },
-    7: {
-        "s15_rrf_fusion": S15_SQL,
-        "s16_graph_ann_recall": S16_SQL,
-    },
-    8: {
-        "s17_kmeans_refine": S17_SQL,
-        "s18_mmr_rerank": S18_SQL,
-        "s19_pagerank": S19_SQL,
-    },
-    9: {"s20_ivf_operating_curve": S20_SQL},
-    10: {
-        "s21_hard_negative_mining": S21_SQL,
-        "s22_label_centroid_similarity": S22_SQL,
-        "s33_mutual_knn_nnd_recall": S33_SQL,
-    },
-    11: {
-        "s23_beam_width_curve": S23_SQL,
-        "s24_topical_source_mix": S24_SQL,
-        "s25_mutual_knn_pairs": S25_SQL,
-    },
-    12: {
-        "s26_label_retrieval_eval": S26_SQL,
-        "s27_ivfpq_search": S27_SQL,
-    },
-    13: {
-        "s28_binary_hamming_search": S28_SQL,
-        "s29_binary_recall_eval": S29_SQL,
-    },
-    14: {"s30_quantization_error_budget": S30_SQL},
-    15: {"s31_ivf_list_balance": S31_SQL},
-    16: {"s32_rerank_window_curve": S32_SQL},
+
+ORACLES = {
+    "s01_cosine_topk": S01_SQL,
+    "s02_top_similar_pairs": S02_SQL,
+    "s03_lsh_buckets": S03_SQL,
+    "s04_ivf_assign": S04_SQL,
+    "s05_embedding_label_stats": S05_SQL,
+    "s06_embedding_neardup_pairs": S06_SQL,
+    "s07_ivf_probe_search": S07_SQL,
+    "s08_ann_recall": S08_SQL,
+    "s09_semantic_dedup": S09_SQL,
+    "s10_pq_encode": S10_SQL,
+    "s11_pq_adc_search": S11_SQL,
+    "s12_bm25_topk": S12_SQL,
+    "s13_radius_search": S13_SQL,
+    "s14_int8_quantized_search": S14_SQL,
+    "s15_rrf_fusion": S15_SQL,
+    "s16_graph_ann_recall": S16_SQL,
+    "s17_kmeans_refine": S17_SQL,
+    "s18_mmr_rerank": S18_SQL,
+    "s19_pagerank": S19_SQL,
+    "s20_ivf_operating_curve": S20_SQL,
+    "s21_hard_negative_mining": S21_SQL,
+    "s22_label_centroid_similarity": S22_SQL,
+    "s33_mutual_knn_nnd_recall": S33_SQL,
+    "s23_beam_width_curve": S23_SQL,
+    "s24_topical_source_mix": S24_SQL,
+    "s25_mutual_knn_pairs": S25_SQL,
+    "s26_label_retrieval_eval": S26_SQL,
+    "s27_ivfpq_search": S27_SQL,
+    "s28_binary_hamming_search": S28_SQL,
+    "s29_binary_recall_eval": S29_SQL,
+    "s30_quantization_error_budget": S30_SQL,
+    "s31_ivf_list_balance": S31_SQL,
+    "s32_rerank_window_curve": S32_SQL,
 }

@@ -411,10 +411,8 @@ ORDER BY s.m
 
 
 # --------------------------------------------------------------------------
-# v08: SQL-language scalar UDF — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_v08_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# v08: SQL-language scalar UDF (oracle-parity-tested in
+# test_round6_ops.py::test_v08_matches_duckdb_oracle).
 #
 # Spark 4's `CREATE FUNCTION ... RETURN <expr>` (SQL UDFs,
 # SPARK-46087): the function body is INLINED into the plan by the
@@ -468,10 +466,8 @@ ORDER BY l_returnflag, band
 
 
 # --------------------------------------------------------------------------
-# v09: SQL TABLE function + LATERAL correlation — STAGED FOR ROUND-7
-# DECLARATION (oracle-parity-tested in test_round6_ops.py::
-# test_v09_matches_duckdb_oracle; held out of QUERIES while the
-# driver's 50-entry window is full — COVERAGE.md "Staged for round 7").
+# v09: SQL TABLE function + LATERAL correlation (oracle-parity-tested in
+# test_round6_ops.py::test_v09_matches_duckdb_oracle).
 #
 # Spark 4's `CREATE FUNCTION ... RETURNS TABLE` (SQL UDTF): a
 # parameterized relation the analyzer inlines per call site, here
@@ -523,10 +519,8 @@ ORDER BY priority, rnk
 
 
 # --------------------------------------------------------------------------
-# v10: SQL PIPE syntax — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_v10_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# v10: SQL PIPE syntax (oracle-parity-tested in
+# test_round6_ops.py::test_v10_matches_duckdb_oracle).
 #
 # Spark 4's pipe operator syntax (SPARK-49555, `|>`): linear
 # FROM → WHERE → EXTEND → AGGREGATE … GROUP BY → ORDER BY chains that
@@ -564,35 +558,9 @@ ORDER BY lang, source
 """
 
 
-QUERIES = {
-    "v01_sql_big_spenders": v01_sql_big_spenders,
-    "v02_sql_correlated_subquery": v02_sql_correlated_subquery,
-    "v03_sentence_udtf": v03_sentence_udtf,
-    "v04_grouping_sets": v04_grouping_sets,
-    "v05_sql_pivot": v05_sql_pivot,
-    "v06_sql_lateral_explode": v06_sql_lateral_explode,
-    "v07_recursive_month_spine": v07_recursive_month_spine,
-    "u05_arrow_udtf_chunks": u05_arrow_udtf_chunks,
-}
-
-ORACLES = {
-    "u05_arrow_udtf_chunks": U05_SQL,
-    "v07_recursive_month_spine": V07_SQL,
-    "v05_sql_pivot": V05_SQL,
-    "v06_sql_lateral_explode": V06_SQL,
-    "v04_grouping_sets": V04_SQL,
-    "v01_sql_big_spenders": V01_SQL,
-    "v02_sql_correlated_subquery": V02_SQL,
-    "v03_sentence_udtf": V03_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# v11: parameterized SQL + IDENTIFIER clause — STAGED FOR ROUND-7
-# DECLARATION (oracle-parity-tested in test_round6_ops.py::
-# test_v11_matches_duckdb_oracle; held out of QUERIES because the
-# driver's 50-entry window is at capacity — COVERAGE.md "Staged for
-# round 7").
+# v11: parameterized SQL + IDENTIFIER clause (oracle-parity-tested in
+# test_round6_ops.py::test_v11_matches_duckdb_oracle).
 #
 # Spark's named-parameter binding (`spark.sql(text, args={...})`,
 # SPARK-41271) + the IDENTIFIER clause (SPARK-43205): values bind as
@@ -637,9 +605,8 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# v12: GROUP BY ALL / ORDER BY ALL — STAGED FOR ROUND-8 DECLARATION
-# (gated on staged_ops_live(7); oracle-parity-tested in
-# test_round6_ops.py::test_v12_matches_duckdb_oracle now).
+# v12: GROUP BY ALL / ORDER BY ALL (oracle-parity-tested in
+# test_round6_ops.py::test_v12_matches_duckdb_oracle).
 #
 # The analyst-ergonomics syntax (SPARK-41440): grouping keys inferred
 # as every non-aggregate select item, ordering as the full select
@@ -673,8 +640,7 @@ ORDER BY lang, source, n_docs, total_chars
 
 
 # --------------------------------------------------------------------------
-# v13: SQL scripting (Spark 4, SPARK-48338) — STAGED FOR ROUND-9
-# DECLARATION (gated on staged_ops_live(8); oracle-parity-tested in
+# v13: SQL scripting (Spark 4, SPARK-48338) (oracle-parity-tested in
 # test_round7_ops.py::test_v13_matches_duckdb_oracle).
 #
 # BEGIN…END procedural SQL: DECLARE a variable, WHILE-loop doubling a
@@ -722,8 +688,7 @@ ORDER BY thr LIMIT 1
 
 
 # --------------------------------------------------------------------------
-# v14: pandas API on Spark (pyspark.pandas) — STAGED FOR ROUND-9
-# DECLARATION (gated on staged_ops_live(8); oracle-parity-tested in
+# v14: pandas API on Spark (pyspark.pandas) (oracle-parity-tested in
 # test_round7_ops.py::test_v14_matches_duckdb_oracle).
 #
 # The engine's THIRD front door beside the DataFrame DSL and
@@ -775,9 +740,9 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# v15: SQL session variables (DECLARE VARIABLE / SET VAR) — STAGED FOR
-# ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_v15_matches_duckdb_oracle).
+# v15: SQL session variables (DECLARE VARIABLE / SET VAR)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_v15_matches_duckdb_oracle).
 #
 # The session-state surface scripting (v13) builds on, usable from
 # plain multi-statement SQL: DECLARE a typed variable, SET it from a
@@ -820,9 +785,9 @@ ORDER BY o_orderpriority
 
 
 # --------------------------------------------------------------------------
-# v16: POLYMORPHIC Python UDTF (static analyze, SPARK-44503) — STAGED
-# FOR ROUND-9 DECLARATION (gated on staged_ops_live(8); oracle-parity-
-# tested in test_round7_ops.py::test_v16_matches_duckdb_oracle).
+# v16: POLYMORPHIC Python UDTF (static analyze, SPARK-44503)
+# (oracle-parity-tested in
+# test_round7_ops.py::test_v16_matches_duckdb_oracle).
 #
 # u05 covers the fixed-schema Arrow UDTF; this covers the half the
 # API adds on top: `analyze()` computes the OUTPUT SCHEMA from the
@@ -884,8 +849,7 @@ LIMIT 20
 
 
 # --------------------------------------------------------------------------
-# v17: UDTF with a TABLE argument (SPARK-44233) — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# v17: UDTF with a TABLE argument (SPARK-44233) (oracle-parity-tested in
 # test_round7_ops.py::test_v17_matches_duckdb_oracle).
 #
 # The table-valued INPUT half of the UDTF surface (v03/u05/v16 cover
@@ -960,8 +924,7 @@ ORDER BY d.source
 
 
 # --------------------------------------------------------------------------
-# v18: ANSI three-valued-logic battery — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10)). One shared SQL text both
+# v18: ANSI three-valued-logic battery. One shared SQL text both
 # engines run verbatim, pinning the NULL semantics that silently
 # corrupt pipelines when an engine (or a hand-rolled operator)
 # deviates: NOT IN against a set CONTAINING NULL matches nothing
@@ -1012,8 +975,7 @@ V18_SQL = _V18_SQL
 
 
 # --------------------------------------------------------------------------
-# v19: error-safe `try_*` functions — STAGED FOR ROUND-13 DECLARATION
-# (gated on staged_ops_live(12)). Under ANSI mode (the Spark 4
+# v19: error-safe `try_*` functions. Under ANSI mode (the Spark 4
 # default) arithmetic overflow, bad casts, division by zero, and
 # out-of-bounds element access THROW — correct for catching bugs,
 # fatal for a 100 TB batch job where one malformed row otherwise
@@ -1071,12 +1033,8 @@ FROM orders
 """
 
 
-# Staged during round 6 (window at capacity); auto-declared from round 7.
-# Staged while the declaring round's window was at capacity; auto-
-# declared the round after by __spark_entry__._collect (lazy gate).
 # --------------------------------------------------------------------------
-# v21: observe() / Observation metrics — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). The API every
+# v21: observe() / Observation metrics. The API every
 # production pipeline needs and almost nobody declares: named metrics
 # accumulated DURING a real pass (df.observe(Observation, aggs...)) —
 # row counts, value masses, null tallies — collected at zero extra
@@ -1144,8 +1102,7 @@ FROM events
 
 
 # --------------------------------------------------------------------------
-# v23: explicit NULL-ordering battery — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). The silent portability
+# v23: explicit NULL-ordering battery. The silent portability
 # trap in every ORDER BY: engines DISAGREE on default null placement
 # (Spark sorts NULLs FIRST ascending, DuckDB LAST), so any ranking
 # over a nullable key is engine-dependent unless NULLS FIRST/LAST is
@@ -1188,8 +1145,7 @@ V23_SQL = _V23_TEXT
 
 
 # --------------------------------------------------------------------------
-# v22: argmax/conditional aggregate battery — STAGED FOR ROUND-16
-# DECLARATION (gated on staged_ops_live(15)). The modern aggregate
+# v22: argmax/conditional aggregate battery. The modern aggregate
 # family the classic suite never touches: count_if (predicate count
 # without CASE), bool_and/bool_or (universal/existential per group),
 # and max_by/min_by (argmax/argmin — "the event type of the user's
@@ -1225,9 +1181,8 @@ V22_SQL = _V22_TEXT
 
 
 # --------------------------------------------------------------------------
-# v20: bag-semantics set operations — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). q14 covers DISTINCT set ops; the ALL
-# variants are a different operator family with different physical
+# v20: bag-semantics set operations. q14 covers DISTINCT set ops; the
+# ALL variants are a different operator family with different physical
 # plans (INTERSECT ALL / EXCEPT ALL keep multiplicities — Spark lowers
 # them to count-matching aggregations, not joins) and they are what
 # data-reconciliation actually needs: "how many rows of batch A
@@ -1263,8 +1218,7 @@ V20_SQL = _V20_TEXT
 
 
 # --------------------------------------------------------------------------
-# v24: SQL UNPIVOT clause — STAGED FOR ROUND-17 DECLARATION (gated on
-# staged_ops_live(16)). q34 melts with the DataFrame `unpivot()` API;
+# v24: SQL UNPIVOT clause. q34 melts with the DataFrame `unpivot()` API;
 # the SQL-text spelling is its own surface: Spark's relational
 # UNPIVOT clause (SPARK-39877), exercised here in its FULL form —
 # MULTI-measure ((n_orders, cents) per status) with aliased source
@@ -1327,55 +1281,58 @@ ORDER BY o_orderpriority, status
 )
 
 
-STAGED_QUERIES = {
-    6: {
-        "v08_sql_scalar_udf": v08_sql_scalar_udf,
-        "v09_sql_table_function": v09_sql_table_function,
-        "v10_pipe_syntax": v10_pipe_syntax,
-        "v11_parameterized_sql": v11_parameterized_sql,
-    },
-    7: {"v12_group_by_all": v12_group_by_all},
-    8: {
-        "v13_sql_scripting": v13_sql_scripting,
-        "v14_pandas_api": v14_pandas_api,
-        "v15_sql_variables": v15_sql_variables,
-        "v16_polymorphic_udtf": v16_polymorphic_udtf,
-    },
-    9: {"v17_udtf_table_argument": v17_udtf_table_argument},
-    # moved back from gate 10 in the s33/d32 pull-forward trade
-    # (VERDICT r09 #3): API-surface demo, can wait
-    12: {"v19_try_functions": v19_try_functions},
-    13: {"v20_bag_set_ops": v20_bag_set_ops},
-    14: {"v21_observe_metrics": v21_observe_metrics},
-    15: {"v22_aggregate_battery": v22_aggregate_battery},
-    16: {
-        "v18_null_semantics": v18_null_semantics,
-        "v23_null_ordering": v23_null_ordering,
-        "v24_sql_unpivot": v24_sql_unpivot,
-    },
+QUERIES = {
+    "v01_sql_big_spenders": v01_sql_big_spenders,
+    "v02_sql_correlated_subquery": v02_sql_correlated_subquery,
+    "v03_sentence_udtf": v03_sentence_udtf,
+    "v04_grouping_sets": v04_grouping_sets,
+    "v05_sql_pivot": v05_sql_pivot,
+    "v06_sql_lateral_explode": v06_sql_lateral_explode,
+    "v07_recursive_month_spine": v07_recursive_month_spine,
+    "u05_arrow_udtf_chunks": u05_arrow_udtf_chunks,
+    "v08_sql_scalar_udf": v08_sql_scalar_udf,
+    "v09_sql_table_function": v09_sql_table_function,
+    "v10_pipe_syntax": v10_pipe_syntax,
+    "v11_parameterized_sql": v11_parameterized_sql,
+    "v12_group_by_all": v12_group_by_all,
+    "v13_sql_scripting": v13_sql_scripting,
+    "v14_pandas_api": v14_pandas_api,
+    "v15_sql_variables": v15_sql_variables,
+    "v16_polymorphic_udtf": v16_polymorphic_udtf,
+    "v17_udtf_table_argument": v17_udtf_table_argument,
+    "v19_try_functions": v19_try_functions,
+    "v20_bag_set_ops": v20_bag_set_ops,
+    "v21_observe_metrics": v21_observe_metrics,
+    "v22_aggregate_battery": v22_aggregate_battery,
+    "v18_null_semantics": v18_null_semantics,
+    "v23_null_ordering": v23_null_ordering,
+    "v24_sql_unpivot": v24_sql_unpivot,
 }
-STAGED_ORACLES = {
-    6: {
-        "v08_sql_scalar_udf": V08_SQL,
-        "v09_sql_table_function": V09_SQL,
-        "v10_pipe_syntax": V10_SQL,
-        "v11_parameterized_sql": V11_SQL,
-    },
-    7: {"v12_group_by_all": V12_SQL},
-    8: {
-        "v13_sql_scripting": V13_SQL,
-        "v14_pandas_api": V14_SQL,
-        "v15_sql_variables": V15_SQL,
-        "v16_polymorphic_udtf": V16_SQL,
-    },
-    9: {"v17_udtf_table_argument": V17_SQL},
-    12: {"v19_try_functions": V19_SQL},
-    13: {"v20_bag_set_ops": V20_SQL},
-    14: {"v21_observe_metrics": V21_SQL},
-    15: {"v22_aggregate_battery": V22_SQL},
-    16: {
-        "v18_null_semantics": V18_SQL,
-        "v23_null_ordering": V23_SQL,
-        "v24_sql_unpivot": V24_SQL,
-    },
+
+ORACLES = {
+    "v01_sql_big_spenders": V01_SQL,
+    "v02_sql_correlated_subquery": V02_SQL,
+    "v03_sentence_udtf": V03_SQL,
+    "v04_grouping_sets": V04_SQL,
+    "v05_sql_pivot": V05_SQL,
+    "v06_sql_lateral_explode": V06_SQL,
+    "v07_recursive_month_spine": V07_SQL,
+    "u05_arrow_udtf_chunks": U05_SQL,
+    "v08_sql_scalar_udf": V08_SQL,
+    "v09_sql_table_function": V09_SQL,
+    "v10_pipe_syntax": V10_SQL,
+    "v11_parameterized_sql": V11_SQL,
+    "v12_group_by_all": V12_SQL,
+    "v13_sql_scripting": V13_SQL,
+    "v14_pandas_api": V14_SQL,
+    "v15_sql_variables": V15_SQL,
+    "v16_polymorphic_udtf": V16_SQL,
+    "v17_udtf_table_argument": V17_SQL,
+    "v19_try_functions": V19_SQL,
+    "v20_bag_set_ops": V20_SQL,
+    "v21_observe_metrics": V21_SQL,
+    "v22_aggregate_battery": V22_SQL,
+    "v18_null_semantics": V18_SQL,
+    "v23_null_ordering": V23_SQL,
+    "v24_sql_unpivot": V24_SQL,
 }

@@ -1990,12 +1990,8 @@ ORDER BY doc_id, chunk_idx
 
 
 # --------------------------------------------------------------------------
-# t33: readability / curriculum-difficulty scoring — STAGED FOR ROUND-7
-# DECLARATION (implemented, oracle-parity-tested in
-# test_round6_ops.py::test_t33_matches_duckdb_oracle; kept out of
-# QUERIES this round only because the driver's 50-entry verification
-# window is at capacity and adding it would push the e09–e13 rotation
-# re-checks out — see COVERAGE.md "Staged for round 7").
+# t33: readability / curriculum-difficulty scoring (oracle-parity-tested
+# in test_round6_ops.py::test_t33_matches_duckdb_oracle).
 #
 # Flesch-reading-ease with a deterministic vowel-group syllable
 # heuristic — the curriculum-ordering signal (easy→hard schedules) and
@@ -2059,10 +2055,8 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# t34: BPE merge-pair counting — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_t34_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity this round — COVERAGE.md "Staged for round 7").
+# t34: BPE merge-pair counting (oracle-parity-tested in
+# test_round6_ops.py::test_t34_matches_duckdb_oracle).
 #
 # The first iteration of byte-pair-encoding tokenizer training: count
 # adjacent symbol pairs across the corpus and surface the top merge
@@ -2306,11 +2300,9 @@ def bpe_encode_counts(
 
 
 # --------------------------------------------------------------------------
-# t35: deterministic global shuffle + shard assignment — STAGED FOR
-# ROUND-7 DECLARATION (oracle-parity-tested in test_round6_ops.py::
-# test_t35_matches_duckdb_oracle; held out of QUERIES because the
-# driver's 50-entry window is at capacity — COVERAGE.md "Staged for
-# round 7").
+# t35: deterministic global shuffle + shard assignment
+# (oracle-parity-tested in
+# test_round6_ops.py::test_t35_matches_duckdb_oracle).
 #
 # The pre-training data-order step: give every document a seeded
 # pseudo-random position so training sees a reproducible global
@@ -2429,84 +2421,9 @@ ORDER BY c.doc_id
 """
 
 
-QUERIES = {
-    "t01_token_freq_top10": t01_token_freq_top10,
-    "t02_doc_token_stats": t02_doc_token_stats,
-    "t03_term_document_frequency": t03_term_document_frequency,
-    "t04_tfidf_top_terms": t04_tfidf_top_terms,
-    "t05_document_summary": t05_document_summary,
-    "t06_summary_metrics": t06_summary_metrics,
-    "t07_language_id": t07_language_id,
-    "t08_quality_score": t08_quality_score,
-    "t09_token_counts": t09_token_counts,
-    "t10_fingerprint": t10_fingerprint,
-    "t11_fallback_tags": t11_fallback_tags,
-    "t12_summary_word_freq": t12_summary_word_freq,
-    "t13_hash_sample": t13_hash_sample,
-    "t14_rolling_hash": t14_rolling_hash,
-    "t15_fallback_summary": t15_fallback_summary,
-    "t16_stratified_sample": t16_stratified_sample,
-    "t17_count_min_sketch": t17_count_min_sketch,
-    "t18_repeated_ngram_ratio": t18_repeated_ngram_ratio,
-    "t19_bigram_lm_topk": t19_bigram_lm_topk,
-    "t20_quality_filter": t20_quality_filter,
-    "t21_pii_redaction": t21_pii_redaction,
-    "t22_boilerplate_prune": t22_boilerplate_prune,
-    "t23_zipf_slope": t23_zipf_slope,
-    "t24_length_histogram": t24_length_histogram,
-    "t25_source_kl_drift": t25_source_kl_drift,
-    "t26_mixture_weights": t26_mixture_weights,
-    "t27_unigram_entropy": t27_unigram_entropy,
-    "t28_repetition_filter": t28_repetition_filter,
-    "t29_sequence_packing": t29_sequence_packing,
-    "t30_lm_novelty_score": t30_lm_novelty_score,
-    "t31_dsir_importance": t31_dsir_importance,
-    "t32_rag_chunking": t32_rag_chunking,
-    "t38_bpe_encode": t38_bpe_encode,
-}
-
-ORACLES = {
-    "t38_bpe_encode": T38_SQL,
-    "t31_dsir_importance": T31_SQL,
-    "t32_rag_chunking": T32_SQL,
-    "t22_boilerplate_prune": T22_SQL,
-    "t30_lm_novelty_score": T30_SQL,
-    "t28_repetition_filter": T28_SQL,
-    "t29_sequence_packing": T29_SQL,
-    "t26_mixture_weights": T26_SQL,
-    "t27_unigram_entropy": T27_SQL,
-    "t25_source_kl_drift": T25_SQL,
-    "t21_pii_redaction": T21_SQL,
-    "t23_zipf_slope": T23_SQL,
-    "t24_length_histogram": T24_SQL,
-    "t17_count_min_sketch": T17_SQL,
-    "t18_repeated_ngram_ratio": T18_SQL,
-    "t19_bigram_lm_topk": T19_SQL,
-    "t20_quality_filter": T20_SQL,
-    "t16_stratified_sample": T16_SQL,
-    "t15_fallback_summary": T15_SQL,
-    "t14_rolling_hash": T14_SQL,
-    "t11_fallback_tags": T11_SQL,
-    "t12_summary_word_freq": T12_SQL,
-    "t13_hash_sample": T13_SQL,
-    "t01_token_freq_top10": T01_SQL,
-    "t02_doc_token_stats": T02_SQL,
-    "t03_term_document_frequency": T03_SQL,
-    "t04_tfidf_top_terms": T04_SQL,
-    "t05_document_summary": T05_SQL,
-    "t06_summary_metrics": T06_SQL,
-    "t07_language_id": T07_SQL,
-    "t08_quality_score": T08_SQL,
-    "t09_token_counts": T09_SQL,
-    "t10_fingerprint": T10_SQL,
-}
-
-
 # --------------------------------------------------------------------------
-# t36: corpus-wide sentence dedup — STAGED FOR ROUND-7 DECLARATION
-# (oracle-parity-tested in test_round6_ops.py::test_t36_matches_duckdb_
-# oracle; held out of QUERIES because the driver's 50-entry window is
-# at capacity — COVERAGE.md "Staged for round 7").
+# t36: corpus-wide sentence dedup (oracle-parity-tested in
+# test_round6_ops.py::test_t36_matches_duckdb_oracle).
 #
 # The C4 curation step d11's WITHIN-doc span dedup does not cover:
 # remove every repeat of a sentence ACROSS the whole corpus, keeping
@@ -2575,10 +2492,8 @@ ORDER BY doc_id
 
 
 # --------------------------------------------------------------------------
-# t37: vocabulary coverage / OOV rate — STAGED FOR ROUND-8 DECLARATION
-# (gated on staged_ops_live(7); oracle-parity-tested in
-# test_round6_ops.py::test_t37_matches_duckdb_oracle now, so the later
-# declaration is automatic).
+# t37: vocabulary coverage / OOV rate (oracle-parity-tested in
+# test_round6_ops.py::test_t37_matches_duckdb_oracle).
 #
 # The tokenizer-coverage diagnostic: fix the top-V corpus vocabulary
 # (frequency-desc, token-asc tie-break — a deterministic stand-in for
@@ -2646,12 +2561,8 @@ ORDER BY n.doc_id
 """
 
 
-# Staged during round 6 (window at capacity); auto-declared from round 7.
-# Staged while the declaring round's window was at capacity; auto-
-# declared the round after by __spark_entry__._collect (lazy gate).
 # --------------------------------------------------------------------------
-# t39: PMI-ranked collocations — STAGED FOR ROUND-10 DECLARATION
-# (gated on staged_ops_live(9); oracle-parity-tested in
+# t39: PMI-ranked collocations (oracle-parity-tested in
 # test_round7_ops.py::test_t39_matches_duckdb_oracle).
 #
 # The association measure BPE's raw pair frequency (t34) is blind to:
@@ -2756,8 +2667,7 @@ LIMIT {_T39_TOP}
 
 
 # --------------------------------------------------------------------------
-# t41: Heaps-law vocabulary growth curve — STAGED FOR ROUND-10
-# DECLARATION (gated on staged_ops_live(9); oracle-parity-tested in
+# t41: Heaps-law vocabulary growth curve (oracle-parity-tested in
 # test_round7_ops.py::test_t41_matches_duckdb_oracle).
 #
 # The vocabulary-sizing diagnostic beside t23's Zipf slope: distinct
@@ -2851,9 +2761,8 @@ ORDER BY pct
 
 
 # --------------------------------------------------------------------------
-# t40: distributed OLS via sufficient statistics — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10); oracle-parity-tested in
-# test_round8_ops.py::test_t40_matches_duckdb_oracle).
+# t40: distributed OLS via sufficient statistics (oracle-parity-tested
+# in test_round8_ops.py::test_t40_matches_duckdb_oracle).
 #
 # The trainable-quality-model primitive (fasttext-style filters,
 # perplexity regressors): fit y = b0 + b1*x1 + b2*x2 by least squares
@@ -2972,8 +2881,7 @@ stats AS (SELECT {_T40_STATS_SQL} FROM feats)
 
 
 # --------------------------------------------------------------------------
-# t42: bigram-LM surprisal flags — STAGED FOR ROUND-11 DECLARATION
-# (gated on staged_ops_live(10); oracle-parity-tested in
+# t42: bigram-LM surprisal flags (oracle-parity-tested in
 # test_round8_ops.py::test_t42_matches_duckdb_oracle).
 #
 # Language-model-based quality filtering (the CCNet/Gopher "perplexity
@@ -3085,8 +2993,7 @@ LIMIT {_T42_TOP}
 
 
 # --------------------------------------------------------------------------
-# t44: source temperature-sampling weights — STAGED FOR ROUND-11
-# DECLARATION (gated on staged_ops_live(10); oracle-parity-tested in
+# t44: source temperature-sampling weights (oracle-parity-tested in
 # test_round8_ops.py::test_t44_matches_duckdb_oracle).
 #
 # The multilingual/multi-source mixing rule (mT5/XLM-R style): sample
@@ -3149,8 +3056,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t43: quality-score batch inference — STAGED FOR ROUND-11 DECLARATION
-# (gated on staged_ops_live(10); oracle-parity-tested in
+# t43: quality-score batch inference (oracle-parity-tested in
 # test_round8_ops.py::test_t43_matches_duckdb_oracle). The deploy half
 # of t40's train half: re-derive the OLS model from the same one-pass
 # sufficient statistics, broadcast the 1-row UNROUNDED coefficient
@@ -3227,8 +3133,7 @@ coef AS (SELECT b0, b1, b2 FROM ({_T40_COEF_SQL.format(stats="stats").strip()}) 
 
 
 # --------------------------------------------------------------------------
-# t45: token-budget water-filling — STAGED FOR ROUND-11 DECLARATION
-# (gated on staged_ops_live(10)). The data-constrained-scaling plan
+# t45: token-budget water-filling. The data-constrained-scaling plan
 # (Muennighoff et al. 2023: repeating data up to ~4 epochs is nearly
 # as good as fresh): allocate a global training-token budget across
 # sources, each source capped at 4 epochs of its own tokens, the
@@ -3316,8 +3221,7 @@ T45_SQL = _T45_ALLOC_SQL.format(
 
 
 # --------------------------------------------------------------------------
-# t46: quality-threshold operating curve — STAGED FOR ROUND-12
-# DECLARATION (gated on staged_ops_live(11)). The calibration step
+# t46: quality-threshold operating curve. The calibration step
 # before deploying t08/t20's quality filter at 100 TB: for each
 # candidate threshold, how many documents and how many tokens survive.
 # d19 answers this for shingle-k, s20 for IVF nprobe — this completes
@@ -3413,8 +3317,7 @@ ORDER BY threshold
 
 
 # --------------------------------------------------------------------------
-# t47: span-corruption plan — STAGED FOR ROUND-12 DECLARATION (gated
-# on staged_ops_live(11)). The denoising-objective prep step (T5/UL2
+# t47: span-corruption plan. The denoising-objective prep step (T5/UL2
 # span corruption): decide which token positions to mask and how many
 # contiguous corruption spans each document yields. Masking is
 # DETERMINISTIC — position i of doc d is masked iff
@@ -3518,8 +3421,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t48: packing-efficiency curve — STAGED FOR ROUND-12 DECLARATION
-# (gated on staged_ops_live(11)). The context-length sizing decision
+# t48: packing-efficiency curve. The context-length sizing decision
 # t29 feeds: under concat-and-chunk packing (GPT-style), what does
 # each candidate sequence length cost per source in pad waste (the
 # final partial pack) and in documents split across a pack boundary
@@ -3611,8 +3513,7 @@ ORDER BY source, seq_len
 
 
 # --------------------------------------------------------------------------
-# t49: n-gram coverage curve — STAGED FOR ROUND-12 DECLARATION (gated
-# on staged_ops_live(11)). The vocabulary-size sizing tool: what
+# t49: n-gram coverage curve. The vocabulary-size sizing tool: what
 # fraction of the corpus's token-pair mass do the top-K bigram types
 # cover? Zipfian mass concentrates hard (t23 measures the slope;
 # this measures the consequence), and the K knee is what decides
@@ -3723,8 +3624,7 @@ ORDER BY cutoff_k
 
 
 # --------------------------------------------------------------------------
-# t50: length-bucketed dynamic batching — STAGED FOR ROUND-13
-# DECLARATION (gated on staged_ops_live(12)). The OTHER batching
+# t50: length-bucketed dynamic batching. The OTHER batching
 # discipline next to t48's concat-and-chunk: keep documents intact,
 # group them into power-of-two length buckets, and pad only to the
 # bucket length (dynamic/bucketed batching — the standard shape for
@@ -3796,8 +3696,7 @@ ORDER BY bucket_len
 
 
 # --------------------------------------------------------------------------
-# t51: tokenizer-fertility corpus profile — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). Tokenizer evaluation's
+# t51: tokenizer-fertility corpus profile. Tokenizer evaluation's
 # first table: per source, the exact byte / character / whitespace-
 # token masses and the fertility ratios derived from them
 # (bytes-per-token is the standard cross-tokenizer compression
@@ -3872,9 +3771,8 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t52: language-ID confusion matrix — STAGED FOR ROUND-14 DECLARATION
-# (gated on staged_ops_live(13)). t07 predicts a language per document
-# against the labeled `lang` column; this is the evaluation that makes
+# t52: language-ID confusion matrix. t07 predicts a language per
+# document against the labeled `lang` column; this is the evaluation that makes
 # the classifier actionable: the (labeled, predicted) confusion matrix
 # with per-cell counts and a per-labeled-language row total, the table
 # a curation pipeline reads before trusting lang-ID as a filter. All
@@ -3918,8 +3816,7 @@ ORDER BY labeled_lang, pred_lang
 
 
 # --------------------------------------------------------------------------
-# t53: token-mass Gini coefficient per source — STAGED FOR ROUND-14
-# DECLARATION (gated on staged_ops_live(13)). t24 histograms lengths
+# t53: token-mass Gini coefficient per source. t24 histograms lengths
 # and t51 reports the means; the curation decision ("is this source's
 # token mass concentrated in a few megadocs?") needs the inequality
 # SCALAR: the Gini coefficient of per-document token counts,
@@ -3987,8 +3884,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t54: cross-document duplicate 5-gram fraction — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). t18 measures WITHIN-doc
+# t54: cross-document duplicate 5-gram fraction. t18 measures WITHIN-doc
 # n-gram repetition (the Gopher rep signal); the complementary
 # contamination signal is CROSS-doc: what fraction of a document's
 # 5-gram instances also occur in some OTHER document — high values
@@ -4105,8 +4001,7 @@ ORDER BY source, decile
 
 
 # --------------------------------------------------------------------------
-# t55: character-class composition audit — STAGED FOR ROUND-15
-# DECLARATION (gated on staged_ops_live(14)). t51's all_ascii bit
+# t55: character-class composition audit. t51's all_ascii bit
 # answers "is this source plain ASCII"; the curation follow-up needs
 # the COMPOSITION: per source, the exact character masses by class
 # (lower/upper/digit/whitespace/other) — the table that catches a
@@ -4193,8 +4088,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t56: quality-signal correlation — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). Quality filters stack (t08, t20,
+# t56: quality-signal correlation. Quality filters stack (t08, t20,
 # t43); whether stacking helps depends on whether the signals are
 # CORRELATED — two filters keyed on near-identical signals buy no
 # extra precision. Declared: exact Pearson r between integer-valued
@@ -4301,8 +4195,7 @@ T56_SQL = _t56_sql()
 
 
 # --------------------------------------------------------------------------
-# t57: pattern-flag curation profile — STAGED FOR ROUND-16
-# DECLARATION (gated on staged_ops_live(15)). The boilerplate/
+# t57: pattern-flag curation profile. The boilerplate/
 # provenance flags every web-corpus curation sweep tags before
 # filtering: per source, how many documents carry URLs, copyright
 # marks, email-ish text, or emphatic punctuation runs. Patterns are
@@ -4380,8 +4273,7 @@ T57_SQL = _t57_sql()
 
 
 # --------------------------------------------------------------------------
-# t58: dedup-aware token budget — STAGED FOR ROUND-16 DECLARATION
-# (gated on staged_ops_live(15)). "How many tokens do we have" is the
+# t58: dedup-aware token budget. "How many tokens do we have" is the
 # question every training plan starts from, and the raw sum
 # overstates it: exact duplicates contribute their tokens once.
 # Declared per source: raw token mass, the mass surviving d01's
@@ -4448,8 +4340,7 @@ ORDER BY source
 
 
 # --------------------------------------------------------------------------
-# t59: shared-header boilerplate detection — STAGED FOR ROUND-17
-# DECLARATION (gated on staged_ops_live(16)). t22 finds boilerplate
+# t59: shared-header boilerplate detection. t22 finds boilerplate
 # by segment document-frequency anywhere in the doc; the cheaper,
 # position-aware signal every web pipeline also runs is the HEADER
 # key: documents in one source opening with the SAME first-k tokens
@@ -4546,87 +4437,126 @@ ORDER BY r.source, r.rank
 """
 
 
-STAGED_QUERIES = {
-    6: {
-        "t33_readability_curriculum": t33_readability_curriculum,
-        "t34_bpe_merge_pairs": t34_bpe_merge_pairs,
-        "t35_shuffle_shards": t35_shuffle_shards,
-        "t36_sentence_dedup": t36_sentence_dedup,
-    },
-    7: {"t37_oov_rate": t37_oov_rate},
-    9: {
-        "t39_collocation_pmi": t39_collocation_pmi,
-        "t41_vocab_growth": t41_vocab_growth,
-    },
-    10: {
-        "t40_ols_sufficient_stats": t40_ols_sufficient_stats,
-        "t42_bigram_surprisal": t42_bigram_surprisal,
-        "t43_quality_score_inference": t43_quality_score_inference,
-        "t44_source_temperature_mix": t44_source_temperature_mix,
-        "t45_token_budget_waterfill": t45_token_budget_waterfill,
-    },
-    11: {
-        "t46_quality_threshold_curve": t46_quality_threshold_curve,
-        "t47_span_corruption_plan": t47_span_corruption_plan,
-        "t48_packing_efficiency_curve": t48_packing_efficiency_curve,
-        "t49_ngram_coverage_curve": t49_ngram_coverage_curve,
-    },
-    12: {"t50_length_bucketed_batches": t50_length_bucketed_batches},
-    13: {
-        "t51_token_fertility": t51_token_fertility,
-        "t52_lang_confusion": t52_lang_confusion,
-        "t53_token_gini": t53_token_gini,
-    },
-    14: {
-        "t54_dup_ngram_fraction": t54_dup_ngram_fraction,
-        "t55_char_class_mix": t55_char_class_mix,
-    },
-    15: {
-        "t56_signal_correlation": t56_signal_correlation,
-        "t57_pattern_flag_profile": t57_pattern_flag_profile,
-        "t58_dedup_token_budget": t58_dedup_token_budget,
-    },
-    16: {"t59_shared_header_keys": t59_shared_header_keys},
+QUERIES = {
+    "t01_token_freq_top10": t01_token_freq_top10,
+    "t02_doc_token_stats": t02_doc_token_stats,
+    "t03_term_document_frequency": t03_term_document_frequency,
+    "t04_tfidf_top_terms": t04_tfidf_top_terms,
+    "t05_document_summary": t05_document_summary,
+    "t06_summary_metrics": t06_summary_metrics,
+    "t07_language_id": t07_language_id,
+    "t08_quality_score": t08_quality_score,
+    "t09_token_counts": t09_token_counts,
+    "t10_fingerprint": t10_fingerprint,
+    "t11_fallback_tags": t11_fallback_tags,
+    "t12_summary_word_freq": t12_summary_word_freq,
+    "t13_hash_sample": t13_hash_sample,
+    "t14_rolling_hash": t14_rolling_hash,
+    "t15_fallback_summary": t15_fallback_summary,
+    "t16_stratified_sample": t16_stratified_sample,
+    "t17_count_min_sketch": t17_count_min_sketch,
+    "t18_repeated_ngram_ratio": t18_repeated_ngram_ratio,
+    "t19_bigram_lm_topk": t19_bigram_lm_topk,
+    "t20_quality_filter": t20_quality_filter,
+    "t21_pii_redaction": t21_pii_redaction,
+    "t22_boilerplate_prune": t22_boilerplate_prune,
+    "t23_zipf_slope": t23_zipf_slope,
+    "t24_length_histogram": t24_length_histogram,
+    "t25_source_kl_drift": t25_source_kl_drift,
+    "t26_mixture_weights": t26_mixture_weights,
+    "t27_unigram_entropy": t27_unigram_entropy,
+    "t28_repetition_filter": t28_repetition_filter,
+    "t29_sequence_packing": t29_sequence_packing,
+    "t30_lm_novelty_score": t30_lm_novelty_score,
+    "t31_dsir_importance": t31_dsir_importance,
+    "t32_rag_chunking": t32_rag_chunking,
+    "t38_bpe_encode": t38_bpe_encode,
+    "t33_readability_curriculum": t33_readability_curriculum,
+    "t34_bpe_merge_pairs": t34_bpe_merge_pairs,
+    "t35_shuffle_shards": t35_shuffle_shards,
+    "t36_sentence_dedup": t36_sentence_dedup,
+    "t37_oov_rate": t37_oov_rate,
+    "t39_collocation_pmi": t39_collocation_pmi,
+    "t41_vocab_growth": t41_vocab_growth,
+    "t40_ols_sufficient_stats": t40_ols_sufficient_stats,
+    "t42_bigram_surprisal": t42_bigram_surprisal,
+    "t43_quality_score_inference": t43_quality_score_inference,
+    "t44_source_temperature_mix": t44_source_temperature_mix,
+    "t45_token_budget_waterfill": t45_token_budget_waterfill,
+    "t46_quality_threshold_curve": t46_quality_threshold_curve,
+    "t47_span_corruption_plan": t47_span_corruption_plan,
+    "t48_packing_efficiency_curve": t48_packing_efficiency_curve,
+    "t49_ngram_coverage_curve": t49_ngram_coverage_curve,
+    "t50_length_bucketed_batches": t50_length_bucketed_batches,
+    "t51_token_fertility": t51_token_fertility,
+    "t52_lang_confusion": t52_lang_confusion,
+    "t53_token_gini": t53_token_gini,
+    "t54_dup_ngram_fraction": t54_dup_ngram_fraction,
+    "t55_char_class_mix": t55_char_class_mix,
+    "t56_signal_correlation": t56_signal_correlation,
+    "t57_pattern_flag_profile": t57_pattern_flag_profile,
+    "t58_dedup_token_budget": t58_dedup_token_budget,
+    "t59_shared_header_keys": t59_shared_header_keys,
 }
-STAGED_ORACLES = {
-    6: {
-        "t33_readability_curriculum": T33_SQL,
-        "t34_bpe_merge_pairs": T34_SQL,
-        "t35_shuffle_shards": T35_SQL,
-        "t36_sentence_dedup": T36_SQL,
-    },
-    7: {"t37_oov_rate": T37_SQL},
-    9: {
-        "t39_collocation_pmi": T39_SQL,
-        "t41_vocab_growth": T41_SQL,
-    },
-    10: {
-        "t40_ols_sufficient_stats": T40_SQL,
-        "t42_bigram_surprisal": T42_SQL,
-        "t43_quality_score_inference": T43_SQL,
-        "t44_source_temperature_mix": T44_SQL,
-        "t45_token_budget_waterfill": T45_SQL,
-    },
-    11: {
-        "t46_quality_threshold_curve": T46_SQL,
-        "t47_span_corruption_plan": T47_SQL,
-        "t48_packing_efficiency_curve": T48_SQL,
-        "t49_ngram_coverage_curve": T49_SQL,
-    },
-    12: {"t50_length_bucketed_batches": T50_SQL},
-    13: {
-        "t51_token_fertility": T51_SQL,
-        "t52_lang_confusion": T52_SQL,
-        "t53_token_gini": T53_SQL,
-    },
-    14: {
-        "t54_dup_ngram_fraction": T54_SQL,
-        "t55_char_class_mix": T55_SQL,
-    },
-    15: {
-        "t56_signal_correlation": T56_SQL,
-        "t57_pattern_flag_profile": T57_SQL,
-        "t58_dedup_token_budget": T58_SQL,
-    },
-    16: {"t59_shared_header_keys": T59_SQL},
+
+ORACLES = {
+    "t01_token_freq_top10": T01_SQL,
+    "t02_doc_token_stats": T02_SQL,
+    "t03_term_document_frequency": T03_SQL,
+    "t04_tfidf_top_terms": T04_SQL,
+    "t05_document_summary": T05_SQL,
+    "t06_summary_metrics": T06_SQL,
+    "t07_language_id": T07_SQL,
+    "t08_quality_score": T08_SQL,
+    "t09_token_counts": T09_SQL,
+    "t10_fingerprint": T10_SQL,
+    "t11_fallback_tags": T11_SQL,
+    "t12_summary_word_freq": T12_SQL,
+    "t13_hash_sample": T13_SQL,
+    "t14_rolling_hash": T14_SQL,
+    "t15_fallback_summary": T15_SQL,
+    "t16_stratified_sample": T16_SQL,
+    "t17_count_min_sketch": T17_SQL,
+    "t18_repeated_ngram_ratio": T18_SQL,
+    "t19_bigram_lm_topk": T19_SQL,
+    "t20_quality_filter": T20_SQL,
+    "t21_pii_redaction": T21_SQL,
+    "t22_boilerplate_prune": T22_SQL,
+    "t23_zipf_slope": T23_SQL,
+    "t24_length_histogram": T24_SQL,
+    "t25_source_kl_drift": T25_SQL,
+    "t26_mixture_weights": T26_SQL,
+    "t27_unigram_entropy": T27_SQL,
+    "t28_repetition_filter": T28_SQL,
+    "t29_sequence_packing": T29_SQL,
+    "t30_lm_novelty_score": T30_SQL,
+    "t31_dsir_importance": T31_SQL,
+    "t32_rag_chunking": T32_SQL,
+    "t38_bpe_encode": T38_SQL,
+    "t33_readability_curriculum": T33_SQL,
+    "t34_bpe_merge_pairs": T34_SQL,
+    "t35_shuffle_shards": T35_SQL,
+    "t36_sentence_dedup": T36_SQL,
+    "t37_oov_rate": T37_SQL,
+    "t39_collocation_pmi": T39_SQL,
+    "t41_vocab_growth": T41_SQL,
+    "t40_ols_sufficient_stats": T40_SQL,
+    "t42_bigram_surprisal": T42_SQL,
+    "t43_quality_score_inference": T43_SQL,
+    "t44_source_temperature_mix": T44_SQL,
+    "t45_token_budget_waterfill": T45_SQL,
+    "t46_quality_threshold_curve": T46_SQL,
+    "t47_span_corruption_plan": T47_SQL,
+    "t48_packing_efficiency_curve": T48_SQL,
+    "t49_ngram_coverage_curve": T49_SQL,
+    "t50_length_bucketed_batches": T50_SQL,
+    "t51_token_fertility": T51_SQL,
+    "t52_lang_confusion": T52_SQL,
+    "t53_token_gini": T53_SQL,
+    "t54_dup_ngram_fraction": T54_SQL,
+    "t55_char_class_mix": T55_SQL,
+    "t56_signal_correlation": T56_SQL,
+    "t57_pattern_flag_profile": T57_SQL,
+    "t58_dedup_token_budget": T58_SQL,
+    "t59_shared_header_keys": T59_SQL,
 }

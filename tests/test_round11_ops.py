@@ -141,7 +141,7 @@ def test_remaining_chain_runs_end_to_end_under_cap(spark, adv_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-11 MLlib-fit additions (gate 12): n06 StringIndexer and n07
+# Round-11 MLlib-fit additions: n06 StringIndexer and n07
 # MinMaxScaler — the second and third value-exact pyspark.ml FITS
 # behind n05 (VERDICT r10 "What's missing" #1).
 # ---------------------------------------------------------------------------

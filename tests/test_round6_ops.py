@@ -275,9 +275,7 @@ def test_t32_chunks_tile_documents(spark, sf_dir):
 
 
 def test_t33_matches_duckdb_oracle(spark, sf_dir):
-    """t33 is STAGED for round-7 declaration (driver window at capacity);
-    this test runs the same oracle comparison the driver would, so the
-    later declaration is a registration-only change."""
+    """t33: the driver-style DuckDB oracle comparison."""
     import math
 
     import duckdb
@@ -344,9 +342,7 @@ def test_dedup_within_watermark_semantics(spark):
 
 
 def test_s13_matches_duckdb_oracle(spark, sf_dir):
-    """s13 radius search is STAGED for round-7 declaration; this runs
-    the driver-style DuckDB comparison now so declaring it later is a
-    registration-only change."""
+    """s13 radius search: the driver-style DuckDB oracle comparison."""
     import math
 
     import duckdb
@@ -369,10 +365,9 @@ def test_s13_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v08_matches_duckdb_oracle(spark, sf_dir):
-    """v08 SQL-language UDF is STAGED for round-7 declaration; the
-    oracle inlines the function bodies — exactly what Spark's analyzer
-    does — so a match proves the UDF mechanism is semantically
-    transparent."""
+    """v08 SQL-language UDF: the oracle inlines the function bodies —
+    exactly what Spark's analyzer does — so a match proves the UDF
+    mechanism is semantically transparent."""
     import math
 
     import duckdb
@@ -396,10 +391,9 @@ def test_v08_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v09_matches_duckdb_oracle(spark, sf_dir):
-    """v09 SQL TABLE function is STAGED for round-7 declaration; the
-    oracle is the equivalent partitioned window top-k, so a match
-    proves the LATERAL-correlated table function inlines to exactly
-    that semantics."""
+    """v09 SQL TABLE function: the oracle is the equivalent partitioned
+    window top-k, so a match proves the LATERAL-correlated table
+    function inlines to exactly that semantics."""
     import math
 
     import duckdb
@@ -425,9 +419,8 @@ def test_v09_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_t34_matches_duckdb_oracle(spark, sf_dir):
-    """t34 BPE merge-pair counting is STAGED for round-7 declaration;
-    this runs the driver-style DuckDB comparison now so declaring it
-    later is a registration-only change."""
+    """t34 BPE merge-pair counting: the driver-style DuckDB oracle
+    comparison."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.text_analytics import (
@@ -449,9 +442,8 @@ def test_t34_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_t35_matches_duckdb_oracle(spark, sf_dir):
-    """t35 deterministic shuffle-shard is STAGED for round-7
-    declaration; oracle proves the arithmetic shard hash and the
-    per-shard md5 ordering are engine-portable."""
+    """t35 deterministic shuffle-shard: oracle proves the arithmetic
+    shard hash and the per-shard md5 ordering are engine-portable."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.text_analytics import (
@@ -484,9 +476,8 @@ def test_t35_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v10_matches_duckdb_oracle(spark, sf_dir):
-    """v10 SQL pipe syntax is STAGED for round-7 declaration; the
-    oracle is the classic-SQL spelling, so a match proves the pipe
-    chain parses to the same semantics."""
+    """v10 SQL pipe syntax: the oracle is the classic-SQL spelling, so a
+    match proves the pipe chain parses to the same semantics."""
     import math
 
     import duckdb
@@ -506,9 +497,8 @@ def test_v10_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r12_matches_duckdb_oracle(spark, sf_dir):
-    """r12 XML round trip is STAGED for round-7 declaration; the oracle
-    aggregates the parquet source, so a hash-equal result proves the
-    XML write→parse path lossless."""
+    """r12 XML round trip: the oracle aggregates the parquet source, so
+    a hash-equal result proves the XML write→parse path lossless."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -527,9 +517,8 @@ def test_r12_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_q42_matches_duckdb_oracle(spark, sf_dir):
-    """q42 collated grouping is STAGED for round-7 declaration; the
-    oracle groups on lower(key), so a match proves UTF8_LCASE grouping
-    merges case variants exactly."""
+    """q42 collated grouping: the oracle groups on lower(key), so a
+    match proves UTF8_LCASE grouping merges case variants exactly."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.relational_ext import (
@@ -583,11 +572,10 @@ def test_report_chart_builders_handle_empty():
 
 
 def test_e19_matches_duckdb_oracle(spark, sf_dir):
-    """e19 state-store read is STAGED for round-7 declaration; the
-    result is reconstructed purely from the checkpoint's state files
-    (noop sink — nothing flows out the normal path), so a match against
-    the batch oracle proves the State Data Source exposes exactly the
-    aggregation state."""
+    """e19 state-store read: the result is reconstructed purely from the
+    checkpoint's state files (noop sink — nothing flows out the normal
+    path), so a match against the batch oracle proves the State Data
+    Source exposes exactly the aggregation state."""
     import math
 
     import duckdb
@@ -607,10 +595,9 @@ def test_e19_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_m08_matches_duckdb_oracle(spark, sf_dir):
-    """m08 perceptual-hash image dedup is STAGED for round-7
-    declaration; the closed-form oracle pins the one planted near-dup
-    pair — and that far pairs never become candidates (banded LSH, no
-    all-pairs)."""
+    """m08 perceptual-hash image dedup: the closed-form oracle pins the
+    one planted near-dup pair — and that far pairs never become
+    candidates (banded LSH, no all-pairs)."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.multimodal import (
@@ -640,9 +627,8 @@ def test_m08_ahash_properties():
 
 
 def test_d13_matches_duckdb_oracle(spark, sf_dir):
-    """d13 cross-source contamination matrix is STAGED for round-7
-    declaration; this runs the driver-style DuckDB comparison now so
-    declaring it later is a registration-only change."""
+    """d13 cross-source contamination matrix: the driver-style DuckDB
+    oracle comparison."""
     import math
 
     import duckdb
@@ -670,9 +656,8 @@ def test_d13_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_s14_matches_duckdb_oracle(spark, sf_dir):
-    """s14 int8 scalar-quantized search is STAGED for round-7
-    declaration; this runs the driver-style DuckDB comparison now so
-    declaring it later is a registration-only change."""
+    """s14 int8 scalar-quantized search: the driver-style DuckDB oracle
+    comparison."""
     import math
 
     import duckdb
@@ -719,121 +704,9 @@ def test_e18_matches_duckdb_oracle(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_staged_ops_auto_declare_next_round(monkeypatch):
-    """The staging gate keeps staged ops OUT of queries()/oracle_sql()
-    while their declaring round is in flight and declares all of them
-    the moment that round's correctness record exists. The gate is
-    evaluated lazily per call (ADVICE r06): flipping the recorded round
-    changes the declared set with NO module re-import."""
-    import importlib
-
-    import nlp_data_pipeline_spark.staging as staging
-
-    entry = importlib.import_module("__spark_entry__")
-
-    ROUND6 = [
-        "t33_readability_curriculum",
-        "t34_bpe_merge_pairs",
-        "t35_shuffle_shards",
-        "t36_sentence_dedup",
-        "v08_sql_scalar_udf",
-        "v09_sql_table_function",
-        "v10_pipe_syntax",
-        "v11_parameterized_sql",
-        "s13_radius_search",
-        "s14_int8_quantized_search",
-        "e18_dedup_within_watermark",
-        "e19_statestore_read",
-        "m08_image_dedup_phash",
-        "d13_source_overlap_matrix",
-        "r12_xml_roundtrip",
-        "r13_training_shards_sink",
-        "r14_file_lineage",
-        "a03_hll_intersection",
-        "q42_collated_group",
-    ]
-    ROUND8 = [
-        "t37_oov_rate",
-        "p05_snapshot_diff",
-        "e20_streaming_quantiles",
-        "v12_group_by_all",
-        "d14_cluster_size_histogram",
-        "q43_grouping_sets",
-        "s15_rrf_fusion",
-        "s16_graph_ann_recall",
-        "d15_fuzzy_prefix_pairs",
-    ]
-
-    ROUND9 = [
-        "d16_cdc_chunks",
-        "v13_sql_scripting",
-        "v14_pandas_api",
-        "v15_sql_variables",
-        "s17_kmeans_refine",
-        "u06_cogrouped_attribution",
-        "u07_map_in_arrow",
-        "r15_python_stream_source",
-        "r16_python_stream_sink",
-        "v16_polymorphic_udtf",
-        "s18_mmr_rerank",
-        "q44_listagg_rollup",
-        "a04_approx_top_k",
-        "s19_pagerank",
-        "q45_transpose_metrics",
-        "q46_lateral_join_api",
-    ]
-
-    def declared():
-        q, o = entry.queries(), entry.oracle_sql()
-        assert set(o) <= set(q)  # every oracle has a query
-        return set(q)
-
-    monkeypatch.setattr(staging, "latest_recorded_round", lambda: 5)
-    at5 = declared()
-    assert not (set(ROUND6) & at5) and not (set(ROUND8) & at5)
-
-    monkeypatch.setattr(staging, "latest_recorded_round", lambda: 6)
-    at6 = declared()
-    assert set(ROUND6) <= at6
-    assert not (set(ROUND8) & at6)  # round-8 batch still gated
-
-    monkeypatch.setattr(staging, "latest_recorded_round", lambda: 7)
-    at7 = declared()
-    assert set(ROUND6) <= at7 and set(ROUND8) <= at7
-    assert not (set(ROUND9) & at7)  # round-9 batch still gated
-
-    ROUND10 = [
-        "m09_wav_header_parse",
-        "t39_collocation_pmi",
-        "r17_recursive_glob_ingest",
-        "e21_admission_control",
-        "p06_dataflow_pipeline",
-        "d17_containment_pairs",
-        "s20_ivf_operating_curve",
-        "u08_scalar_iter_udf",
-        "u09_pandas_window_udaf",
-        "r18_corrupt_file_ingest",
-        "v17_udtf_table_argument",
-        "t41_vocab_growth",
-        "q47_gap_fill_forward",
-        "d19_shingle_k_curve",
-        "e22_foreach_row_sink",
-    ]
-
-    monkeypatch.setattr(staging, "latest_recorded_round", lambda: 8)
-    at8 = declared()
-    assert set(ROUND6) <= at8 and set(ROUND8) <= at8 and set(ROUND9) <= at8
-    assert not (set(ROUND10) & at8)  # round-10 batch still gated
-
-    monkeypatch.setattr(staging, "latest_recorded_round", lambda: 9)
-    at9 = declared()
-    assert set(ROUND9) <= at9 and set(ROUND10) <= at9
-
-
 def test_t36_matches_duckdb_oracle(spark, sf_dir):
-    """t36 corpus-wide sentence dedup is STAGED for round-7
-    declaration; this runs the driver-style DuckDB comparison now so
-    declaring it later is a registration-only change."""
+    """t36 corpus-wide sentence dedup: the driver-style DuckDB oracle
+    comparison."""
     import math
 
     import duckdb
@@ -903,10 +776,10 @@ def test_staged_plan_shapes(spark, sf_dir):
 
 
 def test_r13_matches_duckdb_oracle(spark, sf_dir):
-    """r13 training-shard materialization is STAGED for round-7
-    declaration; the manifest is computed from the LANDED partitioned
-    files while the oracle recomputes it from the source through p04's
-    keep rule — a match proves the full materialization lossless."""
+    """r13 training-shard materialization: the manifest is computed from
+    the LANDED partitioned files while the oracle recomputes it from the
+    source through p04's keep rule — a match proves the full
+    materialization lossless."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -928,9 +801,9 @@ def test_r13_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r14_matches_duckdb_oracle(spark, sf_dir):
-    """r14 metadata-column lineage is STAGED for round-7 declaration;
-    the order-robust aggregates (per-file row_index = 0..n_f-1) are
-    closed-form from the deterministic doc_id%4 file split."""
+    """r14 metadata-column lineage: the order-robust aggregates
+    (per-file row_index = 0..n_f-1) are closed-form from the
+    deterministic doc_id%4 file split."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -1026,9 +899,8 @@ def test_bpe_train_matches_python_reference(spark, sf_dir):
 
 
 def test_v11_matches_duckdb_oracle(spark, sf_dir):
-    """v11 parameterized SQL + IDENTIFIER is STAGED for round-7
-    declaration; the oracle inlines the bound literals — exactly what
-    parameter binding resolves to."""
+    """v11 parameterized SQL + IDENTIFIER: the oracle inlines the bound
+    literals — exactly what parameter binding resolves to."""
     import math
 
     import duckdb
@@ -1051,9 +923,9 @@ def test_v11_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_a03_matches_duckdb_oracle(spark, sf_dir):
-    """a03 HLL intersection via inclusion-exclusion is STAGED for
-    round-7 declaration; exact overlaps hash-match and the sketch
-    estimate stays within 10% of the union on every pair."""
+    """a03 HLL intersection via inclusion-exclusion: exact overlaps
+    hash-match and the sketch estimate stays within 10% of the union on
+    every pair."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -1118,8 +990,7 @@ def test_bpe_encode_matches_reference(spark, sf_dir):
 
 
 def test_t37_matches_duckdb_oracle(spark, sf_dir):
-    """t37 OOV-rate is staged for ROUND-8 declaration (gated on
-    staged_ops_live(7)); this runs the driver-style comparison now."""
+    """t37 OOV-rate: the driver-style DuckDB oracle comparison."""
     import math
 
     import duckdb
@@ -1143,8 +1014,7 @@ def test_t37_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_p05_matches_duckdb_oracle(spark, sf_dir):
-    """p05 snapshot diff is staged for ROUND-8 declaration (gated on
-    staged_ops_live(7)); this runs the driver-style comparison now."""
+    """p05 snapshot diff: the driver-style DuckDB oracle comparison."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
@@ -1165,8 +1035,7 @@ def test_p05_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_e20_matches_duckdb_oracle(spark, sf_dir):
-    """e20 streaming quantile monitoring is staged for ROUND-8
-    declaration (gated on staged_ops_live(7)); the oracle-exact batch
+    """e20 streaming quantile monitoring: the oracle-exact batch
     percentiles carry the hash while booleans pin the streaming sketch
     within 5%."""
     import math
@@ -1193,9 +1062,8 @@ def test_e20_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v12_matches_duckdb_oracle(spark, sf_dir):
-    """v12 GROUP BY ALL / ORDER BY ALL is staged for ROUND-8
-    declaration (gated on staged_ops_live(7)); the oracle is the
-    explicit spelling the syntax resolves to."""
+    """v12 GROUP BY ALL / ORDER BY ALL: the oracle is the explicit
+    spelling the syntax resolves to."""
     import duckdb
 
     from nlp_data_pipeline_spark.operators.sql_api import V12_SQL, v12_group_by_all
@@ -1210,8 +1078,7 @@ def test_v12_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_d14_matches_duckdb_oracle(spark, sf_dir):
-    """d14 dedup yield histogram is staged for ROUND-8 declaration
-    (gated on staged_ops_live(7)); the oracle reuses d06's recursive
+    """d14 dedup yield histogram: the oracle reuses d06's recursive
     closure, rolled up to the cluster-size distribution."""
     import duckdb
 

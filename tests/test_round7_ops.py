@@ -87,9 +87,9 @@ def _duck(sf_dir, views=("documents", "orders", "embeddings")):
 
 
 def test_q43_matches_duckdb_oracle(spark, sf_dir):
-    """q43 DataFrame groupingSets API is STAGED for round-8 declaration;
-    this runs the driver-style comparison now (order-insensitive: the
-    engines order NULL grouping keys differently within gid ties)."""
+    """q43 DataFrame groupingSets API: the driver-style DuckDB oracle
+    comparison (order-insensitive: the engines order NULL grouping keys
+    differently within gid ties)."""
     from nlp_data_pipeline_spark.operators.relational_ext import Q43_SQL, q43_grouping_sets
 
     key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
@@ -101,9 +101,8 @@ def test_q43_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_s15_matches_duckdb_oracle(spark, sf_dir):
-    """s15 reciprocal-rank fusion is STAGED for round-8 declaration;
-    the RRF of the cosine and inner-product rankings must match the
-    closed-form oracle exactly."""
+    """s15 reciprocal-rank fusion: the RRF of the cosine and
+    inner-product rankings must match the closed-form oracle exactly."""
     from nlp_data_pipeline_spark.operators.similarity import S15_SQL, s15_rrf_fusion
 
     got = [tuple(r) for r in s15_rrf_fusion(spark, sf_dir).collect()]
@@ -123,8 +122,8 @@ def test_s15_fuses_distinct_rankings(spark, sf_dir):
 
 
 def test_d15_matches_duckdb_oracle(spark, sf_dir):
-    """d15 blocked edit-distance pairs is STAGED for round-8
-    declaration; blocking + Levenshtein must match the oracle."""
+    """d15 blocked edit-distance pairs: blocking + Levenshtein must
+    match the oracle."""
     from nlp_data_pipeline_spark.operators.dedup import D15_SQL, d15_fuzzy_prefix_pairs
 
     got = [tuple(r) for r in d15_fuzzy_prefix_pairs(spark, sf_dir).collect()]
@@ -143,9 +142,9 @@ def test_d15_hot_block_capped(spark, monkeypatch):
 
 
 def test_s16_matches_duckdb_oracle(spark, sf_dir):
-    """s16 graph ANN is STAGED for round-8 declaration; the declared
-    surface is the s08-style audit: every query finds k results from
-    the fixed entry point with recall@k over threshold."""
+    """s16 graph ANN: the declared surface is the s08-style audit: every
+    query finds k results from the fixed entry point with recall@k over
+    threshold."""
     from nlp_data_pipeline_spark.operators.similarity import S16_SQL, s16_graph_ann_recall
 
     got = [tuple(r) for r in s16_graph_ann_recall(spark, sf_dir).collect()]
@@ -154,9 +153,9 @@ def test_s16_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_d16_matches_duckdb_oracle(spark, sf_dir):
-    """d16 content-defined chunking is STAGED for round-9 declaration;
-    the per-doc chunk stats must match the identical rolling-hash
-    boundary rule restated in DuckDB list expressions."""
+    """d16 content-defined chunking: the per-doc chunk stats must match
+    the identical rolling-hash boundary rule restated in DuckDB list
+    expressions."""
     from nlp_data_pipeline_spark.operators.dedup import D16_SQL, d16_cdc_chunks
 
     got = [tuple(r) for r in d16_cdc_chunks(spark, sf_dir).collect()]
@@ -196,9 +195,8 @@ def test_d16_boundaries_resync_after_edit(spark):
 
 
 def test_v13_matches_duckdb_oracle(spark, sf_dir):
-    """v13 SQL scripting is STAGED for round-9 declaration; the WHILE
-    fixpoint must equal the closed-form first-threshold-under-100 over
-    the pow(2) series."""
+    """v13 SQL scripting: the WHILE fixpoint must equal the closed-form
+    first-threshold-under-100 over the pow(2) series."""
     from nlp_data_pipeline_spark.operators.sql_api import V13_SQL, v13_sql_scripting
 
     got = [tuple(r) for r in v13_sql_scripting(spark, sf_dir).collect()]
@@ -207,8 +205,8 @@ def test_v13_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v14_matches_duckdb_oracle(spark, sf_dir):
-    """v14 pandas API on Spark is STAGED for round-9 declaration; the
-    ps.DataFrame groupby-agg must equal the plain SQL aggregate."""
+    """v14 pandas API on Spark: the ps.DataFrame groupby-agg must equal
+    the plain SQL aggregate."""
     from nlp_data_pipeline_spark.operators.sql_api import V14_SQL, v14_pandas_api
 
     got = [tuple(r) for r in v14_pandas_api(spark, sf_dir).collect()]
@@ -269,9 +267,9 @@ def test_s16_nnd_graph_approximates_exact(spark):
 
 
 def test_s17_matches_duckdb_oracle(spark, sf_dir):
-    """s17 one-step Lloyd refinement is STAGED for round-9 declaration;
-    assignment sizes, switch counts, and mean cosine must match the
-    identical seed/assign/mean/re-assign chain restated in DuckDB."""
+    """s17 one-step Lloyd refinement: assignment sizes, switch counts,
+    and mean cosine must match the identical seed/assign/mean/re-assign
+    chain restated in DuckDB."""
     from nlp_data_pipeline_spark.operators.similarity import S17_SQL, s17_kmeans_refine
 
     got = [tuple(r) for r in s17_kmeans_refine(spark, sf_dir).collect()]
@@ -285,9 +283,8 @@ def test_s17_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v15_matches_duckdb_oracle(spark, sf_dir):
-    """v15 SQL session variables is STAGED for round-9 declaration; the
-    DECLARE/SET VAR threshold query must equal the subquery-inlined
-    restatement."""
+    """v15 SQL session variables: the DECLARE/SET VAR threshold query
+    must equal the subquery-inlined restatement."""
     from nlp_data_pipeline_spark.operators.sql_api import V15_SQL, v15_sql_variables
 
     got = [tuple(r) for r in v15_sql_variables(spark, sf_dir).collect()]
@@ -296,9 +293,8 @@ def test_v15_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_u06_matches_duckdb_oracle(spark, sf_dir):
-    """u06 cogrouped-pandas as-of attribution is STAGED for round-9
-    declaration; the per-user merge_asof must equal the correlated
-    max-prior-purchase restatement."""
+    """u06 cogrouped-pandas as-of attribution: the per-user merge_asof
+    must equal the correlated max-prior-purchase restatement."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U06_SQL,
         u06_cogrouped_attribution,
@@ -316,9 +312,9 @@ def test_u06_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r15_matches_duckdb_oracle(spark, sf_dir):
-    """r15 Python streaming data source is STAGED for round-9
-    declaration; draining the docfeed stream and re-aggregating must
-    reproduce the batch aggregate of the documents table exactly."""
+    """r15 Python streaming data source: draining the docfeed stream and
+    re-aggregating must reproduce the batch aggregate of the documents
+    table exactly."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R15_SQL,
         r15_python_stream_source,
@@ -330,9 +326,9 @@ def test_r15_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r16_matches_duckdb_oracle(spark, sf_dir):
-    """r16 Python streaming SINK is STAGED for round-9 declaration;
-    the stream-write → batch-read round trip through the docshards/
-    docstats pair must reproduce the source-table aggregate exactly."""
+    """r16 Python streaming SINK: the stream-write → batch-read round
+    trip through the docshards/docstats pair must reproduce the
+    source-table aggregate exactly."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R16_SQL,
         r16_python_stream_sink,
@@ -344,9 +340,8 @@ def test_r16_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_u07_matches_duckdb_oracle(spark, sf_dir):
-    """u07 mapInArrow batch kernel is STAGED for round-9 declaration;
-    per-vector norm/max-abs/positive-count must match the DuckDB list
-    expressions."""
+    """u07 mapInArrow batch kernel: per-vector
+    norm/max-abs/positive-count must match the DuckDB list expressions."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U07_SQL,
         u07_map_in_arrow,
@@ -358,8 +353,8 @@ def test_u07_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_v16_matches_duckdb_oracle(spark, sf_dir):
-    """v16 polymorphic UDTF is STAGED for round-9 declaration; the
-    analyze()-derived two-column parse must equal split_part."""
+    """v16 polymorphic UDTF: the analyze()-derived two-column parse must
+    equal split_part."""
     from nlp_data_pipeline_spark.operators.sql_api import V16_SQL, v16_polymorphic_udtf
 
     got = [tuple(r) for r in v16_polymorphic_udtf(spark, sf_dir).collect()]
@@ -467,9 +462,9 @@ except ImportError:  # pragma: no cover - hypothesis is baked in here
 
 
 def test_s18_matches_duckdb_oracle(spark, sf_dir):
-    """s18 MMR diversified retrieval is STAGED for round-9 declaration;
-    the unrolled 3-step greedy must select the identical picks in both
-    engines (same fold dot product → bit-identical argmax)."""
+    """s18 MMR diversified retrieval: the unrolled 3-step greedy must
+    select the identical picks in both engines (same fold dot product →
+    bit-identical argmax)."""
     from nlp_data_pipeline_spark.operators.similarity import S18_SQL, s18_mmr_rerank
 
     got = [tuple(r) for r in s18_mmr_rerank(spark, sf_dir).collect()]
@@ -497,9 +492,8 @@ def test_s18_diversifies_vs_plain_topk(spark, sf_dir):
 
 
 def test_q44_matches_duckdb_oracle(spark, sf_dir):
-    """q44 LISTAGG WITHIN GROUP is STAGED for round-9 declaration; the
-    ordered string aggregation must equal DuckDB's string_agg ORDER BY
-    spelling."""
+    """q44 LISTAGG WITHIN GROUP: the ordered string aggregation must
+    equal DuckDB's string_agg ORDER BY spelling."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q44_SQL,
         q44_listagg_rollup,
@@ -516,8 +510,8 @@ def test_q44_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_a04_matches_duckdb_oracle(spark, sf_dir):
-    """a04 approx_top_k is STAGED for round-9 declaration; below sketch
-    capacity the heavy-hitters result must equal the exact top-3."""
+    """a04 approx_top_k: below sketch capacity the heavy-hitters result
+    must equal the exact top-3."""
     from nlp_data_pipeline_spark.operators.events import A04_SQL, a04_approx_top_k
 
     got = [tuple(r) for r in a04_approx_top_k(spark, sf_dir).collect()]
@@ -529,9 +523,9 @@ def test_a04_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_s19_matches_duckdb_oracle(spark, sf_dir):
-    """s19 PageRank on the kNN similarity graph is STAGED for round-9
-    declaration; three unrolled power iterations over the BLAS-built
-    graph must equal the quadratic SQL restatement for EVERY node."""
+    """s19 PageRank on the kNN similarity graph: three unrolled power
+    iterations over the BLAS-built graph must equal the quadratic SQL
+    restatement for EVERY node."""
     from nlp_data_pipeline_spark.operators.similarity import S19_SQL, s19_pagerank
 
     got = [tuple(r) for r in s19_pagerank(spark, sf_dir).collect()]
@@ -568,9 +562,9 @@ def test_new_staged_plan_shapes(spark, sf_dir):
 
 
 def test_q45_matches_duckdb_oracle(spark, sf_dir):
-    """q45 DataFrame.transpose is STAGED for round-9 declaration; the
-    flipped metric table must equal the closed-form per-priority
-    restatement (floats settled before the flip)."""
+    """q45 DataFrame.transpose: the flipped metric table must equal the
+    closed-form per-priority restatement (floats settled before the
+    flip)."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q45_SQL,
         q45_transpose_metrics,
@@ -584,9 +578,9 @@ def test_q45_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_q46_matches_duckdb_oracle(spark, sf_dir):
-    """q46 DataFrame.lateralJoin is STAGED for round-9 declaration; the
-    correlated orderBy+limit subframe must equal the window-rank
-    restatement (Catalyst decorrelates to the same plan)."""
+    """q46 DataFrame.lateralJoin: the correlated orderBy+limit subframe
+    must equal the window-rank restatement (Catalyst decorrelates to the
+    same plan)."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q46_SQL,
         q46_lateral_join_api,
@@ -603,9 +597,9 @@ def test_q46_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_m09_matches_duckdb_oracle(spark, sf_dir):
-    """m09 pure-JVM WAV header parse is STAGED for round-10
-    declaration; every little-endian field parsed back from the
-    synthesized 44-byte header must equal its closed-form value."""
+    """m09 pure-JVM WAV header parse: every little-endian field parsed
+    back from the synthesized 44-byte header must equal its closed-form
+    value."""
     from nlp_data_pipeline_spark.operators.multimodal import M09_SQL, m09_wav_header_parse
 
     got = [tuple(r) for r in m09_wav_header_parse(spark, sf_dir).collect()]
@@ -626,10 +620,9 @@ def test_m09_stays_in_codegen(spark, sf_dir):
 
 
 def test_t39_matches_duckdb_oracle(spark, sf_dir):
-    """t39 PMI collocations is STAGED for round-10 declaration; the
-    association-ranked bigram list must match the two-aggregate SQL
-    restatement (ordering on the ROUNDED pmi, which is cross-engine
-    stable where raw log2 is not)."""
+    """t39 PMI collocations: the association-ranked bigram list must
+    match the two-aggregate SQL restatement (ordering on the ROUNDED
+    pmi, which is cross-engine stable where raw log2 is not)."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T39_SQL,
         t39_collocation_pmi,
@@ -644,9 +637,9 @@ def test_t39_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r17_matches_duckdb_oracle(spark, sf_dir):
-    """r17 recursive discovery + glob filter is STAGED for round-10
-    declaration; rows gathered across three nesting depths must equal
-    the full table, and the decoy .txt must contribute nothing."""
+    """r17 recursive discovery + glob filter: rows gathered across three
+    nesting depths must equal the full table, and the decoy .txt must
+    contribute nothing."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R17_SQL,
         r17_recursive_glob_ingest,
@@ -659,9 +652,9 @@ def test_r17_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_e21_matches_duckdb_oracle(spark, sf_dir):
-    """e21 admission control is STAGED for round-10 declaration:
-    AvailableNow must drain 4 staged files through maxFilesPerTrigger=1
-    as exactly 4 non-empty micro-batches whose union is the source."""
+    """e21 admission control: AvailableNow must drain 4 staged files
+    through maxFilesPerTrigger=1 as exactly 4 non-empty micro-batches
+    whose union is the source."""
     from nlp_data_pipeline_spark.operators.events import E21_SQL, e21_admission_control
 
     got = [tuple(r) for r in e21_admission_control(spark, sf_dir).collect()]
@@ -718,9 +711,9 @@ def test_docshards_abort_removes_orphan_temps(tmp_path):
 
 
 def test_p06_matches_duckdb_oracle(spark, sf_dir):
-    """p06 declarative dataflow pipeline is STAGED for round-10
-    declaration; the graph-run keep/drop sweep must equal the SQL
-    restatement, and the quality gate must actually drop documents."""
+    """p06 declarative dataflow pipeline: the graph-run keep/drop sweep
+    must equal the SQL restatement, and the quality gate must actually
+    drop documents."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         P06_SQL,
         p06_dataflow_pipeline,
@@ -773,10 +766,10 @@ def test_dataflow_graph_validation(spark):
 
 
 def test_d17_matches_duckdb_oracle(spark, sf_dir):
-    """d17 asymmetric containment is STAGED for round-10 declaration;
-    the min-size-denominator scores must match the postings-join
-    restatement, and at least one pair must show the asymmetry
-    (containment well above Jaccard) that motivates the operator."""
+    """d17 asymmetric containment: the min-size-denominator scores must
+    match the postings-join restatement, and at least one pair must show
+    the asymmetry (containment well above Jaccard) that motivates the
+    operator."""
     from nlp_data_pipeline_spark.operators.dedup import D17_SQL, d17_containment_pairs
 
     got = [tuple(r) for r in d17_containment_pairs(spark, sf_dir).collect()]
@@ -786,10 +779,10 @@ def test_d17_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_s20_matches_duckdb_oracle(spark, sf_dir):
-    """s20 IVF operating curve is STAGED for round-10 declaration; the
-    nprobe sweep must match the SQL restatement, recall must be
-    non-decreasing in nprobe, and the widest probe must scan strictly
-    more than the narrowest (the curve is a real trade-off, not flat)."""
+    """s20 IVF operating curve: the nprobe sweep must match the SQL
+    restatement, recall must be non-decreasing in nprobe, and the widest
+    probe must scan strictly more than the narrowest (the curve is a
+    real trade-off, not flat)."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S20_SQL,
         s20_ivf_operating_curve,
@@ -804,9 +797,9 @@ def test_s20_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_u08_matches_duckdb_oracle(spark, sf_dir):
-    """u08 SCALAR_ITER pandas UDF is STAGED for round-10 declaration;
-    the init-once-per-worker scoring must equal the closed-form CASE
-    restatement (init placement changes cost, never semantics)."""
+    """u08 SCALAR_ITER pandas UDF: the init-once-per-worker scoring must
+    equal the closed-form CASE restatement (init placement changes cost,
+    never semantics)."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U08_SQL,
         u08_scalar_iter_udf,
@@ -820,9 +813,8 @@ def test_u08_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_u09_matches_duckdb_oracle(spark, sf_dir):
-    """u09 pandas UDAF over a bounded window frame is STAGED for
-    round-10 declaration; the exact-integer rolling weighted-cents must
-    match the SQL windowed sums row for row."""
+    """u09 pandas UDAF over a bounded window frame: the exact-integer
+    rolling weighted-cents must match the SQL windowed sums row for row."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U09_SQL,
         u09_pandas_window_udaf,
@@ -838,10 +830,10 @@ def test_u09_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_r18_matches_duckdb_oracle(spark, sf_dir):
-    """r18 corrupt-file-resilient ingest is STAGED for round-10
-    declaration; with a planted non-parquet poison file in the
-    directory, ignoreCorruptFiles must yield exactly the good shards'
-    rows (logged-and-skipped, not failed, not partially read)."""
+    """r18 corrupt-file-resilient ingest: with a planted non-parquet
+    poison file in the directory, ignoreCorruptFiles must yield exactly
+    the good shards' rows (logged-and-skipped, not failed, not partially
+    read)."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R18_SQL,
         r18_corrupt_file_ingest,
@@ -876,9 +868,9 @@ def test_r18_fails_loudly_without_the_option(spark, sf_dir):
 
 
 def test_v17_matches_duckdb_oracle(spark, sf_dir):
-    """v17 TABLE-argument UDTF is STAGED for round-10 declaration; the
-    per-partition streamed fold must equal the plain aggregate
-    restatement (the accumulator is order-insensitive by design)."""
+    """v17 TABLE-argument UDTF: the per-partition streamed fold must
+    equal the plain aggregate restatement (the accumulator is
+    order-insensitive by design)."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V17_SQL,
         v17_udtf_table_argument,
@@ -890,10 +882,9 @@ def test_v17_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_t41_matches_duckdb_oracle(spark, sf_dir):
-    """t41 Heaps-law vocabulary curve is STAGED for round-10
-    declaration; the 4-level conditional-distinct sweep must match the
-    SQL restatement, with vocab non-decreasing and vocab-per-token
-    non-increasing along the prefix."""
+    """t41 Heaps-law vocabulary curve: the 4-level conditional-distinct
+    sweep must match the SQL restatement, with vocab non-decreasing and
+    vocab-per-token non-increasing along the prefix."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T41_SQL,
         t41_vocab_growth,
@@ -909,9 +900,9 @@ def test_t41_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_q47_matches_duckdb_oracle(spark, sf_dir):
-    """q47 forward-fill gap filling is STAGED for round-10 declaration;
-    the generated hourly spine + IGNORE NULLS fill must match the SQL
-    restatement, and real gaps must exist and be filled."""
+    """q47 forward-fill gap filling: the generated hourly spine + IGNORE
+    NULLS fill must match the SQL restatement, and real gaps must exist
+    and be filled."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q47_SQL,
         q47_gap_fill_forward,
@@ -925,10 +916,10 @@ def test_q47_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_d19_matches_duckdb_oracle(spark, sf_dir):
-    """d19 shingle-size sensitivity curve is STAGED for round-10
-    declaration; the per-k candidate counts and Jaccard stats must
-    match the SQL restatement, and the curve must show the precision
-    trade-off that justifies k=3 (k=2 floods with low-quality pairs)."""
+    """d19 shingle-size sensitivity curve: the per-k candidate counts
+    and Jaccard stats must match the SQL restatement, and the curve must
+    show the precision trade-off that justifies k=3 (k=2 floods with
+    low-quality pairs)."""
     from nlp_data_pipeline_spark.operators.dedup import D19_SQL, d19_shingle_k_curve
 
     got = [tuple(r) for r in d19_shingle_k_curve(spark, sf_dir).collect()]
@@ -940,9 +931,9 @@ def test_d19_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_e22_matches_duckdb_oracle(spark, sf_dir):
-    """e22 row-level ForeachWriter sink is STAGED for round-10
-    declaration; the per-(partition, epoch) idempotent landing must
-    reproduce the source aggregate exactly, including on rerun."""
+    """e22 row-level ForeachWriter sink: the per-(partition, epoch)
+    idempotent landing must reproduce the source aggregate exactly,
+    including on rerun."""
     from nlp_data_pipeline_spark.operators.events import E22_SQL, e22_foreach_row_sink
 
     got = [tuple(r) for r in e22_foreach_row_sink(spark, sf_dir).collect()]

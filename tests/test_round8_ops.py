@@ -98,7 +98,7 @@ def test_bpe_train_batch1_equals_sequential(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staged trio (gate 10): t40 OLS, t42 bigram surprisal, t44
+# Round-11 trio: t40 OLS, t42 bigram surprisal, t44
 # temperature mix — driver-style DuckDB parity + semantic invariants.
 # ---------------------------------------------------------------------------
 def _duck(sf_dir, views=("documents",)):
@@ -113,9 +113,9 @@ def _duck(sf_dir, views=("documents",)):
 
 
 def test_t40_matches_duckdb_oracle(spark, sf_dir):
-    """t40 distributed OLS via exact-integer sufficient statistics is
-    STAGED for round-11 declaration; the Cramer solve over the shared
-    fixed expression tree must match DuckDB bit-for-bit at 6 dp."""
+    """t40 distributed OLS via exact-integer sufficient statistics: the
+    Cramer solve over the shared fixed expression tree must match DuckDB
+    bit-for-bit at 6 dp."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T40_SQL,
         t40_ols_sufficient_stats,
@@ -164,8 +164,8 @@ def test_t40_exact_recompute(spark, sf_dir):
 
 
 def test_t42_matches_duckdb_oracle(spark, sf_dir):
-    """t42 bigram surprisal is STAGED for round-11 declaration; the
-    integer-inequality surprise flags and per-doc rollup must match."""
+    """t42 bigram surprisal: the integer-inequality surprise flags and
+    per-doc rollup must match."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T42_SQL,
         t42_bigram_surprisal,
@@ -212,8 +212,8 @@ def test_t42_flags_match_python_lm(spark, sf_dir):
 
 
 def test_t44_matches_duckdb_oracle(spark, sf_dir):
-    """t44 temperature-sampling mix is STAGED for round-11 declaration;
-    ÷ and sqrt are IEEE correctly rounded, so equality is exact."""
+    """t44 temperature-sampling mix: ÷ and sqrt are IEEE correctly
+    rounded, so equality is exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T44_SQL,
         t44_source_temperature_mix,
@@ -247,10 +247,10 @@ def test_t44_upweights_small_sources(spark, sf_dir):
 
 
 def test_t43_matches_duckdb_oracle(spark, sf_dir):
-    """t43 quality-score batch inference is STAGED for round-11
-    declaration; coefficients come from the same unrounded fixed
-    expression tree as t40 and every residual is one fixed ±*/ tree
-    over exact-integer features, so the band counts are engine-exact."""
+    """t43 quality-score batch inference: coefficients come from the
+    same unrounded fixed expression tree as t40 and every residual is
+    one fixed ±*/ tree over exact-integer features, so the band counts
+    are engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T43_SQL,
         t43_quality_score_inference,
@@ -293,13 +293,13 @@ def test_t43_model_is_broadcast_not_shuffled(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staged join/layout ops (gate 10): q48 Z-order audit, q49
+# Round-11 join/layout ops: q48 Z-order audit, q49
 # binned interval-overlap join, a05 Bloom semi-join.
 # ---------------------------------------------------------------------------
 def test_q48_matches_duckdb_oracle(spark, sf_dir):
-    """q48 Z-order layout audit is STAGED for round-11 declaration; the
-    Morton-bucketed span summary must match DuckDB exactly (all values
-    are exact-integer arithmetic + one exact division)."""
+    """q48 Z-order layout audit: the Morton-bucketed span summary must
+    match DuckDB exactly (all values are exact-integer arithmetic + one
+    exact division)."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q48_SQL,
         q48_zorder_layout,
@@ -325,9 +325,8 @@ def test_q48_zorder_bounds_both_dims(spark, sf_dir):
 
 
 def test_q49_matches_duckdb_oracle(spark, sf_dir):
-    """q49 binned interval-overlap join is STAGED for round-11
-    declaration; the bin-equi-join + exact predicate must equal the
-    oracle's plain theta join."""
+    """q49 binned interval-overlap join: the bin-equi-join + exact
+    predicate must equal the oracle's plain theta join."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q49_SQL,
         q49_interval_overlap_join,
@@ -390,8 +389,8 @@ def test_q49_pairs_match_bruteforce(spark, sf_dir):
 
 
 def test_a05_matches_duckdb_oracle(spark, sf_dir):
-    """a05 Bloom semi-join is STAGED for round-11 declaration; the md5
-    bit positions, candidate set, and fp accounting are engine-exact."""
+    """a05 Bloom semi-join: the md5 bit positions, candidate set, and fp
+    accounting are engine-exact."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         A05_SQL,
         a05_bloom_semijoin,
@@ -450,12 +449,12 @@ def test_a05_probe_side_filter_is_broadcast(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staged LLM-data ops (gate 10): s21 hard negatives, s22
+# Round-11 LLM-data ops: s21 hard negatives, s22
 # label-centroid similarity, t45 token-budget water-filling.
 # ---------------------------------------------------------------------------
 def test_s21_matches_duckdb_oracle(spark, sf_dir):
-    """s21 hard-negative mining is STAGED for round-11 declaration; the
-    label-mismatch top-k must match the brute-force oracle exactly."""
+    """s21 hard-negative mining: the label-mismatch top-k must match the
+    brute-force oracle exactly."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S21_SQL,
         s21_hard_negative_mining,
@@ -494,9 +493,8 @@ def test_s21_negatives_never_share_query_label(spark, sf_dir):
 
 
 def test_s22_matches_duckdb_oracle(spark, sf_dir):
-    """s22 label-centroid similarity is STAGED for round-11
-    declaration; integer-quantized sums make the centroid matrix
-    engine-exact."""
+    """s22 label-centroid similarity: integer-quantized sums make the
+    centroid matrix engine-exact."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S22_SQL,
         s22_label_centroid_similarity,
@@ -537,9 +535,8 @@ def test_s22_matches_numpy_centroids(spark, sf_dir):
 
 
 def test_t45_matches_duckdb_oracle(spark, sf_dir):
-    """t45 token-budget water-filling is STAGED for round-11
-    declaration; all-integer arithmetic makes the allocation
-    engine-exact."""
+    """t45 token-budget water-filling: all-integer arithmetic makes the
+    allocation engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T45_SQL,
         t45_token_budget_waterfill,
@@ -609,9 +606,8 @@ def test_t45_waterfill_matches_python_solve(spark, sf_dir):
 
 
 def test_q51_matches_duckdb_oracle(spark, sf_dir):
-    """q51 CBO stats-driven join is STAGED for round-11 declaration;
-    the declared aggregate is plan-independent and must match the plain
-    filtered-join oracle."""
+    """q51 CBO stats-driven join: the declared aggregate is
+    plan-independent and must match the plain filtered-join oracle."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q51_SQL,
         q51_cbo_stats_join,
@@ -628,9 +624,8 @@ def test_q51_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_a06_matches_duckdb_oracle(spark, sf_dir):
-    """a06 KMV sketch is STAGED for round-11 declaration; the md5-based
-    sketch state AND estimate are engine-exact (no tolerance booleans
-    needed, unlike the HLL family)."""
+    """a06 KMV sketch: the md5-based sketch state AND estimate are
+    engine-exact (no tolerance booleans needed, unlike the HLL family)."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A06_SQL,
         a06_kmv_distinct_sketch,
@@ -672,8 +667,8 @@ def test_a06_kth_hash_matches_python_recompute(spark, sf_dir):
 
 
 def test_v18_matches_duckdb_oracle(spark, sf_dir):
-    """v18 three-valued-logic battery is STAGED for round-11
-    declaration; one shared ANSI text, engine-exact."""
+    """v18 three-valued-logic battery: one shared ANSI text,
+    engine-exact."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V18_SQL,
         v18_null_semantics,
@@ -706,12 +701,12 @@ def test_v18_semantics_invariants(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-12 staged ops (gate 11): t46 quality-threshold curve, s23
+# Round-12 ops: t46 quality-threshold curve, s23
 # graph-ANN beam-width curve.
 # ---------------------------------------------------------------------------
 def test_t46_matches_duckdb_oracle(spark, sf_dir):
-    """t46 quality-threshold operating curve is STAGED for round-12
-    declaration; one scan, conditional sums, engine-exact counts."""
+    """t46 quality-threshold operating curve: one scan, conditional
+    sums, engine-exact counts."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T46_SQL,
         t46_quality_threshold_curve,
@@ -762,9 +757,9 @@ def test_t46_curve_is_monotone_and_consistent(spark, sf_dir):
 
 
 def test_s23_matches_duckdb_oracle(spark, sf_dir):
-    """s23 beam-width curve is STAGED for round-12 declaration; the
-    declared surface is the graded recall_ok gates (s16's constant-
-    truth oracle pattern — SQL cannot run the graph walk)."""
+    """s23 beam-width curve: the declared surface is the graded
+    recall_ok gates (s16's constant-truth oracle pattern — SQL cannot
+    run the graph walk)."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S23_SQL,
         s23_beam_width_curve,
@@ -792,8 +787,8 @@ def test_s23_all_beams_clear_their_floor(spark, sf_dir):
 
 
 def test_s24_matches_duckdb_oracle(spark, sf_dir):
-    """s24 topical source mix is STAGED for round-12 declaration; the
-    metadata-to-embedding join contingency is engine-exact."""
+    """s24 topical source mix: the metadata-to-embedding join
+    contingency is engine-exact."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S24_SQL,
         s24_topical_source_mix,
@@ -832,9 +827,8 @@ def test_s24_contingency_invariants(spark, sf_dir):
 
 
 def test_d20_matches_duckdb_oracle(spark, sf_dir):
-    """d20 Bloom-gated decontamination is STAGED for round-12
-    declaration; the portable-hash filter makes every tier count
-    engine-exact."""
+    """d20 Bloom-gated decontamination: the portable-hash filter makes
+    every tier count engine-exact."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D20_SQL,
         d20_bloom_decontamination,
@@ -872,8 +866,8 @@ SELECT COUNT(DISTINCT doc_id), COUNT(*) FROM hits"""
 
 
 def test_t47_matches_duckdb_oracle(spark, sf_dir):
-    """t47 span-corruption plan is STAGED for round-12 declaration; the
-    deterministic hash mask makes every count engine-exact."""
+    """t47 span-corruption plan: the deterministic hash mask makes every
+    count engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T47_SQL,
         t47_span_corruption_plan,
@@ -931,9 +925,9 @@ def test_t47_matches_python_mask_recompute(spark, sf_dir):
 
 
 def test_m10_matches_duckdb_oracle(spark, sf_dir):
-    """m10 image patch grid is STAGED for round-12 declaration; exact
-    integer patch sums over the committed fixtures pin the decode +
-    pad + patchify pipeline against the closed-form VALUES oracle."""
+    """m10 image patch grid: exact integer patch sums over the committed
+    fixtures pin the decode + pad + patchify pipeline against the
+    closed-form VALUES oracle."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M10_SQL,
         m10_image_patch_grid,
@@ -971,9 +965,8 @@ def test_m10_patches_partition_each_image(spark, sf_dir):
 
 
 def test_q52_matches_duckdb_oracle(spark, sf_dir):
-    """q52 file-metadata layout audit is STAGED for round-12
-    declaration; the real landed layout must satisfy the one-file-per-
-    source contract the oracle states."""
+    """q52 file-metadata layout audit: the real landed layout must
+    satisfy the one-file-per-source contract the oracle states."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q52_SQL,
         q52_file_metadata_audit,
@@ -1023,8 +1016,8 @@ def test_q52_metadata_paths_carry_partition_value(spark, sf_dir):
 
 
 def test_t48_matches_duckdb_oracle(spark, sf_dir):
-    """t48 packing-efficiency curve is STAGED for round-12 declaration;
-    all declared values are exact integers, engine-exact."""
+    """t48 packing-efficiency curve: all declared values are exact
+    integers, engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T48_SQL,
         t48_packing_efficiency_curve,
@@ -1060,9 +1053,9 @@ def test_t48_curve_invariants(spark, sf_dir):
 
 
 def test_q53_matches_duckdb_oracle(spark, sf_dir):
-    """q53 batch sessionization is STAGED for round-12 declaration; the
-    native session_window aggregation must reproduce the lag+cumsum
-    oracle exactly, including the strictly-greater-than-gap closing rule."""
+    """q53 batch sessionization: the native session_window aggregation
+    must reproduce the lag+cumsum oracle exactly, including the
+    strictly-greater-than-gap closing rule."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q53_SQL,
         q53_sessionize_batch,
@@ -1112,9 +1105,8 @@ def test_q53_sessions_partition_events(spark, sf_dir):
 
 
 def test_s25_matches_duckdb_oracle(spark, sf_dir):
-    """s25 mutual-kNN pairs is STAGED for round-12 declaration; the
-    declared cosine re-scores through the s01 fold helpers so both
-    engines compare identical float sequences."""
+    """s25 mutual-kNN pairs: the declared cosine re-scores through the
+    s01 fold helpers so both engines compare identical float sequences."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S25_SQL,
         s25_mutual_knn_pairs,
@@ -1153,9 +1145,8 @@ def test_s25_pairs_are_mutual_and_subset_of_knn(spark, sf_dir):
 
 
 def test_a07_matches_duckdb_oracle(spark, sf_dir):
-    """a07 hash-reservoir sample is STAGED for round-17 declaration
-    (moved back from gate 11 in the n05 pull-forward trade);
-    md5 draw keys are engine-identical so the sample is engine-exact."""
+    """a07 hash-reservoir sample: md5 draw keys are engine-identical so
+    the sample is engine-exact."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A07_SQL,
         a07_reservoir_sample,
@@ -1200,9 +1191,8 @@ def test_a07_sample_properties(spark, sf_dir):
 
 
 def test_d21_matches_duckdb_oracle(spark, sf_dir):
-    """d21 split-contamination audit is STAGED for round-12
-    declaration; both split strategies count the same LSH pair set,
-    engine-exact."""
+    """d21 split-contamination audit: both split strategies count the
+    same LSH pair set, engine-exact."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D21_SQL,
         d21_split_contamination_audit,
@@ -1237,9 +1227,9 @@ def test_d21_cluster_split_never_leaks(spark, sf_dir):
 
 
 def test_d22_matches_duckdb_oracle(spark, sf_dir):
-    """d22 LSH banding operating curve is STAGED for round-12
-    declaration; every declared value is an integer count and the
-    near-dup truth test is pure integer arithmetic, engine-exact."""
+    """d22 LSH banding operating curve: every declared value is an
+    integer count and the near-dup truth test is pure integer
+    arithmetic, engine-exact."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D22_SQL,
         d22_lsh_band_curve,
@@ -1280,8 +1270,8 @@ def test_d22_curve_is_nested_and_consistent(spark, sf_dir):
 
 
 def test_t49_matches_duckdb_oracle(spark, sf_dir):
-    """t49 bigram coverage curve is STAGED for round-12 declaration;
-    coverage masses are exact BIGINTs, engine-exact."""
+    """t49 bigram coverage curve: coverage masses are exact BIGINTs,
+    engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T49_SQL,
         t49_ngram_coverage_curve,
@@ -1330,13 +1320,12 @@ def test_t49_coverage_matches_python_recompute(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-13 staged batch (gate 12): m11 PCM frame energy, s26 label
+# Round-13 batch: m11 PCM frame energy, s26 label
 # retrieval eval, v19 try_* battery, r19 multiline CSV.
 # ---------------------------------------------------------------------------
 def test_m11_matches_duckdb_oracle(spark, sf_dir):
-    """m11 PCM frame energy is STAGED for round-13 declaration; the
-    construct->parse loop yields exact BIGINTs the oracle recomputes
-    closed-form from doc_id."""
+    """m11 PCM frame energy: the construct->parse loop yields exact
+    BIGINTs the oracle recomputes closed-form from doc_id."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M11_SQL,
         m11_pcm_frame_energy,
@@ -1373,8 +1362,8 @@ def test_m11_matches_python_pcm_recompute(spark, sf_dir):
 
 
 def test_s26_matches_duckdb_oracle(spark, sf_dir):
-    """s26 label-retrieval eval is STAGED for round-13 declaration; the
-    fold-helper cosine makes rank selection engine-exact."""
+    """s26 label-retrieval eval: the fold-helper cosine makes rank
+    selection engine-exact."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S26_SQL,
         s26_label_retrieval_eval,
@@ -1412,8 +1401,8 @@ def test_s26_metric_invariants(spark, sf_dir):
 
 
 def test_v19_matches_duckdb_oracle(spark, sf_dir):
-    """v19 try_* battery is STAGED for round-13 declaration; every
-    null-injection site must agree with the oracle's CASE guards."""
+    """v19 try_* battery: every null-injection site must agree with the
+    oracle's CASE guards."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V19_SQL,
         v19_try_functions,
@@ -1442,8 +1431,8 @@ def test_v19_failure_modes_partition_rows(spark, sf_dir):
 
 
 def test_r19_matches_duckdb_oracle(spark, sf_dir):
-    """r19 multiline quoted-CSV ingestion is STAGED for round-13
-    declaration; the roundtrip reproduces the source rows exactly."""
+    """r19 multiline quoted-CSV ingestion: the roundtrip reproduces the
+    source rows exactly."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R19_SQL,
         r19_multiline_csv_ingest,
@@ -1478,8 +1467,8 @@ def test_r19_staged_file_really_spans_lines(spark, sf_dir):
 
 
 def test_q54_matches_duckdb_oracle(spark, sf_dir):
-    """q54 SCD2 dimension build is STAGED for round-13 declaration;
-    change detection + validity stitching must agree exactly."""
+    """q54 SCD2 dimension build: change detection + validity stitching
+    must agree exactly."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q54_SQL,
         q54_scd2_dimension_build,
@@ -1516,8 +1505,8 @@ def test_q54_scd2_invariants(spark, sf_dir):
 
 
 def test_d23_matches_duckdb_oracle(spark, sf_dir):
-    """d23 best-copy dedup policy is STAGED for round-13 declaration;
-    the per-cluster argmax must agree engine-exactly."""
+    """d23 best-copy dedup policy: the per-cluster argmax must agree
+    engine-exactly."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D23_SQL,
         d23_best_copy_dedup,
@@ -1558,9 +1547,8 @@ def test_d23_keeper_is_longest_member(spark, sf_dir):
 
 
 def test_d24_matches_duckdb_oracle(spark, sf_dir):
-    """d24 alternating-stars CC is STAGED for round-13 declaration; its
-    oracle IS D06_SQL — the O(log n) build must reproduce the flooding
-    clustering byte-for-byte."""
+    """d24 alternating-stars CC: its oracle IS D06_SQL — the O(log n)
+    build must reproduce the flooding clustering byte-for-byte."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D24_SQL,
         d24_cc_alternating_stars,
@@ -1618,8 +1606,8 @@ def test_d24_converges_fast_on_a_chain(spark):
 
 
 def test_t50_matches_duckdb_oracle(spark, sf_dir):
-    """t50 length-bucketed batching is STAGED for round-13 declaration;
-    bucket assignment is a pure-integer CASE chain, engine-exact."""
+    """t50 length-bucketed batching: bucket assignment is a pure-integer
+    CASE chain, engine-exact."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T50_SQL,
         t50_length_bucketed_batches,
@@ -1652,8 +1640,8 @@ def test_t50_bucket_accounting(spark, sf_dir):
 
 
 def test_q55_matches_duckdb_oracle(spark, sf_dir):
-    """q55 effectivity join is STAGED for round-13 declaration; the
-    interval-predicate join must agree engine-exactly."""
+    """q55 effectivity join: the interval-predicate join must agree
+    engine-exactly."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q55_SQL,
         q55_effectivity_join,
@@ -1700,8 +1688,7 @@ def test_q55_intervals_partition_the_timeline(spark, sf_dir):
 
 
 def test_p07_matches_duckdb_oracle(spark, sf_dir):
-    """p07 dataset card is STAGED for round-13 declaration; every cell
-    is an exact count, engine-exact."""
+    """p07 dataset card: every cell is an exact count, engine-exact."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         P07_SQL,
         p07_dataset_card,
@@ -1735,8 +1722,8 @@ def test_p07_card_reconciles_with_d01(spark, sf_dir):
 
 
 def test_s27_matches_duckdb_oracle(spark, sf_dir):
-    """s27 IVF+PQ search is STAGED for round-13 declaration; cluster
-    confinement + ADC table lookups must compose engine-exactly."""
+    """s27 IVF+PQ search: cluster confinement + ADC table lookups must
+    compose engine-exactly."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S27_SQL,
         s27_ivfpq_search,
@@ -1785,9 +1772,9 @@ def test_s27_composes_s07_confinement_with_s11_scoring(spark, sf_dir):
 
 
 def test_a08_matches_duckdb_oracle(spark, sf_dir):
-    """a08 KMV merge is STAGED for round-13 declaration; the Spark side
-    computes the global sketch ONLY through the per-source merge path,
-    the oracle directly — hash equality proves the merge law."""
+    """a08 KMV merge: the Spark side computes the global sketch ONLY
+    through the per-source merge path, the oracle directly — hash
+    equality proves the merge law."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A08_SQL,
         a08_kmv_sketch_merge,
@@ -1870,9 +1857,8 @@ def test_q53_exact_gap_boundary_merges(spark):
 
 
 def test_q56_matches_duckdb_oracle(spark, sf_dir):
-    """q56 small-file compaction is STAGED for round-13 declaration;
-    both phases' layouts must satisfy the declared file contracts with
-    rows conserved."""
+    """q56 small-file compaction: both phases' layouts must satisfy the
+    declared file contracts with rows conserved."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q56_SQL,
         q56_small_file_compaction,
@@ -1909,9 +1895,8 @@ def test_q56_compaction_preserves_rows_on_disk(spark, sf_dir):
 
 
 def test_d25_matches_duckdb_oracle(spark, sf_dir):
-    """d25 lexical x semantic overlap is STAGED for round-13
-    declaration; the 2x2 contingency must agree engine-exactly with
-    all three category rows always present."""
+    """d25 lexical x semantic overlap: the 2x2 contingency must agree
+    engine-exactly with all three category rows always present."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D25_SQL,
         d25_lexical_semantic_overlap,
@@ -1960,8 +1945,8 @@ def test_d25_reconciles_with_both_pair_ops(spark, sf_dir):
 
 
 def test_t51_matches_duckdb_oracle(spark, sf_dir):
-    """t51 tokenizer fertility is STAGED for round-14 declaration;
-    masses are exact BIGINT sums, ratios single IEEE divisions."""
+    """t51 tokenizer fertility: masses are exact BIGINT sums, ratios
+    single IEEE divisions."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T51_SQL,
         t51_token_fertility,
@@ -1990,8 +1975,8 @@ def test_t51_fertility_algebra(spark, sf_dir):
 
 
 def test_t52_matches_duckdb_oracle(spark, sf_dir):
-    """t52 lang-ID confusion matrix is STAGED for round-14 declaration;
-    the oracle composes the already-green T07 SQL as a CTE."""
+    """t52 lang-ID confusion matrix: the oracle composes the
+    already-green T07 SQL as a CTE."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T52_SQL,
         t52_lang_confusion,
@@ -2022,9 +2007,9 @@ def test_t52_cells_total_the_corpus(spark, sf_dir):
 
 
 def test_a09_matches_duckdb_oracle(spark, sf_dir):
-    """a09 pairwise KMV intersection is STAGED for round-14; both
-    engines compute the same deterministic md5 order-statistics
-    estimate value-for-value (the a06/a08 pattern)."""
+    """a09 pairwise KMV intersection: both engines compute the same
+    deterministic md5 order-statistics estimate value-for-value (the
+    a06/a08 pattern)."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A09_SQL,
         a09_kmv_intersection,
@@ -2059,8 +2044,8 @@ def test_a09_estimator_algebra(spark, sf_dir):
 
 
 def test_s28_matches_duckdb_oracle(spark, sf_dir):
-    """s28 binary-quantized search is STAGED for round-14; packing,
-    XOR+popcount ranks, and the exact re-score must match DuckDB."""
+    """s28 binary-quantized search: packing, XOR+popcount ranks, and the
+    exact re-score must match DuckDB."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S28_SQL,
         s28_binary_hamming_search,
@@ -2102,8 +2087,8 @@ def test_s28_hamming_against_numpy(spark, sf_dir):
 
 
 def test_d26_matches_duckdb_oracle(spark, sf_dir):
-    """d26 LSH recall eval is STAGED for round-14; truth is computed
-    independently of LSH via the capped-postings machinery."""
+    """d26 LSH recall eval: truth is computed independently of LSH via
+    the capped-postings machinery."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D26_SQL,
         d26_lsh_recall_eval,
@@ -2130,8 +2115,8 @@ def test_d26_count_algebra(spark, sf_dir):
 
 
 def test_e23_matches_duckdb_oracle(spark, sf_dir):
-    """e23 sequenced funnel is STAGED for round-14; four chained
-    conditional window minima over one user partitioning."""
+    """e23 sequenced funnel: four chained conditional window minima over
+    one user partitioning."""
     from nlp_data_pipeline_spark.operators.events import (
         E23_SQL,
         e23_conversion_funnel,
@@ -2193,8 +2178,8 @@ def test_e23_sequencing_beats_naive_first_ts(spark):
 
 
 def test_r20_matches_duckdb_oracle(spark, sf_dir):
-    """r20 schema-evolution merge is STAGED for round-14; mergeSchema
-    widens legacy files with NULLs, audited per source."""
+    """r20 schema-evolution merge: mergeSchema widens legacy files with
+    NULLs, audited per source."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R20_SQL,
         r20_schema_evolution_merge,
@@ -2220,8 +2205,8 @@ def test_r20_widening_conserves_rows(spark, sf_dir):
 
 
 def test_t53_matches_duckdb_oracle(spark, sf_dir):
-    """t53 token-mass Gini is STAGED for round-14; rank-weighted sums
-    are exact BIGINTs, G is one IEEE division."""
+    """t53 token-mass Gini: rank-weighted sums are exact BIGINTs, G is
+    one IEEE division."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T53_SQL,
         t53_token_gini,
@@ -2248,8 +2233,8 @@ def test_t53_gini_algebra(spark, sf_dir):
 
 
 def test_q57_matches_duckdb_oracle(spark, sf_dir):
-    """q57 running-distinct workaround is STAGED for round-14; the
-    first-occurrence-flag + running-sum trick must match DuckDB."""
+    """q57 running-distinct workaround: the first-occurrence-flag +
+    running-sum trick must match DuckDB."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q57_SQL,
         q57_running_distinct,
@@ -2282,9 +2267,9 @@ def test_q57_coverage_semantics(spark, sf_dir):
 
 
 def test_m12_matches_duckdb_oracle(spark, sf_dir):
-    """m12 WebDataset tar index is STAGED for round-14; the kernel's
-    parsed offsets must match the closed-form TAR layout recomputed by
-    DuckDB from the raw documents."""
+    """m12 WebDataset tar index: the kernel's parsed offsets must match
+    the closed-form TAR layout recomputed by DuckDB from the raw
+    documents."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M12_SQL,
         m12_webdataset_tar_index,
@@ -2318,8 +2303,8 @@ def test_m12_tar_layout_invariants(spark, sf_dir):
 
 
 def test_v20_matches_duckdb_oracle(spark, sf_dir):
-    """v20 bag-semantics set ops are STAGED for round-14; one shared
-    ANSI text runs on both engines (the v18 battery pattern)."""
+    """v20 bag-semantics set ops: one shared ANSI text runs on both
+    engines (the v18 battery pattern)."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V20_SQL,
         v20_bag_set_ops,
@@ -2358,8 +2343,8 @@ def test_v20_bag_identity(spark, sf_dir):
 
 
 def test_e24_matches_duckdb_oracle(spark, sf_dir):
-    """e24 late-data accounting is STAGED for round-14; lateness is
-    exact integer microseconds against the arrival-order running max."""
+    """e24 late-data accounting: lateness is exact integer microseconds
+    against the arrival-order running max."""
     from nlp_data_pipeline_spark.operators.events import (
         E24_SQL,
         e24_late_data_accounting,
@@ -2390,8 +2375,8 @@ def test_e24_horizon_monotonicity(spark, sf_dir):
 
 
 def test_s29_matches_duckdb_oracle(spark, sf_dir):
-    """s29 binary-vs-float recall is STAGED for round-14; the oracle
-    composes S01_SQL and S28_SQL verbatim as CTEs."""
+    """s29 binary-vs-float recall: the oracle composes S01_SQL and
+    S28_SQL verbatim as CTEs."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S29_SQL,
         s29_binary_recall_eval,
@@ -2423,8 +2408,8 @@ def test_s29_recall_bounds(spark, sf_dir):
 
 
 def test_a10_matches_duckdb_oracle(spark, sf_dir):
-    """a10 KMV K-curve is STAGED for round-14; all three K arms read
-    the same ranked relation, engine-exact like a06."""
+    """a10 KMV K-curve: all three K arms read the same ranked relation,
+    engine-exact like a06."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A10_SQL,
         a10_kmv_k_curve,
@@ -2463,8 +2448,8 @@ def test_a10_contains_a06_and_orders_hashes(spark, sf_dir):
 
 
 def test_t54_matches_duckdb_oracle(spark, sf_dir):
-    """t54 cross-doc duplicate 5-gram deciles are STAGED for round-15;
-    buckets are pure integer arithmetic (DIV ≡ // on non-negatives)."""
+    """t54 cross-doc duplicate 5-gram deciles: buckets are pure integer
+    arithmetic (DIV ≡ // on non-negatives)."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T54_SQL,
         t54_dup_ngram_fraction,
@@ -2490,8 +2475,8 @@ def test_t54_deciles_partition_eligible_docs(spark, sf_dir):
 
 
 def test_d27_matches_duckdb_oracle(spark, sf_dir):
-    """d27 1-bit minhash is STAGED for round-15; parity bits and the
-    b-bit correction must match DuckDB on the deployed candidates."""
+    """d27 1-bit minhash: parity bits and the b-bit correction must
+    match DuckDB on the deployed candidates."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D27_SQL,
         d27_bbit_minhash,
@@ -2517,9 +2502,9 @@ def test_d27_estimator_algebra(spark, sf_dir):
 
 
 def test_m13_matches_duckdb_oracle(spark, sf_dir):
-    """m13 JPEG marker walk is STAGED for round-15; a wrong walk
-    offset garbles every downstream field, so hash equality against
-    the closed-form layout is the parse proof."""
+    """m13 JPEG marker walk: a wrong walk offset garbles every
+    downstream field, so hash equality against the closed-form layout is
+    the parse proof."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M13_SQL,
         m13_jpeg_header_parse,
@@ -2546,8 +2531,8 @@ def test_m13_walk_recovers_fields(spark, sf_dir):
 
 
 def test_s30_matches_duckdb_oracle(spark, sf_dir):
-    """s30 quantization error budget is STAGED for round-15; SQ8 grid
-    rules and the sign proxy must match DuckDB on s01's pairs."""
+    """s30 quantization error budget: SQ8 grid rules and the sign proxy
+    must match DuckDB on s01's pairs."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S30_SQL,
         s30_quantization_error_budget,
@@ -2583,9 +2568,8 @@ def test_s30_tier_errors_ordered(spark, sf_dir):
 
 
 def test_q58_matches_duckdb_oracle(spark, sf_dir):
-    """q58 null-skew salting is STAGED for round-15; the oracle is the
-    PLAIN outer join, so the hash gate proves salting preserved
-    semantics exactly."""
+    """q58 null-skew salting: the oracle is the PLAIN outer join, so the
+    hash gate proves salting preserved semantics exactly."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q58_SQL,
         q58_null_skew_outer_join,
@@ -2616,8 +2600,8 @@ def test_q58_null_keys_never_match(spark, sf_dir):
 
 
 def test_r21_matches_duckdb_oracle(spark, sf_dir):
-    """r21 PERMISSIVE malformed-CSV audit is STAGED for round-15; the
-    quarantine split must equal the closed-form generation rule."""
+    """r21 PERMISSIVE malformed-CSV audit: the quarantine split must
+    equal the closed-form generation rule."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R21_SQL,
         r21_permissive_csv_audit,
@@ -2648,8 +2632,8 @@ def test_r21_quarantine_conserves_rows(spark, sf_dir):
 
 
 def test_d28_matches_duckdb_oracle(spark, sf_dir):
-    """d28 edit-distance verify is STAGED for round-15; Levenshtein is
-    a uniquely-defined integer so the tier is oracle-exact."""
+    """d28 edit-distance verify: Levenshtein is a uniquely-defined
+    integer so the tier is oracle-exact."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D28_SQL,
         d28_edit_distance_verify,
@@ -2676,8 +2660,8 @@ def test_d28_metric_properties(spark, sf_dir):
 
 
 def test_t55_matches_duckdb_oracle(spark, sf_dir):
-    """t55 character-class mix is STAGED for round-15; explicit ASCII
-    classes only (no \\w-style shorthands — the regex-parity rule)."""
+    """t55 character-class mix: explicit ASCII classes only (no
+    \\w-style shorthands — the regex-parity rule)."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T55_SQL,
         t55_char_class_mix,
@@ -2703,8 +2687,8 @@ def test_t55_masses_partition_chars(spark, sf_dir):
 
 
 def test_p08_matches_duckdb_oracle(spark, sf_dir):
-    """p08 curation waterfall is STAGED for round-15; the oracle
-    composes P04_SQL verbatim so both sides share verdict rules."""
+    """p08 curation waterfall: the oracle composes P04_SQL verbatim so
+    both sides share verdict rules."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         P08_SQL,
         p08_curation_waterfall,
@@ -2738,8 +2722,8 @@ def test_p08_waterfall_reconciles_with_p04(spark, sf_dir):
 
 
 def test_a11_matches_duckdb_oracle(spark, sf_dir):
-    """a11 Bloom FPR curve is STAGED for round-15; filter state and
-    measured FPR are md5 integer arithmetic, engine-exact."""
+    """a11 Bloom FPR curve: filter state and measured FPR are md5
+    integer arithmetic, engine-exact."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A11_SQL,
         a11_bloom_fpr_curve,
@@ -2767,8 +2751,8 @@ def test_a11_fpr_decreases_with_bits(spark, sf_dir):
 
 
 def test_e25_matches_duckdb_oracle(spark, sf_dir):
-    """e25 transition matrix is STAGED for round-15; lag over the
-    exact (ts, event_id) total order, integer counts, one division."""
+    """e25 transition matrix: lag over the exact (ts, event_id) total
+    order, integer counts, one division."""
     from nlp_data_pipeline_spark.operators.events import (
         E25_SQL,
         e25_transition_matrix,
@@ -2803,9 +2787,8 @@ def test_e25_rows_are_distributions(spark, sf_dir):
 
 
 def test_v21_matches_duckdb_oracle(spark, sf_dir):
-    """v21 observe() metrics are STAGED for round-15; equality with
-    the plain-SQL aggregates proves the observation saw every row of
-    the write exactly once."""
+    """v21 observe() metrics: equality with the plain-SQL aggregates
+    proves the observation saw every row of the write exactly once."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V21_SQL,
         v21_observe_metrics,
@@ -2887,8 +2870,8 @@ def test_s28_scan_projects_only_needed_columns(spark, sf_dir):
 
 
 def test_q59_matches_duckdb_oracle(spark, sf_dir):
-    """q59 relative-rank battery is STAGED for round-15; all three
-    functions are ANSI-identical given the declared total order."""
+    """q59 relative-rank battery: all three functions are ANSI-identical
+    given the declared total order."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q59_SQL,
         q59_analytic_rank_battery,
@@ -2929,8 +2912,8 @@ def test_q59_relative_rank_algebra(spark, sf_dir):
 
 
 def test_r22_matches_duckdb_oracle(spark, sf_dir):
-    """r22 wholetext ingestion is STAGED for round-15; per-file sha256
-    against the source table is the byte-exact round-trip proof."""
+    """r22 wholetext ingestion: per-file sha256 against the source table
+    is the byte-exact round-trip proof."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R22_SQL,
         r22_wholetext_ingest,
@@ -2963,8 +2946,8 @@ def test_r22_one_row_per_file(spark, sf_dir):
 
 
 def test_t56_matches_duckdb_oracle(spark, sf_dir):
-    """t56 signal correlation is STAGED for round-16; exact BIGINT
-    sufficient statistics, one float expression per pair."""
+    """t56 signal correlation: exact BIGINT sufficient statistics, one
+    float expression per pair."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T56_SQL,
         t56_signal_correlation,
@@ -2996,8 +2979,7 @@ def test_t56_pearson_properties(spark, sf_dir):
 
 
 def test_s31_matches_duckdb_oracle(spark, sf_dir):
-    """s31 IVF list balance is STAGED for round-16; the oracle
-    composes S04_SQL verbatim."""
+    """s31 IVF list balance: the oracle composes S04_SQL verbatim."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S31_SQL,
         s31_ivf_list_balance,
@@ -3026,8 +3008,8 @@ def test_s31_lists_partition_the_corpus(spark, sf_dir):
 
 
 def test_d29_matches_duckdb_oracle(spark, sf_dir):
-    """d29 cluster purity is STAGED for round-16; the oracle nests
-    D06_SQL's recursive closure as a CTE body."""
+    """d29 cluster purity: the oracle nests D06_SQL's recursive closure
+    as a CTE body."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D29_SQL,
         d29_cluster_purity,
@@ -3062,7 +3044,7 @@ def test_d29_purity_algebra(spark, sf_dir):
 
 
 def test_e26_matches_duckdb_oracle(spark, sf_dir):
-    """e26 hour-of-day profile is STAGED for round-16."""
+    """e26 hour-of-day profile."""
     from nlp_data_pipeline_spark.operators.events import (
         E26_SQL,
         e26_hourly_profile,
@@ -3091,8 +3073,8 @@ def test_e26_shares_are_distributions(spark, sf_dir):
 
 
 def test_m14_matches_duckdb_oracle(spark, sf_dir):
-    """m14 .npy parse is STAGED for round-16; header arithmetic and
-    the element walk must match the closed-form layout."""
+    """m14 .npy parse: header arithmetic and the element walk must match
+    the closed-form layout."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M14_SQL,
         m14_npy_header_parse,
@@ -3127,8 +3109,8 @@ def test_m14_bytes_are_real_npy(spark, sf_dir):
 
 
 def test_v22_matches_duckdb_oracle(spark, sf_dir):
-    """v22 argmax/conditional aggregate battery is STAGED for
-    round-16; one shared ANSI text on both engines."""
+    """v22 argmax/conditional aggregate battery: one shared ANSI text on
+    both engines."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V22_SQL,
         v22_aggregate_battery,
@@ -3166,8 +3148,8 @@ def test_v22_argmax_agrees_with_window_spelling(spark, sf_dir):
 
 
 def test_e27_matches_duckdb_oracle(spark, sf_dir):
-    """e27 error-burst detector is STAGED for round-16; the burst
-    flag is an integer cross-multiplication, boundary-safe."""
+    """e27 error-burst detector: the burst flag is an integer
+    cross-multiplication, boundary-safe."""
     from nlp_data_pipeline_spark.operators.events import (
         E27_SQL,
         e27_error_burst_detector,
@@ -3198,8 +3180,8 @@ def test_e27_burst_flag_is_exact_threshold(spark, sf_dir):
 
 
 def test_t57_matches_duckdb_oracle(spark, sf_dir):
-    """t57 pattern-flag profile is STAGED for round-16; literal
-    contains() only — no cross-engine regex surface."""
+    """t57 pattern-flag profile: literal contains() only — no
+    cross-engine regex surface."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T57_SQL,
         t57_pattern_flag_profile,
@@ -3228,8 +3210,7 @@ def test_t57_any_flag_bounds(spark, sf_dir):
 
 
 def test_q60_matches_duckdb_oracle(spark, sf_dir):
-    """q60 TWAP is STAGED for round-16; exact cents×µs BIGINT
-    accumulation, one final division."""
+    """q60 TWAP: exact cents×µs BIGINT accumulation, one final division."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q60_SQL,
         q60_time_weighted_average,
@@ -3280,9 +3261,8 @@ def test_q60_twap_within_value_range(spark, sf_dir):
 
 
 def test_u10_matches_duckdb_oracle(spark, sf_dir):
-    """u10 applyInArrow is STAGED for round-16; hash equality with
-    plain SQL proves the Arrow group boundary delivered every row of
-    every group exactly once."""
+    """u10 applyInArrow: hash equality with plain SQL proves the Arrow
+    group boundary delivered every row of every group exactly once."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U10_SQL,
         u10_apply_in_arrow,
@@ -3296,8 +3276,8 @@ def test_u10_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_t58_matches_duckdb_oracle(spark, sf_dir):
-    """t58 dedup-aware token budget is STAGED for round-16; the
-    keeper rule is d01's, restated verbatim."""
+    """t58 dedup-aware token budget: the keeper rule is d01's, restated
+    verbatim."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T58_SQL,
         t58_dedup_token_budget,
@@ -3325,8 +3305,8 @@ def test_t58_reconciles_with_d01(spark, sf_dir):
 
 
 def test_a12_matches_duckdb_oracle(spark, sf_dir):
-    """a12 sketch cross-validation is STAGED for round-16; exact and
-    KMV columns hash-exact, HLL as the a01-style tolerance boolean."""
+    """a12 sketch cross-validation: exact and KMV columns hash-exact,
+    HLL as the a01-style tolerance boolean."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A12_SQL,
         a12_sketch_crosscheck,
@@ -3355,8 +3335,8 @@ def test_a12_agrees_with_a06(spark, sf_dir):
 
 
 def test_r23_matches_duckdb_oracle(spark, sf_dir):
-    """r23 record-separator ingestion is STAGED for round-16; content
-    shas re-identify each recovered record byte-exactly."""
+    """r23 record-separator ingestion: content shas re-identify each
+    recovered record byte-exactly."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         R23_SQL,
         r23_linesep_ingest,
@@ -3412,9 +3392,8 @@ def test_d30_equals_full_build_in_engine(spark, sf_dir):
 
 
 def test_n05_matches_duckdb_oracle(spark, sf_dir):
-    """n05 is STAGED for round-12 (pulled forward from gate 16 per
-    VERDICT r10 #2): a REAL pyspark.ml IDF fit whose
-    closed-form state faces a plain-SQL oracle value-for-value."""
+    """n05: a REAL pyspark.ml IDF fit whose closed-form state faces a
+    plain-SQL oracle value-for-value."""
     from nlp_data_pipeline_spark.operators.nlp_model import (
         _n05_sql,
         n05_idf_model,
@@ -3447,8 +3426,8 @@ def test_n05_idf_tracks_document_frequency(spark, sf_dir):
 
 
 def test_d31_matches_duckdb_oracle(spark, sf_dir):
-    """d31 shingle-df histogram is STAGED for round-17; power-of-two
-    buckets via length(bin(df)) — the t50 integer rule."""
+    """d31 shingle-df histogram: power-of-two buckets via
+    length(bin(df)) — the t50 integer rule."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D31_SQL,
         d31_shingle_df_histogram,
@@ -3474,8 +3453,8 @@ def test_d31_masses_reconcile(spark, sf_dir):
 
 
 def test_e28_matches_duckdb_oracle(spark, sf_dir):
-    """e28 inter-arrival histogram is STAGED for round-17; gaps in
-    exact µs, integer buckets, zero-gap bucket pinned to 0."""
+    """e28 inter-arrival histogram: gaps in exact µs, integer buckets,
+    zero-gap bucket pinned to 0."""
     from nlp_data_pipeline_spark.operators.events import (
         E28_SQL,
         e28_interarrival_histogram,
@@ -3507,8 +3486,8 @@ def test_e28_gap_count_reconciles(spark, sf_dir):
 
 
 def test_s32_matches_duckdb_oracle(spark, sf_dir):
-    """s32 re-rank window curve is STAGED for round-17; one ranked
-    Hamming relation serves every window prefix."""
+    """s32 re-rank window curve: one ranked Hamming relation serves
+    every window prefix."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S32_SQL,
         s32_rerank_window_curve,
@@ -3544,8 +3523,8 @@ def test_s32_nests_and_contains_s29(spark, sf_dir):
 
 
 def test_v23_matches_duckdb_oracle(spark, sf_dir):
-    """v23 explicit NULL ordering is STAGED for round-17; green ONLY
-    because both ORDER BYs spell out their null placement."""
+    """v23 explicit NULL ordering: green ONLY because both ORDER BYs
+    spell out their null placement."""
     from nlp_data_pipeline_spark.operators.sql_api import (
         V23_SQL,
         v23_null_ordering,
@@ -3576,7 +3555,7 @@ def test_v23_null_block_placement(spark, sf_dir):
 
 
 def test_t59_matches_duckdb_oracle(spark, sf_dir):
-    """t59 shared-header detection is STAGED for round-17."""
+    """t59 shared-header detection."""
     from nlp_data_pipeline_spark.operators.text_analytics import (
         T59_SQL,
         t59_shared_header_keys,
@@ -3611,8 +3590,8 @@ def test_t59_finds_planted_template(spark):
 
 
 def test_q61_matches_duckdb_oracle(spark, sf_dir):
-    """q61 retention cohorts are STAGED for round-17; week keys
-    declare as TIMESTAMP, offsets as integer day-diff DIV 7."""
+    """q61 retention cohorts: week keys declare as TIMESTAMP, offsets as
+    integer day-diff DIV 7."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         Q61_SQL,
         q61_retention_cohorts,
@@ -3647,8 +3626,8 @@ def test_q61_triangle_invariants(spark, sf_dir):
 
 
 def test_a13_matches_duckdb_oracle(spark, sf_dir):
-    """a13 sampling-error curve is STAGED for round-17; nested md5
-    samples, exact integer sums, single divisions."""
+    """a13 sampling-error curve: nested md5 samples, exact integer sums,
+    single divisions."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         A13_SQL,
         a13_sample_error_curve,
@@ -3679,9 +3658,8 @@ def test_a13_samples_nest(spark, sf_dir):
 
 
 def test_m15_matches_duckdb_oracle(spark, sf_dir):
-    """m15 ZIP shard index is STAGED for round-17; STORED layout is
-    closed-form so the oracle recomputes offsets and shas from the
-    raw documents."""
+    """m15 ZIP shard index: STORED layout is closed-form so the oracle
+    recomputes offsets and shas from the raw documents."""
     from nlp_data_pipeline_spark.operators.multimodal import (
         M15_SQL,
         m15_zip_shard_index,
@@ -3712,8 +3690,8 @@ def test_m15_stored_layout_invariants(spark, sf_dir):
 
 
 def test_p09_matches_duckdb_oracle(spark, sf_dir):
-    """p09 token waterfall is STAGED for round-17; p08's set
-    arithmetic re-weighted by token mass, oracle nests P04_SQL."""
+    """p09 token waterfall: p08's set arithmetic re-weighted by token
+    mass, oracle nests P04_SQL."""
     from nlp_data_pipeline_spark.operators.doc_pipeline import (
         P09_SQL,
         p09_token_waterfall,
@@ -3748,8 +3726,8 @@ def test_p09_reconciles_with_p04_and_p08(spark, sf_dir):
 
 
 def test_e29_matches_duckdb_oracle(spark, sf_dir):
-    """e29 behavior entropy is STAGED for round-17; one FIXED-ORDER
-    float expression per row, never SUM over rows (the t40 rule)."""
+    """e29 behavior entropy: one FIXED-ORDER float expression per row,
+    never SUM over rows (the t40 rule)."""
     from nlp_data_pipeline_spark.operators.events import (
         E29_SQL,
         e29_behavior_entropy,

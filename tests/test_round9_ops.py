@@ -98,9 +98,9 @@ def test_n05_declared_integers_are_model_state(spark, sf_dir):
 
 
 def test_s33_matches_duckdb_oracle(spark, sf_dir):
-    """s33 is STAGED for round-17: mutual-kNN over the linear-cost
-    NN-descent build, declared as exact-truth count + integer-percent
-    quality booleans (the r08 verdict's s25 perf-twin ask)."""
+    """s33: mutual-kNN over the linear-cost NN-descent build, declared
+    as exact-truth count + integer-percent quality booleans (the r08
+    verdict's s25 perf-twin ask)."""
     from nlp_data_pipeline_spark.operators.similarity import (
         S33_SQL,
         s33_mutual_knn_nnd_recall,
@@ -167,9 +167,9 @@ def test_nnd_state_directed_topm_feeds_the_declared_graph(spark, sf_dir):
 
 
 def test_d32_matches_duckdb_oracle(spark, sf_dir):
-    """d32 is STAGED for round-17: delta-vs-base incremental dedup
-    classification (exact sha tier, banded-LSH + integer-Jaccard near
-    tier, first-match precedence)."""
+    """d32: delta-vs-base incremental dedup classification (exact sha
+    tier, banded-LSH + integer-Jaccard near tier, first-match
+    precedence)."""
     from nlp_data_pipeline_spark.operators.dedup import (
         D32_SQL,
         d32_incremental_dedup_delta,
@@ -195,9 +195,9 @@ def test_d32_verdicts_partition_the_delta(spark, sf_dir):
 
 
 def test_u11_matches_duckdb_oracle(spark, sf_dir):
-    """u11 is STAGED for round-17: nested array<struct> through a
-    scalar pandas UDF, struct out — the nested Arrow round-trip
-    surface, declared against a plain-SQL oracle."""
+    """u11: nested array<struct> through a scalar pandas UDF, struct out
+    — the nested Arrow round-trip surface, declared against a plain-SQL
+    oracle."""
     from nlp_data_pipeline_spark.operators.relational_ext import (
         U11_SQL,
         u11_nested_arrow_udf,
@@ -232,8 +232,8 @@ def test_u11_last_type_is_order_not_luck(spark, sf_dir):
 
 
 def test_v24_matches_duckdb_oracle(spark, sf_dir):
-    """v24 is STAGED for round-17: the SQL UNPIVOT clause in its
-    multi-measure aliased form vs the classic UNION ALL longhand."""
+    """v24: the SQL UNPIVOT clause in its multi-measure aliased form vs
+    the classic UNION ALL longhand."""
     from nlp_data_pipeline_spark.operators.sql_api import V24_SQL, v24_sql_unpivot
 
     got = [tuple(r) for r in v24_sql_unpivot(spark, sf_dir).collect()]

@@ -46,8 +46,7 @@ GATE10 = [
 
 
 def main() -> int:
-    import importlib
-
+    import __spark_entry__ as e
     from nlp_data_pipeline_spark.plans.explain import formatted_plan
     from nlp_data_pipeline_spark.session import get_spark
 
@@ -72,17 +71,7 @@ def main() -> int:
                 os.path.join(staged, t),
             )
 
-    fns: dict = {}
-    for m in (
-        "relational", "relational_ext", "text_analytics", "dedup",
-        "similarity", "events", "nlp_model", "multimodal",
-        "doc_pipeline", "sql_api",
-    ):
-        mod = importlib.import_module(f"nlp_data_pipeline_spark.operators.{m}")
-        fns.update(getattr(mod, "QUERIES", {}))
-        for gate_ops in getattr(mod, "STAGED_QUERIES", {}).values():
-            for op, fn in gate_ops.items():
-                fns.setdefault(op, fn)
+    fns = e.queries()
 
     out: dict = {}
     for name in names:

@@ -45,8 +45,6 @@ HEAVY = [
     "d12_leakage_safe_split",
     "s02_top_similar_pairs",
     "s11_pq_adc_search",
-    # staged operators are resolved from their modules directly in
-    # main() until their declaration round arrives
     "t34_bpe_merge_pairs",
     "t35_shuffle_shards",
     "t36_sentence_dedup",
@@ -143,7 +141,7 @@ HEAVY = [
     "s33_mutual_knn_nnd_recall",
     "d32_incremental_dedup_delta",
     # round-9 session-3 backfill: the remaining documents/embeddings-
-    # shaped staged ops that had no 10x row yet (m10/m11/m12/m15/p08
+    # shaped ops that had no 10x row yet (m10/m11/m12/m15/p08
     # stay excluded — bounded fixtures or self-staged relations; e*/q5x/
     # r19-r23/v18-v24/u10-u11 read unreplicated tables or are API-surface
     # demos the replicated-table probe doesn't apply to)
@@ -160,7 +158,7 @@ HEAVY = [
     "a11_bloom_fpr_curve",
     # round-9 session-3: _stage now also replicates EVENTS (remapped
     # event_id/user_id → factor-fold user population), unlocking the
-    # batch events-analytics staged ops previously excluded as
+    # batch events-analytics ops previously excluded as
     # "unreplicated events table". The true-streaming e01–e22 queries
     # stay excluded (micro-batch wall-clock, not a batch plan probe).
     "e23_conversion_funnel",
@@ -350,22 +348,7 @@ def main() -> int:
     names = [n for n in HEAVY if not prefixes or n.startswith(prefixes)]
 
     spark = get_spark("bench10x")
-    queries = dict(e.queries())
-    # staged (declaration-deferred) operators live in their modules but
-    # not yet in queries(); probe them at scale all the same
-    from nlp_data_pipeline_spark.operators import dedup as _dd
-    from nlp_data_pipeline_spark.operators import doc_pipeline as _dp
-    from nlp_data_pipeline_spark.operators import events as _ev
-    from nlp_data_pipeline_spark.operators import multimodal as _mm
-    from nlp_data_pipeline_spark.operators import nlp_model as _nm
-    from nlp_data_pipeline_spark.operators import relational_ext as _rx
-    from nlp_data_pipeline_spark.operators import similarity as _sim
-    from nlp_data_pipeline_spark.operators import text_analytics as _ta
-
-    for mod in (_ta, _dd, _sim, _dp, _mm, _nm, _ev, _rx):
-        for gate_ops in getattr(mod, "STAGED_QUERIES", {}).values():
-            for staged, fn in gate_ops.items():
-                queries.setdefault(staged, fn)
+    queries = e.queries()
 
     # Stage BOTH scales through the same 32-file writer: the raw driver
     # tables are single-row-group files whose scans cap at 1 task, so

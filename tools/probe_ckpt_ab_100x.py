@@ -37,7 +37,6 @@ from bench_10x import _stage  # noqa: E402
 def main() -> int:
     from pyspark.sql import DataFrame
 
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.dedup import (
         d20_bloom_decontamination,
         d32_incremental_dedup_delta,
@@ -50,10 +49,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_ckpt_ab_100x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_ckpt_ab_100x.json")
     )
     spark = get_spark("probe-ckpt-ab-100x")
 
@@ -84,7 +80,6 @@ def main() -> int:
         return {"times": times, "min": min(times), "rows": rows}
 
     out: dict = {
-        "round": staging.latest_recorded_round() + 1,
         "factor": factor,
         "stage_mode": "rename",
         "results": {},

@@ -38,7 +38,6 @@ from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.dedup import (
         _D18_PRODUCTION_CAP,
         d22_lsh_band_curve,
@@ -52,10 +51,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_d22cap_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_d22cap_1000x.json")
     )
     cap = _D18_PRODUCTION_CAP
     spark = get_spark("probe-d22cap-1000x")

@@ -35,7 +35,6 @@ from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.dedup import (
         _D18_PRODUCTION_CAP,
         d32_incremental_dedup_delta,
@@ -49,10 +48,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_d32cap_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_d32cap_1000x.json")
     )
     cap = _D18_PRODUCTION_CAP
     spark = get_spark("probe-d32cap-1000x")

@@ -5,8 +5,8 @@ scales. s25_mutual_knn_pairs is excluded: its exact all-pairs tile is
 the sanctioned truth tier (similarity.py header), cannot and should
 not run at 100x — s33 is its declared production swap.
 
-Usage: SPARK_GRAFT_ASSUME_ROUND=11 python tools/probe_gate11_100x.py
-       python tools/probe_gate11_100x.py <op> [op ...]   # any staged ops
+Usage: python tools/probe_gate11_100x.py
+       python tools/probe_gate11_100x.py <op> [op ...]   # any declared ops
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
        SPARK_GRAFT_SCALE_FACTOR (default 100),
        SPARK_GRAFT_STAGE_MODE (default rename — honest volume)
@@ -44,8 +44,7 @@ GATE11 = [
 
 
 def main() -> int:
-    import importlib
-
+    import __spark_entry__ as e
     from nlp_data_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -53,16 +52,7 @@ def main() -> int:
     names = sys.argv[1:] or GATE11
 
     spark = get_spark("probe-gate11-100x")
-    fns: dict = {}
-    for m in (
-        "relational_ext", "text_analytics", "dedup", "similarity",
-        "nlp_model", "multimodal", "doc_pipeline", "sql_api", "events",
-    ):
-        mod = importlib.import_module(f"nlp_data_pipeline_spark.operators.{m}")
-        fns.update(getattr(mod, "QUERIES", {}))
-        for gate_ops in getattr(mod, "STAGED_QUERIES", {}).values():
-            for op, fn in gate_ops.items():
-                fns.setdefault(op, fn)
+    fns = e.queries()
 
     base = _stage(spark, sf_dir, 1)
     staged = _stage(spark, sf_dir, factor)

@@ -37,7 +37,6 @@ from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.similarity import _knn_graph_nnd
     from nlp_data_pipeline_spark.session import get_spark
     from nlp_data_pipeline_spark.sources.catalog import load_table
@@ -48,10 +47,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_nnd_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_nnd_1000x.json")
     )
     spark = get_spark("probe-nnd-1000x")
 

@@ -42,7 +42,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.similarity import (
         _NND_PACK_CAP,
         _knn_graph_nnd,
@@ -56,10 +55,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_nnd_refine_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_nnd_refine_1000x.json")
     )
     spark = get_spark("probe-nnd-refine-1000x")
 

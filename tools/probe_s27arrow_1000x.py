@@ -35,7 +35,6 @@ from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.similarity import s27_ivfpq_search
     from nlp_data_pipeline_spark.session import get_spark
     from nlp_data_pipeline_spark.sources.catalog import load_table
@@ -46,10 +45,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_s27arrow_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_s27arrow_1000x.json")
     )
     spark = get_spark("probe-s27arrow-1000x")
 

@@ -50,7 +50,6 @@ from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
-    from nlp_data_pipeline_spark import staging
     from nlp_data_pipeline_spark.operators.similarity import (
         _S06_PRODUCTION_CAP,
         _S09_CLUSTER_CAP,
@@ -66,10 +65,7 @@ def main() -> int:
     out_path = (
         sys.argv[1]
         if len(sys.argv) > 1
-        else os.path.join(
-            here,
-            f"probe_semcap_1000x_r{staging.latest_recorded_round() + 1}.json",
-        )
+        else os.path.join(here, "probe_semcap_1000x.json")
     )
     cap = _S06_PRODUCTION_CAP
     k_target = 500  # SemDeDup per-cluster size target (s09 knob rationale)
