@@ -34,66 +34,6 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-# Queries whose physical-plan fingerprint is KNOWN to drift across
-# sessions without any code change — the md5 covers exprId-sensitive
-# text, and these two classes re-derive it nondeterministically. A
-# plan_changed entry for one of these carries its note in the output
-# (VERDICT r10 #4: no unexplained plan_changed rows in the artifact);
-# anything NOT listed here that flips is a real regression signal.
-KNOWN_PLAN_NOISE = {
-    # RewriteDistinctAggregates orders its Expand gid-groups by exprId
-    # hash, so the session's first compile of a mixed distinct+exact agg
-    # can permute instances (documented round 9, COVERAGE.md).
-    "a02_hll_sketch_rollup": "distinct-agg Expand gid instance ordering",
-    # LDA fit memoizes per (sf_dir, params) in-process; whether the memo
-    # is warm changes which plan object the fingerprint reads.
-    "n01_lda_topics": "LDA memo state (warm vs cold fit)",
-    "n02_doc_tags": "LDA memo state (warm vs cold fit)",
-    "n03_topic_metrics": "LDA memo state (warm vs cold fit)",
-    # t41 has FOUR conditional count_distincts, so it rides the same
-    # RewriteDistinctAggregates Expand-instance permutation as a02
-    # (verified round 11: the only diff between a fresh-session and a
-    # warm-session plan is the gid-group column order).
-    "t41_vocab_growth": "distinct-agg Expand gid instance ordering",
-    # q56 (countDistinct file_path + doc_id) and p07 (countDistinct
-    # lang + content hash) carry the same multi-distinct Expand
-    # permutation — verified round 14 by rebuilding each 3x in one
-    # session: the ONLY diff is the Expand gid-group column order
-    # ([_extract_file_path, doc_id] vs [doc_id, _extract_file_path]),
-    # exchange counts identical.
-    "q56_small_file_compaction": "distinct-agg Expand gid instance ordering",
-    "p07_dataset_card": "distinct-agg Expand gid instance ordering",
-    # (q30/q51 carried a one-time entry here for the r11 table-name
-    # normalizer; removed in r12 once bench_full_r11 — the first
-    # post-normalizer baseline — landed, so a future flip in either
-    # query is a real signal again. ADVICE r11.)
-    # (s16/s23/s33 carried a one-time entry here for the r14 BHJ→SMJ
-    # seed-pack flip; removed in r15 per its own retirement note now
-    # that bench_full_r14 is in the diff history — their r15 plan
-    # changes are this round's deliberate NND restructures, documented
-    # with before/after dumps in plans/r15/ and OPTIMIZATION_r15.md.)
-}
-
-# One-time note for the r12 call-site normalizer (below): every query
-# whose plan carries a localCheckpoint scan gets a new md5 against the
-# pre-fix r11 baseline. Self-retiring — applied only while the diff
-# baseline is bench_full_r11 or older, so from r13 a flip in a
-# checkpoint-carrying query is unexplained again unless truly new.
-# ADVICE r12 cross-check (performed round 13): all 28 r11→r12 md5
-# flips carry IDENTICAL struct_md5 AND n_exchanges vs bench_full_r11 —
-# so none of the auto-annotated flips hid a real plan change from the
-# same round's LP-cap/escalation refactor; only the full md5 (which
-# embedded the JVM call site pre-normalizer) moved. The note is
-# self-retiring: ckpt_note_active is False from the first r12-baseline
-# diff, so a checkpoint-carrying flip is unexplained again from r13.
-_CKPT_NOTE = (
-    "one-time: localCheckpoint call-site normalizer added r12 — the "
-    "pre-fix baseline md5 embeds the JVM reflective call site "
-    "(NativeMethodAccessorImpl vs <unknown> after JIT accessor swap), "
-    "the r11 p04/s33/t42 flips"
-)
-
-
 def _prep_multifile(spark, sf_dir: str, n_files: int = 32) -> str:
     """Rewrite the driver's single-file parquet tables as n_files-way
     directories under the temp dir (once, marker-gated) and bench against
@@ -162,6 +102,7 @@ def main() -> int:
     # one timed suite. No fit outlives the process, so a run never
     # starts against a previous run's model.
     from nlp_data_pipeline_spark.operators.nlp_model import reset_fit_cache
+    from nlp_data_pipeline_spark.plans.explain import KNOWN_PLAN_NOISE, plan_fingerprint
     from nlp_data_pipeline_spark.session import codegen_compiles, group_jobs, job_group
 
     PRE_MEASURE = {"n01_lda_topics": reset_fit_cache}
@@ -212,72 +153,8 @@ def main() -> int:
         return t, df, (compiles, group_jobs(spark, group))
 
     def _plan_fingerprint(df) -> dict:
-        """Stable physical-plan identity: expr/plan ids and temp paths
-        normalized away so the SAME plan shape hashes identically across
-        runs/rounds — lets future rounds diff 'did the plan change' per
-        query without storing full explain output."""
         try:
-            from nlp_data_pipeline_spark.plans.explain import formatted_plan
-
-            p = formatted_plan(df)
-            p = re.sub(r"#\d+", "#", p)
-            p = re.sub(r"plan_id=\d+", "plan_id=", p)
-            p = re.sub(r"\[id=#?\d*\]", "", p)
-            p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-            p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-            p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-            # lambda vars carry a session-global counter (x_5, x_7, ...)
-            p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-            # localCheckpoint / Python-created scans embed the session-
-            # global RDD id (MapPartitionsRDD[159]) — pure run noise
-            p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-            # ... and the checkpoint's recorded CALL SITE, which flips
-            # between 'NativeMethodAccessorImpl.java:0' and
-            # '<unknown>:0' once the JVM JIT replaces the reflective
-            # py4j accessor with a generated one mid-session — pure
-            # run-order noise (the r11 p04/s33/t42 plan_changed rows;
-            # same rule as tools/bench_10x.py, where round 11 first
-            # hit it on s33)
-            # ([^,\n], not [^,]: a negated class without \n matches
-            # across lines and would swallow the next plan line's
-            # prefix up to its first comma, masking real diffs in the
-            # region after the checkpoint scan — ADVICE r12)
-            p = re.sub(
-                r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p
-            )
-            # ... and the SAME JIT accessor-swap noise on createDataFrame
-            # scans: `Scan ExistingRDD` embeds `applySchemaToPythonRDD at
-            # NativeMethodAccessorImpl.java:0`, which flips to
-            # `<unknown>:0` once the JVM replaces the reflective py4j
-            # accessor mid-session (observed round 14: n07/p07-class
-            # createDataFrame queries flipping md5 between two
-            # identical-HEAD full-suite runs with identical exchange
-            # counts; fresh-session plans byte-identical).
-            p = re.sub(
-                r"applySchemaToPythonRDD at [^,\n]*",
-                "applySchemaToPythonRDD at <site>",
-                p,
-            )
-            # q30/q51 catalog tables are named <table>_bkt_/_cbo_ +
-            # md5(sf_dir): a PATH-derived identity that leaks into the
-            # scan node title (Scan parquet spark_catalog.default.
-            # orders_bkt_xxxx) and flips whenever the driver regenerates
-            # the testdata (new mtimes -> new prep-dir key). Same
-            # normalization class as the <path> rules above.
-            p = re.sub(r"_(bkt|cbo)_[0-9a-f]{6,12}", r"_\1_<key>", p)
-            return {
-                "plan_md5": hashlib.md5(p.encode()).hexdigest()[:12],
-                # checkpoint-scan count: lets the one-time _CKPT_NOTE
-                # annotation self-scope to the queries the r12 call-site
-                # normalizer actually re-hashed
-                "n_ckpt": p.count("localCheckpoint at <site>"),
-                "n_exchanges": p.count("Exchange"),
-                # ReusedExchange = a shuffle COMPUTED ONCE and read twice
-                # (self-joins); counted inside n_exchanges above, so
-                # real shuffle work = n_exchanges - n_reused
-                "n_reused": p.count("ReusedExchange"),
-                "n_python": p.count("Python") + p.count("ArrowEval"),
-            }
+            return plan_fingerprint(df)
         except Exception:
             return {"plan_md5": None, "n_exchanges": None, "n_python": None}
 
@@ -295,16 +172,12 @@ def main() -> int:
         for p in _glob.glob(os.path.join(here, "bench_full_r*.json"))
         if (m := re.search(r"bench_full_r(\d+)\.json$", p))
     ]
-    baseline_round = max(prev_files)[0] if prev_files else None
     if prev_files:
         try:
             with open(max(prev_files)[1]) as f:
                 prev_plans = json.load(f).get("queries", {})
         except Exception:
             prev_plans = {}
-    # the call-site normalizer landed in r12, so only diffs against a
-    # PRE-fix baseline (r11 or older) earn the one-time note
-    ckpt_note_active = baseline_round is not None and baseline_round <= 11
 
     def _plan_stable(name: str, fp: dict):
         """True/False vs previous round; None when no prior fingerprint
@@ -365,13 +238,9 @@ def main() -> int:
         # a plan_changed entry absent from this dict is unexplained and
         # deserves investigation.
         "plan_change_notes": {
-            k: KNOWN_PLAN_NOISE.get(k, _CKPT_NOTE)
+            k: KNOWN_PLAN_NOISE[k]
             for k, v in stability.items()
-            if v is False
-            and (
-                k in KNOWN_PLAN_NOISE
-                or (ckpt_note_active and full.get(k, {}).get("n_ckpt"))
-            )
+            if v is False and k in KNOWN_PLAN_NOISE
         },
         # physical-layout provenance: numbers measured after the
         # multi-file prep are NOT comparable to timings on the driver's

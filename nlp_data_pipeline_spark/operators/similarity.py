@@ -665,13 +665,13 @@ ORDER BY b.query_id
 # (test_s09_exact_duplicates_dedup_at_any_k).
 # --------------------------------------------------------------------------
 # Assignment escalation threshold (round 13): past this many centroids
-# the row_number-window assignment is swapped for a map-side-combined
-# max_by argmax (exact same result — see _s09_assign). k is the honest
-# corpus-size proxy here because the scale knob sets k = n/target, so a
-# big corpus always arrives with big k; deciding on k alone keeps the
-# declared tier free of an extra count() job. Same two-tier shape as
+# the row_number-window assignment is swapped for the Arrow-BLAS argmax
+# (same result — see _s09_assign). k is the honest corpus-size proxy
+# here because the scale knob sets k = n/target, so a big corpus always
+# arrives with big k; deciding on k alone keeps the declared tier free
+# of an extra count() job. Same two-tier shape as
 # dedup._neardup_components (label propagation → alternating stars).
-_S09_ASSIGN_MAXBY_K = 1024
+_S09_ASSIGN_ARROW_K = 1024
 
 # Production per-cluster pair cap (same family as _D18_PRODUCTION_CAP /
 # _S06_PRODUCTION_CAP): past this cluster size the within-cluster
@@ -694,8 +694,8 @@ _S09_CLUSTER_CAP = 1024
 def _s09_assign_arrow(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Arrow-batched BLAS argmax assignment — the production tier.
 
-    The Catalyst tiers below compute each (vector, centroid) cosine as
-    a higher-order aggregate fold, measured this round at ~2.7k
+    The window tier (_s09_assign) computes each (vector, centroid)
+    cosine as a higher-order aggregate fold, measured this round at ~2.7k
     pairs/s/core — at 2M vectors × 4000 centroids (8e9 pairs) that is
     CPU-months. This kernel broadcasts the centroid matrix (bounded:
     k rows IS the model state, the n05/s01 collect class) and scores
@@ -752,85 +752,40 @@ def _s09_assign_arrow(e: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _s09_assign(
-    e: DataFrame, cents: DataFrame, k: int, use_arrow: bool | None
-) -> DataFrame:
+def _s09_assign(e: DataFrame, cents: DataFrame, k: int) -> DataFrame:
     """Nearest-centroid argmax over (cos DESC, centroid_id ASC).
 
-    Three tiers, coarsest first:
-    - declared (k ≤ _S09_ASSIGN_MAXBY_K, use_arrow not forced):
-      broadcast nested-loop join + row_number window — n·k scored rows
-      shuffle into the per-vec_id sort. Bit-exact vs the DuckDB oracle.
-    - max_by (k above the cap, numpy unavailable or use_arrow=False):
-      the SAME join feeds a map-side-combined max_by aggregate, so the
-      shuffle carries n partial maxima instead of n·k scored rows (at
-      2M vectors × 4000 centroids: an n-row hash aggregate vs a ~4 TB
-      window sort). max_by on struct(cos, -centroid_id) is the exact
-      argmax the window's (cos DESC, centroid_id ASC) row_number picks,
-      NaN ordering included — test_s09_maxby_assignment_parity. Exact
-      but still pays the per-pair fold cost.
-    - arrow (k above the cap and numpy importable, or use_arrow=True):
-      _s09_assign_arrow — matmul throughput, the tier the round-13
-      1000x probe executes.
+    Two tiers, chosen by k:
+    - window (k ≤ _S09_ASSIGN_ARROW_K, the declared tier): broadcast
+      nested-loop join + row_number window — n·k scored rows shuffle
+      into the per-vec_id sort. Bit-exact vs the DuckDB oracle.
+    - arrow (k above the threshold): _s09_assign_arrow — matmul
+      throughput and an n-row result instead of an n·k window sort,
+      the tier the round-13 1000x probe executes.
     """
-    if use_arrow is None:
-        use_arrow = k > _S09_ASSIGN_MAXBY_K and _has_numpy()
-    if use_arrow:
+    if k > _S09_ASSIGN_ARROW_K:
         _log_tier("s09_assign", "arrow")
         return _s09_assign_arrow(e, cents)
+    _log_tier("s09_assign", "window")
     ccos = dot("cemb", "emb") / (norm("cemb") * norm("emb"))
-    _log_tier("s09_assign", "window" if k <= _S09_ASSIGN_MAXBY_K else "max_by")
-    if k <= _S09_ASSIGN_MAXBY_K:
-        wv = Window.partitionBy("vec_id").orderBy(
-            F.desc("cos"), F.asc("centroid_id")
-        )
-        return (
-            e.join(F.broadcast(cents))
-            .select("vec_id", "emb", "centroid_id", ccos.alias("cos"))
-            .withColumn("r", F.row_number().over(wv))
-            .filter(F.col("r") == 1)
-            .select(
-                "vec_id", "emb", norm(F.col("emb")).alias("nrm"), "centroid_id"
-            )
-        )
-    best = (
+    wv = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
+    return (
         e.join(F.broadcast(cents))
-        .select("vec_id", ccos.alias("cos"), "centroid_id")
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "centroid_id", F.struct(F.col("cos"), -F.col("centroid_id"))
-            ).alias("centroid_id")
-        )
+        .select("vec_id", "emb", "centroid_id", ccos.alias("cos"))
+        .withColumn("r", F.row_number().over(wv))
+        .filter(F.col("r") == 1)
+        .select("vec_id", "emb", norm(F.col("emb")).alias("nrm"), "centroid_id")
     )
-    return e.join(best, "vec_id").select(
-        "vec_id", "emb", norm(F.col("emb")).alias("nrm"), "centroid_id"
-    )
-
-
-def _has_numpy() -> bool:
-    try:
-        import numpy  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 _LOG = logging.getLogger("nlp_data_pipeline_spark.similarity")
 
 
 def _log_tier(op: str, tier: str) -> None:
-    """Record which kernel tier an auto-selecting operator chose.
-
-    With ``use_arrow=None`` the Arrow/Catalyst choice depends on numpy
-    importability in the environment (ADVICE r13): the Arrow float64
-    matmul and the Catalyst higher-order fold differ only in float
-    summation order (~1 ulp), which can flip a verdict solely on a
-    cosine tie exactly at the tau boundary. Logging the selected tier
-    makes any such environment-dependent flip diagnosable from the run
-    log instead of invisible.
-    """
+    """Record which kernel tier an auto-selecting operator chose: Arrow
+    and Catalyst tiers differ in float summation order (~1 ulp), so a
+    verdict that flips on an exact cosine tie is traceable to its tier
+    from the run log."""
     _LOG.info("%s kernel tier: %s", op, tier)
 
 
@@ -886,20 +841,17 @@ def s09_semantic_dedup(
     sf_dir: str,
     n_centroids: int | None = None,
     cluster_cap: int | None = None,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """SemDeDup: cluster-confined near-duplicate marking (header above).
 
-    Kernel-tier note (ADVICE r13): with ``use_arrow=None`` the
-    assignment and small-cluster-count kernels auto-select the Arrow
-    BLAS tier when numpy is importable (above _S09_ASSIGN_MAXBY_K for
-    assignment; always for capped counts). Arrow and Catalyst tiers
-    differ only in float summation order (~1 ulp), so a keep/drop
-    verdict can differ across environments ONLY for a pair whose
-    cosine ties exactly at NEARDUP_TAU — parity is pinned on the test
-    corpus (test_s09_arrow_assignment_parity) and the selected tier is
-    logged per run via _log_tier for auditability. Pass use_arrow
-    explicitly to pin the kernel regardless of environment.
+    Kernel tiers follow the input: assignment goes Arrow-BLAS above
+    _S09_ASSIGN_ARROW_K centroids, and capped small-cluster counts are
+    always Arrow-BLAS. Arrow and Catalyst tiers differ only in float
+    summation order (~1 ulp), so a keep/drop verdict can differ between
+    tiers ONLY for a pair whose cosine ties exactly at NEARDUP_TAU —
+    parity is pinned on the test corpus
+    (test_s09_arrow_assignment_parity) and the selected tier is logged
+    per run via _log_tier.
     """
     k = N_CENTROIDS if n_centroids is None else n_centroids
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -912,11 +864,11 @@ def s09_semantic_dedup(
     # norm() inside the pair expression, but ~3× less per-pair work),
     # and the assignment subtree is cached — it feeds the pair join
     # twice plus the final keep-join, and is only n_vectors rows.
-    assigned = _s09_assign(e, cents, k, use_arrow).cache()
-    a = assigned.alias("a")
-    b = assigned.alias("b")
-    pcos = dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
+    assigned = _s09_assign(e, cents, k).cache()
     if cluster_cap is None:
+        a = assigned.alias("a")
+        b = assigned.alias("b")
+        pcos = dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm"))
         dups = (
             a.join(
                 b,
@@ -938,23 +890,7 @@ def s09_semantic_dedup(
         )
         sized = assigned.join(stats, "centroid_id")
         sm = sized.filter(F.col("c_size") <= cluster_cap)
-        if use_arrow or (use_arrow is None and _has_numpy()):
-            _log_tier("s09_small_cluster_counts", "arrow")
-            counts_small = _s09_small_cluster_counts_arrow(sm, NEARDUP_TAU)
-        else:
-            _log_tier("s09_small_cluster_counts", "catalyst")
-            sma, smb = sm.alias("a"), sm.alias("b")
-            counts_small = (
-                sma.join(
-                    smb,
-                    (F.col("a.centroid_id") == F.col("b.centroid_id"))
-                    & (F.col("b.vec_id") < F.col("a.vec_id")),
-                )
-                .select(F.col("a.vec_id").alias("vec_id"), pcos.alias("cos"))
-                .filter(F.col("cos") >= NEARDUP_TAU)
-                .groupBy("vec_id")
-                .agg(F.count(F.lit(1)).alias("n_lower_neardups"))
-            )
+        counts_small = _s09_small_cluster_counts_arrow(sm, NEARDUP_TAU)
         big = sized.filter(F.col("c_size") > cluster_cap)
         hubs = big.filter(F.col("vec_id") == F.col("hub_id")).select(
             F.col("centroid_id"),
@@ -1868,12 +1804,11 @@ NND_ROUNDS = 1
 NND_BLOCK_TARGET = 256  # vectors per cluster-local seed block
 NND_ASSIGN_PROBE = 2  # clusters each vector seeds into (IVF multi-probe)
 # Seed tier (round 15, VERDICT r14 #1): the fused Arrow seed-pack
-# (_nnd_seed_pack_arrow) is the default whenever numpy is present —
-# at every scale it replaces the window-tier assignment (whose
-# n·k_build = n²/256 HOF-fold cosines through a per-vec_id sort were
-# the round-13 escalation hazard) AND the assignment ⋈ embeddings
-# sort-merge join with one chunked-BLAS map stage + one groupBy(cid).
-# The window tier remains as the no-numpy fallback.
+# (_nnd_seed_pack_arrow) is the only seed path — at every scale it
+# replaces a row_number-window assignment (whose n·k_build = n²/256
+# HOF-fold cosines through a per-vec_id sort were the round-13
+# escalation hazard) AND the assignment ⋈ embeddings sort-merge join
+# with one chunked-BLAS map stage + one groupBy(cid).
 _KNUTH = 2654435761
 
 
@@ -1887,8 +1822,8 @@ def _nnd_seed_pack_arrow(e: DataFrame, cents: DataFrame, probe: int) -> DataFram
     assignment ⋈ embeddings sort-merge join (measured 1.14 s → 0.35 s
     for the forced seed pack at sf0.1). Columns sit in cid-ascending
     order and top-k is taken by repeated masked argmax, whose
-    first-max IS the (ccos DESC, cid ASC) tie-break of the window
-    tier — row-for-row parity pinned by
+    first-max IS the (ccos DESC, cid ASC) window tie-break — row-for-
+    row parity with a Catalyst window reference is pinned by
     test_nnd_seed_pack_arrow_parity."""
     import numpy as np
     import pandas as pd
@@ -2015,13 +1950,14 @@ _NND_REFINE_PACKED_N = 100_000
 # Blocks keep their cap lowest-id neighbors (deterministic, and under
 # the pileup shape the low-id members ARE the true near-neighbors);
 # 256 = ~10x benign closed-neighborhood size, so the cap is the
-# identity off the hazard shape (test_nnd_refine_packed_parity).
+# identity off the hazard shape (the refine-tier parity test in
+# tests/test_round14_ops.py).
 # Recall trade on capped blocks is observable per run: the 1000x probe
 # reports n_capped_blocks (no silent caps).
 _NND_PACK_CAP = 256
 
 
-def _nnd_refine_packed(
+def _nnd_refine_local_join(
     e: DataFrame, g: DataFrame, cap: int = _NND_PACK_CAP
 ) -> DataFrame:
     """One NN-descent refine round's candidate scoring by per-node
@@ -2039,7 +1975,7 @@ def _nnd_refine_packed(
     replaces per-row einsum. Duplicate pairs across blocks collapse by
     max (the seed tier's ulp rule); the mirrored union restores both
     directions for _topm_per_src. Top-m parity with the pair-join
-    tier is pinned by test_nnd_refine_packed_parity."""
+    tier is pinned in tests/test_round14_ops.py."""
     import numpy as np
     import pandas as pd
 
@@ -2107,7 +2043,6 @@ def _nnd_state(
     m: int = GRAPH_M,
     keep_topm: bool = False,
     rounds: int | None = None,
-    refine_packed: bool | None = None,
     e: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """APPROXIMATE M-NN build via NN-descent — the linear-cost index
@@ -2152,7 +2087,7 @@ def _nnd_state(
          Two scoring tiers: the declared pair-join (one self-join +
          _score_pairs, linear in candidates) and, past
          _NND_REFINE_PACKED_N vectors, the packed local-join
-         (_nnd_refine_packed) — same candidate coverage at ~40x less
+         (_nnd_refine_local_join) — same candidate coverage at ~40x less
          Arrow traffic with the hub-degree cap; tier logged,
          parity pinned (round 14, VERDICT r13 #4).
 
@@ -2182,42 +2117,9 @@ def _nnd_state(
     import numpy as np
     import pandas as pd
 
-    if _has_numpy():
-        # fused Arrow seed-pack (round 15): assignment and pack in one
-        # map stage + one groupBy(cid) — see _nnd_seed_pack_arrow.
-        _log_tier("nnd_seed", "fused-arrow")
-        packed = _nnd_seed_pack_arrow(e, cents, NND_ASSIGN_PROBE)
-    else:
-        _log_tier("nnd_seed", "window-join")
-        ccos = dot("cemb", "emb") / (norm("cemb") * norm("emb"))
-        wassign = Window.partitionBy("vec_id").orderBy(
-            F.desc("ccos"), F.asc("cid")
-        )
-        assign = (
-            e.join(F.broadcast(cents))
-            .select("vec_id", "cid", ccos.alias("ccos"))
-            .withColumn("r", F.row_number().over(wassign))
-            .filter(F.col("r") <= NND_ASSIGN_PROBE)
-            .select("vec_id", "cid")
-        )
-        vecs = F.collect_list(F.struct("vec_id", "emb")).alias("vecs")
-        packed = (
-            # assignment ⋈ embeddings: both corpus-sized (ADVICE-r09
-            # rule) — force sort-merge. Catalyst's file-bytes estimate
-            # put the 2M-row embedding side under the 64 MB broadcast
-            # threshold at 1000x (rep-ordered staging compresses ~10x)
-            # and the ~1.5 GB deserialized broadcast OOMed an
-            # already-loaded driver heap (round-14 refine probe).
-            assign.join(e.hint("merge"), "vec_id")
-            .groupBy("cid")
-            .agg(vecs)
-            .select(
-                F.transform("vecs", lambda v: v["vec_id"]).alias("ids"),
-                F.flatten(F.transform("vecs", lambda v: v["emb"])).alias(
-                    "flat"
-                ),
-            )
-        )
+    # fused Arrow seed-pack (round 15): assignment and pack in one map
+    # stage + one groupBy(cid) — see _nnd_seed_pack_arrow.
+    packed = _nnd_seed_pack_arrow(e, cents, NND_ASSIGN_PROBE)
 
     def block_topm(batches):
         for pdf in batches:
@@ -2285,18 +2187,17 @@ def _nnd_state(
     # box); round 14's packed local-join tier below makes full refine
     # rounds executable at that scale too (probe_nnd_refine_1000x).
     n_rounds = NND_ROUNDS if rounds is None else rounds
-    if refine_packed is None:
-        refine_packed = n > _NND_REFINE_PACKED_N and _has_numpy()
+    local_join = n > _NND_REFINE_PACKED_N
     if n_rounds > 0:
-        _log_tier("nnd_refine", "packed" if refine_packed else "pair-join")
+        _log_tier("nnd_refine", "packed" if local_join else "pair-join")
     for r in range(n_rounds):
-        if refine_packed:
-            # local-join tier (_nnd_refine_packed): same candidate
+        if local_join:
+            # local-join tier (_nnd_refine_local_join): same candidate
             # coverage — {current edges} ∪ {nodes sharing a neighbor}
             # == all pairs within closed neighborhoods — at ~40x less
             # Arrow traffic and with the hub-degree cap bounding the
             # Σdeg² hazard the self-join below hits head-on.
-            scored = _nnd_refine_packed(e, g)
+            scored = _nnd_refine_local_join(e, g)
         else:
             g2 = g.select(F.col("src").alias("mid"), F.col("dst"))
             nofn = (
@@ -2326,7 +2227,6 @@ def _knn_graph_nnd(
     sf_dir: str,
     m: int = GRAPH_M,
     rounds: int | None = None,
-    refine_packed: bool | None = None,
     e: DataFrame | None = None,
 ) -> DataFrame:
     """The NSW graph s16 searches: the NND undirected closure plus the
@@ -2342,9 +2242,7 @@ def _knn_graph_nnd(
     build already IS that union (g = sym(seed ∪ links), pinned), so it
     is returned as-is instead of re-deriving an equal set."""
     n_rounds = NND_ROUNDS if rounds is None else rounds
-    topm, g, links = _nnd_state(
-        spark, sf_dir, m, rounds=n_rounds, refine_packed=refine_packed, e=e
-    )
+    topm, g, links = _nnd_state(spark, sf_dir, m, rounds=n_rounds, e=e)
     if n_rounds == 0:
         return g
     return _undirected(topm.union(links))
@@ -3502,7 +3400,7 @@ def s27_ivfpq_search(
 ) -> DataFrame:
     """use_arrow (round 14): the production swap for the two
     corpus-scaled scoring loops — coarse assignment via the s09 Arrow
-    argmax kernel (_s09_assign, exact-parity pinned in round 13) and
+    argmax kernel (_s09_assign_arrow, exact-parity pinned in round 13) and
     PQ encoding via _pq_encode_arrow. False keeps the declared/oracle
     expression tree byte-stable (the d32 `cap` contract); the 1000x
     probe runs True, and tier parity on the declared corpus is pinned
@@ -3518,9 +3416,7 @@ def s27_ivfpq_search(
     wv = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("centroid_id"))
     if use_arrow:
         _log_tier("s27_assign", "arrow")
-        assigned = _s09_assign(e, cents, N_CENTROIDS, use_arrow=True).select(
-            "vec_id", "centroid_id"
-        )
+        assigned = _s09_assign_arrow(e, cents).select("vec_id", "centroid_id")
     else:
         assigned = (
             e.join(F.broadcast(cents))

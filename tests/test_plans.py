@@ -528,3 +528,23 @@ def test_sf_scaled_relations_respect_broadcast_threshold(spark, sf_dir):
         assert all("SortMergeJoin" in l for l in j55), j55
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_plan_fingerprint_is_stable_and_strips_run_noise(spark, sf_dir):
+    """One query built twice in one session hashes to one plan_md5
+    (fresh exprIds every build), and the run-noise rules blank a
+    path-derived `_bkt_<hex>` table name and a checkpoint call site."""
+    from nlp_data_pipeline_spark.plans.explain import normalize_plan, plan_fingerprint
+
+    first = plan_fingerprint(relational.q05_regional_revenue(spark, sf_dir))
+    second = plan_fingerprint(relational.q05_regional_revenue(spark, sf_dir))
+    assert first == second and first["n_exchanges"] > 0
+
+    text = (
+        "Scan parquet spark_catalog.default.orders_bkt_0a1b2c3d4e\n"
+        "Scan ExistingRDD [id#12] localCheckpoint at NativeMethodAccessorImpl.java:0, x\n"
+    )
+    norm = normalize_plan(text)
+    assert "orders_bkt_<key>" in norm and "0a1b2c3d4e" not in norm
+    assert "localCheckpoint at <site>, x" in norm and "Native" not in norm
+    assert "[id#]" in norm

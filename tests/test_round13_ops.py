@@ -9,9 +9,9 @@ argmax CONCENTRATES replicas into few clusters, so the within-cluster
 clique is quadratic regardless of k. Two production tiers fix it,
 both exercised here and by tools/probe_semcap_1000x.py:
 
-  - _s09_assign escalation (k > _S09_ASSIGN_MAXBY_K): max_by argmax
-    with map-side partial aggregation — EXACT parity with the window
-    tier (same cos expression, same tie-break), n-row shuffle.
+  - _s09_assign escalation (k > _S09_ASSIGN_ARROW_K): Arrow-BLAS
+    argmax — row-for-row parity with the window tier (same
+    tie-break, float64 matmul), n-row result instead of an n·k sort.
   - cluster_cap: per-cluster star to the min-vec_id hub past the cap —
     subset-of-clique pairs, keep/drop errs toward keeping, exact
     duplicates still all drop (the d18/s06 star-cap family).
@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from nlp_data_pipeline_spark.operators import similarity
 from nlp_data_pipeline_spark.operators.similarity import (
-    _S09_ASSIGN_MAXBY_K,
+    _S09_ASSIGN_ARROW_K,
     _S09_CLUSTER_CAP,
     s09_semantic_dedup,
 )
@@ -38,23 +38,19 @@ def _rows(df):
     )
 
 
-def test_s09_maxby_assignment_parity(spark, sf_dir, monkeypatch):
-    """The escalated max_by assignment returns row-for-row the same
-    relation as the declared window tier — same argmax, same
-    tie-break, bit-identical cos arithmetic."""
-    want = _rows(s09_semantic_dedup(spark, sf_dir))
-    monkeypatch.setattr(similarity, "_S09_ASSIGN_MAXBY_K", 0)
-    got = _rows(s09_semantic_dedup(spark, sf_dir, use_arrow=False))
-    assert got == want and len(got) > 0
-
-
-def test_s09_arrow_assignment_parity(spark, sf_dir):
+def test_s09_arrow_assignment_parity(spark, sf_dir, monkeypatch):
     """The Arrow-BLAS production assignment (float64 matmul argmax)
     matches the declared window tier row-for-row on the test corpus —
     summation-order drift (~1 ulp) can flip an argmax only on a
-    cosine tie that tight, and the corpus has none."""
+    cosine tie that tight, and the corpus has none. The tier is forced
+    by its size threshold, and the plan shows it ran."""
+    from nlp_data_pipeline_spark.plans.explain import formatted_plan
+
     want = _rows(s09_semantic_dedup(spark, sf_dir))
-    got = _rows(s09_semantic_dedup(spark, sf_dir, use_arrow=True))
+    monkeypatch.setattr(similarity, "_S09_ASSIGN_ARROW_K", 0)
+    df = s09_semantic_dedup(spark, sf_dir)
+    assert "MapInPandas" in formatted_plan(df)
+    got = _rows(df)
     assert got == want and len(got) > 0
 
 
@@ -65,18 +61,6 @@ def test_s09_declared_tier_stays_catalyst(spark, sf_dir):
 
     plan = formatted_plan(s09_semantic_dedup(spark, sf_dir))
     assert "MapInPandas" not in plan and "Python" not in plan
-
-
-def test_s09_maxby_tier_avoids_the_nk_window(spark, sf_dir, monkeypatch):
-    """The escalated tier's plan has no Window operator and carries a
-    partial_max_by — the n·k rows die in the map-side combine instead
-    of shuffling into a per-vec_id sort."""
-    from nlp_data_pipeline_spark.plans.explain import formatted_plan
-
-    monkeypatch.setattr(similarity, "_S09_ASSIGN_MAXBY_K", 0)
-    plan = formatted_plan(s09_semantic_dedup(spark, sf_dir, use_arrow=False))
-    assert "Window" not in plan
-    assert "max_by" in plan
 
 
 def test_s09_cluster_cap_identity_when_no_cluster_exceeds_it(spark, sf_dir):
@@ -158,17 +142,17 @@ def test_s09_cluster_cap_star_semantics_on_pileup(spark, pileup_dir):
 
 
 def test_s09_production_constants_are_live(spark, sf_dir, monkeypatch):
-    """_S09_CLUSTER_CAP / _S09_ASSIGN_MAXBY_K are the wired production
+    """_S09_CLUSTER_CAP / _S09_ASSIGN_ARROW_K are the wired production
     knobs (ADVICE r11/r12 on _S06_PRODUCTION_CAP: caps must be
     exercised, not implied): the probe passes them through, and on the
     benign declared corpus the production cap is the identity."""
     want = _rows(s09_semantic_dedup(spark, sf_dir))
-    monkeypatch.setattr(similarity, "_S09_ASSIGN_MAXBY_K", 0)
+    monkeypatch.setattr(similarity, "_S09_ASSIGN_ARROW_K", 0)
     got = _rows(
         s09_semantic_dedup(spark, sf_dir, cluster_cap=_S09_CLUSTER_CAP)
     )
     assert got == want
-    assert _S09_ASSIGN_MAXBY_K >= 64  # declared tier stays on the window
+    assert _S09_ASSIGN_ARROW_K >= 64  # declared tier stays on the window
     assert _S09_CLUSTER_CAP >= 2 * 500  # cap clears the SemDeDup
     # target cluster size (the probe's k knob), so the star engages
     # only on genuine pileups, never on benign clusters
@@ -272,13 +256,42 @@ def test_d32_cap_preserves_pileup_verdicts(spark, neardup_delta_dir):
 # n²/256 HOF cosine folds; round 15 fused assignment and pack into one
 # Arrow stage and made it the default tier, VERDICT r14 #1).
 # ---------------------------------------------------------------------------
+def _nnd_seed_pack_window(e, cents, probe):
+    """Catalyst reference for similarity._nnd_seed_pack_arrow: top-probe
+    centroids per vector by a (ccos DESC, cid ASC) row_number window,
+    then the assignment ⋈ embeddings join packed per cid into
+    (ids, flat)."""
+    from pyspark.sql.window import Window
+
+    from nlp_data_pipeline_spark.operators.similarity import dot, norm
+
+    ccos = dot("cemb", "emb") / (norm("cemb") * norm("emb"))
+    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cid"))
+    assign = (
+        e.join(F.broadcast(cents))
+        .select("vec_id", "cid", ccos.alias("ccos"))
+        .withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= probe)
+        .select("vec_id", "cid")
+    )
+    vecs = F.collect_list(F.struct("vec_id", "emb")).alias("vecs")
+    return (
+        assign.join(e, "vec_id")
+        .groupBy("cid")
+        .agg(vecs)
+        .select(
+            F.transform("vecs", lambda v: v["vec_id"]).alias("ids"),
+            F.flatten(F.transform("vecs", lambda v: v["emb"])).alias("flat"),
+        )
+    )
+
+
 def test_nnd_seed_pack_arrow_parity(spark, sf_dir, monkeypatch):
-    """The fused Arrow seed-pack (the default tier) reproduces the
-    whole NND state (top-m, graph, links) row-for-row vs the
-    window-join fallback: the masked argmax over cid-ascending columns
-    is exactly the window tier's (ccos DESC, cid ASC) order, and the
-    groupBy(cid) pack holds the same block membership as the
-    assignment ⋈ embeddings join."""
+    """The fused Arrow seed-pack reproduces the whole NND state (top-m,
+    graph, links) row-for-row vs a Catalyst window-join reference: the
+    masked argmax over cid-ascending columns is exactly the window's
+    (ccos DESC, cid ASC) order, and the groupBy(cid) pack holds the
+    same block membership as the assignment ⋈ embeddings join."""
     from nlp_data_pipeline_spark.operators.similarity import _nnd_state
 
     def _g(t):
@@ -289,9 +302,9 @@ def test_nnd_seed_pack_arrow_parity(spark, sf_dir, monkeypatch):
             sorted(tuple(r) for r in links.collect()),
         )
 
-    got = _g(_nnd_state(spark, sf_dir))  # fused-arrow (numpy present)
-    monkeypatch.setattr(similarity, "_has_numpy", lambda: False)
-    want = _g(_nnd_state(spark, sf_dir))  # window-join fallback tier
+    got = _g(_nnd_state(spark, sf_dir))
+    monkeypatch.setattr(similarity, "_nnd_seed_pack_arrow", _nnd_seed_pack_window)
+    want = _g(_nnd_state(spark, sf_dir))
     assert got == want and len(got[0]) > 0
 
 

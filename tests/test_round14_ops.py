@@ -13,22 +13,25 @@ def _topm_rows(t):
     return sorted(tuple(r) for r in topm.collect())
 
 
-def test_nnd_refine_packed_parity(spark, sf_dir):
+def test_nnd_refine_packed_parity(spark, sf_dir, monkeypatch):
     """The packed local-join tier reproduces the pair-join refine's
     final top-m EXACTLY on the test corpus: candidate coverage is
     identical ({current edges} ∪ {nodes sharing a neighbor} == all
     pairs within closed neighborhoods), the degree cap (256, ~10x the
     benign closed-neighborhood size) never fires, and the gram-matmul
     cosines match the einsum row-dots through the (cos DESC, dst ASC)
-    tie-break."""
-    from nlp_data_pipeline_spark.operators.similarity import _nnd_state
+    tie-break. Each tier is forced by the size threshold: the real
+    value keeps the test corpus on pair-join, 0 sends it to packed."""
+    from nlp_data_pipeline_spark.operators.similarity import (
+        _NND_REFINE_PACKED_N,
+        _nnd_state,
+    )
+    from nlp_data_pipeline_spark.sources.catalog import load_table
 
-    want = _topm_rows(
-        _nnd_state(spark, sf_dir, keep_topm=True, refine_packed=False)
-    )
-    got = _topm_rows(
-        _nnd_state(spark, sf_dir, keep_topm=True, refine_packed=True)
-    )
+    assert load_table(spark, sf_dir, "embeddings").count() <= _NND_REFINE_PACKED_N
+    want = _topm_rows(_nnd_state(spark, sf_dir, keep_topm=True))
+    monkeypatch.setattr(similarity, "_NND_REFINE_PACKED_N", 0)
+    got = _topm_rows(_nnd_state(spark, sf_dir, keep_topm=True))
     assert got == want and len(got) > 0
 
 
@@ -38,7 +41,7 @@ def test_nnd_refine_packed_scoring_covers_pair_join_candidates(spark, sf_dir):
     packed round too (both directions), with cosine equal to within
     BLAS summation-order ulp."""
     from nlp_data_pipeline_spark.operators.similarity import (
-        _nnd_refine_packed,
+        _nnd_refine_local_join,
         _score_pairs,
         _undirected,
         _nnd_state,
@@ -65,7 +68,7 @@ def test_nnd_refine_packed_scoring_covers_pair_join_candidates(spark, sf_dir):
     }
     packed_scored = {
         (r["src"], r["dst"]): r["cos"]
-        for r in _nnd_refine_packed(e, g).collect()
+        for r in _nnd_refine_local_join(e, g).collect()
     }
     missing = set(pair_scored) - set(packed_scored)
     assert missing == set()
@@ -80,7 +83,7 @@ def test_nnd_refine_packed_cap_bounds_blocks(spark, sf_dir):
     the d18-family contract that the cap bounds work without breaking
     the pipeline."""
     from nlp_data_pipeline_spark.operators.similarity import (
-        _nnd_refine_packed,
+        _nnd_refine_local_join,
         _nnd_state,
         as_double,
     )
@@ -90,7 +93,7 @@ def test_nnd_refine_packed_cap_bounds_blocks(spark, sf_dir):
         "vec_id", as_double("embedding").alias("emb")
     )
     _topm, g, _links = _nnd_state(spark, sf_dir, rounds=0)
-    scored = _nnd_refine_packed(e, g, cap=4)
+    scored = _nnd_refine_local_join(e, g, cap=4)
     rows = scored.collect()
     assert len(rows) > 0
     # mirrored emission: every scored pair present in both directions

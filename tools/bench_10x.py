@@ -25,10 +25,8 @@ Env:    SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import re
 import sys
 import tempfile
 import time
@@ -183,47 +181,7 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _fingerprint(df) -> tuple[str, str, int]:
-    from nlp_data_pipeline_spark.plans.explain import formatted_plan
-
-    p = formatted_plan(df)
-    p = re.sub(r"#\d+", "#", p)
-    p = re.sub(r"plan_id=\d+", "plan_id=", p)
-    p = re.sub(r"\[id=#?\d*\]", "", p)
-    # normalize DATA LOCATIONS, not just /tmp: the whole point is
-    # comparing the same query over two different directories
-    p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-    # lambda variables carry a session-global counter (x_5, x_7, ...)
-    # that differs between plan INSTANCES of the same query
-    p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-    # localCheckpoint / Python-created scans embed the session-global
-    # RDD id (MapPartitionsRDD[159]) — pure run noise
-    p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-    # the checkpoint's recorded CALL SITE flips between
-    # 'NativeMethodAccessorImpl.java:0' and '<unknown>:0' once the JVM
-    # JIT inlines the reflective py4j frame — run-order noise, not a
-    # plan change (burned a false plan_stable=false on s33)
-    p = re.sub(r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p)
-    # JIT accessor-swap noise on createDataFrame scans (round 14; same
-    # class as the localCheckpoint call-site rule above)
-    p = re.sub(
-        r"applySchemaToPythonRDD at [^,\n]*",
-        "applySchemaToPythonRDD at <site>",
-        p,
-    )
-    # structural hash: data-DEPENDENT constants legitimately differ
-    # between scales (s19 folds 1/n into its PageRank init, s20 its
-    # corpus size into scan_fraction) — stability means same TREE, so
-    # the verdict hash blanks numeric literals; the full md5 is still
-    # reported for exact-plan comparisons at one scale.
-    p_struct = re.sub(r"-?\d+(\.\d+)?([Ee][+-]?\d+)?", "N", p)
-    return (
-        hashlib.md5(p.encode()).hexdigest()[:12],
-        hashlib.md5(p_struct.encode()).hexdigest()[:12],
-        p.count("Exchange"),
-    )
+_FP_KEYS = ("plan_md5", "struct_md5", "n_exchanges")
 
 
 def _stage(spark, sf_dir: str, factor: int) -> str:
@@ -340,6 +298,7 @@ def _stage(spark, sf_dir: str, factor: int) -> str:
 
 def main() -> int:
     import __spark_entry__ as e
+    from nlp_data_pipeline_spark.plans.explain import plan_fingerprint
     from nlp_data_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -377,13 +336,8 @@ def main() -> int:
         row = {}
         for tag, d in (("1x", base), (f"{factor}x", staged)):
             t = min(_timed(fn, d), _timed(fn, d))  # min-of-2 vs host noise
-            md5, smd5, nex = _fingerprint(fn(spark, d))
-            row[tag] = {
-                "sec": round(t, 2),
-                "plan_md5": md5,
-                "struct_md5": smd5,
-                "n_exchanges": nex,
-            }
+            fp = plan_fingerprint(fn(spark, d))
+            row[tag] = {"sec": round(t, 2), **{k: fp[k] for k in _FP_KEYS}}
         if row["1x"]["struct_md5"] != row[f"{factor}x"]["struct_md5"]:
             # Re-fingerprint BOTH scales from fresh plan instances before
             # declaring instability: RewriteDistinctAggregates assigns its
@@ -408,10 +362,8 @@ def main() -> int:
                 for tag in ("1x", f"{factor}x")
             }
             for tag, d in (("1x", base), (f"{factor}x", staged)):
-                md5, smd5, nex = _fingerprint(fn(spark, d))
-                row[tag].update(
-                    {"plan_md5": md5, "struct_md5": smd5, "n_exchanges": nex}
-                )
+                fp = plan_fingerprint(fn(spark, d))
+                row[tag].update({k: fp[k] for k in _FP_KEYS})
             row["refingerprinted"] = True
         row["plan_stable"] = (
             row["1x"]["struct_md5"] == row[f"{factor}x"]["struct_md5"]

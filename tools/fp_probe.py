@@ -1,16 +1,17 @@
-"""One-off fingerprint probe: recompute bench.py's normalized plan md5
-for the named queries in THIS fresh session and print them beside the
-latest bench_full artifact's values — distinguishes session-
-nondeterministic fingerprints (md5 differs run-to-run) from one-time
-code flips (md5 stable now but != previous round's artifact).
+"""One-off fingerprint probe: compute the normalized plan md5
+(plans.explain.plan_fingerprint, the one bench.py records) for the
+named queries in THIS fresh session and print them beside the latest
+bench_full artifact's values — distinguishes session-nondeterministic
+fingerprints (md5 differs run-to-run) from one-time code flips (md5
+stable now but != previous round's artifact).
 
 Usage: python tools/fp_probe.py q1 q2 ...   (name prefixes, bench rules)
+Env:   FP_PROBE_DUMP=<dir> also writes each normalized plan to <dir>.
 """
 
 from __future__ import annotations
 
 import glob
-import hashlib
 import json
 import os
 import re
@@ -19,40 +20,17 @@ import sys
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 
-def fingerprint(df) -> dict:
-    from nlp_data_pipeline_spark.plans.explain import formatted_plan
-
-    p = formatted_plan(df)
-    p = re.sub(r"#\d+", "#", p)
-    p = re.sub(r"plan_id=\d+", "plan_id=", p)
-    p = re.sub(r"\[id=#?\d*\]", "", p)
-    p = re.sub(r"file:[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/tmp/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"/root/testdata/[\w\-./=]*", "<path>", p)
-    p = re.sub(r"lambda [a-zA-Z]+_\d+#", "lambda v#", p)
-    p = re.sub(r"RDD\[\d+\]", "RDD[]", p)
-    p = re.sub(r"localCheckpoint at [^,\n]*", "localCheckpoint at <site>", p)
-    # JIT accessor-swap noise on createDataFrame scans (round 14; same
-    # class as the localCheckpoint call-site rule above)
-    p = re.sub(
-        r"applySchemaToPythonRDD at [^,\n]*",
-        "applySchemaToPythonRDD at <site>",
-        p,
-    )
-    p = re.sub(r"_(bkt|cbo)_[0-9a-f]{6,12}", r"_\1_<key>", p)
-    return {
-        "plan_md5": hashlib.md5(p.encode()).hexdigest()[:12],
-        "n_exchanges": p.count("Exchange"),
-        "text": p,
-    }
-
-
 def main() -> int:
     prefixes = tuple(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import bench
     import __spark_entry__ as e
+    from nlp_data_pipeline_spark.plans.explain import (
+        formatted_plan,
+        normalize_plan,
+        plan_fingerprint,
+    )
     from nlp_data_pipeline_spark.session import get_spark
 
     spark = get_spark("fp-probe")
@@ -74,7 +52,8 @@ def main() -> int:
     for name, fn in e.queries().items():
         if prefixes and not name.startswith(prefixes):
             continue
-        fp = fingerprint(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        fp = plan_fingerprint(df)
         pv = prev.get(name, {})
         print(
             json.dumps(
@@ -91,7 +70,7 @@ def main() -> int:
         if dump_dir:
             os.makedirs(dump_dir, exist_ok=True)
             with open(os.path.join(dump_dir, f"{name}.txt"), "w") as f:
-                f.write(fp["text"])
+                f.write(normalize_plan(formatted_plan(df)))
     return 0
 
 

@@ -21,29 +21,13 @@ Exit:   1 if any exchange/python regression, else 0.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 
-# Fingerprint drift with an understood, data-dependent cause (plans
-# re-verified by eye/test when first observed; see BASELINE.md).
-KNOWN_FP_DRIFT = {
-    "d06_neardup_clusters": "label-propagation iteration count in lineage",
-    "d12_leakage_safe_split": "embeds d06",
-    "n01_lda_topics": "LDA memo state (warm vs cold fit)",
-    "n02_doc_tags": "LDA memo state (warm vs cold fit)",
-    "n03_topic_metrics": "LDA memo state (warm vs cold fit)",
-    "q30_bucketed_colocated_join": "one-time bucketed-table build",
-    "q37_observed_metrics": "observation ids",
-    "a02_hll_sketch_rollup": "localCheckpoint ids in lineage",
-    "d05_shingle_jaccard_topk": "localCheckpoint ids in lineage",
-    "p04_curation_pipeline": "localCheckpoint ids in lineage (embeds t22)",
-    "s12_bm25_topk": "localCheckpoint ids in lineage",
-    "t22_boilerplate_prune": "localCheckpoint ids in lineage",
-    "t31_dsir_importance": "localCheckpoint ids in lineage",
-    "d09_minhash_calibration": "localCheckpoint ids in lineage",
-    "d13_source_overlap_matrix": "localCheckpoint ids in lineage",
-    "s14_int8_quantized_search": "quantization grid inlined as data-derived literals",
-}
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+
+from nlp_data_pipeline_spark.plans.explain import KNOWN_PLAN_NOISE  # noqa: E402
 
 
 def main() -> int:
@@ -69,7 +53,7 @@ def main() -> int:
         if n["n_python"] != o["n_python"]:
             bad.append(f"{q}: python stages {o['n_python']} -> {n['n_python']}")
         if n["plan_md5"] != o["plan_md5"]:
-            note = KNOWN_FP_DRIFT.get(q, "UNEXPLAINED — inspect the plan")
+            note = KNOWN_PLAN_NOISE.get(q, "UNEXPLAINED — inspect the plan")
             fp_drift.append(f"{q}: {note}")
 
     ratios = {q: new[q]["sec"] / old[q]["sec"] for q in common if old[q]["sec"] > 0}

@@ -38,7 +38,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ["SPARK_GRAFT_STAGE_MODE"] = "neardup"
 
-from bench_10x import _fingerprint, _force, _stage  # noqa: E402
+from bench_10x import _force, _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 
 
 def main() -> int:
@@ -75,12 +76,12 @@ def main() -> int:
             df = fn(spark, d, cap=cap)
             _force(df)
             sec = round(time.time() - t, 2)
-            md5, smd5, nex = _fingerprint(fn(spark, d, cap=cap))
+            fp = plan_fingerprint(fn(spark, d, cap=cap))
             row[name] = {
                 "sec": sec,
-                "plan_md5": md5,
-                "struct_md5": smd5,
-                "n_exchanges": nex,
+                "plan_md5": fp["plan_md5"],
+                "struct_md5": fp["struct_md5"],
+                "n_exchanges": fp["n_exchanges"],
             }
             sys.stderr.write(f"[capchain] {tag} {name}: {sec}s\n")
         # the audit's headline invariant, checked AT the staging: zero

@@ -37,7 +37,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 # bijective rename (which keeps buckets benign by construction)
 os.environ["SPARK_GRAFT_STAGE_MODE"] = "neardup"
 
-from bench_10x import _fingerprint, _force, _stage  # noqa: E402
+from bench_10x import _force, _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 
 
 def main() -> int:
@@ -99,8 +100,8 @@ def main() -> int:
         t = time.time()
         _force(d18_capped_lsh_components(spark, d))
         row["d18_e2e_sec"] = round(time.time() - t, 2)
-        md5, smd5, nex = _fingerprint(d18_capped_lsh_components(spark, d))
-        row["plan_md5"], row["struct_md5"], row["n_exchanges"] = md5, smd5, nex
+        fp = plan_fingerprint(d18_capped_lsh_components(spark, d))
+        row.update({k: fp[k] for k in ("plan_md5", "struct_md5", "n_exchanges")})
         results[tag] = row
         sys.stderr.write(f"[d18] {tag}: {json.dumps(row)}\n")
 

@@ -33,7 +33,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 
@@ -71,14 +72,14 @@ def main() -> int:
         # equality, and tuples deserialize as lists
         rows = sorted([list(r) for r in d22_lsh_band_curve(spark, d, c).collect()])
         sec = round(time.time() - t0, 1)
-        _md5, smd5, nex = _fingerprint(d22_lsh_band_curve(spark, d, c))
+        fp = plan_fingerprint(d22_lsh_band_curve(spark, d, c))
         row = {
             "n_docs": n_docs,
             "cap": c,
             "sec": sec,
             "rows": rows,
-            "struct_md5": smd5,
-            "n_exchanges": nex,
+            "struct_md5": fp["struct_md5"],
+            "n_exchanges": fp["n_exchanges"],
         }
         sys.stderr.write(f"[d22cap] {tag}: {json.dumps(row)}\n")
         return row

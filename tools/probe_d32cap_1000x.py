@@ -30,7 +30,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 
@@ -70,7 +71,7 @@ def main() -> int:
         # no-silent-caps (ADVICE r13): the capped tier now reports how
         # many band keys it actually rep-routed — same value every row
         agg["n_capped_band_keys"] = rows[0]["n_capped_band_keys"] if rows else 0
-        md5, smd5, nex = _fingerprint(
+        fp = plan_fingerprint(
             d32_incremental_dedup_delta(spark, d, cap=cap)
         )
         row = {
@@ -78,8 +79,8 @@ def main() -> int:
             "sec": sec,
             "sources": len(rows),
             **agg,
-            "struct_md5": smd5,
-            "n_exchanges": nex,
+            "struct_md5": fp["struct_md5"],
+            "n_exchanges": fp["n_exchanges"],
         }
         sys.stderr.write(f"[d32cap] {tag}: {json.dumps(row)}\n")
         return row

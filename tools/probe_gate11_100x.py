@@ -23,7 +23,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "rename")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 GATE11 = [
@@ -72,12 +73,12 @@ def main() -> int:
                 t0 = time.time()
                 n = fns[name](spark, d).count()
                 sec = time.time() - t0
-                _md5, smd5, nex = _fingerprint(fns[name](spark, d))
+                fp = plan_fingerprint(fns[name](spark, d))
                 row[tag] = {
                     "sec": round(sec, 1),
                     "rows": n,
-                    "struct_md5": smd5,
-                    "n_exchanges": nex,
+                    "struct_md5": fp["struct_md5"],
+                    "n_exchanges": fp["n_exchanges"],
                 }
             row["growth"] = round(
                 row[f"{factor}x"]["sec"] / max(row["1x"]["sec"], 1e-9), 1

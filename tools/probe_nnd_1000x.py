@@ -5,10 +5,10 @@ r12 #8 named s16/s23's NND build as the next candidate).
 Staging: neardup (adversarial duplication). What executes where:
 
   - 1000x (2M vectors): the SEED-ONLY build tier (rounds=0) — Arrow
-    top-probe assignment (_nnd_seed_pack_arrow; the window tier is
-    n²/256 HOF cosine folds ≈ CPU-months here) + per-block BLAS gram
-    top-m + deterministic cross-links. The 2-probe blocked seed alone
-    recovers ~70% of the exact graph's edges (similarity.py header).
+    top-probe assignment (_nnd_seed_pack_arrow, the only seed path) +
+    per-block BLAS gram top-m + deterministic cross-links. The 2-probe
+    blocked seed alone recovers ~70% of the exact graph's edges
+    (similarity.py header).
   - 100x (200k vectors): the FULL build (rounds=1 NN-descent refine)
     — refine's candidate scoring ships n·(m+links)² pairs of paired
     embeddings through Arrow (_score_pairs), linear in candidates but
@@ -32,7 +32,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 
@@ -67,15 +68,15 @@ def main() -> int:
         # (localCheckpoints), so rebuilding for the fingerprint would
         # run the whole 1000x build twice — the first probe attempt
         # died of driver heartbeat starvation exactly there
-        md5, smd5, nex = _fingerprint(g)
+        fp = plan_fingerprint(g)
         row = {
             "n_vecs": n_vecs,
             "rounds": rounds,
             "sec": sec,
             "edges": n_edges,
             "edges_per_vec": round(n_edges / n_vecs, 2),
-            "struct_md5": smd5,
-            "n_exchanges": nex,
+            "struct_md5": fp["struct_md5"],
+            "n_exchanges": fp["n_exchanges"],
         }
         sys.stderr.write(f"[nnd] {tag}: {json.dumps(row)}\n")
         return row
@@ -104,16 +105,10 @@ def main() -> int:
             "n·(m+links)² ≈ 288M pairs × ~1 KB of paired embeddings "
             "through Arrow on one box; executes at 100x (~29M pairs), "
             "per-worker adjacency packing is the named next tier",
-            "window-tier seed assignment at >16k vectors": "n·k_build "
-            "= n²/256 HOF cosine folds — the measured ~2.7k folds/s/"
-            "core wall; the Arrow top-probe kernel is the round-13 "
-            "remedy (exact-parity pinned)",
         },
-        "plan_note": "seed plans at 1x vs 1000x differ only if the "
-        "assignment tier flips (1x k_build=8 stays on the window "
-        "tier by design — the declared-corpus plan must not change); "
-        "plan_stable_seed therefore compares the POST-assignment "
-        "structure and is expected false across the tier boundary.",
+        "plan_note": "seed plans at 1x and 1000x share the one (fused "
+        "Arrow) seed tier; plan_stable_seed compares their structure "
+        "with numeric literals blanked.",
         "results": results,
         "classification": (
             f"seed tier (all-BLAS) built a {results[f'{factor}x_seed']['edges']}"

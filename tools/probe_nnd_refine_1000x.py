@@ -4,7 +4,7 @@ EXCLUDED any refine round there — pair-join candidate scoring ships
 n·deg_eff² pairs × ~1 KB of paired embeddings through Arrow (~295 GB
 at 2M vectors on one box) and its neighbors-of-neighbors self-join is
 Σdeg² pairs, quadratic on duplication-hub in-degrees. The packed tier
-(_nnd_refine_packed) removes both: embeddings ship with the ADJACENCY
+(_nnd_refine_local_join) removes both: embeddings ship with the ADJACENCY
 (deg+1 copies, JVM shuffle), blocks score as one gram matmul, each
 pair emits 24 B, and the _NND_PACK_CAP degree cap bounds hub blocks.
 
@@ -35,13 +35,15 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
 
 def main() -> int:
+    from nlp_data_pipeline_spark.operators import similarity
     from nlp_data_pipeline_spark.operators.similarity import (
         _NND_PACK_CAP,
         _knn_graph_nnd,
@@ -67,21 +69,28 @@ def main() -> int:
         f"[nnd-refine] staged 1x+{factor//10}x+{factor}x in {time.time()-t0:.1f}s\n"
     )
 
-    def run(tag: str, d: str, packed: bool | None):
+    def run(tag: str, d: str, packed: bool):
         n_vecs = load_table(spark, d, "embeddings").count()
         t0 = time.time()
-        g = _knn_graph_nnd(spark, d, rounds=1, refine_packed=packed)
+        # the refine tier follows corpus size: move the threshold to
+        # either side of this corpus while the plan is built
+        threshold = similarity._NND_REFINE_PACKED_N
+        similarity._NND_REFINE_PACKED_N = n_vecs - 1 if packed else n_vecs
+        try:
+            g = _knn_graph_nnd(spark, d, rounds=1)
+        finally:
+            similarity._NND_REFINE_PACKED_N = threshold
         n_edges = g.count()
         sec = round(time.time() - t0, 1)
-        _md5, smd5, nex = _fingerprint(g)
+        fp = plan_fingerprint(g)
         row = {
             "n_vecs": n_vecs,
             "refine_tier": "packed" if packed else "pair-join",
             "sec": sec,
             "edges": n_edges,
             "edges_per_vec": round(n_edges / n_vecs, 2),
-            "struct_md5": smd5,
-            "n_exchanges": nex,
+            "struct_md5": fp["struct_md5"],
+            "n_exchanges": fp["n_exchanges"],
         }
         sys.stderr.write(f"[nnd-refine] {tag}: {json.dumps(row)}\n")
         return row, g
@@ -170,10 +179,9 @@ def main() -> int:
             "on hub in-degrees — the r13-measured exclusion the packed "
             "tier replaces; executes at 100x as the parity reference",
         },
-        "plan_note": "packed plans at 1x vs 1000x differ only if the "
-        "SEED assignment tier flips (1x k_build=8 stays on the window "
-        "tier by design); plan_stable_packed compares the post-"
-        "assignment structure, same rule as the r13 seed probe.",
+        "plan_note": "packed plans at 1x and 1000x share the one "
+        "(fused Arrow) seed tier; plan_stable_packed compares their "
+        "structure with numeric literals blanked.",
         "results": results,
         "classification": (
             f"packed full build (seed + 1 local-join refine round) "

@@ -30,7 +30,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 
@@ -64,15 +65,15 @@ def main() -> int:
         # round-trip equality, and tuples deserialize as lists
         rows = [list(r) for r in s27_ivfpq_search(spark, d, use_arrow=arrow).collect()]
         sec = round(time.time() - t0, 1)
-        _md5, smd5, nex = _fingerprint(s27_ivfpq_search(spark, d, use_arrow=arrow))
+        fp = plan_fingerprint(s27_ivfpq_search(spark, d, use_arrow=arrow))
         row = {
             "n_vecs": n_vecs,
             "tier": "arrow" if arrow else "declared-fold",
             "sec": sec,
             "n_rows": len(rows),
             "rows": rows,
-            "struct_md5": smd5,
-            "n_exchanges": nex,
+            "struct_md5": fp["struct_md5"],
+            "n_exchanges": fp["n_exchanges"],
         }
         sys.stderr.write(
             f"[s27arrow] {tag}: "

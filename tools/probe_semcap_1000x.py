@@ -21,9 +21,11 @@ probe_gate12_100x_r11.json — the measured hazard). Executed here at
     packed per-cluster gram kernels under the cap, star-to-hub above
     it.
 
-The uncapped s06 / fixed-k / windowed-assignment s09 are deliberately
-NOT run at this staging — their quadratic tiers are the measured
-hazard; the capped/escalated paths completing IS the point. Per-op
+The uncapped s06 and fixed-k s09 are deliberately NOT run at this
+staging — their quadratic pair work is the measured hazard; the
+capped/escalated paths completing IS the point. The window assignment
+cannot run here either: _s09_assign picks it only for k ≤
+_S09_ASSIGN_ARROW_K, and the staged k is far above that. Per-op
 seconds, result rows, and the normalized fingerprint at 1x vs 1000x
 land in the output artifact (written by probe_io.emit_artifact, which
 refuses to exit 0 on an empty/unparseable file — the round-12 empty-
@@ -45,13 +47,15 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 os.environ.setdefault("SPARK_GRAFT_STAGE_MODE", "neardup")
 
-from bench_10x import _fingerprint, _stage  # noqa: E402
+from bench_10x import _stage  # noqa: E402
+from nlp_data_pipeline_spark.plans.explain import plan_fingerprint  # noqa: E402
 from probe_io import emit_artifact  # noqa: E402
 
 
 def main() -> int:
     from nlp_data_pipeline_spark.operators.similarity import (
         _S06_PRODUCTION_CAP,
+        _S09_ASSIGN_ARROW_K,
         _S09_CLUSTER_CAP,
         s09_semantic_dedup,
         semantic_candidate_pairs,
@@ -89,9 +93,9 @@ def main() -> int:
             # duplication profile (star emission per sign-bucket)
             "pairs_per_vec": round(n_pairs / n_vecs, 3),
         }
-        md5, smd5, nex = _fingerprint(semantic_candidate_pairs(spark, d, cap))
-        row["capped_pairs"]["struct_md5"] = smd5
-        row["capped_pairs"]["n_exchanges"] = nex
+        fp = plan_fingerprint(semantic_candidate_pairs(spark, d, cap))
+        row["capped_pairs"]["struct_md5"] = fp["struct_md5"]
+        row["capped_pairs"]["n_exchanges"] = fp["n_exchanges"]
 
         k = max(8, n_vecs // k_target)
         t0 = time.time()
@@ -103,17 +107,17 @@ def main() -> int:
         row["semantic_dedup"] = {
             "sec": round(time.time() - t0, 1),
             "n_centroids": k,
-            "assign_tier": "arrow_blas" if k > 1024 else "window",
+            "assign_tier": "arrow_blas" if k > _S09_ASSIGN_ARROW_K else "window",
             "rows_kept": kept.get(True, 0),
             "rows_dropped": kept.get(False, 0),
         }
-        md5, smd5, nex = _fingerprint(
+        fp = plan_fingerprint(
             s09_semantic_dedup(
                 spark, d, n_centroids=k, cluster_cap=_S09_CLUSTER_CAP
             )
         )
-        row["semantic_dedup"]["struct_md5"] = smd5
-        row["semantic_dedup"]["n_exchanges"] = nex
+        row["semantic_dedup"]["struct_md5"] = fp["struct_md5"]
+        row["semantic_dedup"]["n_exchanges"] = fp["n_exchanges"]
         sys.stderr.write(f"[semcap] {tag}: {json.dumps(row)}\n")
         return row
 
@@ -153,14 +157,14 @@ def main() -> int:
             "capped tier completing is the point",
             "s09 fixed-k": "per-cluster pair work quadratic in corpus "
             "scale at fixed k; the k knob is the round-11 remedy",
-            "s09 window/max_by assignment at 1000x": "n*k = 8e9 scored "
+            "s09 window assignment at 1000x": "n*k = 8e9 scored "
             "rows — a ~4 TB window shuffle / CPU-months of per-pair "
             "HOF cosine folds; the Arrow-BLAS tier is the round-13 "
-            "remedy and the tier this probe executes",
+            "remedy and the only tier _s09_assign picks at this k",
         },
         "plan_note": "semantic_dedup plans DIFFER 1x vs 1000x BY "
         "DESIGN: the 1x corpus stays on the declared window-assignment "
-        "tier (k=8 <= _S09_ASSIGN_MAXBY_K) while the 1000x staging "
+        "tier (k=8 <= _S09_ASSIGN_ARROW_K) while the 1000x staging "
         "escalates to the Arrow-BLAS tier — the two-tier design is the "
         "subject under test, not plan noise (the d06->d24 escalation "
         "pattern). capped_pairs runs one plan at both scales.",
