@@ -11,12 +11,13 @@ Queries and oracles are co-located with their operator modules in
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 _MODULES = [
     "nlp_data_pipeline_spark.operators.relational",

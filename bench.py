@@ -7,9 +7,10 @@ Prints ONE JSON line:
 Each query is forced end-to-end with the noop sink (full computation,
 no driver-side collect cost). Streaming/model queries execute their own
 actions and are timed around their terminal operation. Each
-bench_full row also carries ``codegen_compiles`` and ``spark_jobs``: the
-Janino compiles and the Spark jobs (status-tracker count under a job
-group) of the sample whose time it reports.
+bench_full row also carries ``codegen_compiles``, ``spark_jobs`` and
+``py4j_calls``: the Janino compiles, the Spark jobs (status-tracker
+count under a job group) and the Python→JVM round trips
+(``session.py4j_calls``) of the sample whose time it reports.
 
 Usage:
     python bench.py                 # all queries
@@ -103,7 +104,7 @@ def main() -> int:
     # starts against a previous run's model.
     from nlp_data_pipeline_spark.operators.nlp_model import reset_fit_cache
     from nlp_data_pipeline_spark.plans.explain import KNOWN_PLAN_NOISE, plan_fingerprint
-    from nlp_data_pipeline_spark.session import codegen_compiles, group_jobs, job_group
+    from nlp_data_pipeline_spark.session import codegen_compiles, group_jobs, job_group, py4j_calls
 
     PRE_MEASURE = {"n01_lda_topics": reset_fit_cache}
 
@@ -142,7 +143,7 @@ def main() -> int:
             pre()  # untimed: resets state the sample must re-compute
         group = f"bench#{next(samples)}"
         c0 = codegen_compiles(spark)
-        with job_group(spark, group):
+        with job_group(spark, group), py4j_calls() as calls:
             t0 = time.time()
             df = fn(spark, sf_dir)
             _force(df)
@@ -150,7 +151,7 @@ def main() -> int:
         # classes the sample had to (re)compile: a working set that
         # outgrows the codegen cache shows here, not only as wall time
         compiles = codegen_compiles(spark) - c0
-        return t, df, (compiles, group_jobs(spark, group))
+        return t, df, (compiles, group_jobs(spark, group), calls.n)
 
     def _plan_fingerprint(df) -> dict:
         try:
@@ -214,6 +215,7 @@ def main() -> int:
                 # of the sample reported in sec
                 "codegen_compiles": counts[0],
                 "spark_jobs": counts[1],
+                "py4j_calls": counts[2],
                 "plan_stable": stability[name],
                 **fp,
             }

@@ -2,11 +2,11 @@
 
 Each builder mirrors one operator of the reference app
 (/root/reference/nlp_data_tagging.py) with identical semantics, but
-expressed as JVM-side ``pyspark.sql.functions`` so the whole text
-pipeline stays inside whole-stage codegen — no Python UDFs anywhere in
-this module. That is the difference between "runs on 50 PDFs" and
-"runs on 100 TB": a regex + array expression pipeline scales linearly
-with executors and shuffles nothing.
+expressed as Spark SQL text parsed into one native expression, so the
+whole text pipeline stays inside whole-stage codegen — no Python UDFs
+anywhere in this module. That is the difference between "runs on 50
+PDFs" and "runs on 100 TB": a regex + array expression pipeline scales
+linearly with executors and shuffles nothing.
 
 Reference citations (file:line into /root/reference/nlp_data_tagging.py):
 - STOP_WORDS set ........................ :19-32
@@ -43,71 +43,119 @@ STOP_WORDS: frozenset[str] = frozenset({
 
 STOP_WORDS_SORTED: list[str] = sorted(STOP_WORDS)
 
+# The one stopword literal list, for both engines: Spark SQL (the
+# helpers below) and the DuckDB oracles. Spark plans ``IN`` over more
+# than 10 literals as INSET, a hash-set probe per token (array_contains
+# over a literal array scanned all 118 per token: 0.73 s -> 0.41 s on the
+# sf0.1 corpus token-frequency pass, round 14).
+_STOP_SQL = ", ".join(f"'{w}'" for w in STOP_WORDS_SORTED)
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# DuckDB equivalent of clean_text, including its lowercase-BEFORE-strip
+# order (regexp_replace needs the 'g' flag in DuckDB; Spark's is global
+# by default, and DuckDB string literals keep backslashes as they are).
+# \p{L}\p{N}_ spells out Python's Unicode \w there too (RE2's \w is
+# ASCII-only).
+_CLEAN_SQL = (
+    "trim(regexp_replace("
+    "regexp_replace(lower(regexp_replace(text, '\\s+', ' ', 'g')), '[^\\p{L}\\p{N}_\\s\\.]', ' ', 'g'),"
+    " ' +', ' ', 'g'))"
+)
+
+# Spark SQL text of each helper, kept beside the DuckDB text it mirrors.
+# A helper is ONE ``F.expr`` call, a few py4j round trips; built from
+# Column calls, tokenize alone made ~600, one per stopword literal and
+# per node of its lambda. The parsed expression is the one the Column
+# calls built (lambdafunction, INSET), with no Python UDF. A registered
+# SQL function would be one call too, but Spark 4.1 rejects one inside
+# explode (UNSUPPORTED_SQL_UDF_USAGE) or inside a lambda, and would
+# need registering in every session; SQL text needs neither.
+_STRIP_RE = "'[^\\\\p{L}\\\\p{N}_\\\\s\\\\.]'"  # Python's Unicode [^\w\s\.]
+
+
+def _clean_sql(s: str) -> str:
+    return (
+        f"trim(regexp_replace(regexp_replace(lower(regexp_replace(coalesce({s}, ''), '\\\\s+', ' ')),"
+        f" {_STRIP_RE}, ' '), ' +', ' '))"
+    )
+
+
+def _tokens_sql(s: str) -> str:
+    return f"filter(split({s}, ' '), t -> length(t) > 2 AND NOT lower(t) IN ({_STOP_SQL}) AND t != '')"
+
+
+def _sql(col: Column | str) -> str:
+    """SQL text of a helper's argument: a string is a column name or SQL
+    text; a Column is another helper's result or a plain column
+    reference such as ``F.col("t")`` (which Spark renders back in one
+    round trip)."""
+    if isinstance(col, str):
+        return col
+    text = vars(col).get("_text_sql")
+    if text is None:
+        text = col._jc.toString()  # noqa: SLF001
+        if not text.isidentifier():
+            raise TypeError(
+                f"text helpers take a column name, SQL text or a text helper's Column, not {text!r}"
+            )
+    return text
+
+
+def _expr(text: str) -> Column:
+    """``text`` as one Column; the text rides along so that another
+    helper can nest it."""
+    col = F.expr(text)
+    col._text_sql = text  # noqa: SLF001
+    return col
+
 
 def clean_text(col: Column | str) -> Column:
-    """preprocess_text parity (:49-66).
+    r"""preprocess_text parity (:49-66).
 
     whitespace collapse → lowercase → strip non-word/space/period chars
-    → re-collapse spaces.  Pure regexp_replace chain: stays in codegen.
+    → re-collapse spaces. Pure regexp_replace chain: stays in codegen.
 
     Order note: the reference strips BEFORE lowercasing (:58, :61); we
     lowercase first so the function is IDEMPOTENT — Java's full case
     mapping can emit combining marks (lower('İ') = 'i' + U+0307) that
-    are outside [\\p{L}\\p{N}_\\s.] and would survive one pass but not
+    are outside [\p{L}\p{N}_\s.] and would survive one pass but not
     two. Lowering first lets the strip remove such marks immediately
     (also converging with DuckDB's mark-free simple case mapping); for
     every character whose lowercase stays in the same character class —
     i.e. all ordinary text — the result is byte-identical to the
-    reference's order.
+    reference's order. The reference's r'[^\w\s\.]' uses Python's
+    UNICODE \w; Java's \w is ASCII-only, so the Unicode classes
+    (\p{L}\p{N}_) are spelled out. (\s stays ASCII in both engines; the
+    \s+ collapse already normalized exotic whitespace to ' '.)
     """
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.coalesce(c, F.lit(""))                       # "if not text: return ''"
-    c = F.regexp_replace(c, r"\s+", " ")               # :55
-    c = F.lower(c)                                     # :61
-    # the reference's r'[^\w\s\.]' uses Python's UNICODE \w; Java's \w is
-    # ASCII-only, so spell out the Unicode classes (\p{L}\p{N}_) to keep
-    # accented/non-Latin characters exactly like the reference does.
-    # (\s stays ASCII in both engines; the \s+ collapse above already
-    # normalized exotic whitespace to ' '.)
-    c = F.regexp_replace(c, r"[^\p{L}\p{N}_\s\.]", " ")  # :58
-    c = F.trim(F.regexp_replace(c, r" +", " "))        # :64 ' '.join(split())
-    return c
+    return _expr(_clean_sql(_sql(col)))
 
 
-def tokenize(col: Column | str, min_len_exclusive: int = 2) -> Column:
+def tokenize(col: Column | str) -> Column:
     """simple_tokenize parity (:68-76) returning array<string>.
 
     Splits on spaces, drops STOP_WORDS members (case-insensitive, :74)
-    and tokens with len <= 2.  Higher-order `filter` runs JVM-side.
+    and tokens with len <= 2. Higher-order `filter` runs JVM-side.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.split(c, " ")
-    # membership via isin: >10 literals compiles to INSET (a hash-set
-    # probe, O(1) per token) where array_contains over a literal array
-    # is a linear scan of all 118 stopwords per token — measured 0.73s
-    # -> 0.41s on the sf0.1 corpus token-frequency pass (round 14).
-    return F.filter(
-        toks,
-        lambda t: (F.length(t) > min_len_exclusive)
-        & ~F.lower(t).isin(*STOP_WORDS_SORTED)
-        & (t != F.lit("")),
-    )
+    return _expr(_tokens_sql(_sql(col)))
 
 
 def tokenize_joined(col: Column | str) -> Column:
     """simple_tokenize's actual return type: tokens re-joined by ' ' (:76)."""
-    return F.array_join(tokenize(col), " ")
+    return _expr(f"array_join({_tokens_sql(_sql(col))}, ' ')")
 
 
-def sentences(col: Column | str, min_len_exclusive: int = 10) -> Column:
+def sentences(col: Column | str) -> Column:
     """split_into_sentences parity (:81-84) returning array<string>.
 
     re.split(r'[.!?]+') then keep stripped sentences with len > 10.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    parts = F.split(c, r"[.!?]+")
-    trimmed = F.transform(parts, lambda s: F.trim(s))
-    return F.filter(trimmed, lambda s: F.length(s) > min_len_exclusive)
+    return _expr(f"filter(transform(split({_sql(col)}, '[.!?]+'), x -> trim(x)), x -> length(x) > 10)")
 
 
 def truncate_at_word(col: Column | str, max_length: int) -> Column:
@@ -117,12 +165,12 @@ def truncate_at_word(col: Column | str, max_length: int) -> Column:
     space (Python ``rsplit(' ', 1)[0]`` keeps everything when no space
     exists), append '...'.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    head = F.substring(c, 1, max_length)
+    c = _sql(col)
+    head = f"substring({c}, 1, {int(max_length)})"
     # position of last space within head = len(head) - locate(' ', reverse(head)) + 1
-    rev_pos = F.locate(" ", F.reverse(head))
-    cut = F.when(rev_pos > 0, F.substring(head, 1, F.length(head) - rev_pos)).otherwise(head)
-    return F.when(F.length(c) > max_length, F.concat(cut, F.lit("..."))).otherwise(c)
+    rev_pos = f"locate(' ', reverse({head}))"
+    cut = f"CASE WHEN {rev_pos} > 0 THEN substring({head}, 1, length({head}) - {rev_pos}) ELSE {head} END"
+    return _expr(f"CASE WHEN length({c}) > {int(max_length)} THEN concat({cut}, '...') ELSE {c} END")
 
 
 def fallback_summary(sentences_col: Column, text_col: Column, num_sentences: int = 3) -> Column:
@@ -140,22 +188,23 @@ def fallback_summary(sentences_col: Column, text_col: Column, num_sentences: int
     return F.when(n <= num_sentences, text_col).otherwise(joined)
 
 
-def ngrams(tokens_col: Column, n: int) -> Column:
+def ngrams(tokens_col: Column | str, n: int) -> Column:
     """Order-preserving n-grams (space-joined) of an array<string>.
 
     Guarded for short arrays: Spark's ``sequence(1, stop)`` produces a
     DESCENDING [1, 0] when stop < 1 (default step −1), which would index
     element 0 and error — so arrays shorter than n yield [].
     """
-    size = F.size(tokens_col)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(tokens_col, i + j) for j in range(n)])
+    a = _sql(tokens_col)
+    # the argument is inside the lambda: a variable name no column has
+    parts = ", ".join(f"element_at({a}, ngram_i + {j})" for j in range(n))
+    return _expr(
+        f"CASE WHEN size({a}) >= {int(n)}"
+        f" THEN transform(sequence(1, size({a}) - {int(n) - 1}), ngram_i -> concat_ws(' ', {parts}))"
+        " ELSE CAST(array() AS ARRAY<STRING>) END"
     )
-    return F.when(size >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
 def word_count(col: Column | str) -> Column:
     """len(text.split()) equivalent — counts non-empty whitespace tokens."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.filter(F.split(c, r"\s+"), lambda t: t != F.lit("")))
+    return _expr(f"size(filter(split({_sql(col)}, '\\\\s+'), t -> t != ''))")

@@ -786,9 +786,9 @@ def p04_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double clean_text ran the 3-regex chain twice per row — the HOF
     # wrapper around tokenize blocks codegen CSE across the two)
     base = d.select("doc_id", clean_text("text").alias("ctext")).select(
-        "doc_id", "ctext", tokenize(F.col("ctext")).alias("t")
+        "doc_id", "ctext", tokenize("ctext").alias("t")
     )
-    bi = ngrams(F.col("t"), 2)
+    bi = ngrams("t", 2)
     # project to scalars BEFORE the exact-dup window: the hash
     # partitioning on h otherwise shuffles every token array and the
     # cleaned text just to compare doc_ids (guide §2.3 — shuffle keys

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nlp_data_pipeline_spark.config import DEFAULT_CONFIG
-from nlp_data_pipeline_spark.functions.text import clean_text, tokenize_joined
+from nlp_data_pipeline_spark.functions.text import clean_text, sql_string, tokenize_joined
 from nlp_data_pipeline_spark.sources.catalog import load_table
 
 
@@ -128,8 +128,10 @@ def _topic_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n01's rows, unsorted."""
     cv_model, lda_model, _ = _fit_corpus_model(spark, sf_dir)
     # term lookup through a literal array: a local-list DataFrame would
-    # run as a Python RDD (Python worker tasks) plus a broadcast join
-    vocab = F.array(*map(F.lit, cv_model.vocabulary))
+    # run as a Python RDD (Python worker tasks) plus a broadcast join.
+    # One expression: F.array over per-term F.lit made one py4j round
+    # trip per term (~400 at sf0.001)
+    vocab = F.expr("array(" + ", ".join(map(sql_string, cv_model.vocabulary)) + ")")
     topics = lda_model.describeTopics(10).select(
         "topic", F.posexplode(F.arrays_zip("termIndices", "termWeights")).alias("pos", "tw")
     )
@@ -168,15 +170,19 @@ def n02_doc_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = cv_model.vocabulary
 
     # topic → first 3 of its top-10 terms (:203-208), as a literal map
+    # (one expression, not a Column call per literal)
     topics_local = lda_model.describeTopics(10).collect()
     topic_terms = {
         row["topic"]: [vocab[i] for i in row["termIndices"][:3]] for row in topics_local
     }
-    map_entries = []
-    for t, terms in sorted(topic_terms.items()):
-        map_entries.append(F.lit(t))
-        map_entries.append(F.array(*[F.lit(x) for x in terms]))
-    topic_map = F.create_map(*map_entries)
+    topic_map = F.expr(
+        "map("
+        + ", ".join(
+            f"{t}, array({', '.join(map(sql_string, terms))})"
+            for t, terms in sorted(topic_terms.items())
+        )
+        + ")"
+    )
 
     scored = lda_model.transform(featured).select(
         "doc_id", vector_to_array("topicDistribution").alias("dist")
@@ -241,7 +247,7 @@ def n04_count_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     base = d.select("doc_id", tokenize(clean_text("text")).alias("t"))
-    terms = F.concat(F.col("t"), ngrams(F.col("t"), 2))
+    terms = F.concat(F.col("t"), ngrams("t", 2))
     exploded = base.select("doc_id", F.explode(terms).alias("term"))
     stats = exploded.groupBy("term").agg(
         F.count(F.lit(1)).alias("tf"), F.count_distinct("doc_id").alias("df")
@@ -320,7 +326,7 @@ def n05_idf_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     base = d.select("doc_id", tokenize(clean_text("text")).alias("t"))
     terms = base.select(
-        "doc_id", F.concat(F.col("t"), ngrams(F.col("t"), 2)).alias("terms")
+        "doc_id", F.concat(F.col("t"), ngrams("t", 2)).alias("terms")
     )
     cvm = CountVectorizerModel.from_vocabulary(
         vocab, inputCol="terms", outputCol="vec"

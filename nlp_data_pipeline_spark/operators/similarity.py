@@ -42,19 +42,31 @@ TOP_K = 5
 N_PLANES = 8
 
 
-def as_double(col) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+# The vector kernels take column names or SQL text and are one F.expr
+# each: built from Column calls, each lambda node was its own py4j
+# round trip (~35 per dot product).
+def as_double(col: str) -> Column:
+    return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
 
 
-def dot(a, b) -> Column:
-    """Sequential-fold dot product of two array<double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Sequential-fold dot product of two array<double> columns. Column
+    arguments (callers outside this module pass them) take the same
+    fold built from Column calls."""
+    if isinstance(a, str) and isinstance(b, str):
+        return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def norm(a: str) -> Column:
+    return F.expr(f"sqrt(aggregate({a}, 0D, (acc, x) -> acc + x * x))")
+
+
+def sq_dist(a: str, b: str) -> Column:
+    """Sequential-fold squared L2 distance of two array<double> columns."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0D, (acc, x) -> acc + x)"
     )
-
-
-def norm(a) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 # --------------------------------------------------------------------------
@@ -221,12 +233,17 @@ PLANES: list[list[float]] = [
 ]
 
 
+def _plane_array(p: int) -> str:
+    """Plane ``p`` as a Spark SQL array<double> literal."""
+    return "array(" + ", ".join(f"{v}D" for v in PLANES[p]) + ")"
+
+
 def s03_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
     )
     sign_bits = [
-        F.when(dot(F.array(*[F.lit(v) for v in PLANES[p]]), F.col("emb")) >= 0, "1").otherwise("0")
+        F.when(dot(_plane_array(p), "emb") >= 0, "1").otherwise("0")
         for p in range(N_PLANES)
     ]
     bucketed = e.select("vec_id", F.concat(*sign_bits).alias("bucket"))
@@ -321,7 +338,7 @@ def s05_embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double("embedding").alias("emb")
     )
-    norms = e.select("vec_id", "label", norm(F.col("emb")).alias("nrm"))
+    norms = e.select("vec_id", "label", norm("emb").alias("nrm"))
     return (
         norms.groupBy("label")
         .agg(
@@ -362,7 +379,7 @@ def s06_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double("embedding").alias("emb")
     )
     sign_bits = [
-        F.when(dot(F.array(*[F.lit(v) for v in PLANES[p]]), F.col("emb")) >= 0, "1").otherwise("0")
+        F.when(dot(_plane_array(p), "emb") >= 0, "1").otherwise("0")
         for p in range(N_PLANES)
     ]
     bucketed = e.select("vec_id", "emb", F.concat(*sign_bits).alias("bucket"))
@@ -447,7 +464,7 @@ def semantic_candidate_pairs(
         "vec_id", as_double("embedding").alias("emb")
     )
     sign_bits = [
-        F.when(dot(F.array(*[F.lit(v) for v in PLANES[p]]), F.col("emb")) >= 0, "1").otherwise("0")
+        F.when(dot(_plane_array(p), "emb") >= 0, "1").otherwise("0")
         for p in range(N_PLANES)
     ]
     w = Window.partitionBy("bucket")
@@ -748,7 +765,7 @@ def _s09_assign_arrow(e: DataFrame, cents: DataFrame) -> DataFrame:
         assign, "vec_id long, centroid_id long"
     )
     return e.join(best, "vec_id").select(
-        "vec_id", "emb", norm(F.col("emb")).alias("nrm"), "centroid_id"
+        "vec_id", "emb", norm("emb").alias("nrm"), "centroid_id"
     )
 
 
@@ -774,7 +791,7 @@ def _s09_assign(e: DataFrame, cents: DataFrame, k: int) -> DataFrame:
         .select("vec_id", "emb", "centroid_id", ccos.alias("cos"))
         .withColumn("r", F.row_number().over(wv))
         .filter(F.col("r") == 1)
-        .select("vec_id", "emb", norm(F.col("emb")).alias("nrm"), "centroid_id")
+        .select("vec_id", "emb", norm("emb").alias("nrm"), "centroid_id")
     )
 
 
@@ -984,11 +1001,7 @@ def s10_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = subs.filter(F.col("vec_id") < PQ_K).select(
         "sub_idx", F.col("vec_id").alias("code_id"), F.col("subv").alias("codev")
     )
-    d2 = F.aggregate(
-        F.zip_with("subv", "codev", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_dist("subv", "codev")
     w = Window.partitionBy("vec_id", "sub_idx").orderBy("d2", "code_id")
     best = (
         subs.join(F.broadcast(codes), "sub_idx")
@@ -1072,11 +1085,7 @@ def s11_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = subs.filter(F.col("vec_id") < PQ_K).select(
         "sub_idx", F.col("vec_id").alias("code_id"), F.col("subv").alias("codev")
     )
-    d2 = F.aggregate(
-        F.zip_with("subv", "codev", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_dist("subv", "codev")
     # corpus → PQ code assignment (same rule as s10: nearest codeword,
     # code_id tie-break)
     wbest = Window.partitionBy("vec_id", "sub_idx").orderBy("d2", "code_id")
@@ -1096,11 +1105,7 @@ def s11_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub_idx",
             "code_id",
-            F.aggregate(
-                F.zip_with("qsubv", "codev", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("cell"),
+            sq_dist("qsubv", "codev").alias("cell"),
         )
     )
     # ADC: M table lookups per (query, corpus vector), summed in
@@ -1133,11 +1138,7 @@ def s11_pq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
     )
-    exact_d2 = F.aggregate(
-        F.zip_with("qemb", "emb", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    exact_d2 = sq_dist("qemb", "emb")
     return (
         F.broadcast(topk.join(F.broadcast(q), "query_id"))
         .join(e, "vec_id")
@@ -1238,8 +1239,10 @@ def s12_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("dl"),
+            # per-term lists as SQL text: one F.expr per term, not a
+            # Column call per node
             *[
-                F.sum((F.col("token") == t).cast("long")).alias(f"tf_{i}")
+                F.expr(f"sum(CAST(token = '{t}' AS BIGINT)) AS tf_{i}")
                 for i, t in enumerate(BM25_TERMS)
             ],
         )
@@ -1252,16 +1255,14 @@ def s12_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_doc.select(
             "doc_id",
             "dl",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("token"), F.col(f"tf_{i}").alias("tf")
-                        )
-                        for i, t in enumerate(BM25_TERMS)
-                    ]
+            F.expr(
+                "explode(array("
+                + ", ".join(
+                    f"named_struct('token', '{t}', 'tf', tf_{i})"
+                    for i, t in enumerate(BM25_TERMS)
                 )
-            ).alias("e"),
+                + ")) AS e"
+            ),
         )
         .select("doc_id", "dl", F.col("e.token").alias("token"), F.col("e.tf").alias("tf"))
         .filter(F.col("tf") > 0)
@@ -1547,8 +1548,8 @@ def s15_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     cos = dot("qemb", "emb") / (norm("qemb") * norm("emb"))
-    qt = F.slice("qemb", 1, TRUNC_DIM)
-    et = F.slice("emb", 1, TRUNC_DIM)
+    qt = f"slice(qemb, 1, {TRUNC_DIM})"
+    et = f"slice(emb, 1, {TRUNC_DIM})"
     cos_t = dot(qt, et) / (norm(qt) * norm(et))
     scored = joined.select(
         "query_id", "vec_id", cos.alias("c_full"), cos_t.alias("c_trunc")
@@ -3449,11 +3450,7 @@ def s27_ivfpq_search(
     codes = subs.filter(F.col("vec_id") < PQ_K).select(
         "sub_idx", F.col("vec_id").alias("code_id"), F.col("subv").alias("codev")
     )
-    d2 = F.aggregate(
-        F.zip_with("subv", "codev", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_dist("subv", "codev")
     if use_arrow:
         _log_tier("s27_pq_encode", "arrow")
         best = _pq_encode_arrow(e, codes)
@@ -3478,11 +3475,7 @@ def s27_ivfpq_search(
             "query_id",
             "sub_idx",
             "code_id",
-            F.aggregate(
-                F.zip_with("qsubv", "codev", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("cell"),
+            sq_dist("qsubv", "codev").alias("cell"),
         )
     )
     # cluster-confined candidates, then ADC over their codes only

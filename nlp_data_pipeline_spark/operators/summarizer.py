@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nlp_data_pipeline_spark.functions.text import STOP_WORDS_SORTED, sentences
+from nlp_data_pipeline_spark.functions.text import _STOP_SQL, sentences
 
 
 def summary_general_path(
@@ -60,10 +60,12 @@ def summary_general_path(
         .filter(F.col("n_sentences") > num_sentences)
     )
 
-    # isin -> INSET hash probe; array_contains was an O(118) scan/token
-    terms = F.filter(
-        F.regexp_extract_all(F.lower("sentence"), F.lit(r"\w\w+"), 0),
-        lambda t: ~t.isin(*STOP_WORDS_SORTED),
+    # one expression: built from Columns, the 118 stopword literals were
+    # one py4j round trip each. IN over >10 literals plans as an INSET
+    # hash probe; array_contains was an O(118) scan per token
+    terms = F.expr(
+        "filter(regexp_extract_all(lower(sentence), '\\\\w\\\\w+', 0),"
+        f" t -> NOT t IN ({_STOP_SQL}))"
     )
     # explode_outer keeps a sentence without terms as one row whose
     # term is null: it scores 0 (sklearn's row of zeros) with no

@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from nlp_data_pipeline_spark.functions.text import (
-    STOP_WORDS_SORTED,
+    _CLEAN_SQL,
+    _STOP_SQL,
     clean_text,
     ngrams,
     sentences,
@@ -34,19 +35,6 @@ from nlp_data_pipeline_spark.functions.text import (
     word_count,
 )
 from nlp_data_pipeline_spark.sources.catalog import load_table
-
-_STOP_SQL = ", ".join(f"'{w}'" for w in STOP_WORDS_SORTED)
-
-# DuckDB equivalent of functions.text.clean_text (regexp_replace needs
-# the 'g' flag in DuckDB; Spark's is global by default).
-# \p{L}\p{N}_ spells out Python's Unicode \w (RE2's \w is ASCII-only),
-# mirroring functions/text.py::clean_text exactly — including its
-# lowercase-BEFORE-strip order (the idempotence fix).
-_CLEAN_SQL = (
-    "trim(regexp_replace("
-    "regexp_replace(lower(regexp_replace(text, '\\s+', ' ', 'g')), '[^\\p{L}\\p{N}_\\s\\.]', ' ', 'g'),"
-    " ' +', ' ', 'g'))"
-)
 
 # long-form (doc_id, token) CTE over cleaned text with the reference's
 # stopword + len>2 rules (nlp_data_tagging.py:68-76)
@@ -63,6 +51,19 @@ tokens AS (
   WHERE length(token) > 2 AND lower(token) NOT IN ({_STOP_SQL}) AND token != ''
 )
 """
+
+
+# the lowercased non-empty whitespace words of `text` (t08, t46)
+_LOWER_WORDS_SQL = "filter(split(lower(text), '\\\\s+'), t -> t != '')"
+
+
+def _stop_words_in(words_sql: str, lower: bool = False):
+    """How many elements of the array ``words_sql`` (lowercased first
+    when ``lower``) are stopwords: one expression, not a Column call per
+    stopword literal. IN over >10 literals plans as an INSET hash probe
+    (array_contains was an O(118) scan per token)."""
+    w = "lower(w)" if lower else "w"
+    return F.expr(f"size(filter({words_sql}, w -> {w} IN ({_STOP_SQL})))")
 
 
 def _tokens_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,8 +242,8 @@ def t05_document_summary(spark: SparkSession, sf_dir: str, max_length: int = 150
         "doc_id", clean_text("text").alias("ctext"), sentences(clean_text("text")).alias("sents")
     )
     joined = base.join(general, "doc_id", "left")
-    raw_summary = F.when(F.size("sents") <= target, F.col("ctext")).otherwise(
-        F.coalesce(F.col("general_summary"), F.col("ctext"))
+    raw_summary = (
+        f"CASE WHEN size(sents) <= {target} THEN ctext ELSE coalesce(general_summary, ctext) END"
     )
     return joined.select(
         "doc_id", truncate_at_word(raw_summary, max_length).alias("summary")
@@ -396,10 +397,9 @@ FROM withbest
 # --------------------------------------------------------------------------
 def t08_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
+    words = F.expr(_LOWER_WORDS_SQL)
     n_words = F.size(words)
-    # isin -> INSET hash probe; array_contains was an O(118) scan/token
-    stop_ratio = F.size(F.filter(words, lambda t: t.isin(*STOP_WORDS_SORTED))).cast("double") / n_words
+    stop_ratio = _stop_words_in(_LOWER_WORDS_SQL).cast("double") / n_words
     avg_wlen = (F.length(F.array_join(words, "")).cast("double")) / n_words
     len_score = F.least(F.lit(1.0), n_words.cast("double") / F.lit(100.0))
     # plausible-language band: some stopwords but not all stopwords
@@ -476,7 +476,7 @@ def t10_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokenize(clean_text("text"))
     base = d.select("doc_id", toks.alias("t"))
     n = F.size("t")
-    hashes = F.transform(ngrams(F.col("t"), 3), lambda s: F.md5(s))
+    hashes = F.transform(ngrams("t", 3), lambda s: F.md5(s))
     return base.select(
         "doc_id",
         F.array_min(hashes).alias("fingerprint"),
@@ -518,7 +518,7 @@ def t11_fallback_tags(spark: SparkSession, sf_dir: str, n_tags: int = 5) -> Data
     d = load_table(spark, sf_dir, "documents")
     toks = tokenize(clean_text("text"))
     base = d.select("doc_id", toks.alias("t"))
-    terms = F.concat(F.col("t"), ngrams(F.col("t"), 2))
+    terms = F.concat(F.col("t"), ngrams("t", 2))
     exploded = base.select("doc_id", F.explode(terms).alias("term"))
     counts = exploded.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("cnt"), F.asc("term"))
@@ -871,7 +871,7 @@ def t18_repeated_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per reference.
     base = d.select("doc_id", toks.alias("t"))
     stats = base.select(
-        "doc_id", F.size("t").alias("nt"), ngrams(F.col("t"), 2).alias("bi")
+        "doc_id", F.size("t").alias("nt"), ngrams("t", 2).alias("bi")
     ).select(
         "doc_id",
         "nt",
@@ -1010,10 +1010,9 @@ def t20_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_chars = F.aggregate("words", F.lit(0), lambda acc, w: acc + F.length(w))
     guard = lambda c: F.when(n_words > 0, c)  # empty doc → NULL signals
     mean_wl = guard(F.round(total_chars / n_words, 6))
-    # isin -> INSET hash probe; array_contains was an O(118) scan/token
-    n_stop = F.size(F.filter("words", lambda w: F.lower(w).isin(*STOP_WORDS_SORTED)))
+    n_stop = _stop_words_in("words", lower=True)
     stop_frac = guard(F.round(n_stop / n_words, 6))
-    bi = ngrams(F.col("t"), 2)
+    bi = ngrams("t", 2)
     dup_ratio = F.when(
         F.size(bi) > 0,
         F.round(F.lit(1.0) - F.size(F.array_distinct(bi)) / F.size(bi), 6),
@@ -1436,7 +1435,7 @@ def t28_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select("doc_id", toks.alias("t")).select(
         "doc_id",
         F.concat(
-            tagged(F.col("t"), "tok"), tagged(ngrams(F.col("t"), 2), "bg")
+            tagged(F.col("t"), "tok"), tagged(ngrams("t", 2), "bg")
         ).alias("grams"),
     )
     # explode_outer keeps zero-token docs as a null-kind row: it falls
@@ -1726,7 +1725,7 @@ def t22_boilerplate_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and re-ran the tokenize chain per doc (guide §4.4 class)
     base = d.select("doc_id", "source", toks.alias("t"))
     segs = base.select(
-        "doc_id", "source", F.explode(ngrams(F.col("t"), 3)).alias("seg")
+        "doc_id", "source", F.explode(ngrams("t", 3)).alias("seg")
     ).localCheckpoint()  # feeds doc-frequency AND the per-doc join:
     # without this every branch re-runs the corpus tokenize+explode
     # (zero ReusedExchange measured) — one materialization beats three
@@ -3242,15 +3241,9 @@ _T46_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
 def t46_quality_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
+    words = F.expr(_LOWER_WORDS_SQL)
     n_words = F.size(words)
-    # isin -> INSET hash probe; array_contains was an O(118) scan/token
-    stop_ratio = (
-        F.size(F.filter(words, lambda t: t.isin(*STOP_WORDS_SORTED))).cast(
-            "double"
-        )
-        / n_words
-    )
+    stop_ratio = _stop_words_in(_LOWER_WORDS_SQL).cast("double") / n_words
     avg_wlen = (F.length(F.array_join(words, "")).cast("double")) / n_words
     len_score = F.least(F.lit(1.0), n_words.cast("double") / F.lit(100.0))
     stop_score = F.when((stop_ratio >= 0.05) & (stop_ratio <= 0.6), 1.0).otherwise(

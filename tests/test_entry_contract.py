@@ -65,10 +65,7 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", FAST_ORACLE_QUERIES)
 def test_fast_oracle_equivalence(spark, sf_dir, duck, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from check_oracle import compare
+    from tools.check_oracle import compare
 
     sdf = entry_mod.queries()[name](spark, sf_dir)
     res = duck.execute(entry_mod.oracle_sql()[name])

@@ -12,12 +12,13 @@ Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _norm(v):

@@ -9,9 +9,10 @@ Usage: python tools/dump_rows.py <mode> <out.json> <sf_dir> <query...>
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle import _norm  # noqa: E402
 
