@@ -90,20 +90,9 @@ def _tokens_sql(s: str) -> str:
 
 
 def _sql(col: Column | str) -> str:
-    """SQL text of a helper's argument: a string is a column name or SQL
-    text; a Column is another helper's result or a plain column
-    reference such as ``F.col("t")`` (which Spark renders back in one
-    round trip)."""
-    if isinstance(col, str):
-        return col
-    text = vars(col).get("_text_sql")
-    if text is None:
-        text = col._jc.toString()  # noqa: SLF001
-        if not text.isidentifier():
-            raise TypeError(
-                f"text helpers take a column name, SQL text or a text helper's Column, not {text!r}"
-            )
-    return text
+    """SQL text of a helper's argument: a column name, SQL text, or
+    another helper's Column."""
+    return col if isinstance(col, str) else col._text_sql  # noqa: SLF001
 
 
 def _expr(text: str) -> Column:

@@ -49,13 +49,9 @@ def as_double(col: str) -> Column:
     return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Sequential-fold dot product of two array<double> columns. Column
-    arguments (callers outside this module pass them) take the same
-    fold built from Column calls."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product of two array<double> columns."""
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)")
 
 
 def norm(a: str) -> Column:

@@ -147,15 +147,20 @@ def job_group(spark: SparkSession, group: str):
 
 
 class _Calls:
-    """Running count of one ``py4j_calls`` block; threads share it."""
+    """Running counts of one ``py4j_calls`` block: ``n`` from every
+    thread, ``own`` from the thread that opened the block."""
 
     def __init__(self):
         self.n = 0
+        self.own = 0
+        self._owner = threading.get_ident()
         self._lock = threading.Lock()
 
     def add(self) -> None:
         with self._lock:
             self.n += 1
+            if threading.get_ident() == self._owner:
+                self.own += 1
 
 
 @contextlib.contextmanager
@@ -163,8 +168,9 @@ def py4j_calls():
     """Count the py4j commands (Python→JVM round trips) sent while the
     block runs, from every thread: this includes the finalizer thread's
     ``memory delete`` commands, which grow with the number of JVM
-    proxies the block creates. Use as ``with py4j_calls() as calls:``,
-    then read ``calls.n``."""
+    proxies the block creates, so it moves with garbage-collection
+    timing. Use as ``with py4j_calls() as calls:``, then read
+    ``calls.n``; ``calls.own`` leaves out the other threads' commands."""
     from py4j.clientserver import ClientServerConnection
 
     calls = _Calls()

@@ -45,7 +45,7 @@ def _signatures(df):
     ss = (
         df.select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(_shingles(F.col("t")))).alias("shingle"))
+        .select("doc_id", F.explode(F.array_distinct(_shingles("t"))).alias("shingle"))
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"seed{i}|"), F.col("shingle")))).alias(f"h{i}")
@@ -83,7 +83,7 @@ def test_minhash_determinism_across_runs(spark):
 
 def test_shingles_order_and_count(spark):
     df = spark.createDataFrame([(["one", "two", "three", "four"],)], ["t"])
-    got = df.select(_shingles(F.col("t")).alias("s")).first()["s"]
+    got = df.select(_shingles("t").alias("s")).first()["s"]
     assert got == ["one two three", "two three four"]
 
 
@@ -91,7 +91,7 @@ def test_shingles_short_arrays_are_empty_not_error(spark):
     # Spark's sequence(1, 0) is DESCENDING [1, 0] — ngrams() must guard
     # or short docs crash with an invalid element_at(…, 0) index
     df = spark.createDataFrame([(0, []), (1, ["solo"]), (2, ["two", "toks"])], ["i", "t"])
-    got = {r["i"]: r["s"] for r in df.select("i", _shingles(F.col("t")).alias("s")).collect()}
+    got = {r["i"]: r["s"] for r in df.select("i", _shingles("t").alias("s")).collect()}
     assert got == {0: [], 1: [], 2: []}
 
 

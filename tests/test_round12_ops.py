@@ -90,7 +90,7 @@ def test_s06_production_cap_is_identity_on_benign_corpus(spark, sf_dir):
     from nlp_data_pipeline_spark.operators.similarity import (
         _S06_PRODUCTION_CAP,
         N_PLANES,
-        PLANES,
+        _plane_array,
         as_double,
         dot,
         s06_embedding_neardup_pairs,
@@ -104,7 +104,7 @@ def test_s06_production_cap_is_identity_on_benign_corpus(spark, sf_dir):
     bucket = F.concat(
         *[
             F.when(
-                dot(F.array(*[F.lit(v) for v in PLANES[p]]), F.col("emb")) >= 0,
+                dot(_plane_array(p), "emb") >= 0,
                 "1",
             ).otherwise("0")
             for p in range(N_PLANES)
