@@ -269,6 +269,9 @@ def main() -> int:
         full_out = {
             "round": n,
             "sf": sf,
+            # plans that print the default parallelism (Range splits,
+            # per-task partial-aggregate row counts) follow the core count
+            "cpus": cpus,
             "prep": prep_meta,
             "suite_seconds": out["value"],
             "failures": failures,

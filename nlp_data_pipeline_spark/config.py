@@ -21,8 +21,6 @@ class PipelineConfig:
     # reference vectorizer caps (nlp_data_tagging.py:95,148-154,163,221)
     vocab_size: int = 100
     fallback_vocab_size: int = 50
-    min_df: float = 1.0
-    max_df: float = 0.8
     lda_max_iter: int = 10
     lda_seed: int = 42
 

@@ -3,8 +3,8 @@ pipeline re-expressed as distributed estimator/transformer stages.
 
 Reference semantics (/root/reference/nlp_data_tagging.py):
 
-- fit_topic_model (:141-171): CountVectorizer(max_features=100,
-  stop_words, ngram_range=(1,2), min_df=1, max_df=0.8) → LDA(
+- fit_topic_model (:141-171): a CountVectorizer with max_features=100,
+  stop_words, ngram_range=(1,2), min_df=1, max_df=0.8 → LDA(
   n_components=min(n_topics, n_docs), random_state=42, max_iter=10)
 - get_topic_terms (:173-184): per-topic top-N terms by weight
 - generate_tags (:186-215): per-doc top-2 topics → first 3 terms each
@@ -12,11 +12,12 @@ Reference semantics (/root/reference/nlp_data_tagging.py):
 - evaluate_topics (:263-286): topic diversity = unique/total over all
   topics' top-10 terms; avg_topic_size = total/n_topics
 
-Spark mapping: Pipeline(RegexTokenizer → NGram ∪ unigrams →
-CountVectorizer(vocabSize=100, minDF=1, maxDF=0.8) → LDA(k, maxIter=10,
-seed=42, optimizer='online')); tags via LDAModel.transform +
-vector_to_array column math — ONE distributed pass for all documents,
-versus the reference's per-document Python loop (:426-429).
+Spark mapping: unigrams ∪ bigrams → n04's vocabulary (top 100 by corpus
+count, ties by term, maxDF=0.8) → CountVectorizerModel.from_vocabulary →
+LDA(k, maxIter=10, seed=42, optimizer='online'); tags via
+LDAModel.transform + vector_to_array column math — ONE distributed pass
+for all documents, versus the reference's per-document Python loop
+(:426-429).
 
 These are rows-only driver checks (SURVEY.md §5.2-2): sklearn's and
 MLlib's LDA are different numerical optimizers, so cross-library
@@ -24,8 +25,8 @@ numeric equality is meaningless; tests/test_nlp_model.py pins the
 reference's *invariants* instead (k topics, tags ⊆ vocabulary, ≤ n_tags
 tags, ordered dedup, maxDF exclusion).
 
-Scale: CountVectorizer's vocabulary and LDA's topic matrix are
-O(vocab × k) — tiny — while every per-document pass is partitioned.
+Scale: the vocabulary and LDA's topic matrix are O(vocab × k) — tiny —
+while every per-document pass is partitioned.
 LDA online optimizer is minibatch-EM: linear scans, no corpus
 materialization on the driver.
 """
@@ -36,24 +37,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nlp_data_pipeline_spark.config import DEFAULT_CONFIG
-from nlp_data_pipeline_spark.functions.text import clean_text, sql_string, tokenize_joined
+from nlp_data_pipeline_spark.functions.text import clean_text, sql_string
 from nlp_data_pipeline_spark.sources.catalog import load_table
 
 
-# In-process fit memo: n01/n02/n03/p03 share one fit within a session,
-# so their answers agree with each other. The fit itself is NOT
-# reproducible: LDA's seed is fixed, yet two fits of the same input can
-# return different topics (n03 topic_diversity 0.50 and 0.54 at
-# sf0.001), most likely because CountVectorizer orders terms of equal
-# count differently from fit to fit. A new fit (a new process, or after
-# reset_fit_cache) may therefore answer differently. Nothing is kept on
-# disk: a new process pays the fit again.
+# In-process fit memo: n01/n02/n03/p03 share one fit within a session.
+# Nothing is kept on disk: a new process pays the fit again.
 _MODEL_CACHE: dict[tuple[str, int], tuple] = {}
 
 
 def reset_fit_cache() -> None:
     """Drop the in-process memo so the next ``_fit_corpus_model`` call
-    pays the full CV+LDA fit.
+    pays the full vocabulary+LDA fit.
 
     Bench-facing (VERDICT r14 #2): the bench's min-of-N retry must not
     erase the fit by re-measuring against a memo the first sample
@@ -70,9 +65,9 @@ def reset_fit_cache() -> None:
 
 
 def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
-    """CountVectorizer(1-2gram) + LDA fit over documents.processed_text."""
-    from pyspark.ml.feature import CountVectorizer, NGram, RegexTokenizer
+    """LDA fit over documents' 1-2gram counts on n04's vocabulary."""
     from pyspark.ml.clustering import LDA
+    from pyspark.ml.feature import CountVectorizerModel
 
     cfg = DEFAULT_CONFIG
     k_req = n_topics or cfg.n_topics
@@ -81,36 +76,25 @@ def _fit_corpus_model(spark: SparkSession, sf_dir: str, n_topics: int = None):
         return _MODEL_CACHE[key]
 
     d = load_table(spark, sf_dir, "documents")
+    # rank the vocabulary over the single read partition: over the spread
+    # copy below, its round-robin exchange would run twice (here, and
+    # when the LDA input is cached)
+    _, top = _terms_and_vocabulary(d)
+    vocab = top.select("term", "n_docs").collect()
+    cv_model = CountVectorizerModel.from_vocabulary(
+        [r["term"] for r in vocab], inputCol="terms", outputCol="features"
+    )
     # the documents table arrives as a single parquet file → 1 partition;
-    # spread it so CV fit / LDA minibatches / per-doc inference use every
-    # core (61s → ~8s for tag inference at sf0.1 on local[32])
-    d = d.repartition(spark.sparkContext.defaultParallelism)
-    # processed_text per reference main() :396-397: clean then tokenize
-    docs = d.select("doc_id", tokenize_joined(clean_text("text")).alias("processed_text"))
-
-    tokenizer = RegexTokenizer(
-        inputCol="processed_text", outputCol="unigrams", pattern=r"\s+", minTokenLength=1
-    )
-    ngram = NGram(n=2, inputCol="unigrams", outputCol="bigrams")
-    tokened = ngram.transform(tokenizer.transform(docs))
-    # ngram_range=(1,2): unigrams ∪ bigrams as one term stream
-    tokened = tokened.withColumn("terms", F.concat("unigrams", "bigrams"))
-
-    cv = CountVectorizer(
-        inputCol="terms",
-        outputCol="features",
-        vocabSize=cfg.vocab_size,
-        minDF=cfg.min_df,
-        maxDF=cfg.max_df * 1.0,
-    )
+    # spread it so tokenizing / LDA minibatches / per-doc inference use
+    # every core (61s → ~8s for tag inference at sf0.1 on local[32])
+    terms, _ = _terms_and_vocabulary(d.repartition(spark.sparkContext.defaultParallelism))
     # cache BEFORE the iterative fit: LDA makes ~maxIter passes and an
     # uncached lineage re-runs the whole tokenize+vectorize pipeline per
-    # pass (measured 276s → 3s at sf0.01 with the cache)
-    cv_model = cv.fit(tokened)
-    featured = cv_model.transform(tokened).select("doc_id", "features").cache()
-    n_docs = featured.count()  # also materializes the cache
+    # pass (measured 276s → 3s at sf0.01 with the cache); LDA's own
+    # corpus count materializes it
+    featured = cv_model.transform(terms).select("doc_id", "features").cache()
 
-    k = min(k_req, n_docs)
+    k = min(k_req, vocab[0]["n_docs"])  # from_vocabulary rejects an empty list
     lda = LDA(k=k, maxIter=cfg.lda_max_iter, seed=cfg.lda_seed, optimizer="online")
     lda_model = lda.fit(featured)
     _MODEL_CACHE[key] = (cv_model, lda_model, featured)
@@ -228,35 +212,40 @@ def n03_topic_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# n04: DataFrame-native count-vectorizer twin (R12 semantics, :144-151:
-# 1-2grams, minDF=1, maxDF=0.8, vocab capped at 100) with an explicit
-# deterministic tie-break (corpus tf desc, term asc) — the SQL-checkable
-# mirror of the MLlib CountVectorizer stage feeding the LDA. MLlib's
-# own vocabulary ordering is tie-nondeterministic, so THIS operator is
-# the oracle surface for the featurization layer, and
-# tests/test_nlp_model.py cross-checks the two vocabularies against
-# each other above the tie boundary. maxDF as integer arithmetic
-# (df*5 <= n_docs*4) so both engines cut at exactly 0.8.
+# n04: the count-vectorizer vocabulary (R12 semantics, :144-151: 1-2grams,
+# minDF=1, maxDF=0.8, vocab capped at 100) with an explicit tie-break
+# (corpus tf desc, term asc). It is the vocabulary the LDA is fitted on
+# and the one n05's IDF counts over, so this operator is the oracle
+# surface for the featurization layer of both fits. maxDF as integer
+# arithmetic (df*5 <= n_docs*4) so both engines cut at exactly 0.8.
 # Scale: term stats are one explode + one groupBy; the top-100 pick is
 # TakeOrdered (no global sort materialization).
 # --------------------------------------------------------------------------
-def n04_count_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
+def _terms_and_vocabulary(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, terms) per document, and the vocabulary: the top
+    ``vocab_size`` (term, tf, df, n_docs) rows by (tf desc, term asc),
+    which collect in that order."""
     from nlp_data_pipeline_spark.functions.text import ngrams, tokenize
 
-    d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", tokenize(clean_text("text")).alias("t"))
-    terms = F.concat(F.col("t"), ngrams("t", 2))
-    exploded = base.select("doc_id", F.explode(terms).alias("term"))
-    stats = exploded.groupBy("term").agg(
-        F.count(F.lit(1)).alias("tf"), F.count_distinct("doc_id").alias("df")
+    base = documents.select("doc_id", tokenize(clean_text("text")).alias("t"))
+    terms = base.select("doc_id", F.concat("t", ngrams("t", 2)).alias("terms"))
+    stats = (
+        terms.select("doc_id", F.explode("terms").alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("tf"), F.count_distinct("doc_id").alias("df"))
     )
-    ndocs = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    ndocs = documents.agg(F.count(F.lit(1)).alias("n_docs"))
     filtered = stats.crossJoin(F.broadcast(ndocs)).where(
         F.col("df") * 5 <= F.col("n_docs") * 4
     )
     top = filtered.orderBy(F.desc("tf"), F.asc("term")).limit(DEFAULT_CONFIG.vocab_size)
+    return terms, top
+
+
+def n04_count_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    _, top = _terms_and_vocabulary(load_table(spark, sf_dir, "documents"))
     w = Window.orderBy(F.desc("tf"), F.asc("term"))
     return top.select(
         F.row_number().over(w).alias("vocab_rank"), "term", "tf", "df"
@@ -317,17 +306,8 @@ SELECT vocab_rank, term, tf, df FROM (
 def n05_idf_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import IDF, CountVectorizerModel
 
-    from nlp_data_pipeline_spark.functions.text import ngrams, tokenize
-
-    vocab = [
-        r["term"]
-        for r in n04_count_vectorize(spark, sf_dir).orderBy("vocab_rank").collect()
-    ]
-    d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", tokenize(clean_text("text")).alias("t"))
-    terms = base.select(
-        "doc_id", F.concat(F.col("t"), ngrams("t", 2)).alias("terms")
-    )
+    terms, top = _terms_and_vocabulary(load_table(spark, sf_dir, "documents"))
+    vocab = [r["term"] for r in top.select("term").collect()]
     cvm = CountVectorizerModel.from_vocabulary(
         vocab, inputCol="terms", outputCol="vec"
     )
@@ -528,8 +508,8 @@ QUERIES = {
 
 # n01–n03 are model-dependent (MLlib LDA): rows-only driver checks by
 # design — see module docstring and README "verification story". n04 is
-# the deterministic oracle surface for the featurization layer; n05
-# extends it to a REAL MLlib fit with closed-form state.
+# the oracle surface for the vocabulary both fits use; n05 extends it to
+# a REAL MLlib fit with closed-form state.
 ORACLES = {
     "n04_count_vectorize": _n04_sql(),
     "n05_idf_model": _n05_sql(),

@@ -48,22 +48,16 @@ def test_ordered_dedup_semantics_f7(spark):
     assert got == ["x", "y", "z", "w", "v"]
 
 
-def test_n04_vocab_matches_mllib_countvectorizer(spark, sf_dir, fitted):
-    """n04 (the oracle-checkable featurization twin) must agree with the
-    MLlib CountVectorizer the LDA actually consumes. MLlib breaks tf
-    ties nondeterministically at the vocab-size boundary, so compare the
-    sets of terms with tf strictly above the rank-100 tf (those are
-    unambiguous members of both vocabularies), plus the cap itself."""
+def test_fit_vocabulary_is_n04_vocabulary(spark, sf_dir, fitted):
+    """The LDA is fitted over n04's vocabulary: the fitted vocabulary is
+    n04's term list in vocab_rank order, ties included."""
     from nlp_data_pipeline_spark.operators.nlp_model import n04_count_vectorize
 
     cv_model, _, _ = fitted
-    mllib_vocab = set(cv_model.vocabulary)
-    rows = n04_count_vectorize(spark, sf_dir).collect()
+    rows = n04_count_vectorize(spark, sf_dir).orderBy("vocab_rank").collect()
     assert len(rows) <= 100
-    assert len(rows) == len(mllib_vocab)
-    boundary_tf = min(r["tf"] for r in rows)
-    above = {r["term"] for r in rows if r["tf"] > boundary_tf}
-    assert above <= mllib_vocab, sorted(above - mllib_vocab)[:5]
+    assert [r["vocab_rank"] for r in rows] == list(range(1, len(rows) + 1))
+    assert cv_model.vocabulary == [r["term"] for r in rows]
 
 
 def test_topic_metrics_ranges(spark, sf_dir):
@@ -109,3 +103,25 @@ def test_tags_are_exactly_top2_topics_first3_terms(spark, sf_dir, fitted):
             t for topic in order for t in topic_first3[topic]
         ))[:5]
         assert got[doc_id] == ", ".join(expect), doc_id
+
+
+def test_refit_returns_identical_rows(spark, sf_dir):
+    """Two fits of the same input in one session, with every memo
+    dropped in between, return identical n01, n02 and n03 rows. Last in
+    the module: it replaces the fit the `fitted` fixture returned."""
+    from nlp_data_pipeline_spark.operators import nlp_model
+
+    def fresh_fit_rows():
+        nlp_model.reset_fit_cache()
+        for key in [k for k in nlp_model._TAGS_CACHE if k[1] == sf_dir]:
+            nlp_model._TAGS_CACHE.pop(key).unpersist()
+        return [
+            sorted(map(tuple, op(spark, sf_dir).collect()))
+            for op in (
+                nlp_model.n01_lda_topics,
+                nlp_model.n02_doc_tags,
+                nlp_model.n03_topic_metrics,
+            )
+        ]
+
+    assert fresh_fit_rows() == fresh_fit_rows()

@@ -11,6 +11,8 @@ tool reports, between two artifacts:
   - python-stage changes (Python appearing in a previously JVM-only
     plan = a real regression)
   - fingerprint-only drift (annotated: known benign, data-dependent)
+  - a core-count mismatch between the two runs, which alone moves the
+    fingerprints of plans that print the default parallelism
   - timing outliers AFTER normalizing by the run's median ratio, so a
     uniformly slow host window doesn't flag every query
 
@@ -39,8 +41,10 @@ def main() -> int:
     for a in sys.argv[1:]:
         if a.startswith("--ratio-floor"):
             floor = float(a.split("=", 1)[1]) if "=" in a else floor
-    old = json.load(open(args[0]))["queries"]
-    new = json.load(open(args[1]))["queries"]
+    old_doc, new_doc = json.load(open(args[0])), json.load(open(args[1]))
+    old, new = old_doc["queries"], new_doc["queries"]
+    # artifacts before the cpus field: unknown, and not compared
+    cpus = (old_doc.get("cpus"), new_doc.get("cpus"))
     added, removed = sorted(set(new) - set(old)), sorted(set(old) - set(new))
     common = sorted(set(old) & set(new))
 
@@ -69,6 +73,11 @@ def main() -> int:
     for q in removed:
         print(f"  - {q}")
     print(f"median time ratio (new/old): {med:.2f}  — host-window scale factor")
+    if None not in cpus and cpus[0] != cpus[1]:
+        print(
+            f"core count {cpus[0]} -> {cpus[1]}: plans that print the default "
+            "parallelism drift with it, so fingerprint drift is not comparable"
+        )
     print(f"\nstructural regressions: {len(bad)}")
     for b in bad:
         print(f"  !! {b}")
